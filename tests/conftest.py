@@ -6,6 +6,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session's 48g default heap lets one long-lived test JVM grow past
+# the RAM of a 15 GB host (the kernel then kills it mid-suite); the
+# suite's live data is far smaller.  Subprocess JVMs inherit the cap.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -68,3 +73,54 @@ def corpus_dir():
     d = ensure_corpus_for_sf(0.001)
     build_gold(d)
     return d
+
+
+class SimulatedKill(BaseException):
+    """Raised in place of a write point.  A BaseException, so no
+    ``except Exception`` on the way up can absorb it: the operation
+    stops there the way a killed process would."""
+
+
+def _run_with_write_points(monkeypatch, op, kill_at):
+    """Run ``op()`` with its write points counted: each
+    ``DataFrameWriter.parquet`` call, each ``fsio.write_text_atomic``,
+    each ``fsio.delete`` and ``fsio.rename``.  The ``kill_at``-th one
+    (0-based) raises :class:`SimulatedKill` instead of writing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from webstruct_spark.plans import fsio
+
+    seen = [0]
+
+    def point(fn):
+        def wrapped(*a, **kw):
+            i = seen[0]
+            seen[0] += 1
+            if i == kill_at:
+                raise SimulatedKill(
+                    "killed at write point %d (%s)" % (i, fn.__name__)
+                )
+            return fn(*a, **kw)
+
+        return wrapped
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet",
+                  point(DataFrameWriter.parquet))
+        for name in ("write_text_atomic", "delete", "rename"):
+            m.setattr(fsio, name, point(getattr(fsio, name)))
+        op()
+    return seen[0]
+
+
+def count_write_points(monkeypatch, op) -> int:
+    """Dry run: perform ``op()`` in full and return how many write
+    points it passed."""
+    return _run_with_write_points(monkeypatch, op, None)
+
+
+def kill_at_write_point(monkeypatch, op, i) -> None:
+    """Run ``op()`` until its ``i``-th write point (0-based) and stop
+    there, leaving on disk exactly what a kill at that point would."""
+    with pytest.raises(SimulatedKill):
+        _run_with_write_points(monkeypatch, op, i)

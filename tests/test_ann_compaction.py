@@ -1,21 +1,32 @@
 # -*- coding: utf-8 -*-
-"""ANN index small-file compaction: every append_to_ann_index adds
-part files to the touched bucket partition dirs, so a week of drops
-fragments the hot buckets; compact_ann_index rewrites them
-row-verified and swap-protocol crash-safe, and probes are identical
-before/during-crash-repair/after."""
+"""ANN index maintenance over its snapshot log: compaction of the part
+files appends leave behind, and a crash matrix that kills every
+maintenance operation at each of its write points — readers must see
+exactly the index before the operation or exactly the one after it."""
+import json
 import shutil
+from pathlib import Path
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import arm_fs_tripwire
+from tests.conftest import (
+    arm_fs_tripwire,
+    count_write_points,
+    kill_at_write_point,
+)
 from webstruct_spark.operators.similarity import (
+    ann_index_cell_skew,
     ann_index_topk,
     append_to_ann_index,
     compact_ann_index,
+    lsh_topk,
+    read_ann_meta,
+    rebuild_ann_index,
     write_ann_index,
 )
+from webstruct_spark.plans import fsio, snapshots
 
 
 def _embeddings(spark, n=400, dim=16):
@@ -52,6 +63,28 @@ def _fragmented_index(spark, tmp_path, kind="lsh", name="idx"):
     return emb, path
 
 
+def _unreferenced(root: Path):
+    """Files under ``root`` that neither the current snapshot nor its
+    predecessor references (a Hadoop ``.<name>.crc`` sibling counts as
+    part of its file)."""
+    snap_dir = root / "_snapshots"
+    cur = max(int(p.stem[len("snap-"):]) for p in snap_dir.glob("snap-*.json"))
+    keep = set()
+    for n in range(max(1, cur - 1), cur + 1):
+        rec = json.loads((snap_dir / ("snap-%d.json" % n)).read_text())
+        keep |= {f["path"] for f in rec["files"]}
+        keep |= set(rec["sidecars"].values())
+        keep.add("_snapshots/snap-%d.json" % n)
+    left = []
+    for p in root.rglob("*"):
+        owner = p
+        if p.name.startswith(".") and p.name.endswith(".crc"):
+            owner = p.with_name(p.name[1:-len(".crc")])
+        if p.is_file() and owner.relative_to(root).as_posix() not in keep:
+            left.append(p.relative_to(root).as_posix())
+    return sorted(left)
+
+
 def test_compact_reduces_files_probe_identical(spark, tmp_path):
     emb, path = _fragmented_index(spark, tmp_path)
     qs = _queries(emb)
@@ -74,277 +107,38 @@ def test_compact_ivf_sidecars_untouched(spark, tmp_path):
     emb, path = _fragmented_index(spark, tmp_path, kind="ivf", name="ivf")
     qs = _queries(emb)
     before = _as_set(ann_index_topk(spark, path, qs, k=5, n_probe=3))
-    sidecars = {
-        d: sorted((tmp_path / "ivf" / d).rglob("*"))
-        for d in ("_ann_meta.parquet", "_ann_centroids.parquet")
-    }
+    sidecars = snapshots.current(spark, path)["sidecars"]
     out = compact_ann_index(spark, path)
     assert out["buckets_compacted"] > 0
-    for d, listing in sidecars.items():
-        assert sorted((tmp_path / "ivf" / d).rglob("*")) == listing
+    assert snapshots.current(spark, path)["sidecars"] == sidecars
+    assert (tmp_path / "ivf" / sidecars["centroids"]).is_file()
     after = _as_set(ann_index_topk(spark, path, qs, k=5, n_probe=3))
     assert after == before
 
 
-def test_compact_repairs_crash_windows(spark, tmp_path):
-    """All three swap-protocol crash shapes are repaired on the next
-    compact entry, and the repaired index probes identically to the
-    never-crashed one."""
-    emb, path = _fragmented_index(spark, tmp_path, name="crash")
-    qs = _queries(emb)
-    want = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    root = tmp_path / "crash"
-    buckets = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )
-    assert len(buckets) >= 3
-    b0, b1, b2 = (b[len("bucket="):] for b in buckets[:3])
-
-    # window 1 — crash BEFORE the swap began: tmp + intact live
-    shutil.copytree(root / ("bucket=" + b0), root / ("_compact_tmp_b" + b0))
-    # window 2 — crash BETWEEN the two renames: old + verified tmp,
-    # live absent (tmp here = the verified rewrite = same rows)
-    shutil.copytree(root / ("bucket=" + b1), root / ("_compact_tmp_b" + b1))
-    (root / ("bucket=" + b1)).rename(root / ("_compact_old_b" + b1))
-    # window 3 — crash AFTER the swap, before the old delete
-    shutil.copytree(root / ("bucket=" + b2), root / ("_compact_old_b" + b2))
-
-    out = compact_ann_index(spark, path)
-    fixed = set(out["repaired"])
-    assert {"bucket=" + b0, "bucket=" + b1, "bucket=" + b2} <= fixed
-    leftovers = [
-        d.name for d in root.iterdir() if d.name.startswith("_compact_")
-    ]
-    assert leftovers == []
-    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    assert got == want
-
-
 def test_crashed_tmp_invisible_to_probes(spark, tmp_path):
-    """The underscore-prefixed tmp/old names are ignored by Spark's
-    partition discovery, so an index with a crashed compact lying
-    around STILL probes correctly before any repair runs."""
-    emb, path = _fragmented_index(spark, tmp_path, name="dirty")
+    """Files no snapshot lists — a crashed write's extra part file in
+    a live bucket dir, and the swap dirs of the pre-snapshot compaction
+    protocol — are never read by probes, and the next commit's GC
+    removes them."""
+    emb = _embeddings(spark)
     qs = _queries(emb)
+    path = str(tmp_path / "dirty")
+    write_ann_index(emb, path, kind="lsh", n_planes=6)
     want = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     root = tmp_path / "dirty"
     b = sorted(
         d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
+    )[0]
+    part = sorted((root / b).glob("*.parquet"))[0]
+    shutil.copy(part, root / b / ("part-99999-stray" + part.name[10:]))
+    shutil.copytree(root / b, root / ("_compact_tmp_b" + b[len("bucket="):]))
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     assert got == want
-
-
-def test_threeway_crash_shape_refused_nothing_deleted(spark, tmp_path):
-    """tmp + live + old all present is NOT a protocol crash shape (it
-    means something recreated the live dir after a between-renames
-    crash, so the live dir may hold rows the tmp/old copies lack):
-    repair must refuse with all three dirs intact — the pre-fix code
-    silently deleted the verified tmp AND the pre-crash old copy,
-    permanently losing every pre-crash vector of the bucket."""
-    import pytest
-
-    emb, path = _fragmented_index(spark, tmp_path, name="threeway")
-    root = tmp_path / "threeway"
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_old_b" + b))
-    with pytest.raises(RuntimeError, match="tmp, live AND old"):
-        compact_ann_index(spark, path)
-    for prefix in ("bucket=", "_compact_tmp_b", "_compact_old_b"):
-        assert (root / (prefix + b)).exists()
-    # append refuses the same way instead of writing into the mess
-    with pytest.raises(RuntimeError, match="tmp, live AND old"):
-        append_to_ann_index(emb.where(F.col("vec_id") < 3), path)
-
-
-def test_append_repairs_crashed_compact_first(spark, tmp_path):
-    """A scheduled append landing after a between-renames compact
-    crash rolls the verified swap FORWARD before writing (otherwise
-    it would recreate the live dir with only its own batch — the
-    exact sequence that manufactures the unrepairable three-way
-    shape).  The repaired-and-appended index probes identically to a
-    never-crashed twin with the same build+append history."""
-    emb = _embeddings(spark, n=450)
-    base = emb.where(F.col("vec_id") < 400)
-    extra = emb.where(F.col("vec_id") >= 400)
-    paths = {}
-    for name in ("crashed", "twin"):
-        p = str(tmp_path / name)
-        write_ann_index(base.where(F.col("vec_id") < 150), p,
-                        kind="lsh", n_planes=6)
-        append_to_ann_index(
-            base.where((F.col("vec_id") >= 150) & (F.col("vec_id") < 300)),
-            p,
-        )
-        append_to_ann_index(base.where(F.col("vec_id") >= 300), p)
-        paths[name] = p
-    root = tmp_path / "crashed"
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    # between-renames shape: verified tmp (same rows) + old, live gone
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
-    (root / ("bucket=" + b)).rename(root / ("_compact_old_b" + b))
-
-    append_to_ann_index(extra, paths["crashed"])
-    append_to_ann_index(extra, paths["twin"])
-
-    leftovers = [
-        d.name for d in root.iterdir() if d.name.startswith("_compact_")
-    ]
-    assert leftovers == []
-    qs = _queries(emb)
-    got = _as_set(ann_index_topk(spark, paths["crashed"], qs, k=5,
-                                 multiprobe=1))
-    want = _as_set(ann_index_topk(spark, paths["twin"], qs, k=5,
-                                  multiprobe=1))
-    assert got == want
-
-
-def test_append_intent_reverts_crashed_half_batch(spark, tmp_path,
-                                                  monkeypatch):
-    """A driver kill during an append's job commit can leave a
-    VISIBLE SUBSET of the batch (some buckets gained part files,
-    others did not) with the write-ahead intent still pending.  The
-    next maintenance entry must revert exactly the strays, so the
-    upstream retry lands the whole batch once — probe-identical to a
-    never-crashed twin."""
-    import pytest
-
-    from webstruct_spark.plans import fsio
-
-    emb = _embeddings(spark)
-    base = emb.where(F.col("vec_id") < 300)
-    batch = emb.where(F.col("vec_id") >= 300)
-    path = str(tmp_path / "idx")
-    twin = str(tmp_path / "twin")
-    write_ann_index(base, path, kind="lsh", n_planes=6)
-    write_ann_index(base, twin, kind="lsh", n_planes=6)
-
-    # crash between the batch landing and the intent clear
-    real_delete = fsio.delete
-
-    def crashing_delete(s, p, recursive=True):
-        if p.endswith("_ann_append_intent.json"):
-            raise RuntimeError("simulated crash before intent clear")
-        return real_delete(s, p, recursive)
-
-    with monkeypatch.context() as m:
-        m.setattr(fsio, "delete", crashing_delete)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            append_to_ann_index(batch, path)
-    root = tmp_path / "idx"
-    assert (root / "_ann_append_intent.json").exists()
-
-    # make the landed batch PARTIAL: drop the strays from one touched
-    # bucket (as a mid-commit kill would), keep them in the rest
-    import json as _json
-
-    intent = _json.loads((root / "_ann_append_intent.json").read_text())
-    touched = sorted(d for d, pre in intent["pre"].items())
-    assert touched, "batch touched no buckets?"
-    d0 = touched[0]
-    pre0 = set(intent["pre"][d0])
-    victim_dir = root / d0
-    strays0 = [
-        f.name
-        for f in victim_dir.iterdir()
-        if f.name.endswith(".parquet") and f.name not in pre0
-    ]
-    for n in strays0:
-        (victim_dir / n).unlink()
-
-    # the retry (the caller never saw success) reconciles the intent
-    # — deleting the remaining strays — then appends the full batch
-    append_to_ann_index(batch, path)
-    assert not (root / "_ann_append_intent.json").exists()
-    append_to_ann_index(batch, twin)
-
-    qs = _queries(emb)
+    rebuild_ann_index(spark, path)  # any commit; same-shape rebuild
+    assert _unreferenced(root) == []
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    want = _as_set(ann_index_topk(spark, twin, qs, k=5, multiprobe=1))
     assert got == want
-    # the revert was surgical: no duplicate vec_ids anywhere
-    ids = spark.read.parquet(path).groupBy("vec_id").count()
-    assert ids.where(F.col("count") > 1).count() == 0
-
-
-def test_rebuild_over_live_index_is_swap_protected(spark, tmp_path,
-                                                   monkeypatch):
-    """write_ann_index over a LIVE index must not overwrite in place:
-    a crash before the swap leaves the old index serving identical
-    answers; a crash between the two swap renames is diagnosed loudly
-    by probes and rolled forward by the next maintenance entry."""
-    import pytest
-
-    from webstruct_spark.operators.similarity import read_ann_meta
-    from webstruct_spark.plans import fsio
-
-    emb = _embeddings(spark)
-    base = emb.where(F.col("vec_id") < 200)
-    path = str(tmp_path / "idx")
-    write_ann_index(base, path, kind="lsh", n_planes=6)
-    qs = _queries(emb)
-    before = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-
-    # window 1: killed at the FIRST swap rename — the fully built tmp
-    # is an orphan, the live index never stopped serving
-    real_rename = fsio.rename
-
-    def crash_at_first_rename(s, a, b):
-        raise RuntimeError("simulated crash at swap start")
-
-    with monkeypatch.context() as m:
-        m.setattr(fsio, "rename", crash_at_first_rename)
-        with pytest.raises(RuntimeError, match="swap start"):
-            write_ann_index(emb, path, kind="lsh", n_planes=6)
-    assert _as_set(
-        ann_index_topk(spark, path, qs, k=5, multiprobe=1)
-    ) == before
-
-    # window 2: killed BETWEEN the two renames — live absent, old +
-    # complete tmp present.  Probes refuse with the rebuild diagnosis
-    # instead of a bare missing-path error...
-    calls = {"n": 0}
-
-    def crash_between_renames(s, a, b):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated crash between renames")
-        return real_rename(s, a, b)
-
-    with monkeypatch.context() as m:
-        m.setattr(fsio, "rename", crash_between_renames)
-        with pytest.raises(RuntimeError, match="between renames"):
-            write_ann_index(emb, path, kind="lsh", n_planes=6)
-    with pytest.raises(RuntimeError, match="rebuild swap crashed"):
-        read_ann_meta(spark, path)
-    # the skew monitor — the very reader that drives rebuilds — gets
-    # the same loud diagnosis, not a bare missing-path error that
-    # reads like the index was never built
-    from webstruct_spark.operators.similarity import ann_index_cell_skew
-
-    with pytest.raises(RuntimeError, match="rebuild swap crashed"):
-        ann_index_cell_skew(spark, path)
-
-    # ...and ANY maintenance entry settles it (an empty append is the
-    # cheapest): the complete tmp rolls forward
-    append_to_ann_index(emb.where(F.col("vec_id") < 0), path)
-    twin = str(tmp_path / "twin")
-    write_ann_index(emb, twin, kind="lsh", n_planes=6)
-    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    want = _as_set(ann_index_topk(spark, twin, qs, k=5, multiprobe=1))
-    assert got == want
-    root = tmp_path
-    leftovers = [
-        d.name for d in root.iterdir()
-        if "__ann_rebuild" in d.name
-    ]
-    assert leftovers == []
 
 
 def test_compact_uri_route(spark, tmp_path, monkeypatch):
@@ -379,173 +173,40 @@ def test_compact_rejects_nonpositive_target_bytes(tmp_path):
                               target_bytes=bad)
 
 
-def test_probe_refuses_torn_swap_instead_of_dropping_bucket(
-    spark, tmp_path
-):
-    """A between-renames crash leaves the live bucket dir absent —
-    partition discovery would then silently serve results MISSING
-    that whole bucket.  The probe's torn-swap guard must fail loudly
-    instead, and the next maintenance entry's repair restores the
-    exact pre-crash answers."""
-    import pytest
-
-    emb, path = _fragmented_index(spark, tmp_path, name="torn")
-    qs = _queries(emb)
-    want = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    root = tmp_path / "torn"
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    # between-renames shape: verified tmp (same rows) + old, live gone
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
-    (root / ("bucket=" + b)).rename(root / ("_compact_old_b" + b))
-    with pytest.raises(RuntimeError, match="torn compaction swap"):
-        ann_index_topk(spark, path, qs, k=5, multiprobe=1)
-    # the skew monitor is a reader too: over the torn index it would
-    # compute max/mean with the missing bucket silently absent —
-    # if that was the hot bucket the rebuild trigger is suppressed —
-    # so it must refuse the same shape
-    from webstruct_spark.operators.similarity import ann_index_cell_skew
-
-    with pytest.raises(RuntimeError, match="torn compaction swap"):
-        ann_index_cell_skew(spark, path)
-    # nothing was deleted by the read-only guard
-    assert (root / ("_compact_tmp_b" + b)).exists()
-    assert (root / ("_compact_old_b" + b)).exists()
-    out = compact_ann_index(spark, path)
-    assert ("bucket=" + b) in out["repaired"]
-    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    assert got == want
-
-
 def test_rebuild_settles_crashed_append_then_crashed_compact(
     spark, tmp_path, monkeypatch
 ):
-    """A skew-triggered rebuild whose input derives from READING the
-    live index (the natural shape: re-bucket the stored vectors with
-    a bigger quantizer) must settle pending maintenance state at
-    entry, like the other two maintenance entries — otherwise a
-    crashed append's uncommitted half-batch is laundered into the
-    rebuilt index (the caller's retry then duplicates those ids
-    forever), and a bucket mid-compact-swap is silently DROPPED from
-    the rebuild (its live dir is absent, so partition discovery never
-    sees its rows).  The two crash states cannot COEXIST (every
-    serialized maintenance entry settles both before doing work), so
-    each window is exercised in sequence against the same index."""
-    import pytest
-
-    from webstruct_spark.operators.similarity import rebuild_ann_index
-    from webstruct_spark.plans import fsio
-
-    emb = _embeddings(spark)
-    base = emb.where(F.col("vec_id") < 300)
-    batch = emb.where(F.col("vec_id") >= 300)
+    """A rebuild reads its input from the snapshot's file list, so
+    neither a crashed append's part files nor a crashed compaction's
+    rewrite of a bucket — both sitting in the bucket dirs a directory
+    listing would read — reach the rebuilt index."""
+    emb = _embeddings(spark, n=160, dim=8)
+    base = emb.where(F.col("vec_id") < 100)
     path = str(tmp_path / "idx")
-    write_ann_index(base, path, kind="lsh", n_planes=6)
-    root = tmp_path / "idx"
-    base_ids = {r["vec_id"] for r in base.select("vec_id").collect()}
-
-    # window 1 — crashed APPEND: the batch landed but the intent was
-    # never cleared; the caller saw a failure and will retry, so the
-    # landed part files are uncommitted strays
-    real_delete = fsio.delete
-
-    def crashing_delete(s, p, recursive=True):
-        if p.endswith("_ann_append_intent.json"):
-            raise RuntimeError("simulated crash before intent clear")
-        return real_delete(s, p, recursive)
-
-    with monkeypatch.context() as m:
-        m.setattr(fsio, "delete", crashing_delete)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            append_to_ann_index(batch, path)
-    assert (root / "_ann_append_intent.json").exists()
-
-    rebuild_ann_index(spark, path, n_planes=8)
-    rebuilt_ids = {
-        r["vec_id"] for r in
-        spark.read.parquet(path).select("vec_id").collect()
+    write_ann_index(base, path, kind="lsh", n_planes=3)
+    # append killed at its commit (its part files are written)
+    kill_at_write_point(
+        monkeypatch,
+        lambda: append_to_ann_index(emb.where(F.col("vec_id") >= 100), path),
+        1,
+    )
+    # compaction killed after rewriting its first bucket
+    kill_at_write_point(
+        monkeypatch, lambda: compact_ann_index(spark, path, force=True), 1
+    )
+    rebuild_ann_index(spark, path, n_planes=4)
+    stored = spark.read.parquet(
+        *(str(tmp_path / "idx" / f["path"])
+          for f in snapshots.current(spark, path)["files"])
+    )
+    assert stored.count() == 100
+    assert {r["vec_id"] for r in stored.select("vec_id").collect()} == {
+        r["vec_id"] for r in base.select("vec_id").collect()
     }
-    # no laundering: the crashed append's uncommitted batch is gone
-    # from the rebuilt index, and the intent was reconciled away
-    assert rebuilt_ids == base_ids
-    assert not (root / "_ann_append_intent.json").exists()
-
-    # window 2 — crashed per-bucket COMPACT on the rebuilt index: one
-    # bucket mid-swap (verified tmp + old, live absent)
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
-    (root / ("bucket=" + b)).rename(root / ("_compact_old_b" + b))
-
-    rebuild_ann_index(spark, path)  # same-shape rebalance (meta dims)
-    rebuilt_ids = {
-        r["vec_id"] for r in
-        spark.read.parquet(path).select("vec_id").collect()
-    }
-    # no dropped bucket: the mid-swap live dir was rolled forward
-    # BEFORE the rebuild read its input, so every vector survived
-    assert rebuilt_ids == base_ids
-    leftovers = [
-        d.name for d in root.iterdir() if d.name.startswith("_compact_")
-    ]
-    assert leftovers == []
-    # the twice-rebuilt index answers exactly like a fresh build with
-    # the same (deterministic) quantizer
-    qs = _queries(base)
+    assert _unreferenced(tmp_path / "idx") == []
+    qs = _queries(base, every=23)
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    twin = str(tmp_path / "twin")
-    write_ann_index(base, twin, kind="lsh", n_planes=8)
-    want = _as_set(ann_index_topk(spark, twin, qs, k=5, multiprobe=1))
-    assert got == want
-
-
-def test_external_rebuild_recovers_refused_compact_shape(
-    spark, tmp_path
-):
-    """The tmp+live+old shape refuses every READING maintenance entry
-    (see test_threeway_crash_shape_refused_nothing_deleted) — but the
-    operator's documented LAST-RESORT recovery is a full retrain from
-    the external source table, and write_ann_index's swap replaces
-    the whole live root, refused dirs included.  Blocking THAT entry
-    on the same refusal would force manual filesystem surgery on a
-    caller whose input never reads the live buckets at all — but
-    write_ann_index cannot VERIFY the input is external (the
-    hand-rolled index-derived misuse the docstrings warn against
-    would lose the refused bucket's only copies), so the bypass is
-    the caller's explicit recover=True assertion, and the default
-    refusal tells them about it."""
-    import pytest
-
-    emb, path = _fragmented_index(spark, tmp_path, name="wholesale")
-    root = tmp_path / "wholesale"
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_tmp_b" + b))
-    shutil.copytree(root / ("bucket=" + b), root / ("_compact_old_b" + b))
-
-    # the default still refuses (guards hand-rolled index-derived
-    # input) and the message points at the recover flag
-    with pytest.raises(RuntimeError, match="recover=True"):
-        write_ann_index(emb, path, kind="lsh", n_planes=6)
-    for prefix in ("bucket=", "_compact_tmp_b", "_compact_old_b"):
-        assert (root / (prefix + b)).exists()
-
-    # the asserted-external rebuild proceeds ...
-    write_ann_index(emb, path, kind="lsh", n_planes=6, recover=True)
-    # ... and the swap removed the refused shape with the old root
-    leftovers = [
-        d.name for d in root.iterdir() if d.name.startswith("_compact_")
-    ]
-    assert leftovers == []
-    # the recovered index answers exactly like a fresh twin build
-    qs = _queries(emb)
-    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
-    twin = str(tmp_path / "wholesale_twin")
-    write_ann_index(emb, twin, kind="lsh", n_planes=6)
-    want = _as_set(ann_index_topk(spark, twin, qs, k=5, multiprobe=1))
+    want = _as_set(lsh_topk(base, qs, k=5, n_planes=4, multiprobe=1))
     assert got == want
 
 
@@ -577,123 +238,142 @@ def test_rebuild_refuses_kind_param_mismatch(spark, tmp_path):
     assert meta["kind"] == "ivf" and meta["n_centroids"] == 4
 
 
-def test_rebuild_runs_each_entry_repair_once(
-    spark, tmp_path, monkeypatch
-):
-    """rebuild_ann_index's preamble already settles every crash
-    window; write_ann_index must not repeat the pass (two extra root
-    LISTs plus existence RPCs per scheduled rebuild on an object
-    store — the same duplicate cost the append path's cached listing
-    eliminates)."""
-    import webstruct_spark.operators.similarity as sim
-
+def test_root_without_snapshot_refused_then_migrated(spark, tmp_path):
+    """A root without ``_snapshots/`` — here the layout of an index
+    written before the snapshot log — is refused by probe, append and
+    compact with a message naming write_ann_index.  write_ann_index
+    over it commits a snapshot, and its GC removes the old files."""
     emb = _embeddings(spark, n=120)
-    path = str(tmp_path / "once")
-    write_ann_index(emb, path, kind="lsh", n_planes=6)
-
-    calls = {"rebuild": 0, "intent": 0, "compact": 0}
-    real = (
-        sim._repair_ann_rebuild,
-        sim._reconcile_ann_append_intent,
-        sim._repair_ann_compaction,
-    )
-
-    def wrap(key, fn):
-        def inner(*a, **kw):
-            calls[key] += 1
-            return fn(*a, **kw)
-        return inner
-
-    monkeypatch.setattr(
-        sim, "_repair_ann_rebuild", wrap("rebuild", real[0])
-    )
-    monkeypatch.setattr(
-        sim, "_reconcile_ann_append_intent", wrap("intent", real[1])
-    )
-    monkeypatch.setattr(
-        sim, "_repair_ann_compaction", wrap("compact", real[2])
-    )
-    sim.rebuild_ann_index(spark, path)
-    assert calls == {"rebuild": 1, "intent": 1, "compact": 1}, calls
-
-
-def test_metaless_root_with_compact_dirs_requires_recover(
-    spark, tmp_path
-):
-    """_compact_* dirs only exist on crashed maintenance of a
-    once-live index; if the meta sidecar is then lost, the root reads
-    as not-live and the first-build path would mode('overwrite')
-    straight over them — deleting an old-without-live dir that may
-    hold a bucket's only copies with no refusal at all.  The metaless
-    path must demand the same recover=True assertion as the live
-    gate."""
-    import pytest
-
-    emb = _embeddings(spark, n=80)
-    path = str(tmp_path / "metaless")
-    root = tmp_path / "metaless"
+    path = str(tmp_path / "old")
+    root = tmp_path / "old"
+    emb.select(
+        "vec_id", F.col("embedding").alias("vec"),
+        (F.col("vec_id") % 4).alias("bucket"),
+    ).write.partitionBy("bucket").parquet(path)
+    spark.createDataFrame(
+        [("lsh", 2, None, 16)],
+        "kind string, n_planes int, n_centroids int, dim int",
+    ).write.parquet(path + "/_ann_meta.parquet")
+    qs = _queries(emb)
+    for call in (
+        lambda: ann_index_topk(spark, path, qs),
+        lambda: append_to_ann_index(emb, path),
+        lambda: compact_ann_index(spark, path),
+    ):
+        with pytest.raises(ValueError, match="write_ann_index"):
+            call()
     write_ann_index(emb, path, kind="lsh", n_planes=4)
-    b = sorted(
-        d.name for d in root.iterdir() if d.name.startswith("bucket=")
-    )[0][len("bucket="):]
-    # crashed compact leftover, then the meta sidecar is lost
-    (root / ("bucket=" + b)).rename(root / ("_compact_old_b" + b))
-    shutil.rmtree(root / "_ann_meta.parquet")
-
-    with pytest.raises(RuntimeError, match="recover=True"):
-        write_ann_index(emb, path, kind="lsh", n_planes=4)
-    assert (root / ("_compact_old_b" + b)).exists()
-
-    write_ann_index(emb, path, kind="lsh", n_planes=4, recover=True)
-    got = {
-        r["vec_id"]
-        for r in spark.read.parquet(path).select("vec_id").collect()
-    }
-    assert got == {int(r["vec_id"]) for r in emb.collect()}
-    assert not any(
-        d.name.startswith("_compact_") for d in root.iterdir()
-    )
+    assert not (root / "_ann_meta.parquet").exists()
+    assert _unreferenced(root) == []
+    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
+    want = _as_set(lsh_topk(emb, qs, k=5, n_planes=4, multiprobe=1))
+    assert got == want
 
 
-def test_rebuild_repair_refuses_metaless_live_beside_old(
-    spark, tmp_path
-):
-    """old + live both present with the LIVE dir metaless is not the
-    post-swap crash shape (the swap only installs complete,
-    meta-bearing builds — meta loss is external damage): finishing
-    the swap would delete the old copy, which may be the only
-    meta-bearing complete index left, and auto-restoring old would
-    silently serve the pre-rebuild index.  Refuse with both copies
-    intact and restoration guidance instead."""
-    import pytest
-
-    from webstruct_spark.operators.similarity import _repair_ann_rebuild
-
+def test_second_commit_of_a_snapshot_number_raises(spark, tmp_path):
+    """Commits are create-if-absent: a writer that read a stale parent
+    loses with IOError, and the current snapshot stays readable and
+    unchanged."""
     emb = _embeddings(spark, n=60, dim=8)
-    path = str(tmp_path / "damaged")
-    root = tmp_path / "damaged"
-    write_ann_index(emb, path, kind="lsh", n_planes=4)
-    # fabricate: post-swap crash leftover (old copy), then the live
-    # meta sidecar is lost
-    shutil.copytree(root, tmp_path / "damaged.__ann_rebuild_old__")
-    shutil.rmtree(root / "_ann_meta.parquet")
+    path = str(tmp_path / "idx")
+    meta = write_ann_index(emb, path, kind="lsh", n_planes=2)
+    root = fsio.qualify(spark, path)
+    snap = snapshots.current(spark, root)
+    with pytest.raises(IOError):
+        snapshots.commit(spark, root, None, {"files": [], "sidecars": {}})
+    assert snapshots.current(spark, root) == snap
+    assert read_ann_meta(spark, path) == meta
+    # the loser's temporary record is gone too
+    left = sorted(p.name for p in (tmp_path / "idx" / "_snapshots").iterdir())
+    assert left == [".snap-1.json.crc", "snap-1.json"]
 
-    with pytest.raises(RuntimeError, match="lost its _ann_meta"):
-        _repair_ann_rebuild(spark, path)
-    # both copies intact, old's meta untouched
-    assert (tmp_path / "damaged.__ann_rebuild_old__"
-            / "_ann_meta.parquet").exists()
-    assert root.exists()
-    # the message guides the meta-bearing restoration
-    with pytest.raises(RuntimeError, match="still carries its meta"):
-        _repair_ann_rebuild(spark, path)
 
-    # the TRUE post-swap crash shape (live meta intact) still
-    # finishes the swap
-    emb2 = _embeddings(spark, n=60, dim=8)
-    p2 = str(tmp_path / "healthy")
-    write_ann_index(emb2, p2, kind="lsh", n_planes=4)
-    shutil.copytree(tmp_path / "healthy",
-                    tmp_path / "healthy.__ann_rebuild_old__")
-    assert _repair_ann_rebuild(spark, p2) == "finished_swap"
-    assert not (tmp_path / "healthy.__ann_rebuild_old__").exists()
+# -- crash matrix -------------------------------------------------------------
+
+
+def _answers(spark, path, qs):
+    """What the three readers return: (meta, skew, probe rows), or
+    "refused" for a root without a snapshot."""
+    try:
+        meta = read_ann_meta(spark, path)
+    except ValueError as exc:
+        assert "write_ann_index" in str(exc)
+        return "refused"
+    probe = ann_index_topk(spark, path, qs, k=5, multiprobe=1, n_probe=2)
+    return meta, ann_index_cell_skew(spark, path), _as_set(probe)
+
+
+@pytest.mark.parametrize(
+    "name", ["build", "append", "rebuild", "write_over_live", "compact"]
+)
+def test_crash_matrix(spark, tmp_path, monkeypatch, name):
+    """Kill the operation at each of its write points (conftest's
+    count_write_points / kill_at_write_point).  After every kill the
+    readers answer exactly as the never-crashed twin did before the
+    operation or after it; a re-run then matches the twin's after
+    state, and leaves no file that a retained snapshot does not list."""
+    emb = _embeddings(spark, n=160, dim=8)
+    qs = _queries(emb, every=23)
+    a = emb.where(F.col("vec_id") < 100)
+    b = emb.where(F.col("vec_id") >= 100)
+
+    def build_a(p):
+        write_ann_index(a, p, kind="lsh", n_planes=3)
+
+    def build_a_append(p):
+        # two snapshots, so the operation's GC expires the first
+        build_a(p)
+        append_to_ann_index(b.where(F.col("vec_id") < 130), p)
+
+    base, op, rerun = {
+        "build": (
+            None, lambda p: write_ann_index(a, p, kind="ivf", n_centroids=4),
+            None,
+        ),
+        # the retry of an append that may have committed skips ids the
+        # index already holds
+        "append": (
+            build_a, lambda p: append_to_ann_index(b, p),
+            lambda p: append_to_ann_index(b, p, skip_existing_ids=True),
+        ),
+        "rebuild": (
+            build_a_append, lambda p: rebuild_ann_index(spark, p, n_planes=4),
+            None,
+        ),
+        "write_over_live": (
+            build_a_append,
+            lambda p: write_ann_index(emb, p, kind="lsh", n_planes=3), None,
+        ),
+        # a write wider than the bucket count leaves several files per
+        # bucket for the compaction to merge
+        "compact": (
+            lambda p: write_ann_index(emb, p, kind="lsh", n_planes=2),
+            lambda p: compact_ann_index(spark, p), None,
+        ),
+    }[name]
+    rerun = rerun or op
+
+    def fresh(tag):
+        p = tmp_path / tag
+        if base is not None:
+            shutil.copytree(tmp_path / "base", p)
+        return str(p)
+
+    if base is not None:
+        base(str(tmp_path / "base"))
+        before = _answers(spark, str(tmp_path / "base"), qs)
+    else:
+        before = "refused"
+    twin = fresh("twin")
+    n = count_write_points(monkeypatch, lambda: op(twin))
+    after = _answers(spark, twin, qs)
+    assert n >= 2
+    if name != "compact":  # compaction keeps every answer
+        assert after != before
+    for i in range(n):
+        p = fresh("kill%d" % i)
+        kill_at_write_point(monkeypatch, lambda: op(p), i)
+        assert _answers(spark, p, qs) in (before, after), i
+        rerun(p)
+        assert _answers(spark, p, qs) == after, i
+        assert _unreferenced(Path(p)) == [], i

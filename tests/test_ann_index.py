@@ -1,6 +1,6 @@
 # -*- coding: utf-8 -*-
 """Bucket-partitioned ANN index: probe results equal the in-flight
-LSH/IVF variants, and the probe read actually prunes partitions."""
+LSH/IVF variants, and the probe scans only the probed buckets' files."""
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -62,8 +62,9 @@ def test_ivf_index_equals_inflight(spark, tmp_path):
 
 
 def test_probe_reads_only_probed_partitions(spark, tmp_path):
-    """The 100-TB property: files outside the probed buckets are never
-    opened."""
+    """The 100-TB property, on what ann_index_topk actually scans: no
+    file outside the probed buckets is opened, and fewer buckets are
+    read than the index holds."""
     emb = _embeddings(spark)
     qs = _queries(emb, every=97)  # few queries -> few probed buckets
     path = str(tmp_path / "lsh_idx2")
@@ -76,6 +77,8 @@ def test_probe_reads_only_probed_partitions(spark, tmp_path):
         _planes,
     )
     from itertools import combinations
+
+    from webstruct_spark.plans import snapshots
 
     planes = _planes(6, 16)
     q_mat = _normalize_rows(
@@ -91,28 +94,41 @@ def test_probe_reads_only_probed_partitions(spark, tmp_path):
                     m |= 1 << bb
                 allowed.add(int(b) ^ m)
 
-    n_total_buckets = (
-        spark.read.parquet(path).select("bucket").distinct().count()
+    n_total_buckets = len(
+        {f["bucket"] for f in snapshots.current(spark, path)["files"]}
     )
-    probed = spark.read.parquet(path).where(
-        F.col("bucket").isin(sorted(allowed))
-    )
-    files = {
-        r[0]
-        for r in probed.select(F.input_file_name()).distinct().collect()
-    }
-    # every opened file lives under an allowed bucket directory
+    files = ann_index_topk(spark, path, qs, k=5, multiprobe=1).inputFiles()
+    assert files
+    # every scanned file lives under an allowed bucket directory
+    read_buckets = set()
     for f in files:
         assert "/bucket=" in f
         b = int(f.split("/bucket=")[1].split("/")[0])
         assert b in allowed, f
+        read_buckets.add(b)
     # and pruning is real: fewer bucket dirs read than exist
-    read_buckets = {
-        int(f.split("/bucket=")[1].split("/")[0]) for f in files
-    }
     assert len(read_buckets) < n_total_buckets
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+
+
+def test_probe_of_empty_buckets_returns_no_rows(spark, tmp_path):
+    """A probe whose buckets hold no file of the snapshot scans nothing
+    and answers with no rows."""
+    from webstruct_spark.operators.similarity import (
+        _bucket_of,
+        _normalize_rows,
+        _planes,
+    )
+
+    emb = _embeddings(spark, n=4)
+    path = str(tmp_path / "sparse_idx")
+    write_ann_index(emb, path, kind="lsh", n_planes=8)
+    vecs = np.array([r["embedding"] for r in emb.collect()], np.float32)
+    q = -vecs[0]
+    planes = _planes(8, 16)
+    held = set(_bucket_of(_normalize_rows(vecs), planes).tolist())
+    assert int(_bucket_of(_normalize_rows(q[None]), planes)[0]) not in held
+    got = ann_index_topk(spark, path, [(99, q.tolist())], k=5, multiprobe=0)
+    assert got.collect() == []
 
 
 def test_index_io_never_opens_driver_local(spark, tmp_path, monkeypatch):

@@ -169,6 +169,28 @@ def test_distributed_mixing_equals_local_twin(spark):
     assert m_r1.export() != m_loc.export()
 
 
+def test_zero_rounds_refused_before_any_job(spark):
+    """rounds=0 would hand back the untrained initial model without
+    reading the corpus: the distributed trainer and its single-node
+    twin both refuse it, the distributed one before any Spark job."""
+    from webstruct_spark.operators.trained import (
+        train_crf_distributed,
+        train_crf_mixed_local,
+    )
+
+    turns = spark.read.parquet(CORPUS)
+    sc = spark.sparkContext
+    sc.setJobGroup("crf_rounds0", "rounds=0 refusal")
+    try:
+        with pytest.raises(ValueError, match="rounds"):
+            train_crf_distributed(turns, n_parts=4, rounds=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("crf_rounds0")) == []
+    with pytest.raises(ValueError, match="rounds"):
+        train_crf_mixed_local([("c1", 0, "hello world")], rounds=0)
+
+
 def test_distributed_mixing_unpruned_path(spark):
     """min_feat_df=None disables pruning on both sides and the
     byte-identity contract still holds (pins the pre-round-4

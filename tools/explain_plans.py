@@ -141,10 +141,8 @@ def main() -> None:
         "shuffle joins with AQE, HashAggregates.",
     )
 
-    # persistent ANN index probes: the PartitionFilters proof (the
-    # 100-TB property — only probed bucket dirs are opened) now
-    # regenerates with the rest instead of living as a hand-pasted
-    # snippet
+    # persistent ANN index probes: the 100-TB property — the scan's
+    # file index holds only the probed buckets' files
     import tempfile
 
     from webstruct_spark.operators.similarity import (
@@ -164,23 +162,24 @@ def main() -> None:
     try:
         write_ann_index(emb, idx_root + "/lsh", kind="lsh", n_planes=8)
         add(
-            "ann_index_topk probe (LSH index, partition-pruned read)",
+            "ann_index_topk probe (LSH index, probed buckets' files only)",
             ann_index_topk(
                 spark, idx_root + "/lsh", qs, k=5, multiprobe=1
             ),
-            "Expect: Scan parquet with PartitionFilters [bucket INSET …] "
-            "— only the probed bucket directories are opened (read volume "
-            "bucket-bounded, not corpus-bounded); MapInPandas exact "
+            "Expect: Scan parquet whose Location is an InMemoryFileIndex "
+            "of only the probed buckets' files, taken from the current "
+            "snapshot record (read volume bucket-bounded, not "
+            "corpus-bounded; no directory listing); MapInPandas exact "
             "rerank; Sort+Window(row_number) global top-k merge.",
         )
         write_ann_index(emb, idx_root + "/ivf", kind="ivf", n_centroids=16)
         add(
-            "ann_index_topk probe (IVF index, partition-pruned read)",
+            "ann_index_topk probe (IVF index, probed cells' files only)",
             ann_index_topk(spark, idx_root + "/ivf", qs, k=5, n_probe=4),
-            "Expect: same shape as the LSH probe with PartitionFilters "
-            "over the n_probe nearest cells (centroids read from the "
-            "Spark-written _ann_centroids.parquet sidecar — no "
-            "driver-local file I/O anywhere in the path).",
+            "Expect: same shape as the LSH probe, its file index holding "
+            "the n_probe nearest cells' files (centroids read from the "
+            "centroid file the snapshot names — no driver-local file "
+            "I/O anywhere in the path).",
         )
     finally:
         # the plans are captured from .explain() strings; the two

@@ -125,7 +125,7 @@ def main() -> None:
     sc.setJobDescription("q6b fresh build")
     timed("q6b write_ann_index FRESH", lambda: write_ann_index(emb, idx, kind="lsh", n_planes=8))
     sc.setJobDescription("q6b rebuild over live")
-    timed("q6b write_ann_index LIVE(swap)", lambda: write_ann_index(emb, idx, kind="lsh", n_planes=8))
+    timed("q6b write_ann_index LIVE", lambda: write_ann_index(emb, idx, kind="lsh", n_planes=8))
     sc.setJobDescription("q6c probe")
     timed("q6c probe", lambda: ann_index_topk(spark, idx, qs, k=5, multiprobe=1).count())
     timed("q6c probe again", lambda: ann_index_topk(spark, idx, qs, k=5, multiprobe=1).count())

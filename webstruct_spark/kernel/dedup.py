@@ -38,13 +38,6 @@ def word_shingles(text: str, k: int = 3) -> Set[str]:
     return {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
 
 
-def char_shingles(text: str, k: int = 5) -> Set[str]:
-    t = normalize(text)
-    if len(t) < k:
-        return {t} if t else set()
-    return {t[i : i + k] for i in range(len(t) - k + 1)}
-
-
 def jaccard(a: Set[str], b: Set[str]) -> float:
     if not a and not b:
         return 1.0

@@ -64,12 +64,6 @@ def set_prf(
     )
 
 
-def mention_prf(pred_mentions: DataFrame, gold_mentions: DataFrame) -> DataFrame:
-    """Segment-level P/R/F1: exact (conv, turn, span, type) matches."""
-    keys = ["conv_id", "turn_idx", "tok_start", "tok_end", "entity_type"]
-    return set_prf(pred_mentions, gold_mentions, keys)
-
-
 def triple_prf(pred_triples: DataFrame, gold_triples: DataFrame) -> DataFrame:
     """Triple-set P/R — the BASELINE.json acceptance metric."""
     return set_prf(pred_triples, gold_triples, ["subj", "pred", "obj"])

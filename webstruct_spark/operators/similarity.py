@@ -21,10 +21,8 @@ distributed and the single-node gold path, so comparisons are exact.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
-import time
-from typing import Iterator, List, Set, Tuple
+from typing import Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -32,6 +30,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans import fsio, snapshots
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -245,86 +245,129 @@ def ivf_topk(
 # Persistent bucket-partitioned index: the 100-TB path.  The in-flight
 # lsh_topk/ivf_topk variants above filter executor-side but still SCAN
 # the whole corpus; at scale the scan dominates.  write_ann_index
-# materializes the embeddings parquet PARTITIONED BY bucket (LSH
-# bucket or IVF cell), and ann_index_topk probes with a partition
-# filter, so only the probed buckets' files are ever read
-# (PartitionFilters in the plan — see PLANS.md).
+# materializes the embeddings parquet under one ``bucket=N`` dir per
+# LSH bucket or IVF cell, and ann_index_topk reads only the probed
+# buckets' files.
 #
-# ALL sidecar I/O (metadata, centroids) goes through Spark readers/
-# writers, never a driver-local ``open()`` — the index directory may
-# live on HDFS/S3 where the driver has no POSIX view of the path.
+# The index's file set is its snapshot log (plans/snapshots.py): every
+# operation writes new part files beside the live ones, commits one
+# snapshot record listing the live files (bucket, rows, bytes) and the
+# meta, then GCs what no retained snapshot references.  Readers open
+# only the files the current snapshot lists, so a crash anywhere
+# leaves the last committed snapshot serving, and the next commit's GC
+# removes the crashed operation's files.  Maintenance (build, append,
+# rebuild, compact) stays serialized; a second writer that read the
+# same snapshot loses at the create-if-absent commit.
+#
+# The root is qualified to a Hadoop URI first, so all I/O goes through
+# Spark or the Hadoop FileSystem, never a driver-local ``open()`` — the
+# index may live on HDFS/S3 where the driver has no POSIX view of it.
+
+_CENTROIDS = "_ann_centroids.parquet"
 
 
-def _sidecar(path: str, name: str) -> str:
-    """Join a sidecar name onto the index path — delegates to the one
-    URI-safe join rule (fsio.join) so the two can never drift."""
-    from ..plans import fsio
-
-    return fsio.join(path, name)
-
-
-def _write_ann_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    row = (
-        meta["kind"],
-        int(meta["n_planes"]) if "n_planes" in meta else None,
-        int(meta["n_centroids"]) if "n_centroids" in meta else None,
-        int(meta["dim"]),
-    )
-    (
-        # one explicit slice: createDataFrame of a local list would
-        # parallelize into defaultParallelism mostly-empty slices —
-        # coalesce(1) evaluates them SERIALLY through one task (≈ 5 s
-        # of Python-worker round-trips) and repartition(1) pays a
-        # shuffle job (~0.5 s); parallelize(row, 1) is one task, no
-        # shuffle, no extra job.
-        spark.createDataFrame(
-            spark.sparkContext.parallelize([row], 1),
-            "kind string, n_planes int, n_centroids int, dim int",
+def _snapshot(spark: SparkSession, root: str) -> dict:
+    snap = snapshots.current(spark, root)
+    if snap is None:
+        raise ValueError(
+            "no ANN index snapshot at %r (nothing built there, or an "
+            "index written before the snapshot log) — build it with "
+            "write_ann_index" % root
         )
-        .write.mode("overwrite")
-        .parquet(_sidecar(path, "_ann_meta.parquet"))
+    return snap
+
+
+def _read_files(
+    spark: SparkSession, root: str, files: List[dict]
+) -> DataFrame:
+    """Exactly the listed snapshot files; ``basePath`` keeps the
+    ``bucket=N`` dirs as the ``bucket`` column."""
+    return spark.read.option("basePath", root).parquet(
+        *(fsio.join(root, f["path"]) for f in files)
     )
+
+
+def _added_files(
+    spark: SparkSession, root: str, dirs: List[str] | None, write
+) -> dict:
+    """Run ``write`` and return ``{path relative to root: bytes}`` of
+    the parquet files it added under ``dirs`` — every ``bucket=N`` dir
+    of the root when None.  Found by listing before and after: Spark
+    names part files after the write job's UUID, so they never collide
+    with files already there."""
+    def listing() -> dict:
+        ds = dirs
+        if ds is None:
+            ds = [
+                n for n, _ in fsio.listdir_if_exists(spark, root) or []
+                if n.startswith("bucket=")
+            ]
+        return {
+            d + "/" + n: size
+            for d in ds
+            for n, size in fsio.listdir_if_exists(
+                spark, fsio.join(root, d)
+            ) or []
+            if n.endswith(".parquet")
+        }
+
+    before = listing()
+    write()
+    return {p: size for p, size in listing().items() if p not in before}
+
+
+def _bucket_files(spark: SparkSession, root: str, added: dict) -> List[dict]:
+    """Snapshot entries for new part files: bucket from the dir name,
+    rows from the footer."""
+    return [
+        {
+            "path": p,
+            "bucket": int(p.split("/", 1)[0][len("bucket="):]),
+            "rows": fsio.parquet_num_rows(spark, fsio.join(root, p)),
+            "bytes": size,
+        }
+        for p, size in sorted(added.items())
+    ]
+
+
+def _append_writer(df: DataFrame):
+    """``df.write`` in append mode and without a ``_SUCCESS`` marker:
+    the snapshot commit is what publishes the files."""
+    return df.write.mode("append").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    )
+
+
+def _commit(
+    spark: SparkSession, root: str, parent: dict | None,
+    meta: dict, sidecars: dict, files: List[dict],
+) -> None:
+    snap = snapshots.commit(spark, root, parent, {
+        "meta": meta, "sidecars": sidecars, "files": files,
+    })
+    snapshots.gc(spark, root, snap)
 
 
 def read_ann_meta(spark: SparkSession, path: str) -> dict:
-    """Read the one-row ``_ann_meta.parquet`` sidecar (via Spark, so
-    any Hadoop-visible filesystem works).  A missing sidecar with a
-    ``.__ann_rebuild_old__`` sibling present is the one shape a
-    READER can see of a rebuild crashed between its two swap renames
-    — diagnosed loudly (run any maintenance entry to settle) instead
-    of surfacing as a bare missing-path error that reads like the
-    index was never built."""
-    from ..plans import fsio
-
-    meta_path = _sidecar(path, "_ann_meta.parquet")
-    if not fsio.exists(spark, meta_path) and fsio.exists(
-        spark, path + _ANN_REBUILD_OLD
-    ):
-        raise RuntimeError(
-            "ann index at %r: rebuild swap crashed between its two "
-            "renames (the old index is intact at %r) — run "
-            "write_ann_index / append_to_ann_index / "
-            "compact_ann_index (their entry repair settles it) "
-            "before probing" % (path, path + _ANN_REBUILD_OLD)
-        )
-    r = spark.read.parquet(meta_path).first()
-    meta = {"kind": r["kind"], "dim": int(r["dim"])}
-    if r["n_planes"] is not None:
-        meta["n_planes"] = int(r["n_planes"])
-    if r["n_centroids"] is not None:
-        meta["n_centroids"] = int(r["n_centroids"])
-    return meta
+    """The index meta (kind, n_planes or n_centroids, dim) from the
+    current snapshot record."""
+    return _snapshot(spark, fsio.qualify(spark, path))["meta"]
 
 
-def _read_centroids(spark: SparkSession, path: str) -> np.ndarray:
+def _centroids_of(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
     cent_rows = (
-        spark.read.parquet(_sidecar(path, "_ann_centroids.parquet"))
+        spark.read.parquet(fsio.join(root, snap["sidecars"]["centroids"]))
         .orderBy("cell")
         .collect()
     )
     return np.array(
         [list(r["centroid"]) for r in cent_rows], dtype=np.float32
     )
+
+
+def _read_centroids(spark: SparkSession, path: str) -> np.ndarray:
+    root = fsio.qualify(spark, path)
+    return _centroids_of(spark, root, _snapshot(spark, root))
 
 
 def _bucketized(
@@ -378,152 +421,6 @@ def _bucketized(
     return src.mapInPandas(bucketize, out_schema)
 
 
-# whole-index rebuild swap markers (sibling DIRS of the index path —
-# the per-bucket _ANN_TMP/_ANN_OLD markers live INSIDE it)
-_ANN_REBUILD_TMP = ".__ann_rebuild_tmp__"
-_ANN_REBUILD_OLD = ".__ann_rebuild_old__"
-
-
-def _build_index_at(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    target: str,
-    kind: str,
-    state: np.ndarray,
-    meta: dict,
-    id_col: str,
-    vec_col: str,
-) -> None:
-    """Write the full index layout (bucket-partitioned data +
-    centroid sidecar + meta sidecar) at ``target``.  The meta sidecar
-    is written LAST on purpose: its presence is the completeness
-    marker the rebuild-swap repair trusts (a crash anywhere earlier
-    leaves a metaless dir that reads as incomplete)."""
-    sc = spark.sparkContext
-    n_buckets = int(state.shape[0]) if kind == "ivf" else (
-        1 << int(meta["n_planes"])
-    )
-    # Cluster rows by bucket BEFORE the partitioned write, into an
-    # EXPLICIT task count.  Without this, each write task opens one
-    # file per distinct bucket it holds — measured at sf0.1: the scan
-    # is one partition, so ONE task serially creates all 256 bucket
-    # files (~5.6 s of executorRunTime, the whole build cost); an
-    # AQE-coalescible keyed repartition collapses right back to that
-    # single task (the post-shuffle partitions are tiny), which is why
-    # the explicit numPartitions matters — AQE does not coalesce a
-    # user-specified count.  The key is (bucket, salt): with
-    # n_tasks <= n_buckets the salt is constant (pure bucket hash, one
-    # file per bucket); on a big cluster (n_tasks >> n_buckets) the
-    # deterministic vec_id salt splits each bucket over ~n_tasks/
-    # n_buckets writers so a 100 TB bucket never lands whole in one
-    # task (guide §2.5: derive synthetic keys deterministically, never
-    # from rand()).
-    n_tasks = max(1, sc.defaultParallelism)
-    salt_slots = max(1, -(-n_tasks // n_buckets))
-    (
-        _bucketized(embeddings, kind, state, id_col, vec_col)
-        .repartition(
-            n_tasks,
-            F.col("bucket"),
-            F.pmod(F.xxhash64("vec_id"), F.lit(salt_slots)),
-        )
-        .write.mode("overwrite")
-        # static overwrite pinned: under a cluster-wide
-        # partitionOverwriteMode=dynamic, overwrite would keep stale
-        # bucket=N dirs (and crashed-compact leftovers) that are
-        # absent from the new data — the recover path's deletion
-        # guarantee depends on static semantics
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket")
-        .parquet(target)
-    )
-    if kind == "ivf":
-        cent_rows = [
-            (int(i), [float(x) for x in row])
-            for i, row in enumerate(state)
-        ]
-        # one explicit slice, no shuffle — see _write_ann_meta
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(cent_rows, 1),
-            "cell int, centroid array<float>",
-        ).write.mode("overwrite").parquet(
-            _sidecar(target, "_ann_centroids.parquet")
-        )
-    _write_ann_meta(spark, target, meta)
-
-
-def _repair_ann_rebuild(spark: SparkSession, path: str) -> str:
-    """Settle a crashed whole-index rebuild swap (see
-    :func:`write_ann_index`'s live-rebuild path).  Windows, in
-    protocol order: rebuild-tmp alone → pre-swap orphan, drop it;
-    old present + live ABSENT → between the two renames — roll
-    FORWARD when the tmp is complete (meta sidecar present — written
-    last), else roll BACK to the old index; old + live both present →
-    post-swap crash, finish the old delete.  Called at every
-    maintenance entry (append / compact / rebuild); read-only probes
-    instead get a loud diagnosis from :func:`read_ann_meta`.  Returns
-    the repair state ("clean" when nothing was pending)."""
-    from ..plans import fsio
-
-    tmp = path + _ANN_REBUILD_TMP
-    old = path + _ANN_REBUILD_OLD
-    if fsio.exists(spark, old):
-        if fsio.exists(spark, path):
-            if not fsio.exists(spark, _sidecar(path, "_ann_meta.parquet")):
-                # NOT the post-swap crash shape: the swap only ever
-                # renames a complete (meta-bearing, meta written
-                # last) tmp to the live name, so a metaless live dir
-                # beside an old copy means the live meta was LOST
-                # after the swap — external damage, not a protocol
-                # window.  Finishing the swap here would delete what
-                # may be the only meta-bearing complete copy, and
-                # auto-restoring the old copy would silently serve
-                # the PRE-rebuild index (the metaless live dir is
-                # the newer build); refuse with both intact, like
-                # every other non-protocol shape
-                old_has_meta = fsio.exists(
-                    spark, _sidecar(old, "_ann_meta.parquet")
-                )
-                raise RuntimeError(
-                    "ann rebuild repair: live index %r lost its "
-                    "_ann_meta.parquet sidecar while a %s copy "
-                    "exists — not a crash shape the swap protocol "
-                    "can produce (the swap only installs complete, "
-                    "meta-bearing builds), so refusing to delete "
-                    "either copy.  %s  Or retrain from the external "
-                    "source: write_ann_index(..., recover=True) "
-                    "after removing the old copy by hand"
-                    % (
-                        path, _ANN_REBUILD_OLD,
-                        (
-                            "The old copy still carries its meta: "
-                            "restore the PRE-rebuild index by "
-                            "deleting the metaless live dir and "
-                            "renaming the old copy to the live name "
-                            "(accepting that the crashed rebuild's "
-                            "newer input is discarded)."
-                            if old_has_meta else
-                            "The old copy lacks its meta too — "
-                            "neither is complete; salvage by hand."
-                        ),
-                    )
-                )
-            fsio.delete(spark, tmp)
-            fsio.delete(spark, old)
-            return "finished_swap"
-        if fsio.exists(spark, _sidecar(tmp, "_ann_meta.parquet")):
-            fsio.rename(spark, tmp, path)
-            fsio.delete(spark, old)
-            return "rolled_forward"
-        fsio.delete(spark, tmp)
-        fsio.rename(spark, old, path)
-        return "rolled_back"
-    if fsio.exists(spark, tmp):
-        fsio.delete(spark, tmp)
-        return "dropped_tmp"
-    return "clean"
-
-
 def write_ann_index(
     embeddings: DataFrame,
     path: str,
@@ -533,122 +430,28 @@ def write_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
-    recover: bool = False,
-    _prerepaired: bool = False,
 ) -> dict:
     """Materialize a bucket-partitioned ANN index at ``path``.
 
     ``kind='lsh'``: deterministic hyperplane buckets (reproducible
     from n_planes+dim, no stored state).  ``kind='ivf'``: k-means
-    cells; centroids are stored beside the data as
-    ``_ann_centroids.parquet`` (underscore-prefixed → invisible to
-    parquet discovery); pass ``centroids=`` to build with a FROZEN
-    pre-trained quantizer instead of training one (the rebuild path
-    of the append policy — see :func:`append_to_ann_index`).  Returns
-    the metadata dict (also written as a one-row
-    ``_ann_meta.parquet`` sidecar through Spark, so the index works
-    on any Hadoop-visible filesystem — the driver never needs a POSIX
-    view of ``path``).
+    cells; centroids are stored beside the data under
+    ``_ann_centroids.parquet``; pass ``centroids=`` to build with a
+    FROZEN pre-trained quantizer instead of training one (the rebuild
+    path of the append policy — see :func:`append_to_ann_index`).
+    Returns the metadata dict, which the snapshot record carries.
 
-    Rebuilding OVER a live index (the append policy's skew-triggered
-    retrain) does NOT overwrite in place — ``mode('overwrite')``
-    deletes the live index at write start, so a crash anywhere in a
-    100 TB-scale rebuild would leave probes with nothing to serve and
-    nothing to roll back to, for as long as the redo takes.  Instead
-    the new index is built at a ``.__ann_rebuild_tmp__`` sibling
-    (meta sidecar written last = completeness marker) and swapped in
-    with the same two-rename protocol as compaction; the old index
-    keeps serving probes for the whole build, and every crash window
-    is settled by :func:`_repair_ann_rebuild` at the next
-    maintenance entry (probes mid-swap get a loud diagnosis from
-    :func:`read_ann_meta` instead of a bare missing-path error).
-
-    ``recover=True`` asserts that ``embeddings`` is an external
-    source (reads nothing from the live index) and lets the rebuild
-    proceed over a crashed-compact shape the entry repair refuses to
-    untangle — the swap replaces the whole index root, refused dirs
-    included, so a full retrain from source is the wholesale recovery
-    from those shapes.  Never pass it with index-derived input: its
-    file listing is missing the refused bucket's rows (parquet
-    discovery skips the ``_``-prefixed dirs holding their only copy)
-    and the swap would delete them permanently.  On a METALESS root
-    still holding ``_compact_*`` dirs (a once-live index whose meta
-    sidecar was lost) the same assertion is required, but the
-    recovery there is a direct ``mode('overwrite')`` build, NOT the
-    two-rename swap — there is no complete old index to keep serving,
-    so a crash mid-recovery leaves only the partial new build."""
-    from ..plans import fsio
-
+    The new files land beside whatever the root already holds, and one
+    snapshot commit that lists only them makes the new index current.
+    Over a live index (the append policy's skew-triggered retrain)
+    probes therefore keep reading the old index until that commit, and
+    a crash anywhere leaves it serving; re-running the build is the
+    recovery.  Over a root without a snapshot (an index written before
+    the snapshot log, or any other leftovers) the first commit's GC
+    removes everything the root held."""
     spark = embeddings.sparkSession
-    if not _prerepaired:
-        _repair_ann_rebuild(spark, path)
-    live = fsio.exists(spark, _sidecar(path, "_ann_meta.parquet"))
-    if live and not _prerepaired:
-        # settle a crashed APPEND and a crashed per-bucket COMPACT so
-        # the old index serves clean probes for the whole tmp build
-        # (an index-derived rebuild must go through
-        # :func:`rebuild_ann_index`, whose preamble repairs BEFORE the
-        # caller's DataFrame captures its file listing and which then
-        # passes ``_prerepaired=True`` to skip this duplicate pass).
-        # One root LIST each when there is nothing to repair.  A
-        # compact shape the repair refuses to untangle raises by
-        # default — write_ann_index cannot verify that `embeddings`
-        # is external, and for the hand-rolled index-derived misuse
-        # the docstrings warn against (its parquet discovery skips
-        # the _-prefixed dirs holding the bucket's only copy) the
-        # swap below would make the loss permanent.  ``recover=True``
-        # is the caller's assertion that the input IS external, and
-        # downgrades the refusal to leave-in-place: the swap replaces
-        # the whole live root, refused dirs included, so the full
-        # retrain stays the documented wholesale recovery.
-        _reconcile_ann_append_intent(spark, path)
-        if recover:
-            _repair_ann_compaction(spark, path, on_unrepairable="keep")
-        else:
-            try:
-                _repair_ann_compaction(spark, path)
-            except RuntimeError as exc:
-                raise RuntimeError(
-                    "live index at %r holds a crashed-compact shape "
-                    "the entry repair refuses to untangle (chained "
-                    "below).  If `embeddings` is an EXTERNAL source "
-                    "— it does not read the live index — re-run with "
-                    "recover=True: the rebuild swap replaces the "
-                    "whole index root, refused shapes included.  If "
-                    "it derives from reading the index, do NOT: its "
-                    "file listing is missing the refused bucket's "
-                    "rows, and the swap would delete their only "
-                    "copies — see the chained refusal's diagnosis "
-                    "(the three-way shape includes its manual "
-                    "recovery order; the not-a-protocol-shape "
-                    "refusals need the stray dirs inspected and "
-                    "salvaged by hand)" % path
-                ) from exc
-    elif not live and not recover:
-        # metaless root: nothing servable to protect UNLESS it still
-        # holds _compact_* dirs — those only exist on crashed
-        # maintenance of a once-live index (the meta sidecar was
-        # lost, not never written), an old-without-live dir may hold
-        # a bucket's only copies, and the direct mode('overwrite')
-        # build below deletes them without the swap the live gate
-        # protects.  Same recover=True assertion required, checked
-        # HERE — one dir LIST, before any Spark job (first()/k-means)
-        # runs on a doomed build's behalf
-        leftovers = sorted(
-            n for n, _sz in (fsio.listdir_if_exists(spark, path) or [])
-            if n.startswith(_ANN_TMP) or n.startswith(_ANN_OLD)
-        )
-        if leftovers:
-            raise RuntimeError(
-                "metaless index root %r still holds crashed-"
-                "compact dirs %s — the meta sidecar of a live "
-                "index was lost, and an old-without-live dir may "
-                "hold a bucket's only copies, which this build's "
-                "overwrite would delete.  Re-run with "
-                "recover=True if `embeddings` is a complete "
-                "external source; otherwise salvage the _compact_"
-                "* dirs first" % (path, leftovers)
-            )
+    root = fsio.qualify(spark, path)
+    parent = snapshots.current(spark, root)
     first = embeddings.select(vec_col).first()
     if first is None:
         raise ValueError("cannot build an ANN index over an empty table")
@@ -666,23 +469,54 @@ def write_ann_index(
                 "dim": dim}
     else:
         raise ValueError("kind must be 'lsh' or 'ivf'")
-    if not live:
-        # first build (or a metaless root already vetted by the
-        # entry gate above): write directly — NOTE this path is a
-        # plain mode('overwrite'), not the two-rename swap, so with
-        # recover=True on a damaged metaless root a crash mid-build
-        # leaves only the partial new build (there was no complete
-        # old index to keep serving anyway)
-        _build_index_at(spark, embeddings, path, kind, state, meta,
-                        id_col, vec_col)
-        return meta
-    tmp = path + _ANN_REBUILD_TMP
-    old = path + _ANN_REBUILD_OLD
-    _build_index_at(spark, embeddings, tmp, kind, state, meta,
-                    id_col, vec_col)
-    fsio.rename(spark, path, old)
-    fsio.rename(spark, tmp, path)
-    fsio.delete(spark, old)
+    sc = spark.sparkContext
+    n_buckets = int(state.shape[0]) if kind == "ivf" else (1 << n_planes)
+    # Cluster rows by bucket BEFORE the partitioned write, into an
+    # EXPLICIT task count.  Without this, each write task opens one
+    # file per distinct bucket it holds — measured at sf0.1: the scan
+    # is one partition, so ONE task serially creates all 256 bucket
+    # files (~5.6 s of executorRunTime, the whole build cost); an
+    # AQE-coalescible keyed repartition collapses right back to that
+    # single task (the post-shuffle partitions are tiny), which is why
+    # the explicit numPartitions matters — AQE does not coalesce a
+    # user-specified count.  The key is (bucket, salt): with
+    # n_tasks <= n_buckets the salt is constant (pure bucket hash, one
+    # file per bucket); on a big cluster (n_tasks >> n_buckets) the
+    # deterministic vec_id salt splits each bucket over ~n_tasks/
+    # n_buckets writers so a 100 TB bucket never lands whole in one
+    # task (guide §2.5: derive synthetic keys deterministically, never
+    # from rand()).
+    n_tasks = max(1, sc.defaultParallelism)
+    salt_slots = max(1, -(-n_tasks // n_buckets))
+    rows = _bucketized(embeddings, kind, state, id_col, vec_col).repartition(
+        n_tasks,
+        F.col("bucket"),
+        F.pmod(F.xxhash64("vec_id"), F.lit(salt_slots)),
+    )
+    sidecars: dict = {}
+    if kind == "ivf":
+        cent_rows = [
+            (int(i), [float(x) for x in row])
+            for i, row in enumerate(state)
+        ]
+        # one explicit slice: createDataFrame of a local list would
+        # parallelize into defaultParallelism mostly-empty slices —
+        # coalesce(1) evaluates them SERIALLY through one task (≈ 5 s
+        # of Python-worker round-trips) and repartition(1) pays a
+        # shuffle job (~0.5 s); parallelize(row, 1) is one task, no
+        # shuffle, no extra job, one part file.
+        cent = spark.createDataFrame(
+            sc.parallelize(cent_rows, 1), "cell int, centroid array<float>"
+        )
+        (sidecars["centroids"],) = _added_files(
+            spark, root, [_CENTROIDS],
+            lambda: _append_writer(cent).parquet(fsio.join(root, _CENTROIDS)),
+        )
+    files = _bucket_files(spark, root, _added_files(
+        spark, root, None,
+        lambda: _append_writer(rows).partitionBy("bucket").parquet(root),
+    ))
+    _commit(spark, root, parent, meta, sidecars, files)
     return meta
 
 
@@ -698,27 +532,20 @@ def rebuild_ann_index(
     skew-trigger's natural shape (:func:`ann_index_cell_skew` crossed
     the threshold; re-bucket with a fresh or bigger quantizer).
 
-    Hand-rolling ``write_ann_index(spark.read.parquet(path), path)``
-    is unsafe for one subtle reason: Spark captures the file listing
-    when the CALLER constructs the DataFrame, BEFORE
-    :func:`write_ann_index`'s entry repairs settle pending
-    maintenance state — a crashed append's strays then fail the
-    build scan loudly mid-swap (FILE_NOT_EXIST after the repair
-    deletes them), and a bucket mid-compact-swap is silently MISSING
-    from the stale listing (its restored live dir was never listed),
-    so the rebuilt index drops the whole bucket.  This helper settles
-    every window FIRST and only then reads, so the rebuild input is
-    exactly the committed index.
+    The input is exactly the current snapshot's files.  A hand-rolled
+    ``write_ann_index(spark.read.parquet(path), path)`` is wrong: a
+    directory listing also holds the files of the retained previous
+    snapshot and of crashed writes, so the rebuilt index would carry
+    duplicates.
 
     Defaults (``kind``/``n_planes``/``n_centroids`` = None) re-use
     the live meta's values — a same-shape rebalance; override to grow
     the quantizer.  ``centroids`` passes a frozen pre-trained IVF
     quantizer through (else one is retrained on the current vectors —
     the drift policy's retrain step)."""
-    _repair_ann_rebuild(spark, path)
-    meta = read_ann_meta(spark, path)
-    _reconcile_ann_append_intent(spark, path)
-    _repair_ann_compaction(spark, path)
+    root = fsio.qualify(spark, path)
+    snap = _snapshot(spark, root)
+    meta = snap["meta"]
     kind_src = (
         "explicit kind= argument" if kind else "stored meta"
     )
@@ -763,16 +590,8 @@ def rebuild_ann_index(
             else meta.get("n_centroids", 16)
         )
         kw["centroids"] = centroids
-    # listing captured HERE — strictly after the repairs above; the
-    # scan itself executes inside write_ann_index's tmp build, before
-    # the two swap renames touch the live dir.  _prerepaired: this
-    # preamble already ran the full repair set, so write_ann_index
-    # skips its duplicate pass (two root LISTs + existence RPCs per
-    # scheduled rebuild on an object store) — safe under the
-    # serialized-maintenance contract: nothing between here and the
-    # swap mutates the index root
-    stored = spark.read.parquet(path).select("vec_id", "vec")
-    return write_ann_index(stored, path, _prerepaired=True, **kw)
+    stored = _read_files(spark, root, snap["files"]).select("vec_id", "vec")
+    return write_ann_index(stored, path, **kw)
 
 
 def append_to_ann_index(
@@ -786,10 +605,9 @@ def append_to_ann_index(
     index WITHOUT rebuilding: bucketize only the new rows under the
     index's FROZEN state (LSH planes re-derived from stored
     n_planes+dim; IVF centroids read from the stored sidecar —
-    appends never move centroids) and ``mode('append')`` them into
-    the existing bucket partition directories (pure file adds — no
-    overwrite, so ``partitionOverwriteMode`` is irrelevant and
-    concurrent probes keep reading a consistent index).
+    appends never move centroids), write them as new part files in
+    the touched bucket dirs, and commit a snapshot listing the
+    previous files plus the new ones.
 
     IVF centroid-drift policy: the quantizer stays frozen across
     appends, so cells only ever gain members; if the appended
@@ -799,50 +617,19 @@ def append_to_ann_index(
     :func:`ann_index_cell_skew`; when max/mean cell size exceeds the
     deployment threshold (≈8 is a reasonable default), retrain with
     :func:`rebuild_ann_index` (optionally seeding ``centroids=`` from
-    the old quantizer's cells) — NOT with a hand-rolled
-    ``write_ann_index(spark.read.parquet(path), path)``, whose file
-    listing is captured before the entry repairs run (see
-    :func:`rebuild_ann_index`).  Returns the (unchanged) meta dict.
+    the old quantizer's cells).  Returns the (unchanged) meta dict.
 
-    Crash safety: the multi-bucket append is NOT atomic — a driver
-    kill during the job commit can leave a visible SUBSET of the
-    batch's part files (some buckets gained files, others did not),
-    and "the write either committed or it didn't" would be false.
-    Every append therefore writes a tiny write-ahead intent sidecar
-    first (``_ann_append_intent.json``: the touched buckets' pre-
-    write part-file listings), cleared only after the write lands;
-    the next maintenance entry (append / compact / rebuild)
-    reconciles a pending intent by deleting exactly the stray files,
-    restoring the pre-append state so the caller's retry is clean —
-    neither duplicated nor silently half-applied.  A retry after a
-    FULLY landed write still duplicates (the intent was cleared);
-    pass ``skip_existing_ids=True`` to anti-join the new batch
-    against the index's current ids first — exact, but costs a full
+    A crash before the commit leaves no part of the batch visible; a
+    crash after it leaves the whole batch visible.  A caller that saw
+    the append fail cannot tell which, so its retry should pass
+    ``skip_existing_ids=True``: the new batch is anti-joined against
+    the index's current ids first — exact, but it costs a full
     id-column scan of the index, so it is opt-in rather than the
-    default at 100 TB.  Probes never refuse on a pending intent (a
-    partial batch adds uncommitted extras, it never loses committed
-    vectors), matching the KG side's read-vs-repair split."""
-    from ..plans import fsio
-
+    default at 100 TB."""
     spark = new_embeddings.sparkSession
-    # settle a crashed whole-index rebuild first (live dir may be one
-    # rename away), then read the meta the repair may have restored
-    _repair_ann_rebuild(spark, path)
-    meta = read_ann_meta(spark, path)
-    # settle a prior crashed APPEND (delete its stray part files so
-    # this run starts from disk == committed), then any crashed-
-    # compact leftovers: appending into a bucket whose live dir is
-    # mid-swap (tmp+old present, live absent) would recreate the live
-    # dir with only the new batch — the one shape
-    # _repair_ann_compaction refuses to untangle.  One dir listing
-    # each when there is nothing to repair.
-    _reconcile_ann_append_intent(spark, path)
-    # keep the repair's post-repair root name set: it stays current
-    # until our own intent write (maintenance entries are serialized
-    # by contract and nothing below mutates the root), so the
-    # pre-write bucket listings reuse it instead of paying a second
-    # root LIST per scheduled append
-    _, root_names = _repair_ann_compaction(spark, path)
+    root = fsio.qualify(spark, path)
+    snap = _snapshot(spark, root)
+    meta = snap["meta"]
     # fail-fast dim check on the first non-null vector; ragged or
     # null vectors deeper in the batch are caught executor-side by
     # _bucketized's per-batch dimension guard with the same message
@@ -860,7 +647,7 @@ def append_to_ann_index(
             % (dim, meta["dim"], path)
         )
     if skip_existing_ids:
-        existing = spark.read.parquet(path).select(
+        existing = _read_files(spark, root, snap["files"]).select(
             F.col("vec_id").alias(id_col)
         )
         new_embeddings = new_embeddings.join(
@@ -869,12 +656,12 @@ def append_to_ann_index(
     if meta["kind"] == "lsh":
         state = _planes(meta["n_planes"], meta["dim"])
     else:
-        state = _read_centroids(spark, path)
+        state = _centroids_of(spark, root, snap)
     bucketized = _bucketized(
         new_embeddings, meta["kind"], state, id_col, vec_col
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # the intent needs the TOUCHED buckets' pre-write listings;
+        # only the touched bucket dirs are listed around the write;
         # persisting the bucketized delta means the bucket-set agg
         # and the write share one bucketize pass over the batch
         touched = sorted(
@@ -883,301 +670,40 @@ def append_to_ann_index(
         )
         if not touched:
             return meta  # all rows filtered (skip_existing_ids)
-        root = root_names  # post-repair listing, see entry preamble
-        pre: dict = {}
-        for b in touched:
-            dname = "bucket=%d" % b
-            if dname in root:
-                pre[dname] = sorted(
-                    n
-                    for n in fsio.listdir_names(
-                        spark, _sidecar(path, dname)
-                    )
-                    if n.endswith(".parquet")
-                )
-            else:
-                pre[dname] = []
-        # no-clobber atomic write: a concurrent append (maintenance
-        # contract violation) fails HERE, loudly, before any data
-        # write — not after interleaving part files
-        fsio.write_text_atomic(
-            spark, _sidecar(path, _ANN_INTENT),
-            json.dumps({"utc_ns": time.time_ns(), "pre": pre}),
+        added = _added_files(
+            spark, root, ["bucket=%d" % b for b in touched],
+            lambda: _append_writer(bucketized).partitionBy(
+                "bucket"
+            ).parquet(root),
         )
-        bucketized.write.mode("append").partitionBy("bucket").parquet(
-            path
-        )
-        fsio.delete(spark, _sidecar(path, _ANN_INTENT), recursive=False)
     finally:
         bucketized.unpersist()
+    _commit(spark, root, snap, meta, snap["sidecars"],
+            snap["files"] + _bucket_files(spark, root, added))
     return meta
-
-
-_ANN_INTENT = "_ann_append_intent.json"
-
-
-def _reconcile_ann_append_intent(spark: SparkSession, path: str) -> dict:
-    """Settle a crashed :func:`append_to_ann_index`: a pending intent
-    sidecar means a prior append died between its intent write and
-    its clear — the batch may be HALF-visible (some buckets gained
-    part files, others did not; Spark's job commit is not atomic
-    across partition dirs).  Reverting to the intent's pre-write
-    listings restores exactly the committed state, so the upstream
-    retry that is coming anyway (the caller never saw success)
-    re-appends the whole batch once — exactly-once from the caller's
-    perspective, with no index-wide id scan.  Returns
-    ``{bucket_dir: n_strays_deleted}``."""
-    from ..plans import fsio
-
-    ipath = _sidecar(path, _ANN_INTENT)
-    if not fsio.exists(spark, ipath):
-        return {}
-    it = json.loads(fsio.read_text(spark, ipath))
-    reverted: dict = {}
-    for dname in sorted(it.get("pre", {})):
-        pre_set = set(it["pre"][dname])
-        bdir = _sidecar(path, dname)
-        listing = fsio.listdir_if_exists(spark, bdir)
-        if listing is None:
-            continue
-        n_strays = 0
-        remaining = 0
-        for n, _ in listing:
-            if not n.endswith(".parquet"):
-                continue
-            if n in pre_set:
-                remaining += 1
-            else:
-                fsio.delete(spark, fsio.join(bdir, n), recursive=False)
-                n_strays += 1
-        if not pre_set and not remaining:
-            # the crashed append CREATED this bucket dir — drop it so
-            # partition discovery never sees an empty phantom bucket
-            fsio.delete(spark, bdir)
-        if n_strays:
-            reverted[dname] = n_strays
-    # job-temp leftovers of the crashed write
-    fsio.delete(spark, _sidecar(path, "_temporary"))
-    fsio.delete(spark, ipath, recursive=False)
-    return reverted
 
 
 def ann_index_cell_skew(spark: SparkSession, path: str) -> float:
     """max/mean bucket size of a persistent index — the rebuild
-    trigger of the append policy (one Spark agg over the partition
-    column; with partition-column-only scans this reads footers, not
-    vectors).  Read-only like the probes, so it shares their
-    torn-swap guard: partition discovery over a mid-swap index would
-    silently skip the absent live bucket — if that was the hot
-    bucket, the reported skew DROPS and the rebuild trigger is
-    suppressed, the same silent-miss shape the probe guard exists
-    for.  And like the probes it goes through :func:`read_ann_meta`
-    first, so a rebuild crashed between its two swap renames is
-    diagnosed loudly ("run maintenance to settle") instead of
-    surfacing as a bare missing-path error — the skew monitor is
-    exactly the reader that runs right after rebuilds."""
-    read_ann_meta(spark, path)
-    _check_no_torn_swap(spark, path)
-    row = (
-        spark.read.parquet(path)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("avg"),
-        )
-        .first()
-    )
-    return float(row["mx"]) / float(row["avg"])
+    trigger of the append policy.  Computed from the row counts the
+    current snapshot records per file, so it reads no data."""
+    sizes: dict = {}
+    for f in _snapshot(spark, fsio.qualify(spark, path))["files"]:
+        sizes[f["bucket"]] = sizes.get(f["bucket"], 0) + f["rows"]
+    counts = [n for n in sizes.values() if n]
+    return float(max(counts)) / (float(sum(counts)) / len(counts))
 
 
 # -- ANN index small-file compaction ---------------------------------------
 # Every append_to_ann_index adds part files to the touched bucket
-# partition dirs (mode('append') never rewrites), so a week of
-# appended batches turns each hot bucket into dozens of tiny files —
-# per-file open/footer cost on every probe and listing pressure on
-# the object store, the same pathology plans/compaction.py fixes for
-# the KG stages.  The swap protocol and repair below are the SIBLING
-# of plans/compaction.py's (see its module docstring): per-bucket
-# markers and fingerprint verification here vs per-stage suffix dirs
-# and manifest rows_out there — a fix to either state machine almost
-# certainly applies to the other; mirror it.  compact_ann_index rewrites fragmented BUCKET dirs
-# (never the whole index): each is coalesced shuffle-free into
-# ceil(bytes/target) files, footer-verified row-exact, then swapped
-# by two renames.  The tmp/old dirs live as underscore-prefixed
-# SIBLINGS inside the index root ("_compact_tmp_b<N>") — Spark's
-# partition discovery ignores _-prefixed names, so a crashed compact
-# never corrupts probes: whenever the live "bucket=N" dir exists it
-# is either the old file set or the complete verified new one, and
-# the one crash window where it does NOT exist (between the two
-# renames) is detected by the probe's torn-swap guard
-# (_check_no_torn_swap), which fails loudly instead of silently
-# serving results missing that bucket.  The same brief absence also
-# exists for a concurrent probe while a compact is RUNNING; run
-# compaction in the same maintenance window as appends, as with
-# compact_kg.
-
-_ANN_TMP = "_compact_tmp_b"
-_ANN_OLD = "_compact_old_b"
-
-
-def _repair_ann_compaction(
-    spark: SparkSession, path: str, on_unrepairable: str = "raise"
-) -> Tuple[List[str], Set[str]]:
-    """Finish or roll back a crashed compact (called on every
-    compact entry).  Windows, per bucket, in protocol order:
-
-    * tmp present, live present, old ABSENT → crashed before the swap
-      began: the live dir is untouched; drop the tmp.
-    * tmp present, live ABSENT, old present → crashed between the two
-      renames: the tmp was row-verified before rename #1, so roll
-      FORWARD (rename tmp→live, drop old).
-    * tmp absent, live present, old present → crashed before the old
-      delete: finish it (drop old).
-
-    tmp, live, AND old all present is NOT a crash shape the protocol
-    can produce — it means something recreated the live dir after a
-    between-renames crash (an append run outside the maintenance
-    window; :func:`append_to_ann_index` itself repairs on entry
-    precisely so its own scheduled runs can never manufacture this),
-    and that live dir may hold rows the tmp/old copies lack — so it
-    raises with all three dirs intact rather than deleting any of
-    them.  Likewise live and old both absent (the bucket never
-    existed mid-protocol) raises rather than guessing.  Returns
-    ``(repaired bucket names, post-repair root name set)``.
-
-    Costs exactly ONE directory listing: live/old existence is
-    answered from the listing itself and the set is maintained
-    through the repairs (valid because maintenance entries — compact
-    and append — are serialized by contract; nothing else creates or
-    removes these dirs mid-repair), so on an object store a clean
-    entry pays one LIST, not one LIST plus per-dir existence RPCs.
-    The returned name set is current under the same serialized-
-    maintenance contract, so callers (compact_ann_index) reuse it
-    instead of paying a second root LIST per maintenance entry.
-
-    ``on_unrepairable='keep'`` turns both refusals into leave-in-place
-    skips (the unrepairable bucket's dirs are not touched and not
-    listed as repaired) — ONLY for callers about to replace the whole
-    index tree from an EXTERNAL source (:func:`write_ann_index`'s
-    live-rebuild swap deletes the old root, refused shapes included),
-    where raising would block the wholesale recovery that makes the
-    refusal moot.  Every entry whose input or probes READ the live
-    buckets must keep the default ``'raise'``."""
-    from ..plans import fsio
-
-    names = set(fsio.listdir_names(spark, path))
-    repaired: List[str] = []
-    kept: Set[str] = set()  # buckets left in place under 'keep'
-    for n in sorted(names):
-        if n.startswith(_ANN_TMP):
-            b = n[len(_ANN_TMP):]
-            live_name = "bucket=" + b
-            old_name = _ANN_OLD + b
-            live = _sidecar(path, live_name)
-            old = _sidecar(path, old_name)
-            live_exists = live_name in names
-            old_exists = old_name in names
-            if live_exists and old_exists:
-                if on_unrepairable == "keep":
-                    # the old dir below must survive too — deleting
-                    # it would manufacture the pre-swap tmp+live
-                    # shape and a later entry would drop the tmp
-                    kept.add(b)
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has tmp, live AND old "
-                    "dirs for bucket %s — a between-renames crash "
-                    "followed by something recreating the live dir "
-                    "(an append outside the maintenance window?); "
-                    "the live dir may hold rows the tmp/old copies "
-                    "lack, so refusing to delete any of the three — "
-                    "recover IN THIS ORDER: merge 'bucket=%s' into "
-                    "'%s%s', remove the now-merged 'bucket=%s', "
-                    "rename the tmp to the live name, THEN remove "
-                    "'%s%s' last.  Every intermediate state of that "
-                    "order is one this repair refuses (all three "
-                    "present) or completes forward (tmp+old -> roll "
-                    "forward; live+old -> drop old); removing the "
-                    "old dir any earlier creates the tmp+live-only "
-                    "shape this repair reads as a pre-swap crash and "
-                    "would delete the merged tmp"
-                    % (path, b, b, _ANN_TMP, b, b, _ANN_OLD, b)
-                )
-            if live_exists:
-                fsio.delete(spark, _sidecar(path, n))
-                names.discard(n)
-            elif old_exists:
-                fsio.rename(spark, _sidecar(path, n), live)
-                fsio.delete(spark, old)
-                names.discard(n)
-                names.add(live_name)
-                names.discard(old_name)
-            else:
-                if on_unrepairable == "keep":
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has a tmp dir but neither "
-                    "a live nor an old 'bucket=%s' — not a crash shape "
-                    "the swap protocol can produce; refusing to guess"
-                    % (path, b)
-                )
-            repaired.append("bucket=" + b)
-    # old-only leftovers (post-swap crash): the live dir is already
-    # the new file set; just drop the old copy.  `names` was kept
-    # current through the loop above, so no re-listing is needed.
-    for n in sorted(names):
-        if n.startswith(_ANN_OLD):
-            b = n[len(_ANN_OLD):]
-            if b in kept:
-                continue  # part of a shape left intact above
-            if ("bucket=" + b) not in names:
-                if on_unrepairable == "keep":
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has an old dir for bucket "
-                    "%s but no live dir — not a crash shape the swap "
-                    "protocol can produce; refusing to guess" % (path, b)
-                )
-            fsio.delete(spark, _sidecar(path, n))
-            names.discard(n)
-            if "bucket=" + b not in repaired:
-                repaired.append("bucket=" + b)
-    return repaired, names
-
-
-def _check_no_torn_swap(spark: SparkSession, path: str) -> None:
-    """Probe-side guard for the one crash window a READER can see:
-    between compact's two renames the live ``bucket=N`` dir is absent
-    while its tmp/old copy exists — partition discovery then silently
-    serves results MISSING that entire bucket (no error) until the
-    next maintenance entry repairs it.  Probes are read-only by
-    design — a probe that repaired could race a live in-flight
-    compact and delete the tmp it had just verified — so they detect
-    the torn shape and fail LOUDLY instead, and any maintenance entry
-    (:func:`compact_ann_index` / :func:`append_to_ann_index`) rolls
-    the swap forward.  tmp or old dirs WITH the live dir present are
-    fine: the live file set is intact (pre-swap or post-old-delete
-    crash leftovers), so the probe's answer is correct.  Costs one
-    directory listing per probe call — a batch top-k over a whole
-    query set, not a per-row path."""
-    from ..plans import fsio
-
-    names = set(fsio.listdir_names(spark, path))
-    for prefix in (_ANN_TMP, _ANN_OLD):
-        for n in names:
-            if n.startswith(prefix) and (
-                "bucket=" + n[len(prefix):]
-            ) not in names:
-                raise RuntimeError(
-                    "ann index at %r: torn compaction swap — %r exists "
-                    "but 'bucket=%s' is absent, so a probe would "
-                    "silently return results missing that whole "
-                    "bucket; run compact_ann_index or "
-                    "append_to_ann_index (their entry repair rolls "
-                    "the swap forward) before probing"
-                    % (path, n, n[len(prefix):])
-                )
+# dirs, so a week of appended batches turns each hot bucket into
+# dozens of tiny files — per-file open/footer cost on every probe, the
+# same pathology plans/compaction.py fixes for the KG stages.
+# compact_ann_index rewrites each fragmented bucket (never the whole
+# index) shuffle-free into ceil(bytes/target) new files in the same
+# bucket dir, checks their footer rows against the snapshot's, and
+# commits one snapshot with those buckets' files replaced.  Until that
+# commit the rewrites are unreferenced files no reader opens.
 
 
 def compact_ann_index(
@@ -1190,96 +716,72 @@ def compact_ann_index(
     :func:`write_ann_index` index into ~``target_bytes`` files.
 
     Idempotent and cheap when nothing is fragmented: the no-op
-    decision per bucket is ONE dir listing (file count + bytes vs
-    ``ceil(bytes/target)``), never footer reads — a scheduled compact
-    over an already-compact index costs one listing per bucket.  A
-    bucket that IS rewritten is footer-verified row-exact against its
-    pre-rewrite footer total before the swap; a mismatched rewrite is
-    discarded with the live dir untouched.  Sidecars
-    (``_ann_meta.parquet``, ``_ann_centroids.parquet``) are one-row /
-    tiny, never appended to, and never touched here.
+    decision per bucket comes from the snapshot's file sizes (file
+    count vs ``ceil(bytes/target)``) with no listing or footer read.
+    A rewritten bucket's new files must hold exactly the snapshot's
+    row count for it, else nothing is committed.  The centroid sidecar
+    is never touched.
 
     Do not run concurrently with :func:`append_to_ann_index` over the
     same path (same maintenance-window contract as
-    ``plans.compaction.compact_kg``).  All I/O routes through
-    :mod:`..plans.fsio`, so the index may live on any Hadoop-visible
-    filesystem.  Returns ``{buckets_total, buckets_compacted,
-    n_files_before, n_files_after, rows_verified, repaired}``."""
-    from ..plans import fsio
-    from ..plans.manifest import table_fingerprint
-
-    # fail fast BEFORE repair mutates anything: 0 would divide by zero
-    # mid-maintenance, a negative value would silently coalesce every
-    # bucket to one file (same guard jobs/kg_build.py applies in front
-    # of compact_kg — this API has no CLI, so it guards itself)
+    ``plans.compaction.compact_kg``).  Returns ``{buckets_total,
+    buckets_compacted, n_files_before, n_files_after, rows_verified,
+    repaired}``; ``repaired`` is always empty, since a snapshot-logged
+    index has no crash state to repair."""
+    # fail fast: 0 would divide by zero, a negative value would
+    # silently coalesce every bucket to one file (same guard
+    # jobs/kg_build.py applies in front of compact_kg — this API has
+    # no CLI, so it guards itself)
     if target_bytes <= 0:
         raise ValueError(
             "compact_ann_index: target_bytes must be positive, got %r"
             % (target_bytes,)
         )
-    # settle crashed sibling maintenance first: a crashed whole-index
-    # rebuild (live dir one rename away), then a crashed append's
-    # stray part files — compacting strays would launder an
-    # uncommitted half-batch into the compacted file set
-    _repair_ann_rebuild(spark, path)
-    _reconcile_ann_append_intent(spark, path)
-    # the repair's post-repair name set is current under the
-    # serialized-maintenance contract — reusing it saves the second
-    # root LIST every scheduled compact would otherwise pay
-    repaired, root_names = _repair_ann_compaction(spark, path)
-    buckets = sorted(n for n in root_names if n.startswith("bucket="))
-    if not buckets:
-        raise ValueError(
-            "compact_ann_index: no bucket partitions at %r — not a "
-            "write_ann_index directory" % path
-        )
+    root = fsio.qualify(spark, path)
+    snap = _snapshot(spark, root)
+    by_bucket: dict = {}
+    for f in snap["files"]:
+        by_bucket.setdefault(f["bucket"], []).append(f)
     out = {
-        "buckets_total": len(buckets),
+        "buckets_total": len(by_bucket),
         "buckets_compacted": 0,
-        "n_files_before": 0,
+        "n_files_before": len(snap["files"]),
         "n_files_after": 0,
         "rows_verified": 0,
-        "repaired": repaired,
+        "repaired": [],
     }
-    for b in buckets:
-        live = _sidecar(path, b)
-        pq_files = [
-            (n, sz)
-            for n, sz in fsio.listdir(spark, live)
-            if n.endswith(".parquet")
-        ]
-        n_files = len(pq_files)
-        nbytes = sum(sz for _, sz in pq_files)
-        n_target = max(1, math.ceil(nbytes / float(target_bytes)))
-        out["n_files_before"] += n_files
-        if n_files <= n_target and not force:
-            out["n_files_after"] += n_files
+    files: List[dict] = []
+    for b in sorted(by_bucket):
+        old = by_bucket[b]
+        n_target = max(
+            1, math.ceil(sum(f["bytes"] for f in old) / float(target_bytes))
+        )
+        if len(old) <= n_target and not force:
+            files += old
             continue
-        fp = table_fingerprint(live, spark=spark)
-        bucket_id = b[len("bucket="):]
-        tmp = _sidecar(path, _ANN_TMP + bucket_id)
-        old = _sidecar(path, _ANN_OLD + bucket_id)
-        # reading the bucket dir directly yields the file columns only
-        # (vec_id, vec — the partition value lives in the dir name),
-        # which is exactly what the original part files hold, so the
-        # rewrite is layout-identical; coalesce is shuffle-free
-        spark.read.parquet(live).coalesce(n_target).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        tmp_fp = table_fingerprint(tmp, spark=spark)
-        if tmp_fp["rows"] != fp["rows"]:
-            fsio.delete(spark, tmp)
+        # reading the listed files with the root as basePath yields
+        # (vec_id, vec, bucket), so partitionBy("bucket") lands the
+        # rewrite in the same bucket dir; coalesce is shuffle-free
+        new = _bucket_files(spark, root, _added_files(
+            spark, root, ["bucket=%d" % b],
+            lambda: _append_writer(
+                _read_files(spark, root, old).coalesce(n_target)
+            ).partitionBy("bucket").parquet(root),
+        ))
+        rows = sum(f["rows"] for f in new)
+        want = sum(f["rows"] for f in old)
+        if rows != want:
             raise RuntimeError(
-                "compact_ann_index: rewrite of %r produced %d rows, "
-                "expected %d — tmp discarded, bucket untouched"
-                % (live, tmp_fp["rows"], fp["rows"])
+                "compact_ann_index: rewrite of bucket %d at %r produced "
+                "%d rows, the snapshot lists %d — nothing committed"
+                % (b, path, rows, want)
             )
-        fsio.rename(spark, live, old)
-        fsio.rename(spark, tmp, live)
-        fsio.delete(spark, old)
+        files += new
         out["buckets_compacted"] += 1
-        out["n_files_after"] += tmp_fp["n_files"]
-        out["rows_verified"] += tmp_fp["rows"]
+        out["rows_verified"] += rows
+    out["n_files_after"] = len(files)
+    if out["buckets_compacted"]:
+        _commit(spark, root, snap, snap["meta"], snap["sidecars"], files)
     return out
 
 
@@ -1293,20 +795,16 @@ def ann_index_topk(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Top-k probe over a :func:`write_ann_index` index.  Reads ONLY
-    the probed bucket partitions (partition pruning at the source) and
-    reranks exactly inside them — same results as lsh_topk/ivf_topk
-    with the same probe settings, without the full-corpus scan.
+    the current snapshot's files in the probed buckets and reranks
+    exactly inside them — same results as lsh_topk/ivf_topk with the
+    same probe settings, without the full-corpus scan.
 
-    All sidecar reads go through Spark (:func:`read_ann_meta`), so
-    the probe works against an index on any Hadoop-visible filesystem
-    — no driver-local ``open()`` of ``path``.
-
-    Raises RuntimeError if the index has a torn compaction swap (a
-    live bucket dir absent with its tmp/old copy present) — the one
-    crash shape that would otherwise SILENTLY drop a whole bucket
-    from the results; see :func:`_check_no_torn_swap`."""
-    meta = read_ann_meta(spark, path)
-    _check_no_torn_swap(spark, path)
+    Snapshot and centroid reads go through the Hadoop FileSystem and
+    Spark, so the probe works against an index on any Hadoop-visible
+    filesystem — no driver-local ``open()`` of ``path``."""
+    root = fsio.qualify(spark, path)
+    snap = _snapshot(spark, root)
+    meta = snap["meta"]
     q_ids = np.array([q[0] for q in queries], dtype=np.int64)
     q_mat = _normalize_rows(
         np.array([q[1] for q in queries], dtype=np.float32)
@@ -1328,17 +826,16 @@ def ann_index_topk(
             for m in flip_masks:
                 probe.setdefault(int(b) ^ m, []).append(qi)
     else:
-        centroids = _read_centroids(spark, path)
+        centroids = _centroids_of(spark, root, snap)
         q_sims = q_mat.astype(np.float64) @ centroids.T.astype(np.float64)
         npb = min(n_probe, centroids.shape[0])
         for qi in range(len(queries)):
             for c in np.argsort(-q_sims[qi])[:npb]:
                 probe.setdefault(int(c), []).append(qi)
+    files = [f for f in snap["files"] if f["bucket"] in probe]
+    if not files:
+        return topk_merge(spark.createDataFrame([], TOPK_SCHEMA), k)
     bc = spark.sparkContext.broadcast((q_ids, q_mat, probe))
-
-    buckets = sorted(probe.keys())
-    # partition filter -> only probed bucket directories are scanned
-    src = spark.read.parquet(path).where(F.col("bucket").isin(buckets))
 
     def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat, pr = bc.value
@@ -1366,9 +863,9 @@ def ann_index_topk(
                 {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
             )
 
-    cands = src.select("vec_id", "vec", "bucket").mapInPandas(
-        local, TOPK_SCHEMA
-    )
+    cands = _read_files(spark, root, files).select(
+        "vec_id", "vec", "bucket"
+    ).mapInPandas(local, TOPK_SCHEMA)
     return topk_merge(cands, k)
 
 

@@ -343,6 +343,15 @@ def prepare_fit_rows(
     return out
 
 
+def _check_rounds(rounds: int) -> None:
+    """Zero mixing rounds would return the untrained initial model
+    without ever looking at the data, so refuse them up front."""
+    if rounds < 1:
+        raise ValueError(
+            "CRF mixing needs rounds >= 1, got %r" % (rounds,)
+        )
+
+
 def train_crf_distributed(
     turns: DataFrame | None,
     entity_types=DEFAULT_TYPES,
@@ -435,6 +444,7 @@ def train_crf_distributed(
     feature counts; pytest-gated).  Only meaningful with
     ``min_feat_df``; ignored when pruning is off.
     """
+    _check_rounds(rounds)
     from operator import add as _add
 
     from pyspark import StorageLevel
@@ -749,6 +759,7 @@ def train_crf_mixed_local(
     global min-df feature pruning, per-shard fit, and ascending-pid
     mixing order, so the weights are byte-identical to the distributed
     fit (the gold-builder path).  Must stay in lockstep."""
+    _check_rounds(rounds)
     import zlib
     from itertools import chain
 

@@ -58,15 +58,11 @@ the per-conversation stages downstream of ``extracted`` are 5-10%
 of corpus bytes, so at 100 TB the big rewrite is the ``extracted``
 stage's alone and runs at full cluster width.
 
-SIBLING PROTOCOL: the persistent ANN index has its own copy of this
-write→verify→two-rename→delete-old swap and its per-window repair
-(:func:`webstruct_spark.operators.similarity.compact_ann_index` /
-``_repair_ann_compaction``), differing where the layouts differ —
-per-BUCKET dirs with underscore-prefixed sibling markers (so Spark's
-partition discovery skips them) and fingerprint verification instead
-of manifest ``rows_out`` (the index has no manifest).  A fix to
-either state machine (a new crash window, object-store rename
-semantics) almost certainly applies to the other — mirror it.
+The persistent ANN index does not use this swap: it publishes
+through the snapshot log (:mod:`.snapshots`), where a compaction
+writes the new files and commits one record with the bucket's files
+replaced, so no crash window is ever visible to a reader (:func:`webstruct_spark.operators.similarity.compact_ann_index`).
+The KG stages are the next to move onto it.
 """
 from __future__ import annotations
 

@@ -85,22 +85,37 @@ def is_file(spark, path: str) -> bool:
     return bool(fs.exists(jpath)) and bool(fs.getFileStatus(jpath).isFile())
 
 
-def listdir(spark, path: str) -> List[Tuple[str, int]]:
-    """[(name, size), ...] of the directory's direct children (size of
-    a subdirectory is 0 — callers here only size files)."""
+def qualify(spark, path: str) -> str:
+    """``path`` as a fully qualified Hadoop URI (``/tmp/x`` ->
+    ``file:/tmp/x``), so every later call on it takes the Hadoop
+    route."""
+    fs, jpath, _ = _jfs(spark, path)
+    return str(fs.makeQualified(jpath).toString())
+
+
+def entries(spark, path: str) -> List[Tuple[str, int, bool]]:
+    """[(name, size, is_dir), ...] of the directory's direct children
+    (size of a subdirectory is 0)."""
     if not is_uri(path):
         out = []
         for n in os.listdir(path):
             fp = os.path.join(path, n)
-            out.append((n, os.path.getsize(fp) if os.path.isfile(fp) else 0))
+            isf = os.path.isfile(fp)
+            out.append((n, os.path.getsize(fp) if isf else 0, not isf))
         return out
     fs, jpath, _ = _jfs(spark, path)
     out = []
     for st in fs.listStatus(jpath):
-        out.append(
-            (st.getPath().getName(), int(st.getLen()) if st.isFile() else 0)
-        )
+        isf = bool(st.isFile())
+        out.append((st.getPath().getName(), int(st.getLen()) if isf else 0,
+                    not isf))
     return out
+
+
+def listdir(spark, path: str) -> List[Tuple[str, int]]:
+    """[(name, size), ...] of the directory's direct children (size of
+    a subdirectory is 0 — callers here only size files)."""
+    return [(n, size) for n, size, _ in entries(spark, path)]
 
 
 def listdir_names(spark, path: str) -> List[str]:
