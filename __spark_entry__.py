@@ -171,10 +171,14 @@ def _q_kg_refreshed_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (canonical ids ending in an even digit), then the committed nodes
     table read back — vs the single-node linking twin re-run with the
     same shrunk gazetteer (gold_refreshed_nodes).  Gates that the
-    manifest/commit/refresh machinery lands byte-for-byte where the
+    snapshot commit/refresh machinery lands byte-for-byte where the
     pure recompute does."""
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import build_kg, refresh_gazetteer
+    from webstruct_spark.plans.pipeline import (
+        build_kg,
+        kg_status,
+        refresh_gazetteer,
+    )
 
     from webstruct_spark.sources.gazshrink import shrink_gazetteer
 
@@ -211,11 +215,11 @@ def _q_kg_refreshed_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # operator's `rm -rf <out>` leaves it behind, and trusting
         # it would make the nodes read below fail forever instead of
         # self-healing (the generate-if-missing contract every other
-        # cached builder here honors) — so also require the refreshed
-        # nodes table to actually be committed on disk
-        if done and not os.path.exists(
-            os.path.join(out, "nodes", "_SUCCESS")
-        ):
+        # cached builder here honors) — so also require the store's
+        # snapshot to hold a committed nodes stage
+        if done and not kg_status(spark, out)["stages"]["nodes"][
+            "committed"
+        ]:
             done = False
         if not done:
             build_kg(spark, corpus, out)

@@ -7,8 +7,10 @@ Usage:
     spark-submit --py-files /tmp/ws.zip jobs/kg_build.py \
         --corpus-dir data/transcripts/sf0.001 --out /tmp/kgout
 
-Re-running with the same --out resumes at the first uncommitted stage
-(see webstruct_spark/plans/manifest.py); --force restarts from scratch.
+Re-running with the same --out resumes at the first stage not yet
+written; --force restarts from scratch.  The --out dir is a
+snapshot-logged store: its live files are those the newest
+``_snapshots/snap-<N>.json`` lists (see webstruct_spark/plans/pipeline.py).
 """
 from __future__ import annotations
 
@@ -22,30 +24,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def check_links_rc(report: dict) -> int:
     """Exit code for ``--check-links`` from its report — factored out
-    so the taxonomy is unit-testable without a subprocess JVM:
+    so it is unit-testable without a subprocess JVM:
 
-    * 0 — audited, fully covered, no pending maintenance, no tear.
+    * 0 — audited and fully covered.
     * 3 — coverage violated (``uncovered > 0``) OR un-auditable
       (``audited`` False: a triples/links stage is not committed, so
       coverage is unknowable).  Alert and read ``probable_cause``.
-    * 4 — covered but the store is torn, holds pending write-ahead
-      intents, or carries crashed-compaction swap markers: a crashed
-      maintenance run whose links still happen to cover every
-      endpoint (e.g. a gazetteer refresh that died between the links
-      and edges commits, or a compact that died between its swap and
-      its re-commit), or a LIVE append/refresh racing the audit
-      (intents and transient identity tears are normal inside a
-      healthy maintenance window).  A monitor should alert on rc 4
-      persisting across two consecutive audits, not on one reading.
 
-    3 and 4 are both ≠ the 1/2 that tracebacks/argparse produce, so
-    "audit found a problem" is always distinguishable from "audit
-    itself crashed", and the two problem classes from each other."""
+    3 is ≠ the 1/2 that tracebacks/argparse produce, so "audit found a
+    problem" is always distinguishable from "audit itself crashed"."""
     if not report["audited"] or report["uncovered"]:
         return 3
-    if report["torn"] or report["pending_intent_count"] \
-            or report.get("crashed_compaction"):
-        return 4
     return 0
 
 
@@ -82,22 +71,19 @@ def main() -> None:
                         "stages are untouched (idempotent, "
                         "crash-recoverable by re-running)")
     p.add_argument("--status", action="store_true",
-                   help="read-only inspection of the build at --out: "
-                        "per-stage lineage + counters, pending "
-                        "write-ahead intents, torn-append diagnosis, "
-                        "disk-vs-manifest drift; mutates nothing")
+                   help="read-only inspection of the build at --out "
+                        "from its current snapshot record: per-stage "
+                        "lineage + counters, stages a build has staged "
+                        "but not published, the _conv_ids side table, "
+                        "stream stamps; mutates nothing")
     p.add_argument("--check-links", action="store_true",
                    help="read-only DATA audit of the build at --out: "
                         "report every triple endpoint the edges "
-                        "stage's inner joins would drop; a non-zero "
-                        "report names its probable cause (crashed "
-                        "append/refresh to resume vs out-of-band "
-                        "table surgery); exits 3 when endpoints are "
-                        "uncovered or the stages are un-auditable, 4 "
-                        "when covered but torn/mid-maintenance, so a "
-                        "scheduler can alert on rc alone; heavier "
-                        "than --status — two table scans, run "
-                        "scheduled, not per query")
+                        "stage's inner joins would drop; exits 3 when "
+                        "endpoints are uncovered or the stages are "
+                        "un-auditable, so a scheduler can alert on rc "
+                        "alone; heavier than --status — two table "
+                        "scans, run scheduled, not per query")
     args = p.parse_args()
     if args.append and args.force:
         p.error("--append and --force are mutually exclusive")
@@ -136,10 +122,8 @@ def main() -> None:
             report = check_kg_links(spark, args.out)
             print(json.dumps(report))
             # the mode exists so a SCHEDULED run can alert; an
-            # rc-based monitor (cron/Airflow) never parses stdout, so
-            # every problem class must map to a distinct nonzero rc —
-            # see check_links_rc for the 0/3/4 taxonomy (3 = coverage
-            # violated or un-auditable, 4 = covered but torn/pending)
+            # rc-based monitor (cron/Airflow) never parses stdout —
+            # see check_links_rc
             rc = check_links_rc(report)
             if rc:
                 sys.exit(rc)

@@ -83,9 +83,9 @@ class SimulatedKill(BaseException):
 
 def _run_with_write_points(monkeypatch, op, kill_at):
     """Run ``op()`` with its write points counted: each
-    ``DataFrameWriter.parquet`` call, each ``fsio.write_text_atomic``,
-    each ``fsio.delete`` and ``fsio.rename``.  The ``kill_at``-th one
-    (0-based) raises :class:`SimulatedKill` instead of writing."""
+    ``DataFrameWriter.parquet`` call, each ``fsio.write_text_atomic``
+    and each ``fsio.delete``.  The ``kill_at``-th one (0-based) raises
+    :class:`SimulatedKill` instead of writing."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from webstruct_spark.plans import fsio
@@ -107,7 +107,7 @@ def _run_with_write_points(monkeypatch, op, kill_at):
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet",
                   point(DataFrameWriter.parquet))
-        for name in ("write_text_atomic", "delete", "rename"):
+        for name in ("write_text_atomic", "delete"):
             m.setattr(fsio, name, point(getattr(fsio, name)))
         op()
     return seen[0]
@@ -124,3 +124,74 @@ def kill_at_write_point(monkeypatch, op, i) -> None:
     there, leaving on disk exactly what a kill at that point would."""
     with pytest.raises(SimulatedKill):
         _run_with_write_points(monkeypatch, op, i)
+
+
+def kill_kg_at(monkeypatch, call, at) -> None:
+    """Run ``call`` and stop it the way a killed process would: when it
+    starts writing the KG stage named ``at``, at its snapshot commit
+    (``at="commit"``), or in the GC after a commit it made
+    (``at="gc"``)."""
+    from webstruct_spark.plans import pipeline, snapshots
+
+    write, commit, gc = pipeline._write, snapshots.commit, snapshots.gc
+    committed = []
+
+    def dying_write(spark, out_dir, stage, df):
+        if stage == at:
+            raise SimulatedKill("killed writing %s" % stage)
+        return write(spark, out_dir, stage, df)
+
+    def dying_commit(*a, **kw):
+        if at == "commit":
+            raise SimulatedKill("killed at the commit")
+        rec = commit(*a, **kw)
+        committed.append(rec["id"])
+        return rec
+
+    def dying_gc(spark, root, snap):
+        if at == "gc" and snap["id"] in committed:
+            raise SimulatedKill("killed in the GC after the commit")
+        gc(spark, root, snap)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_write", dying_write)
+        m.setattr(snapshots, "commit", dying_commit)
+        m.setattr(snapshots, "gc", dying_gc)
+        with pytest.raises(SimulatedKill):
+            call()
+
+
+def current_snapshot(root):
+    """The newest snapshot record of a local snapshot-logged root, or
+    None when it has none."""
+    import json
+
+    d = os.path.join(str(root), "_snapshots")
+    n = max((
+        int(f[len("snap-"):-len(".json")])
+        for f in (os.listdir(d) if os.path.isdir(d) else [])
+        if f.startswith("snap-") and f.endswith(".json")
+    ), default=None)
+    if n is None:
+        return None
+    with open(os.path.join(d, "snap-%d.json" % n)) as f:
+        return json.load(f)
+
+
+def unreferenced_files(root) -> list:
+    """Files under a local snapshot-logged ``root`` that its current
+    snapshot does not reference (a Hadoop ``.<name>.crc`` sibling counts
+    as part of its file)."""
+    snap = current_snapshot(root)
+    keep = {f["path"] for f in snap["files"]}
+    keep |= set(snap.get("sidecars", {}).values())
+    keep.add("_snapshots/snap-%d.json" % snap["id"])
+    left = []
+    for d, _dirs, names in os.walk(str(root)):
+        for n in names:
+            owner = n[1:-len(".crc")] if (
+                n.startswith(".") and n.endswith(".crc")) else n
+            rel = os.path.relpath(os.path.join(d, owner), str(root))
+            if rel not in keep:
+                left.append(os.path.relpath(os.path.join(d, n), str(root)))
+    return sorted(left)

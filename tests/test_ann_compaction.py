@@ -3,7 +3,6 @@
 files appends leave behind, and a crash matrix that kills every
 maintenance operation at each of its write points — readers must see
 exactly the index before the operation or exactly the one after it."""
-import json
 import shutil
 from pathlib import Path
 
@@ -15,6 +14,7 @@ from tests.conftest import (
     arm_fs_tripwire,
     count_write_points,
     kill_at_write_point,
+    unreferenced_files,
 )
 from webstruct_spark.operators.similarity import (
     ann_index_cell_skew,
@@ -61,28 +61,6 @@ def _fragmented_index(spark, tmp_path, kind="lsh", name="idx"):
     )
     append_to_ann_index(emb.where(F.col("vec_id") >= 300), path)
     return emb, path
-
-
-def _unreferenced(root: Path):
-    """Files under ``root`` that neither the current snapshot nor its
-    predecessor references (a Hadoop ``.<name>.crc`` sibling counts as
-    part of its file)."""
-    snap_dir = root / "_snapshots"
-    cur = max(int(p.stem[len("snap-"):]) for p in snap_dir.glob("snap-*.json"))
-    keep = set()
-    for n in range(max(1, cur - 1), cur + 1):
-        rec = json.loads((snap_dir / ("snap-%d.json" % n)).read_text())
-        keep |= {f["path"] for f in rec["files"]}
-        keep |= set(rec["sidecars"].values())
-        keep.add("_snapshots/snap-%d.json" % n)
-    left = []
-    for p in root.rglob("*"):
-        owner = p
-        if p.name.startswith(".") and p.name.endswith(".crc"):
-            owner = p.with_name(p.name[1:-len(".crc")])
-        if p.is_file() and owner.relative_to(root).as_posix() not in keep:
-            left.append(p.relative_to(root).as_posix())
-    return sorted(left)
 
 
 def test_compact_reduces_files_probe_identical(spark, tmp_path):
@@ -136,7 +114,7 @@ def test_crashed_tmp_invisible_to_probes(spark, tmp_path):
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     assert got == want
     rebuild_ann_index(spark, path)  # any commit; same-shape rebuild
-    assert _unreferenced(root) == []
+    assert unreferenced_files(root) == []
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     assert got == want
 
@@ -203,7 +181,7 @@ def test_rebuild_settles_crashed_append_then_crashed_compact(
     assert {r["vec_id"] for r in stored.select("vec_id").collect()} == {
         r["vec_id"] for r in base.select("vec_id").collect()
     }
-    assert _unreferenced(tmp_path / "idx") == []
+    assert unreferenced_files(tmp_path / "idx") == []
     qs = _queries(base, every=23)
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     want = _as_set(lsh_topk(base, qs, k=5, n_planes=4, multiprobe=1))
@@ -264,7 +242,7 @@ def test_root_without_snapshot_refused_then_migrated(spark, tmp_path):
             call()
     write_ann_index(emb, path, kind="lsh", n_planes=4)
     assert not (root / "_ann_meta.parquet").exists()
-    assert _unreferenced(root) == []
+    assert unreferenced_files(root) == []
     got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
     want = _as_set(lsh_topk(emb, qs, k=5, n_planes=4, multiprobe=1))
     assert got == want
@@ -376,4 +354,4 @@ def test_crash_matrix(spark, tmp_path, monkeypatch, name):
         assert _answers(spark, p, qs) in (before, after), i
         rerun(p)
         assert _answers(spark, p, qs) == after, i
-        assert _unreferenced(Path(p)) == [], i
+        assert unreferenced_files(Path(p)) == [], i

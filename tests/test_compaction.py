@@ -1,19 +1,23 @@
 # -*- coding: utf-8 -*-
 """Small-file compaction (:mod:`webstruct_spark.plans.compaction`):
-row-identity, manifest lineage refresh, resume/append compatibility,
-crash-window repair, and the Hadoop-route (file: URI) deployment
-shape with the driver-local FS tripwire armed."""
+row-identity, snapshot lineage, resume/append compatibility, crashes
+settled by the next writer, and the Hadoop-route (file: URI)
+deployment shape with the driver-local FS tripwire armed."""
+import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from webstruct_spark.plans import fsio
-from webstruct_spark.plans.compaction import (
-    APPEND_STAGES, SUF_OLD, SUF_TMP, compact_kg,
+from tests.conftest import (
+    current_snapshot,
+    kill_kg_at,
+    unreferenced_files,
 )
-from webstruct_spark.plans.manifest import Manifest, table_fingerprint
+from webstruct_spark.plans import snapshots
+from webstruct_spark.plans.compaction import APPEND_STAGES, compact_kg
+from webstruct_spark.plans.manifest import table_fingerprint
 from webstruct_spark.plans.pipeline import (
     CONV_IDS, STAGES, append_kg, build_kg,
 )
@@ -65,23 +69,34 @@ def _copy_kg(kg_built, tmp_path):
     return out
 
 
+def _listed(snap, stage):
+    return sorted(
+        f["path"] for f in snap["files"]
+        if f["stage"] == stage and not f.get("building")
+    )
+
+
+def _on_disk(out, stage):
+    return sorted(
+        stage + "/" + n for n in os.listdir(os.path.join(out, stage))
+        if n.endswith(".parquet")
+    )
+
+
 def test_compact_preserves_rows_and_lineage(spark, kg_built, tmp_path):
     out = _copy_kg(kg_built, tmp_path)
     before = {s: _stage_rows(spark, out, s) for s in STAGES}
-    fp_before = {
-        s: table_fingerprint(out + "/" + s, spark=spark)
-        for s in APPEND_STAGES
-    }
+    snap0 = current_snapshot(out)
     # the append guarantees ≥ 2 writes' files per append-mode stage
-    assert all(fp_before[s]["n_files"] >= 2 for s in APPEND_STAGES)
+    assert all(snap0["stages"][s]["n_files"] >= 2 for s in APPEND_STAGES)
 
     res = compact_kg(spark, out, force=True)
     for s in APPEND_STAGES:
         assert res[s]["compacted"], s
-        assert res[s]["rows"] == fp_before[s]["rows"], s
+        assert res[s]["rows"] == snap0["stages"][s]["rows_out"], s
         assert res[s]["n_files_after"] <= res[s]["n_files_before"], s
         assert _stage_rows(spark, out, s) == before[s], s
-    # overwrite stages untouched
+    # global stages untouched
     for s in ("links", "nodes", "edges"):
         assert _stage_rows(spark, out, s) == before[s], s
     # side table compacted too, distinct convs preserved
@@ -89,45 +104,34 @@ def test_compact_preserves_rows_and_lineage(spark, kg_built, tmp_path):
     n_convs = spark.read.parquet(out + "/" + CONV_IDS).distinct().count()
     assert res[CONV_IDS]["rows"] == n_convs
 
-    # manifest: fresh physical lineage, unchanged source identity;
-    # history folded into one snapshot record file
-    man = Manifest(out, spark=spark)
-    rec_files = [
-        n for n in os.listdir(out + "/manifest.d") if n.endswith(".json")
-    ]
-    assert len(rec_files) == 1 and "snapshot" in rec_files[0]
-    assert len(man.records()) == len(man.committed())
+    # ONE snapshot commit: fresh physical lineage, unchanged source
+    # identity, the stage dirs hold exactly the listed files
+    snap = current_snapshot(out)
+    assert snap["id"] == snap0["id"] + 1
     for s in APPEND_STAGES:
-        rec = man.committed()[s]
-        assert rec["inputs"][0].startswith("compact:"), s
-        assert rec["rows_out"] == fp_before[s]["rows"], s
-        assert not rec.get("files_delta"), s
-        on_disk = sorted(
-            n for n in fsio.listdir_names(spark, out + "/" + s)
-            if n.endswith(".parquet")
-        )
-        assert sorted(f["name"] for f in rec["files"]) == on_disk, s
+        ent = snap["stages"][s]
+        assert ent["inputs"][0].startswith("compact:"), s
+        assert ent["rows_out"] == snap0["stages"][s]["rows_out"], s
+        assert ent["source_fp"] == snap0["stages"][s]["source_fp"], s
+        assert _listed(snap, s) == _on_disk(out, s), s
+    assert unreferenced_files(out) == []
 
-    # idempotent: nothing left to do, no new commits
-    n_rec = len(man.records())
+    # idempotent: nothing left to do, no new commit
     res2 = compact_kg(spark, out)
     assert not any(v["compacted"] for v in res2.values())
-    assert len(Manifest(out, spark=spark).records()) == n_rec
+    assert current_snapshot(out)["id"] == snap["id"]
 
 
 def test_resume_and_append_after_compaction(spark, kg_built, tmp_path):
     out = _copy_kg(kg_built, tmp_path)
     compact_kg(spark, out, force=True)
-
-    # resume over the compacted build: every stage skipped
-    man = Manifest(out, spark=spark)
-    n_rec = len(man.records())
+    n_snap = current_snapshot(out)["id"]
     build_kg(spark, kg_built["base"] + "/corpus_a", out)
     # NOTE resume identity is the BASE corpus only for a never-
     # appended build; this one was appended, so resume must REFUSE to
     # skip (union fingerprint ≠ corpus_a's) — compaction must not have
     # weakened that guard into a false skip.
-    assert len(Manifest(out, spark=spark).records()) > n_rec
+    assert current_snapshot(out)["id"] > n_snap
 
     # the real post-compaction contract: a further (disjoint) append
     # still works
@@ -150,203 +154,108 @@ def test_append_then_compact_round_trip(spark, kg_built, tmp_path):
         assert _stage_rows(spark, out, s) == _stage_rows(spark, twin, s), s
 
 
-def test_repair_windows(spark, kg_built, tmp_path):
-    stage = "mentions"
-
-    # (a) pre-swap orphan tmp: dropped, stage untouched
-    out = _copy_kg(kg_built, tmp_path)
-    rows = _stage_rows(spark, out, stage)
-    path = out + "/" + stage
-    shutil.copytree(path, path + SUF_TMP)
-    res = compact_kg(spark, out, stages=[stage], include_conv_ids=False)
-    assert res[stage]["repair"] == "dropped_tmp"
-    assert not fsio.exists(spark, path + SUF_TMP)
-    assert _stage_rows(spark, out, stage) == rows
-
-    # (b) crash between the two renames, tmp fully written (_SUCCESS):
-    # roll forward + re-commit
-    out = _copy_kg(kg_built, str(tmp_path / "b"))
-    path = out + "/" + stage
-    spark.read.parquet(path).coalesce(1).write.parquet(path + SUF_TMP)
-    fsio.rename(spark, path, path + SUF_OLD)
-    res = compact_kg(spark, out, stages=[stage], include_conv_ids=False)
-    assert res[stage]["repair"] == "rolled_forward"
-    assert _stage_rows(spark, out, stage) == rows
-    assert not fsio.exists(spark, path + SUF_OLD)
-    rec = Manifest(out, spark=spark).committed()[stage]
-    assert rec["inputs"][0].startswith("compact:")
-
-    # (c) crash between the renames with a PARTIAL tmp (no _SUCCESS):
-    # roll back to the old dir
-    out = _copy_kg(kg_built, str(tmp_path / "c"))
-    path = out + "/" + stage
-    shutil.copytree(path, path + SUF_TMP)
-    os.remove(path + SUF_TMP + "/_SUCCESS")
-    fsio.rename(spark, path, path + SUF_OLD)
-    res = compact_kg(spark, out, stages=[stage], include_conv_ids=False)
-    assert _stage_rows(spark, out, stage) == rows
-    assert not fsio.exists(spark, path + SUF_OLD)
-    assert not fsio.exists(spark, path + SUF_TMP)
-
-    # (d) crash after the swap, old dir left behind: cleaned up +
-    # re-committed
-    out = _copy_kg(kg_built, str(tmp_path / "d"))
-    path = out + "/" + stage
-    shutil.copytree(path, path + SUF_OLD)
-    res = compact_kg(spark, out, stages=[stage], include_conv_ids=False)
-    assert res[stage]["repair"] == "finished_swap"
-    assert not fsio.exists(spark, path + SUF_OLD)
-    assert _stage_rows(spark, out, stage) == rows
-
-
 def test_non_compact_entries_repair_crashed_swap(spark, kg_built,
-                                                 tmp_path):
-    """A kill inside compact_kg's swap must be settled by EVERY
-    maintenance entry, not only the next --compact.  Mid-swap (stage
-    dir ABSENT, row-verified data one rename away in the tmp): the
-    read-only paths name the crashed compaction instead of
-    misdiagnosing out-of-band deletion, and an append rolls the swap
-    forward and proceeds instead of refusing "missing stages".
-    Post-swap-pre-recommit (stage present, old-marker left, record
-    totals STALE): the append entry re-syncs the record before
-    rolling totals forward, so manifest n_files/bytes match disk."""
-    import json as _json
-
+                                                 tmp_path, monkeypatch):
+    """A compaction killed after its rewrite, before its commit, is
+    invisible: the read-only paths report the store as it was (audit
+    rc 0), and the next append removes the rewrite's files and appends
+    normally."""
     from jobs.kg_build import check_links_rc
     from webstruct_spark.plans.pipeline import check_kg_links, kg_status
 
-    stage = "triples"
-
-    # -- window 1: mid-swap (between the two renames) -----------------
     out = _copy_kg(kg_built, tmp_path)
-    path = out + "/" + stage
-    rows = _stage_rows(spark, out, stage)
-    spark.read.parquet(path).coalesce(1).write.parquet(path + SUF_TMP)
-    fsio.rename(spark, path, path + SUF_OLD)
-
-    # read-only diagnosis mutates nothing and names the cause: the
-    # audit's own input stage is mid-swap → structured refusal with
-    # the compaction diagnosis, NOT "never built / out-of-band
-    # deletion" steering toward a destructive rebuild
+    snap0 = current_snapshot(out)
+    kill_kg_at(monkeypatch, lambda: compact_kg(spark, out, force=True),
+               "commit")
+    assert unreferenced_files(out)  # the unpublished rewrite
+    assert current_snapshot(out) == snap0
     st = kg_status(spark, out)
-    assert st["crashed_compaction"] == [stage]
+    assert all(i["committed"] for i in st["stages"].values())
+    assert st["stages"]["triples"]["n_files"] == (
+        snap0["stages"]["triples"]["n_files"]
+    )
     rep = check_kg_links(spark, out)
-    assert rep["audited"] is False
-    assert rep["crashed_compaction"] == [stage]
-    assert rep["probable_cause"].startswith("crashed compaction")
-    assert check_links_rc(rep) == 3
-    assert not fsio.exists(spark, path), "read-only audit repaired?!"
+    assert rep["audited"] and rep["uncovered"] == 0
+    assert check_links_rc(rep) == 0
 
-    # the append entry settles the swap (roll forward + re-commit)
-    # and then appends normally — before the repair this refused
-    # with "missing stages: mentions"
     append_kg(spark, kg_built["base"] + "/corpus_c", out)
-    assert not fsio.exists(spark, path + SUF_OLD)
-    assert not fsio.exists(spark, path + SUF_TMP)
-    # compacted base + the disjoint delta, nothing lost or doubled
+    assert unreferenced_files(out) == []
     twin = _copy_kg(kg_built, str(tmp_path / "twin"))
     append_kg(spark, kg_built["base"] + "/corpus_c", twin)
-    assert _stage_rows(spark, out, stage) == _stage_rows(
-        spark, twin, stage
-    )
-
-    # -- window 2: post-swap, pre-recommit (stale record totals) ------
-    stage = "mentions"
-    out2 = _copy_kg(kg_built, str(tmp_path / "w2"))
-    path2 = out2 + "/" + stage
-    spark.read.parquet(path2).coalesce(1).write.parquet(path2 + SUF_TMP)
-    fsio.rename(spark, path2, path2 + SUF_OLD)
-    fsio.rename(spark, path2 + SUF_TMP, path2)
-    # a marker on a NON-audit stage leaves triples↔links auditable:
-    # covered but mid-maintenance → rc 4, the "alert if it persists"
-    # class, distinct from dirty's 3
-    rep2 = check_kg_links(spark, out2)
-    assert rep2["audited"] is True and rep2["uncovered"] == 0
-    assert rep2["crashed_compaction"] == [stage]
-    assert check_links_rc(rep2) == 4
-    # record still lists pre-compaction n_files/bytes; without the
-    # entry repair the append would roll these stale totals forward
-    append_kg(spark, kg_built["base"] + "/corpus_c", out2)
-    assert not fsio.exists(spark, path2 + SUF_OLD)
-    rec = Manifest(out2, spark=spark).committed()[stage]
-    listing = fsio.listdir(spark, path2)
-    pq = [(n, b) for n, b in listing if n.endswith(".parquet")]
-    assert rec["n_files"] == len(pq)
-    assert rec["bytes"] == sum(b for _, b in pq)
-    # and the status drift check agrees
-    st2 = kg_status(spark, out2)
-    assert st2["stages"][stage]["disk_matches_manifest"], _json.dumps(
-        st2["stages"][stage]
-    )
+    snap = current_snapshot(out)
+    for s in STAGES:
+        assert _stage_rows(spark, out, s) == _stage_rows(spark, twin, s), s
+        assert snap["stages"][s]["n_files"] == len(_on_disk(out, s)), s
 
 
 def test_entry_repair_does_not_launder_stale_layout(spark, kg_built,
-                                                    tmp_path):
-    """A compaction crashed mid-swap under layout N, then the library
-    is upgraded (layout N+1): the entry-time repair must settle the
-    DIR (roll the swap forward, drop the marker) but must NOT
-    re-commit — ``Manifest.commit`` stamps the CURRENT layout, which
-    would launder the old-layout record past ``is_committed``'s
-    layout-bump refusal and let a resume serve old-schema data.
-    ``compact_kg`` refuses this state outright; the entries repair
-    the files and leave the stale record to the normal rebuild
-    path."""
-    from webstruct_spark.plans.compaction import (
-        repair_crashed_compactions,
+                                                    tmp_path, corpus_dir):
+    """A store the maintenance entries cannot vouch for is refused
+    before anything is written, never re-stamped: stage entries of an
+    older layout read as not committed, and a root without a snapshot
+    (a store from before the snapshot log) is refused with a message
+    naming build_kg.  build_kg rebuilds such a root, and its GC removes
+    the old layout."""
+    from webstruct_spark.plans.pipeline import refresh_gazetteer
+
+    gaz_path = os.path.join(kg_built["base"], "corpus_c",
+                            "gazetteer.parquet")
+    gaz = spark.read.parquet(gaz_path)
+    gaz_fp = table_fingerprint(gaz_path)
+    calls = (
+        lambda o: append_kg(spark, kg_built["base"] + "/corpus_c", o),
+        lambda o: refresh_gazetteer(spark, gaz, gaz_fp, o),
+        lambda o: compact_kg(spark, o),
     )
 
-    stage = "mentions"
     out = _copy_kg(kg_built, tmp_path)
-    path = out + "/" + stage
-    rows = _stage_rows(spark, out, stage)
-    spark.read.parquet(path).coalesce(1).write.parquet(path + SUF_TMP)
-    fsio.rename(spark, path, path + SUF_OLD)
+    snap = current_snapshot(out)
+    path = os.path.join(out, "_snapshots", "snap-%d.json" % snap["id"])
+    snap["stages"]["mentions"]["layout"] = "~older-layout~"
+    with open(path, "w") as f:
+        json.dump(snap, f)
+    for call in calls:
+        with pytest.raises(ValueError, match="missing stages: mentions"):
+            call(out)
+    assert current_snapshot(out) == snap
 
-    # an upgraded library: same out_dir, bumped layout version
-    man = Manifest(out, layout_version="~tests-bumped-layout~",
-                   spark=spark, create=False)
-    states = repair_crashed_compactions(spark, man)
-    assert states[stage] == "rolled_forward"
-    assert _stage_rows(spark, out, stage) == rows  # data settled
-    assert not fsio.exists(spark, path + SUF_OLD)  # marker dropped
-    assert not fsio.exists(spark, path + SUF_TMP)
-    rec = man.committed()[stage]
-    assert rec["layout"] != man.layout_version  # NOT re-stamped
-    assert not man.is_committed(stage, rec=rec)  # rebuild path holds
-
-    # control: under the ORIGINAL layout the same crash shape IS
-    # re-committed (fresh lineage, marker dropped) — the guard only
-    # bites on a layout mismatch
-    out2 = _copy_kg(kg_built, str(tmp_path / "same_layout"))
-    path2 = out2 + "/" + stage
-    spark.read.parquet(path2).coalesce(1).write.parquet(path2 + SUF_TMP)
-    fsio.rename(spark, path2, path2 + SUF_OLD)
-    man2 = Manifest(out2, layout_version=rec["layout"], spark=spark,
-                    create=False)
-    states2 = repair_crashed_compactions(spark, man2)
-    assert states2[stage] == "rolled_forward"
-    rec2 = man2.committed()[stage]
-    assert rec2["inputs"][0].startswith("compact:")
-    assert man2.is_committed(stage, rec=rec2)
+    # a pre-snapshot store: stage dirs and a manifest.d, no _snapshots
+    old = _copy_kg(kg_built, str(tmp_path / "old"))
+    shutil.rmtree(os.path.join(old, "_snapshots"))
+    os.makedirs(os.path.join(old, "manifest.d"))
+    with open(os.path.join(old, "manifest.d", "rec-1-mentions.json"),
+              "w") as f:
+        f.write("{}")
+    for call in calls:
+        with pytest.raises(ValueError, match="build_kg"):
+            call(old)
+    assert not os.path.exists(os.path.join(old, "_snapshots"))
+    build_kg(spark, corpus_dir, old)
+    assert not os.path.exists(os.path.join(old, "manifest.d"))
+    assert unreferenced_files(old) == []
 
 
 def test_refuses_row_mismatch_and_unknown_stage(spark, kg_built, tmp_path):
+    """A rewrite whose footer rows disagree with the snapshot's is not
+    committed: corruption is never laundered into a compacted table."""
     out = _copy_kg(kg_built, tmp_path)
-    path = out + "/mentions"
-    victim = next(
-        n for n in sorted(os.listdir(path)) if n.endswith(".parquet")
-    )
-    os.remove(os.path.join(path, victim))
-    with pytest.raises(ValueError, match="manifest says"):
+    snap = current_snapshot(out)
+    path = os.path.join(out, "_snapshots", "snap-%d.json" % snap["id"])
+    f0 = next(f for f in snap["files"] if f["stage"] == "mentions")
+    f0["rows"] += 1
+    with open(path, "w") as f:
+        json.dump(snap, f)
+    with pytest.raises(RuntimeError, match="nothing committed"):
         compact_kg(spark, out, stages=["mentions"],
-                   include_conv_ids=False)
+                   include_conv_ids=False, force=True)
+    assert current_snapshot(out) == snap
     with pytest.raises(ValueError, match="not append-mode"):
         compact_kg(spark, out, stages=["links"])
 
 
 def test_compact_via_file_uri_tripwire(spark, kg_built, tmp_path,
                                        monkeypatch):
-    """The whole compaction (inspect, rewrite, swap, re-commit) over a
+    """The whole compaction (inspect, rewrite, commit, GC) over a
     ``file:`` URI with the driver-local FS tripwire armed — the
     HDFS/S3 deployment shape.  The KG copy is staged under the marked
     path FIRST, then the tripwire is armed, so every access after this
@@ -362,57 +271,41 @@ def test_compact_via_file_uri_tripwire(spark, kg_built, tmp_path,
     for s in APPEND_STAGES:
         assert res[s]["compacted"], s
         assert _stage_rows(spark, out, s) == before[s], s
-    rec = Manifest(out, spark=spark).committed()["mentions"]
-    assert rec["inputs"][0].startswith("compact:")
+    snap = snapshots.current(spark, out)
+    assert snap["stages"]["mentions"]["inputs"][0].startswith("compact:")
 
 
-def test_repair_recommit_survives_second_crash(spark, kg_built, tmp_path):
-    """The __compact_old__ marker must outlive the repair's manifest
-    re-commit: a run that crashes BETWEEN the repair scan and the
-    re-commit leaves the marker, so the next run retries the commit —
-    marker-first deletion would strand the record's stale file lineage
-    forever (the following run would see "clean" + already-compact and
-    never refresh it)."""
-    from webstruct_spark.plans.compaction import _repair
-
+def test_repair_recommit_survives_second_crash(spark, kg_built, tmp_path,
+                                               monkeypatch):
+    """A compaction killed before its commit, and its re-run killed
+    again inside the GC after its own commit: the third run settles
+    both, and the snapshot's lineage matches the stage dirs."""
     stage = "mentions"
     out = _copy_kg(kg_built, tmp_path)
-    path = out + "/" + stage
     rows = _stage_rows(spark, out, stage)
 
-    # a real swap's steps 1-4, then crash before the re-commit: the
-    # dir is now ONE coalesced file while the manifest still lists the
-    # pre-compaction part files
-    spark.read.parquet(path).coalesce(1).write.parquet(path + SUF_TMP)
-    fsio.rename(spark, path, path + SUF_OLD)
-    fsio.rename(spark, path + SUF_TMP, path)
+    def compact():
+        compact_kg(spark, out, force=True)
 
-    # second crash: a repair pass ran and died before the re-commit —
-    # the marker must survive the repair itself
-    assert _repair(spark, path) == "finished_swap"
-    assert fsio.exists(spark, path + SUF_OLD)
-
-    # third run repairs AND refreshes the lineage
+    kill_kg_at(monkeypatch, compact, "commit")
+    n_snap = current_snapshot(out)["id"]
+    kill_kg_at(monkeypatch, compact, "gc")
+    assert current_snapshot(out)["id"] == n_snap + 1
+    assert unreferenced_files(out)
     res = compact_kg(spark, out, stages=[stage], include_conv_ids=False)
-    assert res[stage]["repair"] == "finished_swap"
-    assert not fsio.exists(spark, path + SUF_OLD)
+    assert not res[stage]["compacted"]
+    assert unreferenced_files(out) == []
+    snap = current_snapshot(out)
+    assert _listed(snap, stage) == _on_disk(out, stage)
     assert _stage_rows(spark, out, stage) == rows
-    rec = Manifest(out, spark=spark).committed()[stage]
-    on_disk = sorted(
-        n for n in fsio.listdir_names(spark, path)
-        if n.endswith(".parquet")
-    )
-    assert sorted(f["name"] for f in rec["files"]) == on_disk
-    assert not rec.get("files_delta")
-    assert rec["rows_out"] == spark.read.parquet(path).count()
+    assert snap["stages"][stage]["rows_out"] == len(rows)
 
 
 def test_compact_preserves_delta_provenance(spark, kg_built, tmp_path):
     """A scheduled compact between a plain append and its
-    at-least-once retry must not strip the extracted record's
-    delta_fp — the fully-applied retry skip reads it off the LATEST
-    record, and losing it turns the documented no-op retry into the
-    'de-duplicate first' refusal."""
+    at-least-once retry must not strip the snapshot's delta_fp — the
+    fully-applied retry skip reads it, and losing it turns the
+    documented no-op retry into the 'de-duplicate first' refusal."""
     from webstruct_spark.plans.pipeline import append_kg_frames
 
     out = _copy_kg(kg_built, tmp_path)
@@ -431,8 +324,7 @@ def test_compact_preserves_delta_provenance(spark, kg_built, tmp_path):
         spark, delta, gaz, gaz_fp, out, delta_transcripts_fp=delta_fp
     )
     compact_kg(spark, out)
-    man = Manifest(out, spark=spark)
-    assert man.committed()["extracted"].get("delta_fp") == delta_fp
+    assert current_snapshot(out)["delta_fp"] == delta_fp
 
     # the at-least-once retry after the compact: a provable no-op
     n_before = spark.read.parquet(os.path.join(out, "extracted")).count()
@@ -446,10 +338,10 @@ def test_compact_preserves_delta_provenance(spark, kg_built, tmp_path):
 
 def test_refused_compact_leaves_no_manifest_dir(spark, tmp_path):
     """compact_kg against a typo'd / never-built out_dir must refuse
-    WITHOUT creating manifest.d there (same entry-point hygiene as
+    WITHOUT creating anything there (same entry-point hygiene as
     append/refresh)."""
     typo = str(tmp_path / "kg_nope")
-    with pytest.raises(ValueError, match="nothing is committed"):
+    with pytest.raises(ValueError, match="no KG snapshot"):
         compact_kg(spark, typo)
     assert not os.path.exists(typo)
 
@@ -457,14 +349,11 @@ def test_refused_compact_leaves_no_manifest_dir(spark, tmp_path):
 def test_noop_compact_reads_no_footers(spark, kg_built, tmp_path,
                                        monkeypatch):
     """A scheduled compact over an already-compact build must decide
-    "nothing to do" from ONE dir listing per stage — at the design
+    "nothing to do" from the snapshot record alone — at the design
     point (40-80k x 128 MiB files) per-file footer reads on the no-op
-    path are the exact pathology the module exists to remove.  The
-    guarantee is per-STAGE (every stage has a manifest record whose
-    row total the listing check makes trustworthy); the slim
-    _conv_ids side table has no record, so its no-op keeps the real
-    row report by footer-counting its handful of files."""
-    from webstruct_spark.plans import compaction as C
+    path are the exact pathology the module exists to remove — and
+    still report every stage's real row total."""
+    from webstruct_spark.plans import fsio
 
     out = _copy_kg(kg_built, tmp_path)
     first = compact_kg(spark, out)
@@ -474,25 +363,10 @@ def test_noop_compact_reads_no_footers(spark, kg_built, tmp_path,
     def forbidden(*a, **k):
         raise AssertionError("footer read on the no-op compact path")
 
-    monkeypatch.setattr(C, "table_fingerprint", forbidden)
-    second = compact_kg(spark, out, include_conv_ids=False)
+    monkeypatch.setattr(fsio, "parquet_num_rows", forbidden)
+    second = compact_kg(spark, out)
     assert not any(r["compacted"] for r in second.values())
-    # every stage's no-op still reports the manifest-trustworthy rows
-    assert all(r["rows"] is not None for r in second.values())
-    monkeypatch.undo()
-    # side-table no-op: not compacted, and rows is the REAL count
-    # (not None — a silent CLI report regression otherwise)
-    third = compact_kg(spark, out)
-    assert not third[CONV_IDS]["compacted"]
-    assert third[CONV_IDS]["rows"] == n_convs
-    # the listing-vs-record corruption check still guards the no-op
-    # path: delete a part file and the same run refuses
-    victim_dir = os.path.join(out, "extracted")
-    victim = next(
-        n for n in sorted(os.listdir(victim_dir))
-        if n.endswith(".parquet")
-    )
-    os.remove(os.path.join(victim_dir, victim))
-    with pytest.raises(ValueError, match="manifest says"):
-        compact_kg(spark, out, stages=["extracted"],
-                   include_conv_ids=False)
+    snap = current_snapshot(out)
+    for s in APPEND_STAGES:
+        assert second[s]["rows"] == snap["stages"][s]["rows_out"], s
+    assert second[CONV_IDS]["rows"] == n_convs

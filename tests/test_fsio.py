@@ -50,7 +50,7 @@ def test_route_equivalence_file_uri(spark, tmp_path):
     assert json.loads((d / "w1.json").read_text()) == {"x": 1}
     # no .tmp orphan left behind on success.  Hadoop's local
     # ChecksumFileSystem adds hidden `.<name>.crc` sidecars — every
-    # manifest reader filters on the .json/.parquet suffix, so they
+    # snapshot reader filters on the .json/.parquet suffix, so they
     # are invisible there; ignore them here too.
     assert sorted(
         n for n in fsio.listdir_names(spark, plain)
@@ -89,7 +89,8 @@ def test_build_resume_append_via_file_uri(
     """
     from pyspark.sql import functions as F
 
-    from webstruct_spark.plans.manifest import Manifest, table_fingerprint
+    from webstruct_spark.plans import snapshots
+    from webstruct_spark.plans.manifest import table_fingerprint
     from webstruct_spark.plans.pipeline import (
         STAGES, append_kg_frames, build_kg,
     )
@@ -115,7 +116,8 @@ def test_build_resume_append_via_file_uri(
 
     # the out_dir name carries the tripwire marker: ANY Python-side
     # local-FS call on it raises.  Parent dirs are created by the
-    # manifest's Hadoop-route mkdirs, never driver-locally.
+    # Hadoop route (Spark's writers, fsio's mkdirs), never
+    # driver-locally.
     uri_out = "file:" + str(tmp_path / ("uri_" + fs_tripwire) / "kg")
 
     build_kg(spark, corpus_a, uri_out)
@@ -126,14 +128,14 @@ def test_build_resume_append_via_file_uri(
         rb = sorted(map(repr, b.collect()))
         assert ra == rb, stage
 
-    # resume: every stage skipped, no new commit records
-    man = Manifest(uri_out, spark=spark)
-    n_before = len(man.records())
+    # resume: every stage skipped, no new snapshot
+    n_before = snapshots.current(spark, uri_out)["id"]
     build_kg(spark, corpus_a, uri_out)
-    assert len(Manifest(uri_out, spark=spark).records()) == n_before
+    assert snapshots.current(spark, uri_out)["id"] == n_before
 
     # append corpus B through the same URI (exercises the Hadoop
-    # listdir-based O(delta) lineage and the conv-id side table)
+    # listdir-based discovery of the new files and the conv-id side
+    # table)
     gaz = spark.read.parquet(gaz_src)
     append_kg_frames(
         spark, df_b, gaz,
@@ -148,31 +150,44 @@ def test_build_resume_append_via_file_uri(
 
 def test_manifest_commit_and_read_via_file_uri(spark, tmp_path,
                                                fs_tripwire):
-    """Manifest records round-trip over the Hadoop route, and a
-    crashed commit (.tmp orphan) is invisible to readers."""
-    from webstruct_spark.plans.manifest import Manifest
+    """Snapshot records round-trip over the Hadoop route, a crashed
+    commit (.tmp orphan) is invisible to readers, and GC removes it
+    together with the files no snapshot lists."""
+    from webstruct_spark.plans import snapshots
 
     base = tmp_path / ("m_" + fs_tripwire)
     uri = "file:" + str(base / "kg")
-    man = Manifest(uri, spark=spark)
+    assert snapshots.current(spark, uri) is None
 
-    # a committed stage needs a parquet dir + _SUCCESS under out_dir
-    spark.range(7).write.parquet(uri + "/stage_x")
-    rec = man.commit("stage_x", wall_sec=0.5)
-    assert rec["rows_out"] == 7
-
-    man2 = Manifest(uri, spark=spark)
-    assert man2.committed()["stage_x"]["rows_out"] == 7
-    assert man2.is_committed("stage_x")
-
-    # simulate a crash mid-commit: a .tmp orphan must be ignored
-    # (readers skip anything not ending in .json)
-    fsio.write_text_atomic(
-        spark,
-        uri + "/manifest.d/rec-" + "9" * 20 + "-000000-0000000-y.json.tmp",
-        "garbage",
+    added = snapshots.added_files(
+        spark, uri, ["stage_x"],
+        lambda: snapshots.append_writer(spark.range(7)).parquet(
+            uri + "/stage_x"
+        ),
     )
-    assert set(man2.committed()) == {"stage_x"}
+    files = [{"path": p, "rows": fsio.parquet_num_rows(spark, uri + "/" + p)}
+             for p in added]
+    assert sum(f["rows"] for f in files) == 7
+    snap = snapshots.commit(spark, uri, None, {"files": files})
+    assert snapshots.current(spark, uri) == snap
+
+    # simulate a crash mid-commit: a .tmp orphan must be ignored, and
+    # a write nothing committed is not listed
+    fsio.write_text_atomic(
+        spark, uri + "/_snapshots/snap-2.json.0.deadbeef.tmp", "garbage",
+    )
+    spark.range(3).write.parquet(uri + "/stage_y")
+    assert snapshots.current(spark, uri) == snap
+    snapshots.gc(spark, uri, snap)
+    left = sorted(
+        n for n in fsio.listdir_names(spark, uri + "/_snapshots")
+        if not n.endswith(".crc")
+    )
+    assert left == ["snap-1.json"]
+    assert not fsio.exists(spark, uri + "/stage_y")
+    assert spark.read.parquet(
+        *(uri + "/" + f["path"] for f in files)
+    ).count() == 7
 
 
 def test_write_text_atomic_refuses_clobber_both_routes(spark, tmp_path):

@@ -101,16 +101,17 @@ def test_check_kg_links_audit(spark, corpus_dir, tmp_path):
     the in-pipeline tables; after an out-of-band links overwrite that
     drops one entity type, the audit counts and names the dropped
     endpoints; an uncommitted stage yields a structured refusal
-    report (auditing it would prove nothing, but the refusal still
-    carries the crash-vs-deletion diagnosis); the exit-code taxonomy
-    (0 healthy / 3 dirty-or-unauditable / 4 covered-but-torn) is
-    pinned via the factored check_links_rc."""
+    report (auditing it would prove nothing); the exit codes
+    (0 healthy / 3 dirty-or-unauditable) are pinned via the factored
+    check_links_rc."""
     import json
     import os
-    import shutil
 
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import build_kg, check_kg_links
 
     out = str(tmp_path / "kg")
@@ -122,8 +123,7 @@ def test_check_kg_links_audit(spark, corpus_dir, tmp_path):
 
     # a healthy report still carries the full diagnosis schema (a
     # consumer must never KeyError on the common all-clear case)
-    assert clean["pending_intent_count"] == 0
-    assert clean["torn"] is False and clean["probable_cause"] is None
+    assert clean["probable_cause"] is None
     assert clean["audited"] is True and clean["not_committed"] == []
 
     from jobs.kg_build import check_links_rc
@@ -154,22 +154,24 @@ def test_check_kg_links_audit(spark, corpus_dir, tmp_path):
         + triples.where(F.col("obj_type") == etype).count()
     )
     assert expected > 0
-    links = spark.read.parquet(paths["links"]).cache()
-    links.count()
-    pruned = links.where(F.col("entity_type") != etype)
-    shutil.rmtree(paths["links"])
-    pruned.write.parquet(paths["links"])
-    links.unpersist()  # session-scoped spark — don't pin storage
-    # the commit's _SUCCESS is recreated by the overwrite write, so
-    # the manifest predicate still passes — this is a pure DATA tear
+    # the surgery rewrites the files the snapshot lists in place, so
+    # the snapshot still vouches for them — this is a pure DATA tear
+    listed = [
+        os.path.join(out, f["path"]) for f in current_snapshot(out)["files"]
+        if f["stage"] == "links"
+    ]
+    for path in listed:
+        tbl = pq.read_table(path)
+        pq.write_table(
+            tbl.filter(pc.not_equal(tbl["entity_type"], etype)), path
+        )
+        head, name = os.path.split(path)
+        os.remove(os.path.join(head, "." + name + ".crc"))
     got = check_kg_links(spark, out)
     assert got["uncovered"] == expected
     assert set(got["by_endpoint"]) <= {"subj", "obj"}
     assert 0 < len(got["sample"]) <= 20
     assert all(r["entity_type"] == etype for r in got["sample"])
-    # no pending intents, no identity tear → the diagnosis must name
-    # out-of-band modification, not a crashed maintenance run
-    assert got["pending_intent_count"] == 0 and got["torn"] is False
     assert got["probable_cause"].startswith("out-of-band")
     assert check_links_rc(got) == 3
 
@@ -191,76 +193,18 @@ def test_check_kg_links_audit(spark, corpus_dir, tmp_path):
     cli_report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert cli_report["uncovered"] == expected
 
-    # with a pending write-ahead intent the SAME uncovered rows must
-    # be diagnosed as a crashed maintenance run (fix = resume it),
-    # not as table surgery
-    from webstruct_spark.plans.manifest import Manifest
-    from webstruct_spark.plans.pipeline import LAYOUT_VERSION
-
-    man = Manifest(out, layout_version=LAYOUT_VERSION, spark=spark)
-    intent = man.write_intent("triples", [], None)
-    try:
-        crashed = check_kg_links(spark, out)
-        assert crashed["uncovered"] == got["uncovered"]
-        assert crashed["pending_intent_count"] == 1
-        assert crashed["probable_cause"].startswith("crashed append")
-        assert check_links_rc(crashed) == 3  # uncovered wins over torn
-    finally:
-        man.clear_intent(intent)
-
-    # covered-but-pending (a crashed maintenance run whose links
-    # still cover every endpoint, or a live append racing the audit)
-    # must be rc-alertable too — rc 4, distinct from dirty's 3
-    from webstruct_spark.operators.linking import norm_text_col
-
-    shutil.rmtree(paths["links"])
-    (
-        triples.select(
-            F.col("subj_type").alias("entity_type"),
-            norm_text_col(F.col("subj")).alias("norm_text"),
-        )
-        .unionAll(
-            triples.select(
-                F.col("obj_type").alias("entity_type"),
-                norm_text_col(F.col("obj")).alias("norm_text"),
-            )
-        )
-        .distinct()
-        .withColumn(
-            "node_id", F.concat_ws("|", "entity_type", "norm_text")
-        )
-        .write.parquet(paths["links"])
-    )
-    intent = man.write_intent("edges", [], None)
-    try:
-        covered = check_kg_links(spark, out)
-        assert covered["uncovered"] == 0
-        assert covered["pending_intent_count"] == 1
-        assert check_links_rc(covered) == 4
-    finally:
-        man.clear_intent(intent)
-
     # an uncommitted stage yields a structured REFUSAL report (not a
     # traceback): audited=False, uncovered unknown (None), the stage
-    # named, and — with no pending maintenance — the never-built /
-    # out-of-band-deletion diagnosis.  rc 3: un-auditable is
-    # alert-worthy, and "the audit code broke" (rc 1) it is not
-    shutil.rmtree(paths["links"])
+    # named.  rc 3: un-auditable is alert-worthy, and "the audit code
+    # broke" (rc 1) it is not
+    snap = current_snapshot(out)
+    del snap["stages"]["links"]
+    with open(os.path.join(out, "_snapshots",
+                           "snap-%d.json" % snap["id"]), "w") as f:
+        json.dump(snap, f)
     refused = check_kg_links(spark, out)
     assert refused["audited"] is False and refused["uncovered"] is None
     assert refused["not_committed"] == ["links"]
     assert refused["sample"] == [] and refused["by_endpoint"] == {}
-    assert "out-of-band deletion" in refused["probable_cause"]
+    assert "not committed" in refused["probable_cause"]
     assert check_links_rc(refused) == 3
-
-    # same missing stage WITH a pending intent → the refusal blames
-    # the crashed maintenance run and points at resume, not surgery
-    intent = man.write_intent("links", [], None, kind="overwrite")
-    try:
-        refused2 = check_kg_links(spark, out)
-        assert refused2["audited"] is False
-        assert refused2["pending_intent_count"] == 1
-        assert refused2["probable_cause"].startswith("crashed append")
-        assert check_links_rc(refused2) == 3
-    finally:
-        man.clear_intent(intent)

@@ -17,7 +17,8 @@ def _rows(df):
 
 
 def _manifest_state(out):
-    d = os.path.join(out, "manifest.d")
+    """The snapshot records — unchanged by a no-op."""
+    d = os.path.join(out, "_snapshots")
     return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
@@ -153,50 +154,47 @@ def test_refresh_after_append(spark, corpus_dir, tmp_path, new_gaz):
     assert not st["torn"]
 
 
+def _gaz2(spark, corpus_dir, tmp_path, new_gaz):
+    from webstruct_spark.plans.manifest import table_fingerprint
+
+    gaz2_dir = _corpus_with_gaz(spark, corpus_dir, tmp_path, "c2", new_gaz)
+    gaz2_path = os.path.join(gaz2_dir, "gazetteer.parquet")
+    return gaz2_dir, spark.read.parquet(gaz2_path), table_fingerprint(
+        gaz2_path
+    )
+
+
+def _kill_refresh(spark, out, gaz2, gaz2_fp, monkeypatch, at):
+    from tests.conftest import kill_kg_at
+    from webstruct_spark.plans.pipeline import refresh_gazetteer
+
+    kill_kg_at(monkeypatch,
+               lambda: refresh_gazetteer(spark, gaz2, gaz2_fp, out), at)
+
+
 def test_refresh_crash_is_resumable(
         spark, corpus_dir, tmp_path, new_gaz, monkeypatch):
-    """A refresh killed between the links and nodes commits leaves a
-    gazetteer-only tear: kg_status reports it, append refuses the
-    base, and re-running the SAME refresh repairs it to the
+    """A refresh killed after writing links, before its commit, leaves
+    the store as it was: kg_status reports every stage at the original
+    gazetteer, and re-running the SAME refresh reaches the
     never-crashed twin."""
-    from webstruct_spark.plans.manifest import Manifest, table_fingerprint
+    from tests.conftest import unreferenced_files
     from webstruct_spark.plans.pipeline import (
-        append_kg, build_kg, kg_status, refresh_gazetteer,
+        build_kg, kg_status, refresh_gazetteer,
     )
 
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_dir, out)
+    st0 = kg_status(spark, out)
+    gaz2_dir, gaz2, gaz2_fp = _gaz2(spark, corpus_dir, tmp_path, new_gaz)
 
-    gaz2_dir = _corpus_with_gaz(spark, corpus_dir, tmp_path, "c2", new_gaz)
-    gaz2_path = os.path.join(gaz2_dir, "gazetteer.parquet")
-    gaz2 = spark.read.parquet(gaz2_path)
-    gaz2_fp = table_fingerprint(gaz2_path)
-
-    real_commit = Manifest.commit
-
-    def dying_commit(self, stage, *a, **k):
-        if stage == "nodes":
-            raise RuntimeError("simulated driver death")
-        return real_commit(self, stage, *a, **k)
-
-    monkeypatch.setattr(Manifest, "commit", dying_commit)
-    with pytest.raises(Exception, match="simulated driver death"):
-        refresh_gazetteer(spark, gaz2, gaz2_fp, out)
-    monkeypatch.setattr(Manifest, "commit", real_commit)
-
+    _kill_refresh(spark, out, gaz2, gaz2_fp, monkeypatch, "nodes")
+    assert unreferenced_files(out)  # the unpublished links files
     st = kg_status(spark, out)
-    assert st["torn"] and st["torn_stages"]
+    assert not st["torn"] and st["stages"] == st0["stages"]
 
-    # the refusal must name the ACTUAL cause and recovery — a
-    # crashed refresh, repaired by re-running it — not the generic
-    # crashed-append message whose "re-run the crashed append"
-    # advice dead-ends (no append ever ran; every retry re-raises)
-    with pytest.raises(ValueError,
-                       match="re-run refresh_gazetteer"):
-        append_kg(spark, gaz2_dir, out)
-
-    refresh_gazetteer(spark, gaz2, gaz2_fp, out)  # the repair
-    assert not kg_status(spark, out)["torn"]
+    refresh_gazetteer(spark, gaz2, gaz2_fp, out)  # the recovery
+    assert unreferenced_files(out) == []
 
     fresh = build_kg(spark, gaz2_dir, str(tmp_path / "fresh"))
     for stage in ("links", "nodes", "edges"):
@@ -205,76 +203,32 @@ def test_refresh_crash_is_resumable(
         assert _rows(got) == _rows(want), stage
 
 
-def test_refresh_refuses_torn_append_base(
-        spark, corpus_dir, tmp_path, monkeypatch):
-    """A base torn by a crashed APPEND (shared-identity tear) must be
-    refused: recomputing links over its mixed mentions table would
-    spread the tear."""
-    from webstruct_spark.plans.manifest import Manifest, table_fingerprint
-    from webstruct_spark.plans.pipeline import (
-        append_kg_frames, build_kg, refresh_gazetteer,
-    )
-
-    t = spark.read.parquet(os.path.join(corpus_dir, "transcripts.parquet"))
-    convs = sorted(r[0] for r in t.select("conv_id").distinct().collect())
-    half = set(convs[: len(convs) // 2])
-    corpus_a = str(tmp_path / "a")
-    os.makedirs(corpus_a)
-    t.where(F.col("conv_id").isin(half)).write.parquet(
-        os.path.join(corpus_a, "transcripts.parquet")
-    )
-    shutil.copy(os.path.join(corpus_dir, "gazetteer.parquet"),
-                os.path.join(corpus_a, "gazetteer.parquet"))
-    df_b = t.where(~F.col("conv_id").isin(half))
-
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
-    gaz_path = os.path.join(corpus_a, "gazetteer.parquet")
-    gaz = spark.read.parquet(gaz_path)
-    gaz_fp = table_fingerprint(gaz_path)
-
-    real_commit = Manifest.commit
-
-    def dying_commit(self, stage, *a, **k):
-        if stage == "groups":
-            raise RuntimeError("simulated driver death")
-        return real_commit(self, stage, *a, **k)
-
-    monkeypatch.setattr(Manifest, "commit", dying_commit)
-    with pytest.raises(Exception, match="simulated driver death"):
-        append_kg_frames(spark, df_b, gaz, gaz_fp, out,
-                         batch_id=0, stream_id="s1")
-    monkeypatch.setattr(Manifest, "commit", real_commit)
-
-    with pytest.raises(ValueError, match="resume it"):
-        refresh_gazetteer(spark, gaz, gaz_fp, out)
-
-
 def test_refresh_repairs_mid_overwrite_crash(
         spark, corpus_dir, tmp_path, new_gaz):
-    """A refresh (or append) killed DURING a global stage's overwrite
-    write leaves the stage dir without _SUCCESS (mode('overwrite')
-    deletes the old dir first).  Re-running the refresh must treat
-    the missing global stage as work to recompute — not raise the
-    'needs ... committed' refusal that would dead-end the documented
-    re-run recovery."""
-    import shutil as sh
-
-    from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import build_kg, refresh_gazetteer
+    """A refresh killed in the middle of writing a global stage leaves
+    part of that write in the stage dir beside the published files.
+    Readers never see it, and re-running the refresh recomputes the
+    global stages and removes it."""
+    from tests.conftest import unreferenced_files
+    from webstruct_spark.plans.pipeline import (
+        build_kg, check_kg_links, kg_status, refresh_gazetteer,
+    )
 
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_dir, out)
+    st0 = kg_status(spark, out)
+    gaz2_dir, gaz2, gaz2_fp = _gaz2(spark, corpus_dir, tmp_path, new_gaz)
 
-    gaz2_dir = _corpus_with_gaz(spark, corpus_dir, tmp_path, "c2", new_gaz)
-    gaz2_path = os.path.join(gaz2_dir, "gazetteer.parquet")
-    gaz2 = spark.read.parquet(gaz2_path)
-    gaz2_fp = table_fingerprint(gaz2_path)
-
-    # emulate the mid-write window: the links dir is gone entirely
-    sh.rmtree(os.path.join(out, "links"))
+    # the part of a links write that landed before the kill
+    links = os.path.join(out, "links")
+    part = sorted(n for n in os.listdir(links) if n.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(links, part),
+                os.path.join(links, "part-99999-killed.snappy.parquet"))
+    assert kg_status(spark, out)["stages"] == st0["stages"]
+    assert check_kg_links(spark, out)["uncovered"] == 0
 
     refresh_gazetteer(spark, gaz2, gaz2_fp, out)  # must not refuse
+    assert unreferenced_files(out) == []
 
     fresh = build_kg(spark, gaz2_dir, str(tmp_path / "fresh"))
     for stage in ("links", "nodes", "edges"):
@@ -285,20 +239,14 @@ def test_refresh_repairs_mid_overwrite_crash(
 
 def test_landed_uncommitted_overwrite_not_served_by_resume(
         spark, corpus_dir, tmp_path, new_gaz, monkeypatch):
-    """The landed-but-uncommitted OVERWRITE window: a refresh dies
-    AFTER the nodes overwrite lands (fresh _SUCCESS on disk) but
-    BEFORE its manifest commit.  The stale nodes record (original
-    gazetteer identity) is then validated by the new write's marker —
-    without the overwrite-kind write-ahead intent, an operator who
-    recovers with build_kg(resume=True) instead of re-running the
-    refresh would be served gaz2-content nodes under the gaz1
-    identity beside gaz1-recomputed links, with kg_status reporting
-    healthy.  The intent must make that resume reconcile the unlanded
-    write away and rebuild a CONSISTENT original-gazetteer graph."""
-    from webstruct_spark.plans.manifest import Manifest, table_fingerprint
-    from webstruct_spark.plans.pipeline import (
-        build_kg, kg_status, refresh_gazetteer,
-    )
+    """A refresh that dies AFTER all its files landed but BEFORE its
+    snapshot commit: an operator who recovers with
+    build_kg(resume=True) instead of re-running the refresh is served
+    the CONSISTENT original-gazetteer graph — the landed files are
+    referenced by no snapshot, so nothing serves them, and the
+    resume's GC removes them."""
+    from tests.conftest import unreferenced_files
+    from webstruct_spark.plans.pipeline import build_kg, kg_status
 
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_dir, out)
@@ -306,38 +254,17 @@ def test_landed_uncommitted_overwrite_not_served_by_resume(
         s: _rows(spark.read.parquet(os.path.join(out, s)))
         for s in ("links", "nodes", "edges")
     }
-
-    gaz2_dir = _corpus_with_gaz(spark, corpus_dir, tmp_path, "c2", new_gaz)
-    gaz2_path = os.path.join(gaz2_dir, "gazetteer.parquet")
-    gaz2 = spark.read.parquet(gaz2_path)
-    gaz2_fp = table_fingerprint(gaz2_path)
-
-    real_commit = Manifest.commit
-
-    def dying_commit(self, stage, *a, **k):
-        if stage == "nodes":
-            # the overwrite has already landed when commit runs
-            raise RuntimeError("simulated driver death")
-        return real_commit(self, stage, *a, **k)
-
-    monkeypatch.setattr(Manifest, "commit", dying_commit)
-    with pytest.raises(Exception, match="simulated driver death"):
-        refresh_gazetteer(spark, gaz2, gaz2_fp, out)
-    monkeypatch.setattr(Manifest, "commit", real_commit)
-
-    # the window's signature: nodes dir carries the NEW write's
-    # _SUCCESS while the manifest still holds the OLD record
-    assert os.path.exists(os.path.join(out, "nodes", "_SUCCESS"))
-    gaz2_nodes = _rows(spark.read.parquet(os.path.join(out, "nodes")))
-    assert gaz2_nodes != original["nodes"]
+    _gaz2_dir, gaz2, gaz2_fp = _gaz2(spark, corpus_dir, tmp_path, new_gaz)
+    _kill_refresh(spark, out, gaz2, gaz2_fp, monkeypatch, "commit")
+    assert unreferenced_files(out)  # every refreshed file landed
 
     # the WRONG (but plausible) recovery: plain resume over the
-    # original corpus — must reconcile the unlanded overwrite and
-    # rebuild, never serve the gaz2 bytes under the gaz1 identity
+    # original corpus — nothing to rebuild, and never the gaz2 bytes
     build_kg(spark, corpus_dir, out, resume=True)
 
     st = kg_status(spark, out)
-    assert not st["torn"] and not st["pending_intents"]
+    assert all(i["committed"] for i in st["stages"].values())
+    assert unreferenced_files(out) == []
     for stage in ("links", "nodes", "edges"):
         got = _rows(spark.read.parquet(os.path.join(out, stage)))
         assert got == original[stage], stage

@@ -112,52 +112,35 @@ def test_canonicalization_matches_gold_and_fixed_point(
     assert n2 == n1
 
 
-def test_pipeline_resume_equivalence(spark, corpus_dir, tmp_path):
-    """Kill-and-resume: interrupt after early stages; the resumed run
-    must produce identical outputs and skip committed work."""
-    import json
+def _killed_at_group_entities(spark, corpus_dir, out, monkeypatch):
+    """A build killed as it starts writing group_entities: extracted
+    and mentions are staged, nothing is published."""
+    from tests.conftest import kill_kg_at
+    from webstruct_spark.plans.pipeline import build_kg
 
-    from webstruct_spark.plans.manifest import Manifest
+    kill_kg_at(monkeypatch, lambda: build_kg(
+        spark, corpus_dir, out, stage_concurrency=1), "group_entities")
+
+
+def test_pipeline_resume_equivalence(spark, corpus_dir, tmp_path,
+                                     monkeypatch):
+    """Kill-and-resume: a build killed after its early stages resumes
+    from the snapshot's staged stages without rewriting them and ends
+    with the same outputs as an uninterrupted build."""
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import build_kg
 
     full_dir = str(tmp_path / "full")
     build_kg(spark, corpus_dir, full_dir)
 
     partial_dir = str(tmp_path / "partial")
-    # simulate a kill: run everything, then delete the manifest records
-    # and outputs of the last stages.  The surviving records are
-    # rewritten as a LEGACY ``manifest.jsonl`` (the pre-round-5
-    # appended layout) so this test also proves old builds still
-    # resume under the record-file layout.
-    build_kg(spark, corpus_dir, partial_dir)
-    man = Manifest(partial_dir)
-    committed = man.committed()
-    keep = {"extracted", "mentions"}
-    import shutil
+    _killed_at_group_entities(spark, corpus_dir, partial_dir, monkeypatch)
+    killed = current_snapshot(partial_dir)
+    assert killed["stages"] == {}
+    assert set(killed["building"]) == {"extracted", "mentions"}
+    staged = {f["path"] for f in killed["files"]}
 
-    for stage in list(committed):
-        if stage not in keep:
-            shutil.rmtree(os.path.join(partial_dir, stage))
-    shutil.rmtree(man.records_dir)  # new-layout records of the "kill"
-    # old builds recorded the FULL run fingerprint on every stage
-    # (pre-STAGE_IDENTITY_KEYS); reconstruct that shape so this test
-    # also pins that such records still resume — is_committed must
-    # compare by PROJECTION onto the stage's identity keys, not dict
-    # equality, or every pre-existing build silently re-extracts
-    full_fp = dict(committed["links"]["source_fp"])
-    full_fp.update(committed["extracted"]["source_fp"])
-    full_fp.update(committed["group_entities"]["source_fp"])
-    with open(man.path, "w") as f:
-        for stage, rec in committed.items():
-            if stage in keep:
-                rec = dict(rec, source_fp=full_fp)
-                f.write(json.dumps(rec) + "\n")
-
-    import time
-
-    t0 = time.time()
     build_kg(spark, corpus_dir, partial_dir)  # resume
-    resume_sec = time.time() - t0
 
     for stage in ["mentions", "triples", "nodes"]:
         a = spark.read.parquet(os.path.join(full_dir, stage))
@@ -165,35 +148,42 @@ def test_pipeline_resume_equivalence(spark, corpus_dir, tmp_path):
         ca = sorted(map(tuple, a.collect()))
         cb = sorted(map(tuple, b.collect()))
         assert ca == cb, stage
-    # committed stages were skipped: exactly one commit record per
-    # kept stage (the legacy line), rebuilt stages got a new record
-    recs = Manifest(partial_dir).records()
-    assert sum(1 for r in recs if r["stage"] == "extracted") == 1
-    assert sum(1 for r in recs if r["stage"] == "triples") == 1
+    # the staged stages (and the side table) were published as written
+    snap = current_snapshot(partial_dir)
+    assert staged <= {f["path"] for f in snap["files"]}
+    assert snap["building"] == {}
 
 
 def test_manifest_lineage_counters(spark, corpus_dir, tmp_path):
-    from webstruct_spark.plans.manifest import Manifest
+    """Each stage's snapshot entry counts the rows, files and bytes of
+    the files the snapshot lists for it, and those are the stage dir's
+    files."""
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import build_kg
 
     out = str(tmp_path / "kg")
     paths = build_kg(spark, corpus_dir, out)
-    man = Manifest(out).committed()
+    snap = current_snapshot(out)
     for stage, path in paths.items():
-        rec = man[stage]
-        assert rec["rows_out"] == spark.read.parquet(path).count()
-        assert rec["n_files"] >= 1
-        assert all(f["rows"] >= 0 for f in rec["files"])
+        ent = snap["stages"][stage]
+        files = [f for f in snap["files"] if f["stage"] == stage]
+        assert ent["rows_out"] == spark.read.parquet(path).count()
+        assert ent["rows_out"] == sum(f["rows"] for f in files)
+        assert ent["n_files"] == len(files) >= 1
+        assert ent["bytes"] == sum(
+            os.path.getsize(os.path.join(out, f["path"])) for f in files
+        )
+        assert sorted(os.path.basename(f["path"]) for f in files) == sorted(
+            n for n in os.listdir(path) if n.endswith(".parquet")
+        )
 
 
 def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path):
     """stage_concurrency > 1 runs independent DAG stages as concurrent
     Spark jobs; every stage table must equal the strict-sequential
-    build row-for-row, and the manifest must hold exactly one commit
-    per stage (completion order is free)."""
-    import json
-
-    from webstruct_spark.plans.manifest import Manifest
+    build row-for-row, and both builds commit one snapshot per staged
+    task (completion order is free) plus the one that publishes."""
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import STAGES, build_kg
 
     seq_dir = str(tmp_path / "seq")
@@ -206,10 +196,11 @@ def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path):
         b = spark.read.parquet(con[stage])
         assert _rows(a, a.columns) == _rows(b, b.columns), stage
     for d in (seq_dir, con_dir):
-        counts = {}
-        for r in Manifest(d).records():
-            counts[r["stage"]] = counts.get(r["stage"], 0) + 1
-        assert counts == {s: 1 for s in STAGES}
+        snap = current_snapshot(d)
+        # 7 tasks (links+nodes commit together) + the publish
+        assert snap["id"] == 8
+        assert set(snap["stages"]) == set(STAGES)
+        assert snap["building"] == {}
 
 
 def _split_corpus(spark, corpus_dir, tmp_path):
@@ -297,12 +288,13 @@ def test_append_kg_equals_fresh_union_build(spark, corpus_dir, tmp_path):
         assert none_safe_rows(a) == none_safe_rows(b), stage
 
 
-def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path):
-    """The conv-id side table is written before any stage file, so a
-    crash in between leaves orphan ids.  The retry must detect that
-    NOTHING landed in the stages and proceed (previously it wedged
-    forever on the overlap guard), while a true double-append still
-    raises."""
+def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path,
+                                           monkeypatch):
+    """An append killed after writing every file but before its
+    snapshot commit leaves the store as it was: the files it wrote are
+    unreferenced.  The retry applies the delta in full and the side
+    table stays exact, while a true double-append still raises."""
+    from tests.conftest import kill_kg_at
     from webstruct_spark.plans.pipeline import (
         CONV_IDS, append_kg, build_kg,
     )
@@ -310,13 +302,11 @@ def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path):
     corpus_a, corpus_b, corpus_u = _split_corpus(spark, corpus_dir, tmp_path)
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_a, out)
-
-    # simulate the crashed attempt: side-table write only
+    base_rows = spark.read.parquet(os.path.join(out, "extracted")).count()
+    kill_kg_at(monkeypatch, lambda: append_kg(spark, corpus_b, out),
+               "commit")
     delta = spark.read.parquet(
         os.path.join(corpus_b, "transcripts.parquet")
-    )
-    delta.select("conv_id").distinct().write.mode("append").parquet(
-        os.path.join(out, CONV_IDS)
     )
 
     append_kg(spark, corpus_b, out)  # the retry — must recover
@@ -327,12 +317,15 @@ def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path):
     assert sorted(map(repr, got.collect())) == sorted(
         map(repr, want.collect())
     )
-    # orphan recovery left the side table duplicate-free
+    assert got.count() > base_rows
+    # the side table holds each conversation once
     side = spark.read.parquet(os.path.join(out, CONV_IDS))
-    assert side.count() == side.distinct().count()
+    assert side.count() == side.distinct().count() == (
+        want.select("conv_id").distinct().count()
+    )
     # re-running the SAME delta dir is the documented
     # crash-after-final-commit recovery: a provable no-op (the
-    # extracted record's delta_fp matches), never a double-append
+    # snapshot's delta_fp matches), never a double-append
     n_before = got.count()
     append_kg(spark, corpus_b, out)
     assert spark.read.parquet(
@@ -359,7 +352,7 @@ def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path):
         append_kg(spark, corpus_b2, out)
 
 
-def test_append_kg_guards(spark, corpus_dir, tmp_path):
+def test_append_kg_guards(spark, corpus_dir, tmp_path, monkeypatch):
     """Overlapping conv_ids and a changed gazetteer must raise; so
     must an incomplete base build."""
     import pyarrow as pa
@@ -380,37 +373,11 @@ def test_append_kg_guards(spark, corpus_dir, tmp_path):
     with pytest.raises(ValueError, match="params"):
         append_kg(spark, corpus_b, out, dont_penalize={"TEL"})
 
-    # torn base (a crashed earlier append left stages at different
-    # source identities) -> refuse before appending anything.  This
-    # injected tear LOOKS like a crashed plain append (stream stamps
-    # agree), so the resume machinery examines it — and the delta
-    # fails the fingerprint-reconstruction proof, which is the guard
-    # that actually fires here; a tear that cannot be a replay at all
-    # still gets the "source identity" refusal (see
-    # test_plain_append_crash_resumes_on_rerun for the recoverable
-    # shape)
-    import json
-
-    from webstruct_spark.plans.manifest import Manifest
-
-    man = Manifest(out)
-    rec = dict(man.committed()["groups"])
-    rec["source_fp"] = dict(rec["source_fp"],
-                            transcripts={"rows": 1, "bytes": 1,
-                                         "n_files": 1})
-    # inject the torn commit as a record file sorting AFTER every real
-    # one, so the per-stage fold takes it as groups' latest state
-    bad = os.path.join(
-        man.records_dir, "rec-" + "9" * 20 + "-000000-0000000-groups.json"
-    )
-    with open(bad, "w") as f:
-        f.write(json.dumps(rec))
-    with pytest.raises(
-        ValueError, match="source identity|does not reconstruct"
-    ):
-        append_kg(spark, corpus_b, out)
-    # restore a consistent manifest for the gazetteer check below
-    os.remove(bad)
+    # a base whose build was killed before it published anything
+    killed = str(tmp_path / "killed")
+    _killed_at_group_entities(spark, corpus_a, killed, monkeypatch)
+    with pytest.raises(ValueError, match="missing stages"):
+        append_kg(spark, corpus_b, killed)
 
     # changed gazetteer -> node identity would silently shift
     import shutil
@@ -450,18 +417,21 @@ def test_gazetteer_refresh_resume_keeps_corpus_stages(
     rebuild just the canonicalization family (links/nodes/edges) —
     re-linking against a refreshed gazetteer must not re-extract the
     history."""
-    import json
     import shutil
 
     import pyarrow.parquet as pq_mod
 
-    from webstruct_spark.plans.manifest import Manifest
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import build_kg
+
+    def paths_of(snap, stage):
+        return {f["path"] for f in snap["files"] if f["stage"] == stage}
 
     corpus = str(tmp_path / "corpus")
     shutil.copytree(corpus_dir, corpus)
     out = str(tmp_path / "kg")
     build_kg(spark, corpus, out)
+    before = current_snapshot(out)
 
     # refresh the gazetteer (drop one row)
     gaz = os.path.join(corpus, "gazetteer.parquet")
@@ -476,12 +446,9 @@ def test_gazetteer_refresh_resume_keeps_corpus_stages(
     pq_mod.write_table(tbl.slice(0, tbl.num_rows - 1), gaz_file)
 
     build_kg(spark, corpus, out)  # resume
-    recs = Manifest(out).records()
-    counts = {}
-    for r in recs:
-        counts[r["stage"]] = counts.get(r["stage"], 0) + 1
+    after = current_snapshot(out)
     for stage in ("extracted", "mentions", "group_entities",
                   "groups", "triples"):
-        assert counts[stage] == 1, stage  # resumed, not rebuilt
+        assert paths_of(after, stage) == paths_of(before, stage), stage
     for stage in ("links", "nodes", "edges"):
-        assert counts[stage] == 2, stage  # rebuilt with the new gaz
+        assert not paths_of(after, stage) & paths_of(before, stage), stage

@@ -56,6 +56,26 @@ def test_broadcast_join_probe_still_widens(spark, corpus_dir):
     assert widen_scan(lazy_join) is lazy_join
 
 
+def test_sort_merge_join_passes_through(spark, corpus_dir):
+    # a join planned as a shuffle join re-partitions itself, and the
+    # partition-count probe would run its shuffles under AQE: no Spark
+    # job may run inside widen_scan
+    t = spark.read.parquet(os.path.join(corpus_dir, "transcripts.parquet"))
+    right = t.select("conv_id", F.col("turn_idx").alias("other_turn"))
+    sc = spark.sparkContext
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        joined = t.join(right, "conv_id")
+        sc.setJobGroup("widen_scan_smj", "sort-merge join probe")
+        assert widen_scan(joined) is joined
+        assert not sc.statusTracker().getJobIdsForGroup("widen_scan_smj")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, old)
+
+
 def test_streaming_passthrough(spark, tmp_path):
     src = spark.readStream.format("rate").option(
         "rowsPerSecond", "1"

@@ -134,15 +134,13 @@ def main() -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
     # ---- q15 ----
-    from webstruct_spark.plans.manifest import Manifest
-    from webstruct_spark.plans.pipeline import build_kg
+    from webstruct_spark.plans.pipeline import build_kg, kg_status
 
     kg_out = tempfile.mkdtemp(prefix="prof_kg_")
     sc.setJobDescription("q15 build_kg")
     timed("q15 build_kg", lambda: build_kg(spark, corpus, kg_out))
-    man = Manifest(kg_out, spark=spark)
-    for stage, rec in sorted(man.committed().items()):
-        print("   stage %-16s %7.3f s" % (stage, rec.get("wall_sec", -1)), flush=True)
+    for stage, info in sorted(kg_status(spark, kg_out)["stages"].items()):
+        print("   stage %-16s %7.3f s" % (stage, info.get("wall_sec", -1)), flush=True)
     shutil.rmtree(kg_out, ignore_errors=True)
 
     spark.stop()

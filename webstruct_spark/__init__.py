@@ -15,7 +15,7 @@ functions/  pure-Column feature expressions (token features T1-T18,
             text-quality scoring, language id, fingerprints).
 sources/    deterministic synthetic transcript/gazetteer generators
             (seed-fixed, no wall clock) + loaders.
-plans/      end-to-end pipeline assembly, checkpoint manifest,
+plans/      end-to-end pipeline assembly, snapshot-logged store,
             resume logic.
 streaming/  Structured Streaming variants of the extraction stage.
 """

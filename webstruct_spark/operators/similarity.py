@@ -252,12 +252,12 @@ def ivf_topk(
 # The index's file set is its snapshot log (plans/snapshots.py): every
 # operation writes new part files beside the live ones, commits one
 # snapshot record listing the live files (bucket, rows, bytes) and the
-# meta, then GCs what no retained snapshot references.  Readers open
-# only the files the current snapshot lists, so a crash anywhere
-# leaves the last committed snapshot serving, and the next commit's GC
-# removes the crashed operation's files.  Maintenance (build, append,
-# rebuild, compact) stays serialized; a second writer that read the
-# same snapshot loses at the create-if-absent commit.
+# meta, then GCs what the new snapshot does not reference.  Readers
+# open only the files the current snapshot lists, so a crash anywhere
+# leaves the last committed snapshot serving; every writer also GCs at
+# entry, which removes the crashed operation's files.  Maintenance
+# (build, append, rebuild, compact) stays serialized; a second writer
+# that read the same snapshot loses at the create-if-absent commit.
 #
 # The root is qualified to a Hadoop URI first, so all I/O goes through
 # Spark or the Hadoop FileSystem, never a driver-local ``open()`` — the
@@ -287,35 +287,6 @@ def _read_files(
     )
 
 
-def _added_files(
-    spark: SparkSession, root: str, dirs: List[str] | None, write
-) -> dict:
-    """Run ``write`` and return ``{path relative to root: bytes}`` of
-    the parquet files it added under ``dirs`` — every ``bucket=N`` dir
-    of the root when None.  Found by listing before and after: Spark
-    names part files after the write job's UUID, so they never collide
-    with files already there."""
-    def listing() -> dict:
-        ds = dirs
-        if ds is None:
-            ds = [
-                n for n, _ in fsio.listdir_if_exists(spark, root) or []
-                if n.startswith("bucket=")
-            ]
-        return {
-            d + "/" + n: size
-            for d in ds
-            for n, size in fsio.listdir_if_exists(
-                spark, fsio.join(root, d)
-            ) or []
-            if n.endswith(".parquet")
-        }
-
-    before = listing()
-    write()
-    return {p: size for p, size in listing().items() if p not in before}
-
-
 def _bucket_files(spark: SparkSession, root: str, added: dict) -> List[dict]:
     """Snapshot entries for new part files: bucket from the dir name,
     rows from the footer."""
@@ -328,14 +299,6 @@ def _bucket_files(spark: SparkSession, root: str, added: dict) -> List[dict]:
         }
         for p, size in sorted(added.items())
     ]
-
-
-def _append_writer(df: DataFrame):
-    """``df.write`` in append mode and without a ``_SUCCESS`` marker:
-    the snapshot commit is what publishes the files."""
-    return df.write.mode("append").option(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
-    )
 
 
 def _commit(
@@ -452,6 +415,8 @@ def write_ann_index(
     spark = embeddings.sparkSession
     root = fsio.qualify(spark, path)
     parent = snapshots.current(spark, root)
+    if parent is not None:
+        snapshots.gc(spark, root, parent)
     first = embeddings.select(vec_col).first()
     if first is None:
         raise ValueError("cannot build an ANN index over an empty table")
@@ -508,13 +473,17 @@ def write_ann_index(
         cent = spark.createDataFrame(
             sc.parallelize(cent_rows, 1), "cell int, centroid array<float>"
         )
-        (sidecars["centroids"],) = _added_files(
+        (sidecars["centroids"],) = snapshots.added_files(
             spark, root, [_CENTROIDS],
-            lambda: _append_writer(cent).parquet(fsio.join(root, _CENTROIDS)),
+            lambda: snapshots.append_writer(cent).parquet(
+                fsio.join(root, _CENTROIDS)
+            ),
         )
-    files = _bucket_files(spark, root, _added_files(
+    files = _bucket_files(spark, root, snapshots.added_files(
         spark, root, None,
-        lambda: _append_writer(rows).partitionBy("bucket").parquet(root),
+        lambda: snapshots.append_writer(rows).partitionBy(
+            "bucket"
+        ).parquet(root),
     ))
     _commit(spark, root, parent, meta, sidecars, files)
     return meta
@@ -534,9 +503,9 @@ def rebuild_ann_index(
 
     The input is exactly the current snapshot's files.  A hand-rolled
     ``write_ann_index(spark.read.parquet(path), path)`` is wrong: a
-    directory listing also holds the files of the retained previous
-    snapshot and of crashed writes, so the rebuilt index would carry
-    duplicates.
+    directory listing also holds the files of crashed writes and, while
+    a write is in flight, its new files, so the rebuilt index would
+    carry duplicates.
 
     Defaults (``kind``/``n_planes``/``n_centroids`` = None) re-use
     the live meta's values — a same-shape rebalance; override to grow
@@ -629,6 +598,7 @@ def append_to_ann_index(
     spark = new_embeddings.sparkSession
     root = fsio.qualify(spark, path)
     snap = _snapshot(spark, root)
+    snapshots.gc(spark, root, snap)
     meta = snap["meta"]
     # fail-fast dim check on the first non-null vector; ragged or
     # null vectors deeper in the batch are caught executor-side by
@@ -670,9 +640,9 @@ def append_to_ann_index(
         )
         if not touched:
             return meta  # all rows filtered (skip_existing_ids)
-        added = _added_files(
+        added = snapshots.added_files(
             spark, root, ["bucket=%d" % b for b in touched],
-            lambda: _append_writer(bucketized).partitionBy(
+            lambda: snapshots.append_writer(bucketized).partitionBy(
                 "bucket"
             ).parquet(root),
         )
@@ -739,6 +709,7 @@ def compact_ann_index(
         )
     root = fsio.qualify(spark, path)
     snap = _snapshot(spark, root)
+    snapshots.gc(spark, root, snap)
     by_bucket: dict = {}
     for f in snap["files"]:
         by_bucket.setdefault(f["bucket"], []).append(f)
@@ -762,9 +733,9 @@ def compact_ann_index(
         # reading the listed files with the root as basePath yields
         # (vec_id, vec, bucket), so partitionBy("bucket") lands the
         # rewrite in the same bucket dir; coalesce is shuffle-free
-        new = _bucket_files(spark, root, _added_files(
+        new = _bucket_files(spark, root, snapshots.added_files(
             spark, root, ["bucket=%d" % b],
-            lambda: _append_writer(
+            lambda: snapshots.append_writer(
                 _read_files(spark, root, old).coalesce(n_target)
             ).partitionBy("bucket").parquet(root),
         ))

@@ -28,6 +28,47 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# optimized-logical-plan nodes that re-partition their input
+_SHUFFLING = frozenset((
+    "Aggregate", "Window", "Sort", "Distinct", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions", "Deduplicate",
+))
+# join types whose right / left side a broadcast hash join can build
+_BUILD_RIGHT = frozenset((
+    "Inner", "Cross", "LeftOuter", "LeftSemi", "LeftAnti",
+))
+_BUILD_LEFT = frozenset(("Inner", "Cross", "RightOuter"))
+
+
+def _broadcast(hint_info) -> bool:
+    """Whether an ``Option[HintInfo]`` of a join asks for broadcast."""
+    if not hint_info.isDefined():
+        return False
+    strategy = hint_info.get().strategy()
+    return strategy.isDefined() and (
+        strategy.get().displayName() == "broadcast"
+    )
+
+
+def _shuffles(node) -> bool:
+    """Whether any node of an optimized logical plan re-partitions its
+    input.  A join counts unless its hint marks the side a broadcast
+    hash join builds as broadcast: any other join plans as a shuffle
+    join."""
+    name = node.getClass().getSimpleName()
+    if name in _SHUFFLING:
+        return True
+    if name == "Join":
+        kind = node.joinType().toString()
+        hint = node.hint()
+        if not (
+            (kind in _BUILD_RIGHT and _broadcast(hint.rightHint()))
+            or (kind in _BUILD_LEFT and _broadcast(hint.leftHint()))
+        ):
+            return True
+    children = node.children()
+    return any(_shuffles(children.apply(i)) for i in range(children.size()))
+
 
 def widen_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff its current
@@ -43,21 +84,14 @@ def widen_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
         # materializes every upstream query stage (shuffles run
         # eagerly, then AGAIN when the widened frame executes).  The
         # probe below is therefore gated on the optimized logical
-        # plan: any shuffle-inducing operator means the frame already
+        # plan: any shuffle-inducing node means the frame already
         # re-partitions itself (post-shuffle parallelism is
         # spark.sql.shuffle.partitions) AND probing it would
-        # double-execute the exchange — skip.  Joins stay eligible
-        # (a broadcast-joined scan is still as narrow as its probe
-        # side; re-running a tiny broadcast stage in the probe is
-        # harmless by definition of broadcast).
-        import re
-
-        plan = df._jdf.queryExecution().optimizedPlan().treeString()
-        if re.search(
-            r"(?m)^[\s+:*-]*(Aggregate|Window|Sort|Distinct|"
-            r"RepartitionBy|Repartition|Deduplicate|Exchange)\b",
-            plan,
-        ):
+        # double-execute the exchange — skip.  Broadcast-hinted joins
+        # stay eligible (a broadcast-joined scan is still as narrow as
+        # its probe side; re-running a tiny broadcast stage in the
+        # probe is harmless by definition of broadcast).
+        if _shuffles(df._jdf.queryExecution().optimizedPlan()):
             return df
         cur = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - exotic unplannable frames

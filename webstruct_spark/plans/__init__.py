@@ -1,3 +1,3 @@
-"""End-to-end pipeline assembly: staged KG build with a checkpoint
-manifest (per-stage lineage + counters) and resume-from-last-committed
+"""End-to-end pipeline assembly: staged KG build over a snapshot-logged
+store (per-stage lineage + counters) with resume-from-last-staged
 semantics."""

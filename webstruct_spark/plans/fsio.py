@@ -1,7 +1,7 @@
 # -*- coding: utf-8 -*-
-"""Filesystem routing for the persistence layer (manifest records,
-``_SUCCESS`` probes, ``_conv_ids`` readiness, parquet footer reads,
-streaming drop detection).
+"""Filesystem routing for the persistence layer (snapshot records,
+file listings and GC, parquet footer reads, streaming drop
+detection).
 
 Two routes, chosen by the path itself:
 
@@ -124,7 +124,7 @@ def listdir_names(spark, path: str) -> List[str]:
 
 def listdir_if_exists(spark, path: str) -> Optional[List[Tuple[str, int]]]:
     """:func:`listdir`, or None if the path is (now) absent — closes
-    the exists→list race: a concurrent compaction/overwrite can remove
+    the exists→list race: a concurrent writer's GC can remove
     the directory between the two calls, and read-only inspectors
     (kg_status) must report the vanish, not crash on it.  Errors with
     the path still present re-raise untouched."""
@@ -148,8 +148,10 @@ def mkdirs(spark, path: str) -> None:
         raise IOError("fsio: mkdirs %r failed" % path)
 
 
-def delete(spark, path: str, recursive: bool = True) -> None:
-    """Delete a file or directory tree (no-op if absent)."""
+def delete(spark, path: str) -> None:
+    """Delete a file or directory tree (no-op if absent).  A file's
+    Hadoop checksum sibling ``.<name>.crc`` goes with it on both
+    routes, as Hadoop's local FileSystem does natively."""
     if not is_uri(path):
         if os.path.isdir(path):
             import shutil
@@ -157,6 +159,10 @@ def delete(spark, path: str, recursive: bool = True) -> None:
             shutil.rmtree(path)
         elif os.path.exists(path):
             os.remove(path)
+            head, name = os.path.split(path)
+            crc = os.path.join(head, "." + name + ".crc")
+            if os.path.exists(crc):
+                os.remove(crc)
         return
     fs, jpath, _ = _jfs(spark, path)
     if fs.exists(jpath):
@@ -166,29 +172,8 @@ def delete(spark, path: str, recursive: bool = True) -> None:
         # "rebuild" quietly RESUME into the stale build it was asked
         # to destroy.  A false return because another writer removed
         # it first is fine: delete-if-exists semantics held.
-        if not fs.delete(jpath, bool(recursive)) and fs.exists(jpath):
+        if not fs.delete(jpath, True) and fs.exists(jpath):
             raise IOError("fsio: delete %r failed" % path)
-
-
-def rename(spark, src: str, dst: str) -> None:
-    """Rename a file or directory; ``dst`` must not exist (the
-    compaction swap protocol depends on rename-no-clobber to make its
-    crash windows detectable).  Atomic on POSIX and HDFS; on object
-    stores a directory rename is a copy — there the real deployment
-    answer is a table format's snapshot swap (see
-    :mod:`.compaction`), and this routes through whatever the
-    configured FileSystem provides."""
-    if not is_uri(src):
-        if os.path.exists(dst):
-            raise IOError("fsio: rename target %r already exists" % dst)
-        os.rename(src, dst)
-        return
-    fs, jsrc, jvm = _jfs(spark, src)
-    jdst = jvm.org.apache.hadoop.fs.Path(dst)
-    if fs.exists(jdst):
-        raise IOError("fsio: rename target %r already exists" % dst)
-    if not fs.rename(jsrc, jdst):
-        raise IOError("fsio: rename %r -> %r failed" % (src, dst))
 
 
 def getsize(spark, path: str) -> int:
@@ -244,7 +229,7 @@ def write_text_atomic(spark, path: str, text: str) -> None:
             # mounts): fall back to exclusive-create + direct write.
             # No-clobber is preserved; the only loss is torn-file
             # atomicity on a crash mid-write — acceptable ONLY as the
-            # degraded path, and manifest readers raise loudly on a
+            # degraded path, and snapshot readers raise loudly on a
             # torn record rather than misreading it.
             try:
                 with open(path, "xb") as f:

@@ -1,97 +1,24 @@
 # -*- coding: utf-8 -*-
-"""Checkpoint manifest: per-stage commit records with lineage +
-counters, enabling resume at the last committed stage.
+"""Source-table fingerprints for the KG store's stage identities.
 
-Analog of the reference's model/file persistence
-(/root/reference/webstruct/_fileresource.py) re-thought for a staged
-distributed job: every stage writes its output table, then commits one
-JSON record {stage, rows_out, n_files, bytes, files:[{name, rows,
-bytes}], wall_sec, committed_utc_ns}.  A killed run restarts, finds
-the committed entries, and skips straight to the first uncommitted
-stage (kill-and-resume equivalence is pytest-gated).
-
-Layout: each commit is ONE record file under ``<out_dir>/manifest.d/``
-(``rec-<utc_ns>-<seq>-<stage>.json``), written via sibling-tmp +
-rename.  One-file-per-commit instead of an appended ``manifest.jsonl``
-because cluster filesystems make appends a trap — Hadoop's local and
-object-store FSs refuse ``append()`` — while a tmp+rename of a NEW
-name is portable and atomic-enough everywhere (rename on HDFS/local,
-single-object visibility on S3).  A crash mid-commit leaves only a
-``.tmp`` orphan, which every reader ignores: a torn record is
-impossible, so any unparsable ``.json`` is REAL corruption and raises.
-A pre-existing ``manifest.jsonl`` (the pre-round-5 layout) is still
-read, before the record files, so old builds resume seamlessly; new
-commits only ever write record files.
-
-All filesystem access goes through :mod:`.fsio`: scheme-less paths
-take the plain-``os`` route, URI paths (``hdfs://``, ``s3a://``,
-``file:``) the JVM Hadoop FileSystem API — pass ``spark=`` for those.
-
-On a real deployment each stage commit would be an Iceberg snapshot;
-in the sandbox the parquet dir + _SUCCESS marker plays that role and
-per-file row counts come from the parquet footers (no data scan; on
-the Hadoop route the footer is fetched by ranged reads, never the
-whole file).
+Each stage entry of a KG snapshot (:mod:`.pipeline`, :mod:`.snapshots`)
+records the fingerprints of the source tables it was built from, so a
+resumed or appended run can tell whether the store was built from the
+tables it is pointed at.  Footer reads only: no data scan on either
+:mod:`.fsio` route.
 """
 from __future__ import annotations
 
-import json
-import os
-import re
-import threading
-import time
-from typing import Dict, List, Optional
-
 from . import fsio
-
-# the exact shape compact_records gives its snapshot file — stage
-# slot literally "snapshot".  The vanish-skip proof below must match
-# THIS, not a bare "-snapshot.json" suffix, or a user stage named
-# "foo-snapshot" (whose record name also ends "-snapshot.json")
-# would count as fold-proof and let a vanished record be silently
-# dropped instead of retried.  Field widths are minimums, not exact:
-# "%020d-%06d-%07d" only pads — a long-lived driver's seq past
-# 999999 or a pid past 7 digits widens its field, and an exact-width
-# regex would then reject the compactor's OWN snapshot (every vanish
-# in a delete loop would exhaust the retry bound).  The dash
-# separators keep the match unambiguous either way: \d cannot cross
-# a dash, so a record of a digit-named stage like "1234567-snapshot"
-# still has one dash-group too many.  The one truly ambiguous stage
-# name, "snapshot" itself, is rejected in _check_stage_name.
-_SNAPSHOT_NAME_RE = re.compile(
-    r"^rec-\d{20,}-\d{6,}-\d{7,}-snapshot\.json$"
-)
-
-
-def _check_stage_name(stage: str) -> None:
-    """Reject the reserved stage name BEFORE any work happens on its
-    behalf — enforced at both entries that name files after a stage
-    (:meth:`Manifest.write_intent`, :meth:`Manifest.commit`).  The
-    intent-side check matters most: an append-mode stage validated
-    only at commit() time would run its whole (possibly hours-long)
-    Spark write, be refused, and then have the landed files deleted
-    by the next reconcile_intents() as an unlanded commit — silent
-    rollback of real work instead of a zero-cost fail-fast."""
-    if stage == "snapshot":
-        # its record file would be name-indistinguishable from a
-        # compact_records snapshot, breaking the vanish-skip proof
-        # in _read_record_files
-        raise ValueError(
-            "stage name 'snapshot' is reserved for "
-            "compact_records history folds"
-        )
-
-# sentinel distinguishing "key absent from the record" from a None
-# value in the projection comparison below
-_MISSING = object()
 
 
 def table_fingerprint(path: str, spark=None) -> dict:
     """(row count, total bytes, file count) of a parquet table (single
     file or flat Spark-written part-file dir) from the footers — no
-    data scan.  This is the resume-identity check for
-    `Manifest.is_committed`: a swapped or regenerated table virtually
-    never keeps all three identical.  NOT a content hash — a
+    data scan.  This is the source identity every stage of the KG
+    store records (``build_kg``'s resume check, the append and refresh
+    guards): a swapped or regenerated table virtually never keeps all
+    three identical.  NOT a content hash — a
     same-size, same-row-count in-place edit passes; the guard's job is
     catching pointed-at-the-wrong-corpus and regenerated-corpus
     mistakes, not adversarial substitution.  Raises on a dir with no
@@ -121,609 +48,3 @@ def table_fingerprint(path: str, spark=None) -> dict:
         rows += fsio.parquet_num_rows(spark, fsio.join(path, name))
         nbytes += size
     return {"rows": rows, "bytes": nbytes, "n_files": len(files)}
-
-
-class _VanishedRecordError(Exception):
-    """A ``manifest.d`` record file disappeared between the listing
-    and its read, with no later ``-snapshot.json`` in the SAME
-    listing to prove its content was folded — the one retryable read
-    race (:meth:`Manifest.compact_records` deletes superseded files
-    strictly after writing its snapshot, so the retry's fresh listing
-    necessarily includes that snapshot).  A dedicated exception keeps
-    the retry condition race-free across concurrent reader threads —
-    no shared mutable flag on the instance."""
-
-
-class Manifest:
-    """Commit records are one file each (see module docstring); the
-    per-instance lock only serializes the sequence counter that breaks
-    same-nanosecond ordering ties between concurrent driver threads
-    (pipeline.build_kg ``stage_concurrency`` > 1).  Record ORDER (by
-    file name = (utc_ns, seq)) is completion order; resume folds the
-    records into a per-stage dict, later records overriding earlier
-    ones (append commits roll a stage's totals forward)."""
-
-    RECORDS_DIR = "manifest.d"
-    LEGACY_FILE = "manifest.jsonl"
-
-    def __init__(self, out_dir: str, layout_version: str = "1",
-                 spark=None, create: bool = True):
-        """``create=False`` gives a strictly read-only handle: no
-        directory is created, so inspecting a nonexistent / typo'd
-        out_dir (kg_status) leaves the filesystem untouched."""
-        self.out_dir = out_dir
-        self.layout_version = layout_version
-        self.spark = spark
-        # legacy (pre-round-5) appended-jsonl manifest: read-only
-        self.path = fsio.join(out_dir, self.LEGACY_FILE)
-        self.records_dir = fsio.join(out_dir, self.RECORDS_DIR)
-        self._lock = threading.Lock()
-        self._seq = 0
-        if create:
-            fsio.mkdirs(spark, self.records_dir)
-
-    def ensure_dirs(self) -> None:
-        """Create the records dir for a handle opened ``create=False``
-        once the caller has decided it WILL write.  Entry points whose
-        preamble can refuse (append/refresh need a committed base)
-        open read-only and call this after the preamble passes, so a
-        refused run against a typo'd or never-built out_dir leaves no
-        ``manifest.d`` behind to make the bogus path look like an
-        empty build to a later ``kg_status``.  Idempotent."""
-        fsio.mkdirs(self.spark, self.records_dir)
-
-    # -- reading ------------------------------------------------------
-    def records(self) -> List[dict]:
-        """Every commit record in fold order (legacy jsonl lines
-        first, then record files sorted by name = commit order).
-
-        Vanish-tolerant like :meth:`intents`: the read-only audits
-        (kg_status / check_kg_links) race live maintenance BY DESIGN,
-        and :meth:`compact_records` deletes superseded record files
-        after writing its snapshot — a record file listed here can
-        legitimately vanish before its read.  Skipping it would be
-        WRONG (if our listing predates the snapshot write, the
-        vanished record's content lives in a snapshot we never
-        listed), so a vanish restarts the listing+read pass: the
-        retry's listing includes the snapshot that superseded the
-        vanished file, and every FURTHER vanish from that same
-        compaction (it deletes O(history) superseded files one by
-        one) is then skipped in-pass because the snapshot proving the
-        fold is already in the listing — one compaction costs at most
-        one retry, however many files it deletes.  Bounded retries —
-        manifest compaction is a rare scheduled event, so a third
-        consecutive listing-predates-snapshot restart means something
-        other than the benign race and raises."""
-        out: List[dict] = []
-        if fsio.exists(self.spark, self.path):
-            try:
-                lines = fsio.read_text(self.spark, self.path).splitlines()
-            except Exception:
-                if fsio.exists(self.spark, self.path):
-                    raise
-                # the legacy file vanished between exists() and the
-                # read: compact_records deletes it LAST, strictly
-                # after writing its snapshot, so the snapshot file —
-                # which folds every legacy line — is already on disk
-                # and the manifest.d pass below (whose listing starts
-                # after this failure) necessarily includes it.
-                # Returning only the record files is exactly the
-                # post-compaction view; no retry needed.
-                lines = []
-            for i, line in enumerate(lines):
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    out.append(json.loads(line))
-                except json.JSONDecodeError:
-                    # a torn TRAILING line — a writer killed
-                    # mid-append under the old layout — is treated as
-                    # uncommitted; interior corruption still raises
-                    if i == len(lines) - 1:
-                        break
-                    raise
-        for attempt in range(3):
-            try:
-                out_files = self._read_record_files()
-                break
-            except _VanishedRecordError:
-                # only the vanished-file race retries (real read and
-                # parse errors raise as themselves above); see the
-                # docstring for why one retry absorbs a whole
-                # compaction's delete loop
-                if attempt == 2:
-                    raise
-        return out + out_files
-
-    def _read_record_files(self) -> List[dict]:
-        """One listing+read pass over ``manifest.d``.  A file that
-        vanishes after the listing (the compact_records delete race)
-        is SKIPPED when the same listing already holds a later
-        snapshot record (exact compactor name shape, see
-        :data:`_SNAPSHOT_NAME_RE`): the compactor writes its snapshot
-        strictly before any delete and only deletes names sorting
-        BEFORE it, so the vanished file's content is folded into (or
-        last-wins-superseded by) a record this pass will still read.
-        (That inference leans on the serialized-maintenance contract:
-        commits never race compact_records, so a record whose name
-        sorts before a snapshot was fully committed before that
-        snapshot's compaction computed its fold — an in-flight commit
-        whose timestamp predates a concurrent snapshot could
-        otherwise escape the fold while satisfying the name test.)
-        Without such a snapshot the listing predates the snapshot
-        write and skipping could lose the record — raise
-        :class:`_VanishedRecordError` so :meth:`records` restarts
-        with a fresh listing.  Real read/parse errors raise as
-        themselves."""
-        out: List[dict] = []
-        # a read-only handle (create=False) may point at a dir that
-        # was never built — no records, not an error
-        names = (
-            sorted(fsio.listdir_names(self.spark, self.records_dir))
-            if fsio.exists(self.spark, self.records_dir) else []
-        )
-        json_names = [n for n in names if n.endswith(".json")]
-        # the single latest snapshot name decides every vanish in the
-        # pass (computed once — a compaction delete-loop makes nearly
-        # every file vanish, and an any() rescan per vanish would be
-        # O(n^2) in history size)
-        max_snap = max(
-            (n for n in json_names if _SNAPSHOT_NAME_RE.match(n)),
-            default="",
-        )
-        skipped_vanished = False
-        for name in json_names:
-            # non-.json names (.tmp orphans of crashed commits) were
-            # filtered above
-            fpath = fsio.join(self.records_dir, name)
-            try:
-                text = fsio.read_text(self.spark, fpath)
-            except Exception as exc:
-                if fsio.exists(self.spark, fpath):
-                    raise  # failed for a real reason, not the race
-                if max_snap > name:
-                    skipped_vanished = True
-                    continue  # folded into a snapshot we will read
-                raise _VanishedRecordError(
-                    "record %s vanished from %s with no later "
-                    "snapshot in the same listing (listing predates "
-                    "a compaction's snapshot write, or files are "
-                    "vanishing without one)" % (name, self.records_dir)
-                ) from exc
-            # records are tmp+rename'd, so a torn one cannot exist —
-            # an unparsable record is real corruption and raises
-            rec = json.loads(text)
-            if rec.get("type") == "snapshot":
-                # a folded history checkpoint (see compact_records):
-                # splice its records in at this fold position — any
-                # older record files it superseded (crash mid-delete)
-                # sort before it and are overridden by last-wins
-                out.extend(rec["records"])
-            else:
-                out.append(rec)
-        if skipped_vanished:
-            # The name-order proof above assumes record names commit
-            # in sorted order ACROSS processes; a writer with a
-            # backward-skewed clock can commit a record that sorts
-            # before an already-listed snapshot, and a SECOND
-            # compaction (snapshot absent from this pass's listing)
-            # may have folded+deleted it mid-pass — its content then
-            # lives only in that unseen snapshot.  One extra LIST on
-            # vanish-bearing passes detects exactly that: a snapshot
-            # newer than this pass's max_snap means the pass raced a
-            # compaction it did not read — restart with a fresh
-            # listing (records() bounds the retries).
-            relist = (
-                sorted(fsio.listdir_names(self.spark, self.records_dir))
-                if fsio.exists(self.spark, self.records_dir) else []
-            )
-            new_max = max(
-                (n for n in relist if _SNAPSHOT_NAME_RE.match(n)),
-                default="",
-            )
-            if new_max > max_snap:
-                raise _VanishedRecordError(
-                    "records vanished while a newer snapshot %s "
-                    "appeared (raced a second compaction) — re-list"
-                    % new_max
-                )
-        return out
-
-    def committed(self) -> Dict[str, dict]:
-        out: Dict[str, dict] = {}
-        for rec in self.records():
-            out[rec["stage"]] = rec
-        return out
-
-    def is_committed(self, stage: str,
-                     source_fp: Optional[dict] = None,
-                     rec: Optional[dict] = None,
-                     has_success: Optional[bool] = None) -> bool:
-        """``rec``: pass the stage's record from an already-loaded
-        :meth:`committed` snapshot to skip re-reading the manifest —
-        callers that check many stages (build resume, append
-        preamble) parse the records once instead of once per stage.
-
-        ``has_success``: pass the ``_SUCCESS`` presence when the
-        caller already listed the stage dir (kg_status lists every
-        stage anyway) — skips this method's own existence probe, one
-        py4j hop per stage on the Hadoop/object-store route."""
-        if rec is None:
-            rec = self.committed().get(stage)
-        if not rec:
-            return False
-        # a commit from an older table layout must not be resumed into
-        # — rebuild instead of silently serving stale-schema outputs
-        if rec.get("layout", "1") != self.layout_version:
-            return False
-        # a commit built from DIFFERENT source tables must not be
-        # resumed into either: every stage records the run's source
-        # fingerprint (rows+bytes per input table, from the parquet
-        # footers), so pointing the same out_dir at a changed corpus
-        # rebuilds instead of serving stale outputs.  A record without
-        # one (pre-fingerprint manifest) is unverifiable → rebuild.
-        # Comparison is PROJECTION onto the expected keys: older
-        # records carry the FULL run fingerprint on every stage
-        # (pre-STAGE_IDENTITY_KEYS layout), and a key the stage does
-        # not depend on (e.g. the gazetteer for `extracted`) must not
-        # invalidate it — without this, every pre-existing build
-        # silently re-extracts its whole corpus on first resume.
-        # Keys the record LACKS still refuse (unverifiable identity).
-        if source_fp is not None:
-            rec_fp = rec.get("source_fp")
-            if not isinstance(rec_fp, dict):
-                return False
-            if any(rec_fp.get(k, _MISSING) != v
-                   for k, v in source_fp.items()):
-                return False
-        # the stage dir must still look committed on disk
-        if has_success is not None:
-            return has_success
-        return fsio.exists(
-            self.spark,
-            fsio.join(self.out_dir, stage, "_SUCCESS"),
-        )
-
-    def stage_path(self, stage: str) -> str:
-        return fsio.join(self.out_dir, stage)
-
-    # -- writing ------------------------------------------------------
-    def commit(self, stage: str, wall_sec: float,
-               inputs: Optional[List[str]] = None,
-               source_fp: Optional[dict] = None,
-               only_files: Optional[List[str]] = None,
-               prior_rec: Optional[dict] = None,
-               extra: Optional[dict] = None) -> dict:
-        """Collect lineage from the written parquet dir and write the
-        commit record.
-
-        Full-build commits enumerate every part file's footer.  For
-        APPEND commits pass ``only_files`` (the part files this write
-        added — snapshot the dir listing before and after the write)
-        plus ``prior_rec`` (the stage's previous record): footers are
-        read for the delta only and the record's ``rows_out``/
-        ``bytes``/``n_files`` totals are the prior totals plus the
-        delta — O(delta) per commit instead of O(total files ever
-        written), and each record's ``files`` lineage lists only what
-        that commit added (``files_delta: true``)."""
-        _check_stage_name(stage)
-        path = self.stage_path(stage)
-        if only_files is not None:
-            if prior_rec is None:
-                raise ValueError(
-                    "commit(only_files=...) needs prior_rec for the "
-                    "running totals"
-                )
-            sizes = dict(fsio.listdir(self.spark, path))
-            names = [(n, sizes[n]) for n in sorted(only_files)]
-        else:
-            names = sorted(fsio.listdir(self.spark, path))
-        files: List[dict] = []
-        rows = 0
-        total_bytes = 0
-        for name, nbytes in names:
-            if not name.endswith(".parquet"):
-                continue
-            n_rows = fsio.parquet_num_rows(
-                self.spark, fsio.join(path, name)
-            )
-            files.append(dict(name=name, rows=n_rows, bytes=nbytes))
-            rows += n_rows
-            total_bytes += nbytes
-        n_files = len(files)
-        if only_files is not None:
-            rows += prior_rec["rows_out"]
-            total_bytes += prior_rec["bytes"]
-            n_files += prior_rec["n_files"]
-        rec = dict(
-            stage=stage,
-            layout=self.layout_version,
-            inputs=list(inputs or []),
-            **({"source_fp": source_fp} if source_fp is not None else {}),
-            rows_out=rows,
-            n_files=n_files,
-            bytes=total_bytes,
-            files=files,
-            **({"files_delta": True} if only_files is not None else {}),
-            wall_sec=round(wall_sec, 3),
-            committed_utc_ns=time.time_ns(),
-        )
-        if extra:
-            # caller annotations (e.g. the append path's delta_fp /
-            # delta_batch_id provenance, read back by the
-            # fully-applied plain-retry skip); core keys always win
-            rec = {**extra, **rec}
-        with self._lock:
-            seq = self._seq
-            self._seq += 1
-        # (utc_ns, seq, pid) make the name unique across concurrent
-        # driver threads AND across processes sharing an out_dir; the
-        # zero-padding makes lexicographic name order = commit order
-        name = "rec-%020d-%06d-%07d-%s.json" % (
-            rec["committed_utc_ns"], seq, os.getpid(), stage
-        )
-        fsio.write_text_atomic(
-            self.spark,
-            fsio.join(self.records_dir, name),
-            json.dumps(rec),
-        )
-        return rec
-
-    # -- append write-ahead intents ------------------------------------
-    #
-    # An append-mode stage write has a crash window the commit records
-    # alone cannot repair: the Spark job COMMITS (part files visible)
-    # but the driver dies before `commit()` writes the record.  The
-    # stage dir then holds rows the manifest does not know about, and
-    # — worse — a replayed streaming batch would find every delta
-    # conv_id "already landed" in the extracted data files and skip
-    # the batch, silently dropping it from every downstream stage.
-    # The intent is a tiny WAL entry written BEFORE the append (the
-    # dir's pre-write part-file listing + the identity the commit
-    # would record) and deleted after the commit; reconcile_intents()
-    # at the next run's entry either confirms the commit landed or
-    # deletes the stray uncommitted part files, restoring
-    # disk == manifest exactly.  Intent files use the ``.intent``
-    # suffix so :meth:`records` (``.json`` only) never sees them.
-
-    INTENT_SUF = ".intent"
-
-    def write_intent(self, stage: str, pre_files: List[str],
-                     post_fp: Optional[dict],
-                     kind: str = "append") -> str:
-        """Record the intent to write ``stage``; returns the
-        intent's file name (pass to :meth:`clear_intent` after the
-        commit record is written).
-
-        ``kind='append'``: reconciliation restores the pre-write state
-        by deleting part files not in ``pre_files``.  ``kind=
-        'overwrite'``: ``mode("overwrite")`` destroys the old dir at
-        write start, so there is no pre-state to restore — an
-        unlanded overwrite reconciles by deleting the stage dir
-        entirely (incl. its fresh ``_SUCCESS``), leaving the familiar
-        mid-overwrite-crash state every entry point already repairs
-        by recomputing.  Without this, a crash between the overwrite
-        landing and the commit record leaves the OLD record validated
-        by the NEW write's ``_SUCCESS``: a later ``build_kg(resume)``
-        would silently serve the new content under the old identity
-        (e.g. refreshed nodes beside original-gazetteer links)."""
-        if kind not in ("append", "overwrite"):
-            raise ValueError("intent kind must be append|overwrite")
-        _check_stage_name(stage)
-        rec = dict(
-            stage=stage,
-            kind=kind,
-            pre_files=sorted(pre_files),
-            post_fp=post_fp,
-            utc_ns=time.time_ns(),
-        )
-        with self._lock:
-            seq = self._seq
-            self._seq += 1
-        name = "intent-%020d-%06d-%07d-%s%s" % (
-            rec["utc_ns"], seq, os.getpid(), stage, self.INTENT_SUF
-        )
-        fsio.write_text_atomic(
-            self.spark, fsio.join(self.records_dir, name),
-            json.dumps(rec),
-        )
-        return name
-
-    def clear_intent(self, name: str) -> None:
-        fsio.delete(
-            self.spark, fsio.join(self.records_dir, name),
-            recursive=False,
-        )
-
-    def intents(self) -> List[dict]:
-        """Read-only listing of pending intents (each with its
-        ``intent_file`` name), oldest first.  A pending intent means
-        an append write may have crashed since the last run — the
-        next build/append/compact entry settles it."""
-        out: List[dict] = []
-        names = (
-            sorted(fsio.listdir_names(self.spark, self.records_dir))
-            if fsio.exists(self.spark, self.records_dir) else []
-        )
-        for name in names:
-            if not name.endswith(self.INTENT_SUF):
-                continue
-            # a LIVE append can clear_intent() between our listing
-            # and this read (kg_status races running jobs by design);
-            # a vanished intent simply means the commit landed
-            try:
-                text = fsio.read_text(
-                    self.spark, fsio.join(self.records_dir, name)
-                )
-            except Exception:
-                if fsio.exists(self.spark,
-                               fsio.join(self.records_dir, name)):
-                    raise  # real read error, not the benign race
-                continue
-            rec = json.loads(text)
-            rec["intent_file"] = name
-            out.append(rec)
-        return out
-
-    def reconcile_intents(self) -> Dict[str, str]:
-        """Settle every intent left by a crashed append write: if the
-        stage's committed identity equals the intent's ``post_fp`` the
-        commit landed (drop the intent, keep the files); otherwise
-        delete the stage dir's part files NOT in the intent's
-        pre-write listing — the landed-but-uncommitted strays — so the
-        dir again matches the manifest byte-for-byte.  Idempotent;
-        call at the entry of every append/build/compact over the
-        out_dir (a later full rebuild changes the stage's files, and
-        a stale intent reconciled AFTER that would delete legitimate
-        data — entry-time reconciliation is what makes that
-        impossible).  Returns {stage: "committed" | "reverted(N)"}."""
-        pending = self.intents()
-        if not pending:
-            return {}
-        out: Dict[str, str] = {}
-        committed = self.committed()
-        for it in pending:
-            name = it["intent_file"]
-            stage = it["stage"]
-            rec = committed.get(stage)
-            # fp equality alone does not prove the commit landed for
-            # an OVERWRITE intent: a same-identity rebuild (library
-            # build_kg(resume=False) over an unchanged corpus)
-            # targets exactly the fp the PRE-EXISTING record already
-            # carries, so a crash anywhere in that overwrite would
-            # read as "committed" and keep a half-written dir (or a
-            # landed write whose record still describes the OLD
-            # files).  The landed proof: the commit record STAMPS the
-            # intent file name it was written under
-            # (pipeline._overwrite_commit), so record-names-THIS-
-            # intent is exact and process-independent.  Records from
-            # before the stamp fall back to record-newer-than-intent
-            # (committed_utc_ns > intent utc_ns) — valid only when
-            # one process wrote both, which the same-run case
-            # satisfies; across machines a skewed clock could invert
-            # it, which is why new commits carry the stamp.  Append
-            # intents need no recency check — their post identity
-            # always advances past the prior record's (the delta
-            # adds rows).
-            landed = bool(rec) and rec.get("source_fp") == it["post_fp"]
-            if landed and it.get("kind", "append") == "overwrite":
-                stamped = rec.get("intent_file")
-                if stamped is not None:
-                    landed = stamped == name
-                else:
-                    landed = (
-                        rec.get("committed_utc_ns", 0)
-                        > it.get("utc_ns", 0)
-                    )
-            if landed:
-                out[stage] = "committed"
-            elif it.get("kind", "append") == "overwrite":
-                path = self.stage_path(stage)
-                pre = sorted(it.get("pre_files") or [])
-                listing = (
-                    fsio.listdir_names(self.spark, path)
-                    if fsio.exists(self.spark, path) else []
-                )
-                cur = sorted(
-                    n for n in listing if n.endswith(".parquet")
-                )
-                if rec is not None and cur == pre \
-                        and "_SUCCESS" in listing:
-                    # the crash hit BEFORE the overwrite's write
-                    # began: mode("overwrite") deletes the dir at
-                    # write start and a fresh write lands new UUID
-                    # part names, so name-set equality with the
-                    # intent's pre-write snapshot (plus the marker
-                    # and a still-present committed record) proves
-                    # the old committed state is fully intact.
-                    # Deleting it would destroy a healthy stage and
-                    # force a corpus-scale recompute for a crash
-                    # that touched nothing.  pre == cur == [] (a
-                    # legitimately committed ZERO-part-file stage —
-                    # an empty 0-partition result writes only
-                    # _SUCCESS) is intact by the same proof; the one
-                    # ambiguity — the new overwrite itself landed
-                    # empty, _SUCCESS but no record — is harmless to
-                    # keep: both states hold zero rows, and if the
-                    # identities differ is_committed's fp check
-                    # rebuilds anyway.
-                    out[stage] = "intact"
-                else:
-                    # write started (or landed uncommitted, or the
-                    # intent predates pre-file snapshots): no
-                    # restorable pre-state — drop the whole dir,
-                    # incl. the fresh _SUCCESS that would otherwise
-                    # validate the stale record, so the stage
-                    # presents as the ordinary mid-overwrite crash
-                    # the repair paths recompute
-                    fsio.delete(self.spark, path)
-                    out[stage] = "cleared"
-            else:
-                path = self.stage_path(stage)
-                n_strays = 0
-                if fsio.exists(self.spark, path):
-                    pre = set(it["pre_files"])
-                    for n in fsio.listdir_names(self.spark, path):
-                        if n.endswith(".parquet") and n not in pre:
-                            fsio.delete(
-                                self.spark, fsio.join(path, n),
-                                recursive=False,
-                            )
-                            n_strays += 1
-                    # job-temp leftovers of the crashed write
-                    fsio.delete(self.spark, fsio.join(path, "_temporary"))
-                out[stage] = "reverted(%d)" % n_strays
-            self.clear_intent(name)
-        return out
-
-    def compact_records(self) -> int:
-        """Fold the commit history into ONE snapshot record file and
-        delete the record files (and legacy jsonl) it supersedes.
-        Without this, manifest.d gains one file per stage per append
-        forever and every :meth:`records` call — one per append
-        preamble — pays O(total commit history) listing + reads (on
-        the Hadoop route, py4j round trips each): the same unbounded
-        small-file pathology stage compaction fixes for data.  Run
-        from :func:`~webstruct_spark.plans.compaction.compact_kg`.
-
-        Only the LATEST record per stage survives (that is all
-        :meth:`committed` ever uses); older records are history.
-        Crash-safe: the snapshot is tmp+rename'd first, and a crash
-        mid-delete leaves older files that fold BEFORE the snapshot
-        and are overridden by it (last-wins), so readers are correct
-        at every instant.  Returns the number of files removed."""
-        names_before = [
-            n for n in fsio.listdir_names(self.spark, self.records_dir)
-            if n.endswith(".json")
-        ]
-        latest = self.committed()
-        if not latest:
-            return 0
-        snap = dict(
-            type="snapshot",
-            records=[latest[s] for s in sorted(latest)],
-            committed_utc_ns=time.time_ns(),
-        )
-        with self._lock:
-            seq = self._seq
-            self._seq += 1
-        name = "rec-%020d-%06d-%07d-%s.json" % (
-            snap["committed_utc_ns"], seq, os.getpid(), "snapshot"
-        )
-        fsio.write_text_atomic(
-            self.spark, fsio.join(self.records_dir, name),
-            json.dumps(snap),
-        )
-        removed = 0
-        for n in names_before:
-            if n < name:
-                fsio.delete(
-                    self.spark, fsio.join(self.records_dir, n),
-                    recursive=False,
-                )
-                removed += 1
-        if fsio.exists(self.spark, self.path):
-            fsio.delete(self.spark, self.path, recursive=False)
-            removed += 1
-        return removed

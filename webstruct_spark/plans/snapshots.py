@@ -12,8 +12,16 @@ A writer puts its data files under fresh names first and commits
 after; readers open only the files the current record lists, never a
 directory listing.  A crash at any point therefore leaves either the
 old snapshot or the new one current, plus files no snapshot references,
-which the next commit's :func:`gc` removes.  Writers (build, append,
-compact) are serialized by contract; readers may run at any time.
+which the next :func:`gc` removes.  Writers (build, append, compact)
+are serialized by contract; readers may run at any time, but a reader
+still on an older snapshot may find its files removed by a newer
+snapshot's GC, and then re-reads the current one.  Two tables live on
+the log: the ANN index (:mod:`webstruct_spark.operators.similarity`)
+and the KG store (:mod:`.pipeline`).
+
+Writers add files with :func:`append_writer` (append mode, no
+``_SUCCESS`` marker) and find the names they added with
+:func:`added_files`.
 
 Record shape: ``{"id": N, "files": [{"path": ..., ...}, ...],
 "sidecars": {role: path}, ...}``.  Paths are relative to the root, so
@@ -24,7 +32,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Optional, Set
+from typing import Callable, Dict, List, Optional, Set
 
 from . import fsio
 
@@ -67,6 +75,46 @@ def commit(spark, root: str, parent: Optional[dict], record: dict) -> dict:
     return rec
 
 
+def append_writer(df):
+    """``df.write`` in append mode and without a ``_SUCCESS`` marker:
+    the snapshot commit is what publishes the files."""
+    return df.write.mode("append").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    )
+
+
+def added_files(
+    spark, root: str, dirs: Optional[List[str]], write: Callable[[], None]
+) -> Dict[str, int]:
+    """Run ``write`` and return ``{path relative to root: bytes}`` of
+    the parquet files it added under ``dirs`` — every directory of the
+    root when None.  Found by listing
+    before and after: Spark names part files after the write job's
+    UUID, so they never collide with files already there."""
+    def listing() -> dict:
+        ds = dirs
+        if ds is None:
+            ds = [
+                n for n, _, is_dir in (
+                    fsio.entries(spark, root)
+                    if fsio.exists(spark, root) else []
+                )
+                if is_dir
+            ]
+        return {
+            d + "/" + n: size
+            for d in ds
+            for n, size in fsio.listdir_if_exists(
+                spark, fsio.join(root, d)
+            ) or []
+            if n.endswith(".parquet")
+        }
+
+    before = listing()
+    write()
+    return {p: size for p, size in listing().items() if p not in before}
+
+
 def _paths(rec: dict) -> Set[str]:
     out = {f["path"] for f in rec["files"]}
     out.update(rec.get("sidecars", {}).values())
@@ -75,15 +123,15 @@ def _paths(rec: dict) -> Set[str]:
 
 
 def gc(spark, root: str, snap: dict) -> None:
-    """Delete every file under ``root`` that neither ``snap`` nor its
-    predecessor references, and every directory holding no referenced
-    file.  The predecessor is kept for readers that picked it up just
-    before ``snap`` was committed.  Call this only right after
-    committing ``snap`` yourself: files of a writer still in flight are
-    unreferenced too, which is why writers are serialized."""
+    """Delete every file under ``root`` that ``snap`` does not
+    reference, and every directory holding no referenced file, so each
+    data dir holds exactly the live files and plain directory readers
+    see what snapshot readers see.  ``snap`` must be the current
+    snapshot, and no other writer may be in flight: its files are
+    unreferenced too, which is why writers are serialized.  A reader
+    still on an older snapshot may lose its files; it re-reads the
+    current one."""
     keep = _paths(snap)
-    if snap["id"] > 1:
-        keep |= _paths(_read(spark, root, snap["id"] - 1))
     dirs = set()
     for p in keep:
         parts = p.split("/")
@@ -92,13 +140,18 @@ def gc(spark, root: str, snap: dict) -> None:
 
 
 def _sweep(spark, root: str, rel: str, keep: Set[str], dirs: Set[str]):
-    for name, _size, is_dir in fsio.entries(
-        spark, fsio.join(root, rel) if rel else root
-    ):
+    entries = fsio.entries(spark, fsio.join(root, rel) if rel else root)
+    names = {name for name, _size, _is_dir in entries}
+    for name, _size, is_dir in entries:
         p = rel + "/" + name if rel else name
         if is_dir and p in dirs:
             _sweep(spark, root, p, keep, dirs)
-        elif p not in keep and _checksum_owner(rel, name) not in keep:
+            continue
+        owner = _checksum_owner(rel, name)
+        # a checksum sibling is kept with its file, or deleted with it
+        if p not in keep and owner not in keep and (
+            owner is None or owner.rsplit("/", 1)[-1] not in names
+        ):
             fsio.delete(spark, fsio.join(root, p))
 
 

@@ -7,8 +7,8 @@ This closes the loop between the batch pipeline and the streaming
 modules: a corpus that arrives as periodic parquet drops (the 100 TB
 deployment's usual shape — an upstream job lands conversation-complete
 files) is folded into the KG incrementally, with Structured
-Streaming's checkpoint tracking WHICH files were consumed and the
-manifest's ``stream_batch_id`` stamp making each micro-batch append
+Streaming's checkpoint tracking WHICH files were consumed and the KG
+snapshot's ``stream_batch_id`` stamp making each micro-batch append
 EXACTLY-ONCE:
 
 * foreachBatch is at-least-once after a failure — a replayed batch
@@ -17,7 +17,9 @@ EXACTLY-ONCE:
   and returns without writing.  Batch ids are only comparable within
   one checkpoint, so each checkpoint dir carries a persistent stream
   identity (``_ws_stream_id``, created on first start) that is
-  stamped into the manifest alongside the ids.
+  stamped into the snapshot alongside the ids.
+* a batch killed before its snapshot commit left nothing visible, so
+  the retry of the same batch applies it in full.
 * a LOST checkpoint is recoverable: a fresh checkpoint dir gets a new
   stream identity, so its batch 0 is never mistaken for a replay of
   the old id sequence.  Re-draining an input dir that did not gain
@@ -123,7 +125,7 @@ def ingest_transcripts_stream(
     # listdir_if_exists, not exists→list: a retention job can remove
     # the dir between the two calls, and the scheduled ingest must
     # take the documented does-not-exist no-op path, not crash on
-    # the race (same hardening as kg_status / Manifest.intents)
+    # the race
     if _nothing_to_ingest(fsio.listdir_if_exists(spark, input_dir)):
         return None
     # a stable identity for THIS checkpoint's batch-id sequence, kept
