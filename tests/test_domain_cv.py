@@ -204,7 +204,8 @@ def test_prepared_placement_invariant(spark):
     and full shard) and the mix averages in explicit ascending-pid
     order, so ANY placement of intact records — even a repartition()
     that mixes shards within partitions — must yield byte-identical
-    weights.  (The count contract still guards an n_parts mismatch.)"""
+    weights.  (The n_parts each record carries still guards a shard
+    modulus mismatch.)"""
     import pytest
 
     from webstruct_spark.operators.trained import (
@@ -228,6 +229,24 @@ def test_prepared_placement_invariant(spark):
             None, n_parts=8,
             prepared=prepare_fit_rows(turns, n_parts=4),
         )
+
+
+def test_prepared_modulus_survives_repartition(spark):
+    """The shard modulus rides inside each compact record, so a
+    prepared RDD repartitioned to the trainer's n_parts is still
+    refused when it was built with another one — a partition count
+    can match by accident, the records' crc32 modulus cannot."""
+    import pytest
+
+    from webstruct_spark.operators.trained import (
+        prepare_fit_rows,
+        train_crf_distributed,
+    )
+
+    turns = spark.read.parquet(os.path.join(CORPUS, "transcripts.parquet"))
+    spoofed = prepare_fit_rows(turns, n_parts=4).repartition(8)
+    with pytest.raises(ValueError, match=r"built with 4 shards but n_parts=8"):
+        train_crf_distributed(None, n_parts=8, prepared=spoofed)
 
 
 def test_fold_concurrency_identical(spark):

@@ -1,7 +1,8 @@
 # -*- coding: utf-8 -*-
 """The trained-model inference path lifts to Structured Streaming
-unchanged (crf_tagged_mentions is a narrow mapInPandas): availableNow
-over file arrivals must equal the batch run row-for-row."""
+unchanged (crf_tagged_mentions is one narrow mapInArrow pass for batch
+and streaming frames): availableNow over file arrivals must equal the
+batch run row-for-row."""
 import os
 
 from pyspark.sql import functions as F

@@ -8,7 +8,7 @@ import pytest
 
 
 def test_stream_mentions_equals_batch(spark, corpus_dir, tmp_path):
-    from webstruct_spark.operators.extract import mentions
+    from webstruct_spark.operators.extract import extract_rows, mentions
     from webstruct_spark.streaming.extract_stream import (
         read_turn_stream,
         run_available_now,
@@ -40,6 +40,25 @@ def test_stream_mentions_equals_batch(spark, corpus_dir, tmp_path):
                     "entity_type").collect())
     )
     assert got == want
+
+    # the optional arguments ride the same mapper: passthrough columns
+    # and the tagset projection, marker rows (mention_idx = -1) included
+    def rows(df):
+        return extract_rows(df, passthrough=["ts"], tagset={"ORG", "CITY"})
+
+    out2 = str(tmp_path / "out_rows")
+    run_available_now(rows(stream), out2, str(tmp_path / "ckpt_rows"))
+    cols = rows(spark.read.parquet(src)).columns
+    got = sorted(
+        map(tuple, spark.read.parquet(out2).select(*cols).collect()),
+        key=repr,
+    )
+    want = sorted(
+        map(tuple, rows(spark.read.parquet(src)).collect()), key=repr
+    )
+    assert got == want
+    assert any(r[2] == -1 for r in want) and any(r[2] >= 0 for r in want)
+    assert {r[4] for r in want if r[2] >= 0} <= {"ORG", "CITY"}
 
 
 def test_stream_windowed_counts(spark, corpus_dir, tmp_path):

@@ -77,8 +77,8 @@ def main() -> None:
         "mentions (narrow extraction)",
         mentions(turns),
         "Expect: Scan parquet with ReadSchema limited to "
-        "conv_id/turn_idx/text (column pruning through mapInPandas), "
-        "one MapInPandas node, a Filter, NO Exchange.",
+        "conv_id/turn_idx/text (column pruning through mapInArrow), "
+        "one MapInArrow node, a Filter, NO Exchange.",
     )
     add(
         "group_entities (single shuffle)",

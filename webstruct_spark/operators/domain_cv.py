@@ -231,7 +231,7 @@ def _kfold_run(
         def _df_fold_pairs(rec, _pos=fold_pos, _k=k_live):
             import numpy as np
 
-            (_pid, row_tags, _tv, rtc, _gid, tfc, fid, vocab) = rec
+            (_pid, _n, row_tags, _tv, rtc, _gid, tfc, fid, vocab) = rec
             counts = np.zeros((len(vocab), _k + 1), dtype=np.int64)
             feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
             np.cumsum(tfc, out=feat_off[1:])

@@ -13,7 +13,10 @@ Two paths:
   planes derived from blake2b, no RNG state), probing each query's
   bucket ± multiprobe flips, exact rerank inside candidate buckets.
   Approximate: recall < 1 by design; gauged against brute force in
-  tests.
+  tests.  :func:`ivf_topk` probes k-means cells instead, and
+  :func:`ann_index_topk` runs either probe over a persistent
+  bucket-partitioned index; all three share one probe-set builder
+  (:func:`_probe_sets`) and one rerank mapper (:func:`_rerank`).
 
 Similarities are computed in float32 numpy (then rounded) in BOTH the
 distributed and the single-node gold path, so comparisons are exact.
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+from itertools import combinations
 from typing import Iterator, List, Tuple
 
 import numpy as np
@@ -63,6 +67,15 @@ def topk_merge(cands: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _query_matrix(
+    queries: List[Tuple[int, List[float]]]
+) -> Tuple[np.ndarray, np.ndarray]:
+    """(query ids, normalized f32 query matrix)."""
+    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
+    q_mat = _normalize_rows(np.array([q[1] for q in queries], dtype=np.float32))
+    return q_ids, q_mat
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: List[Tuple[int, List[float]]],
@@ -77,9 +90,7 @@ def brute_force_topk(
     Output: (query_id, rank, neighbor_id, sim[rounded 4dp]).
     """
     spark = embeddings.sparkSession
-    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = _normalize_rows(np.array([q[1] for q in queries], dtype=np.float32))
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
+    bc = spark.sparkContext.broadcast(_query_matrix(queries))
 
     src = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
@@ -117,6 +128,105 @@ def brute_force_topk(
 
     cands = src.mapInPandas(local_topk, TOPK_SCHEMA)
     return topk_merge(cands, k)
+
+
+# --------------------------------------------------------------------------
+# Probe-and-rerank: the one kernel behind lsh_topk, ivf_topk and
+# ann_index_topk.  A bucket is a vector's LSH sign code (kind 'lsh',
+# state = hyperplanes) or its nearest IVF cell (kind 'ivf', state =
+# centroids); each query probes a set of buckets, and only corpus rows
+# in a probed bucket are reranked exactly against it.
+
+
+def _buckets(mat: np.ndarray, kind: str, state: np.ndarray) -> np.ndarray:
+    """Bucket of each row of an already-normalized f32 matrix."""
+    if kind == "lsh":
+        return _bucket_of(mat, state)
+    return np.argmax(
+        mat.astype(np.float64) @ state.T.astype(np.float64), axis=1
+    ).astype(np.int64)
+
+
+def _probe_sets(
+    q_mat: np.ndarray, kind: str, state: np.ndarray,
+    multiprobe: int = 1, n_probe: int = 4,
+) -> dict:
+    """bucket -> [query index] over every probed bucket: a query's own
+    LSH bucket plus all buckets within ``multiprobe`` sign-bit flips,
+    or its ``n_probe`` nearest IVF cells."""
+    probe: dict = {}
+    if kind == "lsh":
+        flip_masks = [0]
+        for r in range(1, max(0, multiprobe) + 1):
+            for bits in combinations(range(state.shape[0]), r):
+                flip_masks.append(sum(1 << b for b in bits))
+        for qi, b in enumerate(_buckets(q_mat, kind, state)):
+            for m in flip_masks:
+                probe.setdefault(int(b) ^ m, []).append(qi)
+    else:
+        q_sims = q_mat.astype(np.float64) @ state.T.astype(np.float64)
+        for qi in range(q_mat.shape[0]):
+            for c in np.argsort(-q_sims[qi])[:n_probe]:
+                probe.setdefault(int(c), []).append(qi)
+    return probe
+
+
+def _rerank(
+    src: DataFrame, q_ids: np.ndarray, q_mat: np.ndarray, probe: dict,
+    k: int, exclude_self: bool,
+    kind: str | None = None, state: np.ndarray | None = None,
+) -> DataFrame:
+    """Exact top-k of each query over the ``src`` rows (neighbor_id,
+    vec[, bucket]) in its probed buckets.  A persistent index supplies
+    each row's stored ``bucket``; otherwise (``kind`` given) the bucket
+    is computed under ``state`` inside the same Python pass."""
+    bc = src.sparkSession.sparkContext.broadcast(
+        (q_ids, q_mat, probe, kind, state)
+    )
+
+    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, mat, pr, knd, st = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            corpus = _normalize_rows(np.vstack(pdf["vec"].to_numpy()))
+            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            bks = (
+                _buckets(corpus, knd, st) if knd is not None
+                else pdf["bucket"].to_numpy(dtype=np.int64)
+            )
+            out_q, out_n, out_s = [], [], []
+            for j in range(corpus.shape[0]):
+                qis = pr.get(int(bks[j]))
+                if not qis:
+                    continue
+                sims = mat[qis].astype(np.float64) @ corpus[j].astype(np.float64)
+                for t, qi in enumerate(qis):
+                    if exclude_self and nids[j] == ids[qi]:
+                        continue
+                    out_q.append(ids[qi])
+                    out_n.append(nids[j])
+                    out_s.append(float(sims[t]))
+            yield pd.DataFrame(
+                {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
+            )
+
+    return topk_merge(src.mapInPandas(local, TOPK_SCHEMA), k)
+
+
+def _inflight_topk(
+    embeddings: DataFrame, queries: List[Tuple[int, List[float]]],
+    kind: str, state: np.ndarray, k: int, id_col: str, vec_col: str,
+    exclude_self: bool, **probe_kw,
+) -> DataFrame:
+    """Probe-and-rerank over a whole embeddings table (no index);
+    ``probe_kw`` are :func:`_probe_sets`' multiprobe / n_probe."""
+    q_ids, q_mat = _query_matrix(queries)
+    probe = _probe_sets(q_mat, kind, state, **probe_kw)
+    src = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
+    )
+    return _rerank(src, q_ids, q_mat, probe, k, exclude_self, kind, state)
 
 
 # --------------------------------------------------------------------------
@@ -191,54 +301,14 @@ def ivf_topk(
 
     recall/latency dial = (n_centroids, n_probe); recall gauged vs
     brute force in tests."""
-    spark = embeddings.sparkSession
     if centroids is None:
         centroids = train_centroids(
             embeddings, n_centroids, id_col=id_col, vec_col=vec_col
         )
-    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = _normalize_rows(np.array([q[1] for q in queries], dtype=np.float32))
-    q_sims = q_mat.astype(np.float64) @ centroids.T.astype(np.float64)
-    n_probe = min(n_probe, centroids.shape[0])
-    probe: dict = {}
-    for qi in range(len(queries)):
-        cells = np.argsort(-q_sims[qi])[:n_probe]
-        for c in cells:
-            probe.setdefault(int(c), []).append(qi)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, centroids, probe))
-
-    src = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
+    return _inflight_topk(
+        embeddings, queries, "ivf", centroids, k, id_col, vec_col,
+        exclude_self, n_probe=n_probe,
     )
-
-    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat, cent, pr = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            corpus = _normalize_rows(np.vstack(pdf["vec"].to_numpy()))
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cells = np.argmax(
-                corpus.astype(np.float64) @ cent.T.astype(np.float64), axis=1
-            )
-            out_q, out_n, out_s = [], [], []
-            for j in range(corpus.shape[0]):
-                qis = pr.get(int(cells[j]))
-                if not qis:
-                    continue
-                sims = mat[qis].astype(np.float64) @ corpus[j].astype(np.float64)
-                for t, qi in enumerate(qis):
-                    if exclude_self and nids[j] == ids[qi]:
-                        continue
-                    out_q.append(ids[qi])
-                    out_n.append(nids[j])
-                    out_s.append(float(sims[t]))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
-            )
-
-    cands = src.mapInPandas(local, TOPK_SCHEMA)
-    return topk_merge(cands, k)
 
 
 # --------------------------------------------------------------------------
@@ -328,6 +398,15 @@ def _centroids_of(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
     )
 
 
+def _index_state(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
+    """The frozen bucketing state of an index: LSH planes re-derived
+    from the stored n_planes+dim, or the stored IVF centroids."""
+    meta = snap["meta"]
+    if meta["kind"] == "lsh":
+        return _planes(meta["n_planes"], meta["dim"])
+    return _centroids_of(spark, root, snap)
+
+
 def _read_centroids(spark: SparkSession, path: str) -> np.ndarray:
     root = fsio.qualify(spark, path)
     return _centroids_of(spark, root, _snapshot(spark, root))
@@ -357,17 +436,11 @@ def _bucketized(
                     "embedding dimension %d != index dimension %d"
                     % (mat.shape[1], st.shape[1])
                 )
-            if knd == "lsh":
-                buckets = _bucket_of(mat, st)
-            else:
-                buckets = np.argmax(
-                    mat.astype(np.float64) @ st.T.astype(np.float64), axis=1
-                ).astype(np.int64)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "vec": pdf["vec"],
-                    "bucket": buckets,
+                    "bucket": _buckets(mat, knd, st),
                 }
             )
 
@@ -623,12 +696,9 @@ def append_to_ann_index(
         new_embeddings = new_embeddings.join(
             existing, id_col, "left_anti"
         )
-    if meta["kind"] == "lsh":
-        state = _planes(meta["n_planes"], meta["dim"])
-    else:
-        state = _centroids_of(spark, root, snap)
     bucketized = _bucketized(
-        new_embeddings, meta["kind"], state, id_col, vec_col
+        new_embeddings, meta["kind"], _index_state(spark, root, snap),
+        id_col, vec_col,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # only the touched bucket dirs are listed around the write;
@@ -775,69 +845,18 @@ def ann_index_topk(
     filesystem — no driver-local ``open()`` of ``path``."""
     root = fsio.qualify(spark, path)
     snap = _snapshot(spark, root)
-    meta = snap["meta"]
-    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = _normalize_rows(
-        np.array([q[1] for q in queries], dtype=np.float32)
+    q_ids, q_mat = _query_matrix(queries)
+    probe = _probe_sets(
+        q_mat, snap["meta"]["kind"], _index_state(spark, root, snap),
+        multiprobe, n_probe,
     )
-    probe: dict = {}
-    if meta["kind"] == "lsh":
-        planes = _planes(meta["n_planes"], meta["dim"])
-        q_buckets = _bucket_of(q_mat, planes)
-        from itertools import combinations
-
-        flip_masks = [0]
-        for r in range(1, max(0, multiprobe) + 1):
-            for bits in combinations(range(meta["n_planes"]), r):
-                m = 0
-                for b in bits:
-                    m |= 1 << b
-                flip_masks.append(m)
-        for qi, b in enumerate(q_buckets):
-            for m in flip_masks:
-                probe.setdefault(int(b) ^ m, []).append(qi)
-    else:
-        centroids = _centroids_of(spark, root, snap)
-        q_sims = q_mat.astype(np.float64) @ centroids.T.astype(np.float64)
-        npb = min(n_probe, centroids.shape[0])
-        for qi in range(len(queries)):
-            for c in np.argsort(-q_sims[qi])[:npb]:
-                probe.setdefault(int(c), []).append(qi)
     files = [f for f in snap["files"] if f["bucket"] in probe]
     if not files:
         return topk_merge(spark.createDataFrame([], TOPK_SCHEMA), k)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, probe))
-
-    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat, pr = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            corpus = _normalize_rows(np.vstack(pdf["vec"].to_numpy()))
-            nids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            bks = pdf["bucket"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_s = [], [], []
-            for j in range(corpus.shape[0]):
-                qis = pr.get(int(bks[j]))
-                if not qis:
-                    continue
-                sims = mat[qis].astype(np.float64) @ corpus[j].astype(
-                    np.float64
-                )
-                for t, qi in enumerate(qis):
-                    if exclude_self and nids[j] == ids[qi]:
-                        continue
-                    out_q.append(ids[qi])
-                    out_n.append(nids[j])
-                    out_s.append(float(sims[t]))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
-            )
-
-    cands = _read_files(spark, root, files).select(
-        "vec_id", "vec", "bucket"
-    ).mapInPandas(local, TOPK_SCHEMA)
-    return topk_merge(cands, k)
+    src = _read_files(spark, root, files).select(
+        F.col("vec_id").alias("neighbor_id"), "vec", "bucket"
+    )
+    return _rerank(src, q_ids, q_mat, probe, k, exclude_self)
 
 
 # --------------------------------------------------------------------------
@@ -1007,56 +1026,8 @@ def lsh_topk(
     """Approximate cosine top-k: hyperplane-LSH bucket filter + exact
     rerank.  ``multiprobe`` additionally probes buckets reachable by
     flipping that many sign bits (recall/latency dial)."""
-    spark = embeddings.sparkSession
-    dim = len(queries[0][1])
-    planes = _planes(n_planes, dim)
-    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = _normalize_rows(np.array([q[1] for q in queries], dtype=np.float32))
-    q_buckets = _bucket_of(q_mat, planes)
-    # probe set per query: own bucket + all buckets within `multiprobe`
-    # bit flips
-    from itertools import combinations
-
-    flip_masks = [0]
-    for r in range(1, max(0, multiprobe) + 1):
-        for bits in combinations(range(n_planes), r):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            flip_masks.append(m)
-    probe: dict = {}
-    for qi, b in enumerate(q_buckets):
-        for m in flip_masks:
-            probe.setdefault(int(b) ^ m, []).append(qi)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, planes, probe))
-
-    src = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
+    planes = _planes(n_planes, len(queries[0][1]))
+    return _inflight_topk(
+        embeddings, queries, "lsh", planes, k, id_col, vec_col,
+        exclude_self, multiprobe=multiprobe,
     )
-
-    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat, pl, pr = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            corpus = _normalize_rows(np.vstack(pdf["vec"].to_numpy()))
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cbuckets = _bucket_of(corpus, pl)
-            out_q, out_n, out_s = [], [], []
-            for j in range(corpus.shape[0]):
-                qis = pr.get(int(cbuckets[j]))
-                if not qis:
-                    continue
-                sims = mat[qis].astype(np.float64) @ corpus[j].astype(np.float64)
-                for t, qi in enumerate(qis):
-                    if exclude_self and nids[j] == ids[qi]:
-                        continue
-                    out_q.append(ids[qi])
-                    out_n.append(nids[j])
-                    out_s.append(float(sims[t]))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
-            )
-
-    cands = src.mapInPandas(local, TOPK_SCHEMA)
-    return topk_merge(cands, k)

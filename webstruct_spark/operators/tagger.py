@@ -9,13 +9,13 @@ exists for unlabeled data and is gated by segment F1 against gold
 (like the reference CI gate, tests/test_crfsuite.py:46-60) rather than
 exact parity.
 
-Scale design: the whole chain is narrow (scan → mapInPandas → done);
-the decode runs the batched padded-numpy Viterbi
-(kernel/viterbi.py:viterbi_decode_batch) instead of a per-turn DP
-loop, emission features come from a worker-lifetime token cache, and
-the UDF emits FLAT primitive rows (the 3x-cheaper Arrow shape) —
-token_confusion even pre-aggregates (gold, pred) counts inside the
-worker so only per-batch partial counts shuffle.
+Scale design: the whole chain is narrow (scan → mapInArrow → done, one
+mapper for batch and streaming frames); the decode runs the batched
+padded-numpy Viterbi (kernel/viterbi.py:viterbi_decode_batch) instead
+of a per-turn DP loop, emission features come from a worker-lifetime
+token cache, and the UDF emits FLAT primitive rows (the 3x-cheaper
+Arrow shape) — token_confusion even pre-aggregates (gold, pred) counts
+inside the worker so only per-batch partial counts shuffle.
 """
 from __future__ import annotations
 
@@ -160,31 +160,16 @@ def _predict_rows(cids, tis, texts, model) -> dict:
 
 
 def _tagged_rows_df(turns: DataFrame, text_col: str, get_model) -> DataFrame:
-    """Narrow inference pass: mapInArrow for batch (the stage is
-    transfer-bound with the batched Viterbi), mapInPandas lift for
-    streaming sources."""
-    src = turns.select(
-        "conv_id", "turn_idx", F.col(text_col).alias("text")
-    )
-    if turns.isStreaming:
-
-        def run_pd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            model = get_model()
-            for pdf in batches:
-                yield pd.DataFrame(
-                    _predict_rows(
-                        pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(),
-                        pdf["text"].tolist(), model,
-                    )
-                )
-
-        return src.mapInPandas(run_pd, TAGGED_SCHEMA)
+    """Narrow inference pass: one mapInArrow mapper for batch and
+    streaming frames (the stage is transfer-bound with the batched
+    Viterbi)."""
+    import pyarrow as pa
 
     from .spread import widen_scan
 
-    src = widen_scan(src)
-
-    import pyarrow as pa
+    src = widen_scan(
+        turns.select("conv_id", "turn_idx", F.col(text_col).alias("text"))
+    )
 
     def run_arrow(batches):
         model = get_model()

@@ -8,7 +8,7 @@ Mirrors the reference train→predict workflow
 /root/reference/webstruct/wapiti.py:178-246): the labeled sample is
 what the reference would load from annotated trees; the fit is the
 averaged-perceptron CRF in :mod:`webstruct_spark.kernel.crf`; the
-predict is the same flat-row mapInPandas shape as the rule tagger.
+predict is the same flat-row mapInArrow pass as the rule tagger.
 
 Scale notes: the TRAINING sample is bounded (``sample`` turns,
 order-deterministic) — exactly the reference's posture (its CI trains
@@ -52,8 +52,8 @@ def _fit_texts_compact(
     transform pass (fit_compact vocab entries are FINAL names)."""
     import numpy as np
 
-    rec = _compact_shard(0, [((None, 0, t), 0) for t in texts])
-    (_pid, _rt, tag_vocab, rtc, gid, tfc, fid, vocab) = rec
+    rec = _compact_shard(0, 1, [((None, 0, t), 0) for t in texts])
+    (_pid, _n, _rt, tag_vocab, rtc, gid, tfc, fid, vocab) = rec
     if model.feat_hash_dim:
         fid, vocab = _hash_remap(vocab, fid, model._fx)
     return model.fit_compact(
@@ -123,18 +123,21 @@ def train_crf_local(
 # -- distributed training (iterated parameter mixing) -------------------
 
 
-def _compact_shard(pid, rows):
+def _compact_shard(pid, n_parts, rows):
     """One COMPACT per-shard record from ``rows`` = [( (conv_id,
     turn_idx, text), tag )] ALREADY in full-triple sorted order:
 
-    ``(pid, row_tags, tag_vocab, row_tok_counts, gold_ids,
+    ``(pid, n_parts, row_tags, tag_vocab, row_tok_counts, gold_ids,
     tok_feat_counts, feat_ids, vocab)``
 
     with int32 id arrays into the per-shard ``tag_vocab`` /  ``vocab``
-    string lists (first-occurrence interning).  This is the ONE
-    compaction both the ``turns=`` and ``prepared=`` paths cache, so
-    their fit inputs are byte-identical BY CONSTRUCTION (and
-    pytest-pinned vs the single-node twin).  Why compact: the cached
+    string lists (first-occurrence interning).  ``n_parts`` is the
+    shard modulus of ``pid = crc32(conv_id) % n_parts``; it rides in
+    the record so the trainer can check it after any RDD
+    transformation.  This is the ONE compaction both the ``turns=``
+    and ``prepared=`` paths cache, so their fit inputs are
+    byte-identical BY CONSTRUCTION (and pytest-pinned vs the
+    single-node twin).  Why compact: the cached
     RDD is re-deserialized by EVERY mixing round and every CV fold —
     as per-token feature-string lists that unpickle cost ~1 s/round at
     sf0.1 (it was the dominant trainer cost, >4x the actual perceptron
@@ -176,6 +179,7 @@ def _compact_shard(pid, rows):
                 feat_ids.append(fi)
     return (
         pid,
+        n_parts,
         row_tags,
         tag_vocab,
         np.asarray(row_tok_counts, dtype=np.int32),
@@ -296,7 +300,7 @@ def prepare_fit_rows(
         # per-shard FULL-TRIPLE sort: a (conv_id, turn_idx)-only key
         # would leave duplicate-key order to arrival order
         rows.sort(key=lambda r: r[0])
-        rec = _compact_shard(pid, rows)
+        rec = _compact_shard(pid, n_parts, rows)
         return pd.DataFrame(
             {"pid": [pid], "blob": [pickle.dumps(rec, protocol=4)]}
         )
@@ -327,20 +331,13 @@ def prepare_fit_rows(
     slot_col = F.element_at(
         F.array(*[F.lit(int(k)) for k in slots]), F.col("pid") + 1
     ).cast("int")
-    out = (
+    return (
         compact_df.withColumn("_slot", slot_col)
         .repartition(n_parts, F.col("_slot"))
         .rdd.mapPartitions(
             lambda it: (pickle.loads(bytes(r["blob"])) for r in it)
         )
     )
-    # shard-modulus stamp: the trainer refuses a prepared RDD whose
-    # crc32 modulus disagrees with its n_parts= (partition COUNT alone
-    # can be spoofed by a repartition to the expected count); the
-    # stamp does not survive user transformations, where the count
-    # check remains the only (weaker) guard
-    out._ws_n_parts = n_parts
-    return out
 
 
 def _check_rounds(rounds: int) -> None:
@@ -425,7 +422,9 @@ def train_crf_distributed(
 
     ``prepared``/``prepared_keep``: reuse path for k-fold callers.
     ``prepared`` is a :func:`prepare_fit_rows` RDD (compact per-shard
-    records, identity-partitioned with the same crc32 shards);
+    records, identity-partitioned with the same crc32 shards; the
+    n_parts each record carries must equal ``n_parts``, else the
+    first mixing round raises);
     ``prepared_keep`` is an executor-side predicate over each row's
     tag (e.g. ``lambda fold: fold != held_out``).  The trainer then
     skips the corpus shuffle AND the featurization — only the compact
@@ -458,27 +457,8 @@ def train_crf_distributed(
                 "train_crf_distributed: sample= is incompatible with "
                 "prepared= (the head cut happens before featurization)"
             )
-        stamped = getattr(prepared, "_ws_n_parts", None)
-        if (
-            stamped if stamped is not None
-            else prepared.getNumPartitions()
-        ) != n_parts:
-            # shard assignment comes from the prepared RDD, so a
-            # modulus/n_parts mismatch would silently fit a different
-            # shard count than the caller (and the twin) believe.
-            # The prepare-time stamp is authoritative when present;
-            # on user-transformed RDDs (stamp lost) the partition
-            # count is the remaining proxy.
-            raise ValueError(
-                "train_crf_distributed: prepared RDD was built with "
-                "%s shards but n_parts=%d — prepare_fit_rows must be "
-                "built with the same n_parts"
-                % (
-                    stamped if stamped is not None
-                    else prepared.getNumPartitions(),
-                    n_parts,
-                )
-            )
+        # The shard modulus is checked against n_parts in the first
+        # mixing round, from the n_parts every compact record carries.
         # NOTE: no partitioner/placement requirement — compact fit
         # records are SELF-CONTAINED (each carries its pid and its
         # full shard), the averaging sorts contributions by pid from
@@ -522,7 +502,7 @@ def train_crf_distributed(
             import numpy as np
 
             for rec in it:
-                (pid, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
+                (pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
                 rmask = np.fromiter(
                     (bool(_keep(t)) for t in row_tags),
                     dtype=bool, count=len(row_tags),
@@ -536,6 +516,7 @@ def train_crf_distributed(
                 fmask = np.repeat(tmask, tfc)
                 yield (
                     pid,
+                    n,
                     [t for t, k in zip(row_tags, rmask) if k],
                     tv, rtc[rmask], gid[tmask], tfc[tmask],
                     fid[fmask], vocab,
@@ -558,7 +539,7 @@ def train_crf_distributed(
             def _df_pairs(rec):
                 import numpy as np
 
-                (_pid, _rt, _tv, rtc, _gid, tfc, fid, vocab) = rec
+                (_pid, _n, _rt, _tv, rtc, _gid, tfc, fid, vocab) = rec
                 counts = np.zeros(len(vocab), dtype=np.int64)
                 feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
                 np.cumsum(tfc, out=feat_off[1:])
@@ -590,7 +571,7 @@ def train_crf_distributed(
 
                 wl = _bc.value if _bc is not None else None
                 for rec in it:
-                    (pid, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
+                    (pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
                     if wl is not None:
                         vmask = np.fromiter(
                             (f in wl for f in vocab),
@@ -607,7 +588,7 @@ def train_crf_distributed(
                         fid = fid[fkeep]
                     if _h:
                         fid, vocab = _hash_remap(vocab, fid, _fx)
-                    yield pid, row_tags, tv, rtc, gid, tfc, fid, vocab
+                    yield pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab
 
             # lazy persist: round 0 materializes the transformed cache
             # while it fits (the work happens either way; a separate
@@ -640,8 +621,8 @@ def train_crf_distributed(
             def fit_part(it, _bc=bc):
                 for rec in it:
                     m = CRFTagger.from_blocks(_bc.value)
-                    m.fit_compact(*rec[2:], epochs=1)
-                    yield rec[0], m.w, m.trans, m.init
+                    m.fit_compact(*rec[3:], epochs=1)
+                    yield rec[0], rec[1], m.w, m.trans, m.init
 
             # The executor-side mix ships feature BLOCKS, not single
             # features: per (shard, block) one (keys, stacked-matrix)
@@ -660,8 +641,11 @@ def train_crf_distributed(
             def expand(rec, _nb=n_blocks):
                 import zlib as _zlib
 
-                pid, w, trans, init = rec
-                yield "\x00trans", (pid, ([0], trans.reshape(1, -1)))
+                pid, n, w, trans, init = rec
+                # the trans sentinel is keyed by the record's shard
+                # modulus, so its collected keys are every n_parts the
+                # fit saw
+                yield "\x00trans", (pid, ([n], trans.reshape(1, -1)))
                 yield "\x00init", (pid, ([0], init.reshape(1, -1)))
                 blocks: dict = {}
                 for f, v in w.items():
@@ -718,6 +702,17 @@ def train_crf_distributed(
             mats: list = []
             for blk, (n_contribs, ks, mat) in items:
                 if blk == "\x00trans":
+                    if ks != [n_parts]:
+                        # a prepared RDD built with another shard
+                        # modulus would fit a different shard split
+                        # than the caller (and the twin) believe
+                        raise ValueError(
+                            "train_crf_distributed: prepared RDD was "
+                            "built with %s shards but n_parts=%d — "
+                            "prepare_fit_rows must be built with the "
+                            "same n_parts"
+                            % ("/".join(map(str, sorted(ks))), n_parts)
+                        )
                     P = float(n_contribs)
                     trans = mat[0].reshape(T, T)
                 elif blk == "\x00init":
@@ -824,8 +819,9 @@ def crf_tagged_mentions(
     """Distributed inference with broadcast trained weights: flat
     mention rows (conv_id, turn_idx, mention_idx, text, entity_type,
     tok_start, tok_end) from plain (marker-stripped) token streams.
-    Shares the mapInArrow/mapInPandas inference pass with the rule
-    tagger (operators/tagger.py:_tagged_rows_df)."""
+    Shares the one mapInArrow inference pass (batch and streaming
+    frames alike) with the rule tagger
+    (operators/tagger.py:_tagged_rows_df)."""
     from .tagger import _tagged_rows_df
 
     spark = turns.sparkSession

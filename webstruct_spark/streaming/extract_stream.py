@@ -3,9 +3,9 @@
 
 The reference is batch-only (SURVEY §2, "Windows/streaming"); this is
 the additive streaming surface: the SAME narrow extraction operator
-(tokenize→encode→decode pandas UDF) applied to a file stream — mention
-extraction is stateless per turn, so the batch operator lifts to
-Structured Streaming unchanged.  ``mention_type_counts_stream`` adds
+(the tokenize→encode→decode mapInArrow pass) applied to a file stream
+— mention extraction is stateless per turn, so the batch operator
+lifts to Structured Streaming unchanged.  ``mention_type_counts_stream`` adds
 the stateful layer: watermarked sliding-window counts per entity type.
 
 Tested with the availableNow trigger (process-everything-then-stop) so
@@ -57,7 +57,7 @@ def mention_type_counts(
     from ..operators.extract import extract_rows
 
     # watermark AFTER the map: event-time metadata does not survive
-    # mapInPandas, the ts column does
+    # mapInArrow, the ts column does
     rows = (
         extract_rows(turn_stream, passthrough=["ts"])
         .where(F.col("mention_idx") >= 0)
