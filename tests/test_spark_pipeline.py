@@ -178,18 +178,34 @@ def test_manifest_lineage_counters(spark, corpus_dir, tmp_path):
         )
 
 
-def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path):
+@pytest.mark.parametrize("op", ["build", "append"])
+def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path, op):
     """stage_concurrency > 1 runs independent DAG stages as concurrent
-    Spark jobs; every stage table must equal the strict-sequential
-    build row-for-row, and both builds commit one snapshot per staged
-    task (completion order is free) plus the one that publishes."""
+    Spark jobs; every stage table must equal the strict-sequential run
+    row-for-row.  Both builds commit one snapshot per staged task
+    (completion order is free) plus the one that publishes; both
+    appends add one commit to the same base."""
+    import shutil
+
     from tests.conftest import current_snapshot
-    from webstruct_spark.plans.pipeline import STAGES, build_kg
+    from webstruct_spark.plans.pipeline import STAGES, append_kg, build_kg
+
+    if op == "build":
+        def run(d, workers):
+            return build_kg(spark, corpus_dir, d, stage_concurrency=workers)
+    else:
+        corpus_a, corpus_b, _ = _split_corpus(spark, corpus_dir, tmp_path)
+        base = str(tmp_path / "base")
+        build_kg(spark, corpus_a, base)
+
+        def run(d, workers):
+            shutil.copytree(base, d)
+            return append_kg(spark, corpus_b, d, stage_concurrency=workers)
 
     seq_dir = str(tmp_path / "seq")
     con_dir = str(tmp_path / "con")
-    seq = build_kg(spark, corpus_dir, seq_dir, stage_concurrency=1)
-    con = build_kg(spark, corpus_dir, con_dir, stage_concurrency=4)
+    seq = run(seq_dir, 1)
+    con = run(con_dir, 4)
     assert set(seq) == set(con) == set(STAGES)
     for stage in STAGES:
         a = spark.read.parquet(seq[stage])
@@ -197,8 +213,8 @@ def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path):
         assert _rows(a, a.columns) == _rows(b, b.columns), stage
     for d in (seq_dir, con_dir):
         snap = current_snapshot(d)
-        # 7 tasks (links+nodes commit together) + the publish
-        assert snap["id"] == 8
+        # build: 7 tasks (links+nodes commit together) + the publish
+        assert snap["id"] == (8 if op == "build" else 9)
         assert set(snap["stages"]) == set(STAGES)
         assert snap["building"] == {}
 
@@ -286,6 +302,40 @@ def test_append_kg_equals_fresh_union_build(spark, corpus_dir, tmp_path):
         a = spark.read.parquet(inc[stage])
         b = spark.read.parquet(fresh[stage])
         assert none_safe_rows(a) == none_safe_rows(b), stage
+
+
+def test_append_of_empty_corpus_is_noop(spark, corpus_dir, tmp_path):
+    """append_kg over a corpus dir whose transcripts table has no rows
+    commits nothing: the snapshot id and every stage's file list are
+    those of the base build."""
+    import shutil
+
+    from tests.conftest import current_snapshot
+    from webstruct_spark.plans.pipeline import (
+        CONV_IDS, STAGES, append_kg, build_kg,
+    )
+
+    out = str(tmp_path / "kg")
+    build_kg(spark, corpus_dir, out)
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    spark.read.parquet(
+        os.path.join(corpus_dir, "transcripts.parquet")
+    ).limit(0).write.parquet(os.path.join(empty, "transcripts.parquet"))
+    gaz = os.path.join(corpus_dir, "gazetteer.parquet")
+    (shutil.copytree if os.path.isdir(gaz) else shutil.copy)(
+        gaz, os.path.join(empty, "gazetteer.parquet")
+    )
+
+    def listed(snap, stage):
+        return sorted(f["path"] for f in snap["files"] if f["stage"] == stage)
+
+    before = current_snapshot(out)
+    append_kg(spark, empty, out)
+    after = current_snapshot(out)
+    assert after["id"] == before["id"]
+    for stage in STAGES + [CONV_IDS]:
+        assert listed(after, stage) == listed(before, stage), stage
 
 
 def test_append_retry_after_precommit_crash(spark, corpus_dir, tmp_path,

@@ -41,8 +41,6 @@ from typing import Dict, List, Optional
 
 from pyspark.sql import SparkSession
 
-from . import snapshots
-
 # stages that accumulate files on append — the global stages are
 # rewritten whole each append and never fragment
 APPEND_STAGES = [
@@ -75,8 +73,7 @@ def compact_kg(
     (nothing is committed then).
     """
     from .pipeline import (
-        CONV_IDS, STAGE_INPUTS, _base_snapshot, _commit, _entry, _files,
-        _read_files, _stamps, _write,
+        CONV_IDS, _base_snapshot, _files, _publish, _read_files, _write,
     )
 
     stages = list(APPEND_STAGES if stages is None else stages)
@@ -87,8 +84,8 @@ def compact_kg(
             "fragment)" % (", ".join(unknown), ", ".join(APPEND_STAGES))
         )
     snap = _base_snapshot(spark, out_dir, "compact_kg")
-    files = [f for f in snap["files"] if not f.get("building")]
-    entries = dict(snap["stages"])
+    new: Dict[str, List[dict]] = {}
+    walls: Dict[str, float] = {}
     results: Dict[str, dict] = {}
     for stage in stages + ([CONV_IDS] if include_conv_ids else []):
         old = _files(snap, stage)
@@ -105,24 +102,19 @@ def compact_kg(
         if len(old) <= n_target and not force:
             continue
         t0 = time.time()
-        new = _write(spark, out_dir, stage,
-                     _read_files(spark, out_dir, old).coalesce(n_target))
-        if sum(f["rows"] for f in new) != rows:
+        new[stage] = _write(
+            spark, out_dir, stage,
+            _read_files(spark, out_dir, old).coalesce(n_target),
+        )
+        if sum(f["rows"] for f in new[stage]) != rows:
             raise RuntimeError(
                 "compact_kg: rewrite of %r at %r produced %d rows, the "
                 "snapshot lists %d — nothing committed"
-                % (stage, out_dir, sum(f["rows"] for f in new), rows)
+                % (stage, out_dir, sum(f["rows"] for f in new[stage]), rows)
             )
-        files = [f for f in files if f["stage"] != stage] + new
-        if stage != CONV_IDS:
-            entries[stage] = _entry(
-                stage, files, entries[stage]["source_fp"],
-                ["compact:%s" % i for i in STAGE_INPUTS[stage]],
-                time.time() - t0,
-            )
-        res.update(n_files_after=len(new), compacted=True)
-    if any(r["compacted"] for r in results.values()):
-        snapshots.gc(spark, out_dir, _commit(
-            spark, out_dir, snap, files, entries, _stamps(snap)
-        ))
+        walls[stage] = time.time() - t0
+        res.update(n_files_after=len(new[stage]), compacted=True)
+    if new:
+        # a physical rewrite: every stage keeps its identity and stamps
+        _publish(spark, out_dir, snap, new, "compact", walls)
     return results

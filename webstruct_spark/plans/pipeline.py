@@ -1,10 +1,11 @@
 # -*- coding: utf-8 -*-
 """The full KG-construction pipeline: transcripts → extracted turns →
-mentions → group entities → groups/triples → links/nodes, each stage a
-parquet table of the KG store at ``out_dir``.
+mentions → group entities → groups/triples → links/nodes → edges, each
+stage a parquet table of the KG store at ``out_dir``.
 
-Stage DAG (every stage reads only its upstream stages' files, so a
-resumed run never recomputes upstream work):
+Stage graph (``_GRAPH``, declared once; every task reads only the
+files its upstream tasks gave their stages, so a resumed run never
+recomputes upstream work):
 
   extracted   narrow scan+UDF over transcripts (tokenize+encode+decode)
   mentions    explode of extracted entities (narrow)
@@ -12,6 +13,14 @@ resumed run never recomputes upstream work):
   groups      hash aggregate over group_entities
   triples     window ops over group_entities
   links,nodes broadcast gazetteer join + connected components
+  edges       triples joined to links
+
+One runner (:func:`_run_graph`) executes the graph for ``build_kg``,
+``append_kg_frames`` and ``refresh_gazetteer``.  They differ only in
+the delta it runs over (the corpus, the new conversations, or none),
+in the kept files the global stages (links, nodes, edges) read beside
+the new ones (none for a build, the base snapshot's per-conversation
+files otherwise), and in the commit policy.
 
 At 100 TB: `extracted` is the dominant stage and is embarrassingly
 parallel; its output is ~5-10% of input bytes (entities only).  The
@@ -29,8 +38,9 @@ visible only through one create-if-absent record,
   ``_conv_ids`` side table (path ``<stage>/<name>``, stage, rows,
   bytes); files a build has staged but not published carry
   ``building: true``;
-* ``stages`` — per stage its identity (``source_fp``), ``inputs``,
-  ``wall_sec``, ``layout`` and row/file/byte totals;
+* ``stages`` — per stage its identity (``source_fp``), ``inputs``
+  (``<operation>:<input>``), ``wall_sec``, ``layout`` and
+  row/file/byte totals;
 * ``building`` — the same per-stage entries for the stages a build has
   staged but not yet published;
 * the store's stamps: ``stream_id``/``stream_batch_id`` of the last
@@ -51,7 +61,7 @@ from __future__ import annotations
 
 import threading
 import time
-from typing import Dict, List, Optional
+from typing import Callable, Dict, List, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..concurrency import run_concurrent_jobs
 from ..operators.canon import canonicalize
 from ..operators.extract import extract_rows, mentions_from_rows
+from ..operators.graph import materialize_edges
 from ..operators.grouping_op import DEFAULT_DONT_PENALIZE, group_entities
 from ..operators.triples_op import groups_summary, triples as triples_op
 from . import fsio, snapshots
@@ -68,52 +79,59 @@ from .manifest import table_fingerprint
 # older layout rebuilds instead of serving stale outputs
 LAYOUT_VERSION = "4-snapshots"
 
-STAGES = [
-    "extracted",
-    "mentions",
-    "group_entities",
-    "groups",
-    "triples",
-    "links",
-    "nodes",
-    "edges",
+# what the graph starts from: two tables and the grouping params
+SOURCES = ("transcripts", "params", "gazetteer")
+
+# the stage graph in topological order: per task, the stages it
+# writes, what it reads (upstream stages or sources), and its output
+# frames from those inputs.  canonicalize() yields links and nodes
+# from one computation, so they are one task.
+_GRAPH = [
+    (("extracted",), ("transcripts",),
+     lambda t: [extract_rows(t["transcripts"])]),
+    (("mentions",), ("extracted",),
+     lambda t: [mentions_from_rows(t["extracted"])]),
+    (("group_entities",), ("extracted", "params"),
+     lambda t: [group_entities(t["extracted"], dont_penalize=t["params"])]),
+    (("groups",), ("group_entities",),
+     lambda t: [groups_summary(t["group_entities"])]),
+    (("triples",), ("group_entities",),
+     lambda t: [triples_op(t["group_entities"])]),
+    (("links", "nodes"), ("mentions", "gazetteer"),
+     lambda t: canonicalize(t["mentions"], t["gazetteer"], checkpoint=True)),
+    (("edges",), ("triples", "links"),
+     lambda t: [materialize_edges(t["triples"], t["links"])]),
 ]
 
-STAGE_INPUTS = {
-    "extracted": ["transcripts"],
-    "mentions": ["extracted"],
-    "group_entities": ["extracted"],
-    "groups": ["group_entities"],
-    "triples": ["group_entities"],
-    "links": ["mentions", "gazetteer"],
-    "nodes": ["mentions", "gazetteer"],
-    "edges": ["triples", "links"],
-}
+STAGES = [s for outs, _ins, _f in _GRAPH for s in outs]
+STAGE_INPUTS = {s: list(ins) for outs, ins, _f in _GRAPH for s in outs}
+# the task that writes each stage, by the name of its first stage
+_PRODUCER = {s: outs[0] for outs, _ins, _f in _GRAPH for s in outs}
 
-# which parts of the run identity each stage's output actually depends
-# on (the transitive closure of STAGE_INPUTS down to the source tables
-# plus the grouping params): a resume after ONLY the gazetteer changed
-# keeps the corpus-scale extracted/mentions stages and rebuilds just
-# the canonicalization family — re-linking against a refreshed
-# gazetteer must not re-extract 100 TB of history
+
+def _sources_of(stage: str) -> set:
+    return set().union(*(
+        {i} if i in SOURCES else _sources_of(i) for i in STAGE_INPUTS[stage]
+    ))
+
+
+# which parts of the run identity each stage's output depends on (the
+# sources it reaches through STAGE_INPUTS): a resume after ONLY the
+# gazetteer changed keeps the corpus-scale extracted/mentions stages
+# and rebuilds just the canonicalization family — re-linking against
+# a refreshed gazetteer must not re-extract 100 TB of history
 STAGE_IDENTITY_KEYS = {
-    "extracted": ("transcripts",),
-    "mentions": ("transcripts",),
-    "group_entities": ("transcripts", "params"),
-    "groups": ("transcripts", "params"),
-    "triples": ("transcripts", "params"),
-    "links": ("transcripts", "gazetteer"),
-    "nodes": ("transcripts", "gazetteer"),
-    "edges": ("transcripts", "params", "gazetteer"),
+    s: tuple(k for k in SOURCES if k in _sources_of(s)) for s in STAGES
 }
 
 # side table of every ingested conv_id (tiny: one row per
-# conversation) — lets the append-path disjointness guards run
-# O(delta) instead of re-scanning the full extracted table per append
+# conversation), written beside extracted — lets the append-path
+# disjointness guards run O(delta) instead of re-scanning the full
+# extracted table per append
 CONV_IDS = "_conv_ids"
 
-# the stages recomputed globally (rewritten, never appended) by every
-# append and refresh
+# the stages recomputed globally (over kept and new files, replacing
+# their old files) by every append and refresh
 GLOBAL_STAGES = ("links", "nodes", "edges")
 
 # the store's stamps, carried from snapshot to snapshot
@@ -171,15 +189,16 @@ def _write(spark, out_dir: str, stage: str, df: DataFrame) -> List[dict]:
     ]
 
 
-def _entry(stage: str, files: List[dict], ident: dict, inputs: List[str],
+def _entry(stage: str, files: List[dict], ident: dict, op: str,
            wall_sec: float) -> dict:
-    """A ``stages``/``building`` entry: identity, lineage and the totals
-    over ``stage``'s files among ``files``."""
+    """A ``stages``/``building`` entry: identity, lineage (the stage's
+    inputs, as written by ``op``) and the totals over ``stage``'s files
+    among ``files``."""
     own = [f for f in files if f["stage"] == stage]
     return {
         "layout": LAYOUT_VERSION,
         "source_fp": ident,
-        "inputs": inputs,
+        "inputs": ["%s:%s" % (op, i) for i in STAGE_INPUTS[stage]],
         "wall_sec": round(wall_sec, 3),
         "rows_out": sum(f["rows"] for f in own),
         "n_files": len(own),
@@ -221,6 +240,112 @@ def _base_snapshot(spark, out_dir: str, who: str) -> dict:
         )
     snapshots.gc(spark, out_dir, snap)
     return snap
+
+
+def _publish(spark, out_dir: str, snap: dict, new: Dict[str, List[dict]],
+             op: str, walls: Dict[str, float], fp: Optional[dict] = None,
+             stamps: Optional[dict] = None) -> None:
+    """Commit the snapshot after ``snap`` in which every stage of
+    ``new`` holds exactly ``new``'s files and every other stage keeps
+    its published files and entry, then GC.  Each stage of ``new`` gets
+    a fresh entry written by ``op``: identity from ``fp`` (None keeps
+    the stage's own), wall from ``walls``.  ``stamps`` None keeps
+    ``snap``'s."""
+    files = [
+        f for f in snap["files"]
+        if not f.get("building") and f["stage"] not in new
+    ] + [
+        {k: v for k, v in f.items() if k != "building"}
+        for fs in new.values() for f in fs
+    ]
+    stages = dict(snap["stages"])
+    for s in new:
+        if s != CONV_IDS:
+            stages[s] = _entry(
+                s, new[s],
+                stages[s]["source_fp"] if fp is None
+                else _stage_identity(s, fp),
+                op, walls[s],
+            )
+    snapshots.gc(spark, out_dir, _commit(
+        spark, out_dir, snap, files, stages,
+        _stamps(snap) if stamps is None else stamps,
+    ))
+
+
+def _run_graph(
+    spark, out_dir: str, sources: dict, base: Optional[dict], workers: int,
+    reuse: Optional[Callable] = None, on_written: Optional[Callable] = None,
+):
+    """Run the stage graph over ``sources`` (frames, and the grouping
+    params, by :data:`SOURCES` name).  Returns ``({stage: files},
+    {stage: wall})`` for the stages of every task that ran, the
+    ``_conv_ids`` side table riding with ``extracted``.
+
+    ``sources["transcripts"]`` is the delta; None (no new conversation)
+    makes every per-conversation task a no-op.  A per-conversation task
+    reads only this run's files of its upstream stages.  A global task
+    also reads the files ``base`` (a snapshot, or None) publishes for
+    them; a stage of ``base`` ends with those kept files plus this
+    run's.  ``reuse(stages)`` returns files of a task's stages this run
+    need not write, or None; ``on_written(written, wall)`` runs after
+    each task's writes.  Independent tasks run as up to ``workers``
+    concurrent Spark jobs (:func:`..concurrency.run_concurrent_jobs`;
+    tasks are submitted in topological order)."""
+    kept = {} if base is None else {
+        s: _files(base, s) for s in STAGES + [CONV_IDS]
+        if s not in GLOBAL_STAGES
+    }
+    futs: Dict[str, object] = {}
+    walls: Dict[str, float] = {}
+
+    def files(stage: str, with_kept: bool) -> List[dict]:
+        f = futs[_PRODUCER[stage]]
+        new = (f if isinstance(f, dict) else f.result()).get(stage, [])
+        return kept.get(stage, []) + new if with_kept else new
+
+    def task(outs, ins, compute):
+        is_global = outs[0] in GLOBAL_STAGES
+
+        def run() -> Dict[str, List[dict]]:
+            if not is_global and sources["transcripts"] is None:
+                return {}
+            done = reuse(outs) if reuse else None
+            if done is not None:
+                return done
+            t0 = time.time()
+            frames = compute({
+                i: sources[i] if i in SOURCES
+                else _read_files(spark, out_dir, files(i, is_global))
+                for i in ins
+            })
+            written = {
+                s: _write(spark, out_dir, s, df)
+                for s, df in zip(outs, frames)
+            }
+            if "extracted" in written:
+                written[CONV_IDS] = _write(
+                    spark, out_dir, CONV_IDS,
+                    _read_files(spark, out_dir, written["extracted"])
+                    .select("conv_id").distinct(),
+                )
+            wall = time.time() - t0
+            walls.update((s, wall) for s in written)
+            if on_written is not None:
+                on_written(written, wall)
+            return written
+
+        return run
+
+    done = run_concurrent_jobs(
+        spark, [(node[0][0], task(*node)) for node in _GRAPH],
+        max(1, int(workers)), futs=futs,
+    )
+    new = {
+        s: kept.get(s, []) + fs
+        for written in done.values() for s, fs in written.items()
+    }
+    return new, walls
 
 
 def kg_status(spark: SparkSession, out_dir: str) -> dict:
@@ -360,32 +485,31 @@ def build_kg(
 ) -> Dict[str, str]:
     """Run (or resume) the staged build. Returns stage -> output path.
 
-    Each stage is written under fresh part names and committed into
+    The stage graph runs over the whole corpus with nothing kept.  Each
+    task's stages are written under fresh part names and committed into
     the snapshot's ``building`` set; the last commit publishes every
     staged stage at once, so a rebuild over a live store is never
-    visible half done.  With ``resume``, a stage whose identity (the
-    source tables' footer fingerprints and the grouping params it
-    depends on, see STAGE_IDENTITY_KEYS) matches a published or staged
-    entry is not rewritten: a killed build resumes at its first
-    unstaged stage, and a rebuild after only the gazetteer changed
-    keeps the corpus-scale stages.  A root without a snapshot (nothing
-    there, or a store from before the snapshot log) is built from
-    scratch, and the final GC removes whatever else it held.
+    visible half done.  With ``resume``, a task whose stages' identity
+    (the source tables' footer fingerprints and the grouping params
+    they depend on, see STAGE_IDENTITY_KEYS) matches a published or
+    staged entry is not rerun: a killed build resumes at its first
+    unstaged task, and a rebuild after only the gazetteer changed keeps
+    the corpus-scale stages.  A root without a snapshot (nothing there,
+    or a store from before the snapshot log) is built from scratch, and
+    the final GC removes whatever else it held.
 
-    ``stage_concurrency``: independent stages of the DAG run as
+    ``stage_concurrency``: independent tasks of the graph run as
     concurrent Spark jobs from driver threads (1 = strict sequential).
     mentions ∥ group_entities once `extracted` lands, then
-    groups ∥ triples ∥ canonicalize — safe because every stage reads
-    only its upstream stages' written files, writes its own directory,
-    and the ``building`` commits are serialized by a driver lock.
-    canonicalize is an iterative driver-barrier loop whose executor
-    gaps the groups/triples scans fill.  Tasks are submitted in
-    topological order, so a worker can only block on futures submitted
-    earlier (see :func:`..concurrency.run_concurrent_jobs`, which also
-    cancels queued stages AND interrupts in-flight sibling Spark jobs
-    on the first stage failure).  GC runs only at entry and after the
-    last commit, never between stage commits, while sibling stages'
-    files are still in flight."""
+    groups ∥ triples ∥ canonicalize — safe because every task reads
+    only its upstream stages' written files, writes its own
+    directories, and the ``building`` commits are serialized by a
+    driver lock.  canonicalize is an iterative driver-barrier loop whose
+    executor gaps the groups/triples scans fill.  On the first task
+    failure :func:`..concurrency.run_concurrent_jobs` cancels queued
+    tasks and interrupts in-flight sibling Spark jobs.  GC runs only at
+    entry and after the last commit, never between stage commits, while
+    sibling tasks' files are still in flight."""
     snap = snapshots.current(spark, out_dir)
     if snap is not None:
         snapshots.gc(spark, out_dir, snap)
@@ -398,31 +522,32 @@ def build_kg(
         ),
         "params": {"dont_penalize": sorted(dont_penalize or [])},
     }
-    transcripts = spark.read.parquet(
-        fsio.join(corpus_dir, "transcripts.parquet")
-    )
-    gazetteer = spark.read.parquet(
-        fsio.join(corpus_dir, "gazetteer.parquet")
-    )
 
     lock = threading.Lock()
     latest = [snap]
     staged = set()  # stages whose `building` entry this run publishes
 
-    def reuse(stage: str) -> Optional[List[dict]]:
-        """Files of ``stage`` this run need not write: the published or
-        staged version whose identity matches."""
+    def reuse(outs) -> Optional[Dict[str, List[dict]]]:
+        """Files of a task's stages (with the side table, for
+        extracted) this run need not write: for every stage, the
+        published or staged version whose identity matches."""
         if not resume or snap is None:
             return None
-        ident = _stage_identity(stage, source_fp)
-        if _committed(snap["stages"].get(stage), ident):
-            return _files(snap, stage)
-        if _committed(snap["building"].get(stage), ident):
-            with lock:
-                staged.add(stage)
-            return [f for f in snap["files"]
-                    if f["stage"] == stage and f.get("building")]
-        return None
+        found, from_building = {}, set()
+        for stage in outs:
+            ident = _stage_identity(stage, source_fp)
+            if not _committed(snap["stages"].get(stage), ident):
+                if not _committed(snap["building"].get(stage), ident):
+                    return None
+                from_building.add(stage)
+            for s in (stage, CONV_IDS) if stage == "extracted" else (stage,):
+                found[s] = [
+                    f for f in snap["files"] if f["stage"] == s
+                    and bool(f.get("building")) == (stage in from_building)
+                ]
+        with lock:
+            staged.update(from_building)
+        return found
 
     def stage_commit(written: Dict[str, List[dict]], wall: float) -> None:
         """Commit freshly written stages (with the side table, for
@@ -437,127 +562,35 @@ def build_kg(
             ] + new
             building = dict(p["building"] if p else {})
             for stage in written:
-                if stage == CONV_IDS:
-                    continue
-                building[stage] = _entry(
-                    stage, new, _stage_identity(stage, source_fp),
-                    STAGE_INPUTS[stage], wall,
-                )
-                staged.add(stage)
+                if stage != CONV_IDS:
+                    building[stage] = _entry(
+                        stage, new, _stage_identity(stage, source_fp),
+                        "build", wall,
+                    )
+                    staged.add(stage)
             latest[0] = _commit(
                 spark, out_dir, p, files, p["stages"] if p else {},
                 _stamps(p) if p else {}, building,
             )
 
-    def run_stage(stage: str, df_builder) -> List[dict]:
-        files = reuse(stage)
-        if files is None:
-            t0 = time.time()
-            files = _write(spark, out_dir, stage, df_builder())
-            stage_commit({stage: files}, time.time() - t0)
-        return files
-
-    futs: Dict[str, object] = {}
-
-    def _dep(name: str) -> DataFrame:
-        f = futs[name]
-        return _read_files(
-            spark, out_dir, f if isinstance(f, list) else f.result()
-        )
-
-    def t_extracted() -> List[dict]:
-        files = reuse("extracted")
-        if files is None:
-            t0 = time.time()
-            files = _write(spark, out_dir, "extracted",
-                           extract_rows(transcripts))
-            conv = _write(
-                spark, out_dir, CONV_IDS,
-                _read_files(spark, out_dir, files)
-                .select("conv_id").distinct(),
-            )
-            stage_commit({"extracted": files, CONV_IDS: conv},
-                         time.time() - t0)
-        return files
-
-    def t_mentions() -> List[dict]:
-        ex = _dep("extracted")
-        return run_stage("mentions", lambda: mentions_from_rows(ex))
-
-    def t_group_entities() -> List[dict]:
-        ex = _dep("extracted")
-        return run_stage(
-            "group_entities",
-            lambda: group_entities(ex, dont_penalize=dont_penalize),
-        )
-
-    def t_groups() -> List[dict]:
-        ge = _dep("group_entities")
-        return run_stage("groups", lambda: groups_summary(ge))
-
-    def t_triples() -> List[dict]:
-        ge = _dep("group_entities")
-        return run_stage("triples", lambda: triples_op(ge))
-
-    def t_canon() -> List[dict]:
-        # links+nodes share one canonicalize() computation, so they
-        # commit together; returns the links files
-        links, nodes = reuse("links"), reuse("nodes")
-        if links is None or nodes is None:
-            t0 = time.time()
-            links_df, nodes_df = canonicalize(
-                _dep("mentions"), gazetteer,
-                # checkpoint iff BOTH outputs are written below
-                checkpoint=links is None and nodes is None,
-            )
-            written = {}
-            if links is None:
-                links = written["links"] = _write(
-                    spark, out_dir, "links", links_df)
-            if nodes is None:
-                written["nodes"] = _write(spark, out_dir, "nodes", nodes_df)
-            stage_commit(written, time.time() - t0)
-        return links
-
-    def t_edges() -> List[dict]:
-        from ..operators.graph import materialize_edges
-
-        links_tbl = _dep("canon")
-        triples_tbl = _dep("triples")
-        return run_stage(
-            "edges", lambda: materialize_edges(triples_tbl, links_tbl)
-        )
-
-    # topological submission order (every task's deps appear earlier)
-    run_concurrent_jobs(spark, [
-        ("extracted", t_extracted),
-        ("mentions", t_mentions),
-        ("group_entities", t_group_entities),
-        ("groups", t_groups),
-        ("triples", t_triples),
-        ("canon", t_canon),
-        ("edges", t_edges),
-    ], max(1, int(stage_concurrency)), futs=futs)
+    new, _walls = _run_graph(spark, out_dir, {
+        "transcripts": spark.read.parquet(
+            fsio.join(corpus_dir, "transcripts.parquet")),
+        "gazetteer": spark.read.parquet(
+            fsio.join(corpus_dir, "gazetteer.parquet")),
+        "params": dont_penalize,
+    }, None, stage_concurrency, reuse, stage_commit)
 
     p = latest[0]
     if p is not None and (staged or p["building"]):
         # publish: the staged stages (with the side table, for
         # extracted) replace their published files; staged entries
-        # this run did not use are dropped
-        owned = set(staged) | ({CONV_IDS} if "extracted" in staged else set())
-        files = [
-            {k: v for k, v in f.items() if k != "building"}
-            for f in p["files"]
-            if f["stage"] in owned and f.get("building")
-        ] + [
-            f for f in p["files"]
-            if f["stage"] not in owned and not f.get("building")
-        ]
-        stages = dict(p["stages"])
-        stages.update((s, p["building"][s]) for s in staged)
-        # a build is not a streamed or appended delta: no stamps
-        snapshots.gc(spark, out_dir,
-                     _commit(spark, out_dir, p, files, stages, {}))
+        # this run did not use are dropped.  A build is not a streamed
+        # or appended delta: no stamps.
+        owned = staged | ({CONV_IDS} if "extracted" in staged else set())
+        _publish(spark, out_dir, p, {s: new[s] for s in owned}, "build",
+                 {s: p["building"][s]["wall_sec"] for s in staged},
+                 fp=source_fp, stamps={})
     return {s: fsio.join(out_dir, s) for s in STAGES}
 
 
@@ -572,7 +605,8 @@ def append_kg(
     incremental path for a corpus that grows after the initial build
     (counterpart of similarity.append_to_ann_index for the flagship
     pipeline).  Output is row-identical to a fresh :func:`build_kg`
-    over the union corpus (pytest-gated), because:
+    over the union corpus (pytest-gated), because the same stage graph
+    runs over the delta:
 
     * extracted/mentions/group_entities/groups/triples are strictly
       per-conversation (ids are ``conv_id:gNNNN``; every window is
@@ -582,11 +616,12 @@ def append_kg(
       re-shuffled.
     * links/nodes/edges are GLOBAL (a new surface can merge two old
       components, relabeling node_ids to a new min member key), so
-      they are recomputed over the union and replace the old files.
-      That recompute scans only the slim union mentions/triples
-      tables — orders of magnitude smaller than the corpus — and the
-      CC runs on the distinct-surface star graph (1-2 rounds), so the
-      expensive corpus-scale work stays append-only.
+      they are recomputed over the kept and new files of their inputs
+      and replace the old files.  That recompute scans only the slim
+      union mentions/triples tables — orders of magnitude smaller than
+      the corpus — and the CC runs on the distinct-surface star graph
+      (1-2 rounds), so the expensive corpus-scale work stays
+      append-only.
 
     Guards: the base build must be fully committed; the gazetteer and
     the grouping params must match the base build's (gazetteer by
@@ -594,7 +629,7 @@ def append_kg(
     see :func:`.manifest.table_fingerprint` — node identity depends on
     it); overlapping conv_ids raise (appending already-ingested
     conversations would silently double every per-conversation table
-    — de-duplicate the delta first).
+    — de-duplicate the delta first).  A delta with no rows is a no-op.
 
     Every file is written first and one snapshot commit publishes the
     whole append, so a crashed append leaves the store as it was and
@@ -655,16 +690,18 @@ def append_kg_frames(
     (:mod:`webstruct_spark.streaming.kg_ingest`).
 
     The delta is persisted for the duration of the call: the guards
-    (conv-id distinct, overlap checks, side-table write) and the
-    extract each take an action over it, and without the cache every
-    action re-reads the delta's input files.
+    (conv-id distinct, overlap checks) and the extract each take an
+    action over it, and without the cache every action re-reads the
+    delta's input files.  Every later stage reads the files its
+    upstream stage wrote.
 
     ``delta_transcripts_fp``: footer fingerprint of the delta when it
     is file-backed; None means a frame-only delta (streaming batch) —
     its row count is measured and bytes/n_files recorded as the -1
     "not file-backed" sentinel (after which build_kg can never
     resume-match this out_dir against a corpus dir, which is correct:
-    it no longer corresponds to one).
+    it no longer corresponds to one).  A delta of 0 rows, either way,
+    returns without writing anything.
 
     ``batch_id``: monotone micro-batch id for EXACTLY-ONCE streaming
     appends — the id is stamped into the snapshot, and a replayed
@@ -686,253 +723,134 @@ def append_kg_frames(
     A batch killed before its commit left nothing visible, so the
     streaming retry of the same batch applies it in full.
     """
-    tb = transcripts_b.persist(StorageLevel.MEMORY_AND_DISK)
+    transcripts_b = transcripts_b.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _append_kg_frames_impl(
-            spark, tb, gazetteer, gazetteer_fp, out_dir,
-            dont_penalize=dont_penalize,
-            stage_concurrency=stage_concurrency,
-            delta_transcripts_fp=delta_transcripts_fp,
-            batch_id=batch_id, stream_id=stream_id,
-        )
-    finally:
-        tb.unpersist()
-
-
-def _append_kg_frames_impl(
-    spark: SparkSession,
-    transcripts_b: DataFrame,
-    gazetteer: DataFrame,
-    gazetteer_fp: dict,
-    out_dir: str,
-    dont_penalize,
-    stage_concurrency: int,
-    delta_transcripts_fp: Optional[dict],
-    batch_id: Optional[int],
-    stream_id: Optional[str],
-) -> Dict[str, str]:
-    snap = _base_snapshot(spark, out_dir, "append_kg")
-    base = snap["stages"]
-    base_transcripts = base["extracted"]["source_fp"]["transcripts"]
-    base_gazetteer = base["links"]["source_fp"]["gazetteer"]
-    base_params = base["group_entities"]["source_fp"]["params"]
-    last_batch = snap.get("stream_batch_id")
-    last_stream = snap.get("stream_id")
-    if base_gazetteer != gazetteer_fp:
-        raise ValueError(
-            "append_kg: gazetteer differs from the base build's "
-            "(%r vs %r) — node identity depends on it; rebuild"
-            % (base_gazetteer, gazetteer_fp)
-        )
-    params = {"dont_penalize": sorted(dont_penalize or [])}
-    if base_params != params:
-        raise ValueError(
-            "append_kg: grouping params differ from the base build's "
-            "(%r vs %r) — the delta's groups/triples would not match "
-            "a fresh union build; pass the base's params or rebuild"
-            % (base_params, params)
-        )
-    paths = {s: fsio.join(out_dir, s) for s in STAGES}
-
-    # the _conv_ids side table keeps these guards O(delta); it holds
-    # exactly the committed conversations
-    existing_convs = _read_files(spark, out_dir, _files(snap, CONV_IDS))
-    delta_convs = transcripts_b.select("conv_id").distinct()
-
-    # a replayed id only means "already applied" if it belongs to the
-    # SAME stream: every new checkpoint restarts Spark's batch ids at
-    # 0, so a fresh stream's ids say nothing about this out_dir.
-    # None on either side matches any stream — the overlap guard
-    # below stays the backstop.
-    same_stream = (last_stream is None or stream_id is None
-                   or stream_id == last_stream)
-    if (batch_id is not None and last_batch is not None
-            and same_stream and batch_id <= last_batch):
-        # an already-committed id is only skippable if it is a TRUE
-        # replay: a lost/reset streaming checkpoint restarts ids at 0
-        # over the whole input dir, and if NEW files landed meanwhile
-        # the replayed "batch 0" mixes consumed and unseen
-        # conversations — skipping it would silently drop the new
-        # ones, so that case raises instead
-        if delta_convs.join(
-            existing_convs, "conv_id", "left_anti"
-        ).limit(1).count():
+        snap = _base_snapshot(spark, out_dir, "append_kg")
+        base = snap["stages"]
+        base_transcripts = base["extracted"]["source_fp"]["transcripts"]
+        base_gazetteer = base["links"]["source_fp"]["gazetteer"]
+        base_params = base["group_entities"]["source_fp"]["params"]
+        last_batch = snap.get("stream_batch_id")
+        last_stream = snap.get("stream_id")
+        if base_gazetteer != gazetteer_fp:
             raise ValueError(
-                "append_kg: batch_id %d <= last committed %d (same "
-                "stream) but the batch contains conversations not in "
-                "the base — the streaming checkpoint was reset over "
-                "an input dir that gained new files; restore the "
-                "checkpoint, or start over with a FRESH checkpoint "
-                "dir (new stream identity) pointed at an input dir "
-                "holding only the un-ingested files"
-                % (batch_id, last_batch)
+                "append_kg: gazetteer differs from the base build's "
+                "(%r vs %r) — node identity depends on it; rebuild"
+                % (base_gazetteer, gazetteer_fp)
             )
-        return paths  # true replay — already applied
+        params = {"dont_penalize": sorted(dont_penalize or [])}
+        if base_params != params:
+            raise ValueError(
+                "append_kg: grouping params differ from the base build's "
+                "(%r vs %r) — the delta's groups/triples would not match "
+                "a fresh union build; pass the base's params or rebuild"
+                % (base_params, params)
+            )
+        paths = {s: fsio.join(out_dir, s) for s in STAGES}
 
-    fp_is_file_backed = (
-        delta_transcripts_fp is not None
-        and delta_transcripts_fp.get("bytes", -1) >= 0
-        and delta_transcripts_fp.get("n_files", -1) >= 0
-    )
-    if delta_transcripts_fp is None:
-        n_delta = transcripts_b.count()
-        if n_delta == 0:
-            return paths  # empty micro-batch
-        delta_transcripts_fp = {
-            "rows": n_delta, "bytes": -1, "n_files": -1
+        # the _conv_ids side table keeps these guards O(delta); it holds
+        # exactly the committed conversations
+        existing_convs = _read_files(spark, out_dir, _files(snap, CONV_IDS))
+        delta_convs = transcripts_b.select("conv_id").distinct()
+
+        # a replayed id only means "already applied" if it belongs to the
+        # SAME stream: every new checkpoint restarts Spark's batch ids at
+        # 0, so a fresh stream's ids say nothing about this out_dir.
+        # None on either side matches any stream — the overlap guard
+        # below stays the backstop.
+        same_stream = (last_stream is None or stream_id is None
+                       or stream_id == last_stream)
+        if (batch_id is not None and last_batch is not None
+                and same_stream and batch_id <= last_batch):
+            # an already-committed id is only skippable if it is a TRUE
+            # replay: a lost/reset streaming checkpoint restarts ids at 0
+            # over the whole input dir, and if NEW files landed meanwhile
+            # the replayed "batch 0" mixes consumed and unseen
+            # conversations — skipping it would silently drop the new
+            # ones, so that case raises instead
+            if delta_convs.join(
+                existing_convs, "conv_id", "left_anti"
+            ).limit(1).count():
+                raise ValueError(
+                    "append_kg: batch_id %d <= last committed %d (same "
+                    "stream) but the batch contains conversations not in "
+                    "the base — the streaming checkpoint was reset over "
+                    "an input dir that gained new files; restore the "
+                    "checkpoint, or start over with a FRESH checkpoint "
+                    "dir (new stream identity) pointed at an input dir "
+                    "holding only the un-ingested files"
+                    % (batch_id, last_batch)
+                )
+            return paths  # true replay — already applied
+
+        fp_is_file_backed = (
+            delta_transcripts_fp is not None
+            and delta_transcripts_fp.get("bytes", -1) >= 0
+            and delta_transcripts_fp.get("n_files", -1) >= 0
+        )
+        if delta_transcripts_fp is None:
+            delta_transcripts_fp = {
+                "rows": transcripts_b.count(), "bytes": -1, "n_files": -1
+            }
+        if delta_transcripts_fp["rows"] == 0:
+            return paths  # an empty micro-batch or corpus dir
+        union_fp = {
+            "transcripts": _fp_add(base_transcripts, delta_transcripts_fp),
+            "gazetteer": base_gazetteer,
+            "params": params,
         }
-    union_fp = {
-        "transcripts": _fp_add(base_transcripts, delta_transcripts_fp),
-        "gazetteer": base_gazetteer,
-        "params": params,
-    }
-    next_batch = batch_id if batch_id is not None else last_batch
-    if next_batch is not None:
-        union_fp["stream_batch_id"] = next_batch
-        # the ids' stream identity travels with them; a batch without
-        # its own keeps the base's (plain append_kg into a streamed
-        # build must not erase it)
-        next_stream = stream_id if stream_id is not None else last_stream
-        if next_stream is not None:
-            union_fp["stream_id"] = next_stream
+        next_batch = batch_id if batch_id is not None else last_batch
+        if next_batch is not None:
+            union_fp["stream_batch_id"] = next_batch
+            # the ids' stream identity travels with them; a batch without
+            # its own keeps the base's (plain append_kg into a streamed
+            # build must not erase it)
+            next_stream = stream_id if stream_id is not None else last_stream
+            if next_stream is not None:
+                union_fp["stream_id"] = next_stream
 
-    if existing_convs.join(delta_convs, "conv_id").limit(1).count():
-        all_landed = not delta_convs.join(
-            existing_convs, "conv_id", "left_anti"
-        ).limit(1).count()
-        if all_landed and batch_id is not None:
-            # every conversation already ingested + an automated
-            # (streaming) caller: a fresh checkpoint re-draining a
-            # static input dir — exactly-once means skip
-            return paths
-        if (
-            all_landed and batch_id is None and fp_is_file_backed
-            and snap.get("delta_fp") == delta_transcripts_fp
-            and snap.get("delta_batch_id") is None
-        ):
-            # a plain --append re-run after a crash AFTER its commit:
-            # the snapshot says the LAST delta it applied was exactly
-            # this file-backed one, so the retry is a no-op
-            return paths
-        # mixed (skipping loses the unseen part, appending doubles the
-        # landed part) or an explicit append of ingested conversations
-        raise ValueError(
-            "append_kg: delta shares conv_ids with the base build — "
-            "appending would double their rows; de-duplicate first"
-        )
+        if existing_convs.join(delta_convs, "conv_id").limit(1).count():
+            all_landed = not delta_convs.join(
+                existing_convs, "conv_id", "left_anti"
+            ).limit(1).count()
+            if all_landed and batch_id is not None:
+                # every conversation already ingested + an automated
+                # (streaming) caller: a fresh checkpoint re-draining a
+                # static input dir — exactly-once means skip
+                return paths
+            if (
+                all_landed and batch_id is None and fp_is_file_backed
+                and snap.get("delta_fp") == delta_transcripts_fp
+                and snap.get("delta_batch_id") is None
+            ):
+                # a plain --append re-run after a crash AFTER its commit:
+                # the snapshot says the LAST delta it applied was exactly
+                # this file-backed one, so the retry is a no-op
+                return paths
+            # mixed (skipping loses the unseen part, appending doubles the
+            # landed part) or an explicit append of ingested conversations
+            raise ValueError(
+                "append_kg: delta shares conv_ids with the base build — "
+                "appending would double their rows; de-duplicate first"
+            )
 
-    futs: Dict[str, object] = {}
-    # delta DataFrames shared across tasks — each producer persists
-    # its DataFrame and materializes it (via its own write) BEFORE its
-    # future resolves, so a consumer that has waited on it reads cached
-    # blocks instead of recomputing the extract/grouping chain; the
-    # finally below frees them
-    state: Dict[str, DataFrame] = {}
-    walls: Dict[str, float] = {}
-
-    def _dep(name: str) -> List[dict]:
-        f = futs[name]
-        return f if isinstance(f, list) else f.result()
-
-    def write(stage: str, df: DataFrame) -> List[dict]:
-        t0 = time.time()
-        files = _write(spark, out_dir, stage, df)
-        walls[stage] = time.time() - t0
-        return files
-
-    def t_extracted() -> List[dict]:
-        ex_b = extract_rows(transcripts_b).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        state["ex_b"] = ex_b
-        return write("extracted", ex_b)
-
-    def t_conv_ids() -> List[dict]:
-        return write(CONV_IDS, delta_convs)
-
-    def t_mentions() -> List[dict]:
-        _dep("extracted")
-        return write("mentions", mentions_from_rows(state["ex_b"]))
-
-    def t_group_entities() -> List[dict]:
-        _dep("extracted")
-        ge_b = group_entities(
-            state["ex_b"], dont_penalize=dont_penalize
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        state["ge_b"] = ge_b
-        return write("group_entities", ge_b)
-
-    def t_groups() -> List[dict]:
-        _dep("group_entities")
-        return write("groups", groups_summary(state["ge_b"]))
-
-    def t_triples() -> List[dict]:
-        _dep("group_entities")
-        return write("triples", triples_op(state["ge_b"]))
-
-    def t_canon() -> List[dict]:
-        # global: recompute over the UNION mentions (slim table)
-        links_df, nodes_df = canonicalize(
-            _read_files(spark, out_dir,
-                        _files(snap, "mentions") + _dep("mentions")),
-            gazetteer, checkpoint=True,
-        )
-        return write("links", links_df) + write("nodes", nodes_df)
-
-    def t_edges() -> List[dict]:
-        from ..operators.graph import materialize_edges
-
-        links = [f for f in _dep("canon") if f["stage"] == "links"]
-        triples_union = _files(snap, "triples") + _dep("triples")
-        return write("edges", materialize_edges(
-            _read_files(spark, out_dir, triples_union),
-            _read_files(spark, out_dir, links),
-        ))
-
-    tasks = [
-        ("extracted", t_extracted),
-        (CONV_IDS, t_conv_ids),
-        ("mentions", t_mentions),
-        ("group_entities", t_group_entities),
-        ("groups", t_groups),
-        ("triples", t_triples),
-        ("canon", t_canon),
-        ("edges", t_edges),
-    ]
-    try:
-        # state.values() is read in the finally, after the producers
-        # have registered their DataFrames
-        new = run_concurrent_jobs(
-            spark, tasks, max(1, int(stage_concurrency)), futs=futs
-        )
+        new, walls = _run_graph(spark, out_dir, {
+            "transcripts": transcripts_b,
+            "gazetteer": gazetteer,
+            "params": dont_penalize,
+        }, snap, stage_concurrency)
+        stamps = {
+            k: union_fp[k] for k in ("stream_batch_id", "stream_id")
+            if k in union_fp
+        }
+        stamps.update(delta_fp=delta_transcripts_fp,
+                      delta_batch_id=batch_id, delta_stream_id=stream_id)
+        # one commit publishes the whole append
+        _publish(spark, out_dir, snap, new, "append", walls,
+                 fp=union_fp, stamps=stamps)
+        return paths
     finally:
-        for df in state.values():
-            df.unpersist()
-
-    # one commit publishes the whole append: the new files of every
-    # stage, with the global stages' old files replaced
-    files = [
-        f for f in snap["files"]
-        if not f.get("building") and f["stage"] not in GLOBAL_STAGES
-    ] + [f for fs in new.values() for f in fs]
-    stages = {
-        s: _entry(
-            s, files, _stage_identity(s, union_fp),
-            [("union:" if s in GLOBAL_STAGES else "delta:") + i
-             for i in STAGE_INPUTS[s]],
-            walls[s],
-        )
-        for s in STAGES
-    }
-    stamps = {
-        k: union_fp[k] for k in ("stream_batch_id", "stream_id")
-        if k in union_fp
-    }
-    stamps.update(delta_fp=delta_transcripts_fp, delta_batch_id=batch_id,
-                  delta_stream_id=stream_id)
-    snapshots.gc(spark, out_dir,
-                 _commit(spark, out_dir, snap, files, stages, stamps))
-    return paths
+        transcripts_b.unpersist()
 
 
 def refresh_gazetteer(
@@ -941,18 +859,18 @@ def refresh_gazetteer(
     gazetteer_fp: dict,
     out_dir: str,
 ) -> Dict[str, str]:
-    """Re-link an existing KG build against a NEW gazetteer by
-    recomputing ONLY the global stages (links + nodes from the
-    committed mentions table, then edges from triples × links) —
-    never the corpus.  The gazetteer is the small dimension table of
-    this pipeline; it changes on its own cadence (new aliases, new
-    canonical entities), and without this operation a refreshed
-    gazetteer forces ``build_kg`` to re-extract the full corpus for a
-    change that only shapes the linking family (STAGE_IDENTITY_KEYS:
-    only links/nodes/edges carry the gazetteer component).  At 100 TB
-    the recompute reads the slim mentions/triples tables — orders of
-    magnitude smaller than the corpus — and the corpus-scale stages
-    are untouched, byte-for-byte.
+    """Re-link an existing KG build against a NEW gazetteer by running
+    the stage graph with no delta: only the global stages are
+    recomputed (links + nodes from the committed mentions, then edges
+    from triples × links) — never the corpus.  The gazetteer is the
+    small dimension table of this pipeline; it changes on its own
+    cadence (new aliases, new canonical entities), and without this
+    operation a refreshed gazetteer forces ``build_kg`` to re-extract
+    the full corpus for a change that only shapes the linking family
+    (STAGE_IDENTITY_KEYS: only links/nodes/edges carry the gazetteer
+    component).  At 100 TB the recompute reads the slim
+    mentions/triples tables — orders of magnitude smaller than the
+    corpus — and the corpus-scale stages are untouched, byte-for-byte.
 
     Works on ANY committed base: freshly built, plain-appended, or
     streamed (``build_kg(resume=True)`` covers the gazetteer-refresh
@@ -964,8 +882,6 @@ def refresh_gazetteer(
     current and re-running it is the recovery.  Refreshing with the
     base's OWN gazetteer is a complete no-op (no writes, no commit).
     """
-    from ..operators.graph import materialize_edges
-
     snap = _base_snapshot(spark, out_dir, "refresh_gazetteer")
     ex_fp = snap["stages"]["extracted"]["source_fp"]
     # target identity: the base's corpus lineage + the NEW gazetteer
@@ -979,31 +895,10 @@ def refresh_gazetteer(
         for s in GLOBAL_STAGES
     ):
         return paths
-    t0 = time.time()
-    links_df, nodes_df = canonicalize(
-        _read_files(spark, out_dir, _files(snap, "mentions")),
-        gazetteer, checkpoint=True,
-    )
-    new = {
-        "links": _write(spark, out_dir, "links", links_df),
-        "nodes": _write(spark, out_dir, "nodes", nodes_df),
-    }
-    new["edges"] = _write(spark, out_dir, "edges", materialize_edges(
-        _read_files(spark, out_dir, _files(snap, "triples")),
-        _read_files(spark, out_dir, new["links"]),
-    ))
-    wall = time.time() - t0
-    files = [
-        f for f in snap["files"]
-        if not f.get("building") and f["stage"] not in GLOBAL_STAGES
-    ] + [f for fs in new.values() for f in fs]
-    stages = dict(snap["stages"])
-    for s in GLOBAL_STAGES:
-        stages[s] = _entry(
-            s, files, _stage_identity(s, union_fp),
-            ["refresh:" + i for i in STAGE_INPUTS[s]], wall,
-        )
-    snapshots.gc(spark, out_dir, _commit(
-        spark, out_dir, snap, files, stages, _stamps(snap)
-    ))
+    new, walls = _run_graph(spark, out_dir, {
+        "transcripts": None,
+        "gazetteer": gazetteer,
+        "params": union_fp["params"]["dont_penalize"],
+    }, snap, 1)
+    _publish(spark, out_dir, snap, new, "refresh", walls, fp=union_fp)
     return paths
