@@ -1,7 +1,9 @@
 # -*- coding: utf-8 -*-
 """Vectorized bucket grouper vs the scalar per-conversation oracle:
 identical rows (as multisets) on randomized extraction-row frames,
-and the numpy threshold-argmax kernel vs the Python kernel."""
+both called directly and through group_entities' streamed
+per-partition pass; and the numpy threshold-argmax kernel vs the
+Python kernel."""
 import random
 
 import numpy as np
@@ -53,14 +55,14 @@ def test_best_clustering_ids_fuzz():
         assert got_sizes == want_sizes
 
 
-def _random_frame(rng, n_convs):
+def _random_frame(rng, n_convs, turns=(1, 8), prefix="conv"):
     rows = dict(
         conv_id=[], turn_idx=[], mention_idx=[], text=[], entity_type=[],
         tok_start=[], tok_end=[], n_tokens=[],
     )
     for c in range(n_convs):
-        cid = "conv-%03d" % c
-        for t in range(rng.randint(1, 8)):
+        cid = "%s-%03d" % (prefix, c)
+        for t in range(rng.randint(*turns)):
             n_tok = rng.randint(0, 20)
             n_ments = 0 if n_tok == 0 else rng.randint(0, 4)
             if n_ments == 0:
@@ -136,3 +138,37 @@ def test_vectorized_bucket_empty():
         )
     )
     assert len(out) == 0
+
+
+def test_group_entities_across_arrow_batches(spark):
+    """group_entities streams each partition through the grouper in
+    Arrow batches of 3 rows: a conversation cut by batch boundaries
+    (one spans many batches) and partitions holding no row must give
+    the scalar oracle's rows."""
+    from webstruct_spark.operators.grouping_op import group_entities
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    schema = (
+        "conv_id string, turn_idx int, mention_idx int, text string, "
+        "entity_type string, tok_start int, tok_end int, n_tokens int"
+    )
+    sca = _make_bucket_grouper_scalar(DEFAULT_DONT_PENALIZE)
+    rng = random.Random(29)
+    n_parts = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, "3")
+    try:
+        for trial, n_convs in enumerate((2, 9, 25)):
+            long = _random_frame(rng, 1, turns=(30, 30), prefix="long")
+            assert len(long) >= 9  # at least 3 batches of 3 rows
+            pdf = pd.concat(
+                [_random_frame(rng, n_convs), long], ignore_index=True
+            ).sample(frac=1.0, random_state=trial)
+            if trial == 0:
+                assert n_convs + 1 < n_parts  # some partitions are empty
+            got = group_entities(
+                spark.createDataFrame(pdf, schema)
+            ).toPandas()
+            assert _rowset(got) == _rowset(sca(pdf.copy())), trial
+    finally:
+        spark.conf.set(key, old)

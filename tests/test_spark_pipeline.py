@@ -178,6 +178,84 @@ def test_manifest_lineage_counters(spark, corpus_dir, tmp_path):
         )
 
 
+@pytest.mark.parametrize("at", ["links", "_conv_ids"])
+def test_killed_concurrent_build_ends_and_resumes(
+        spark, corpus_dir, tmp_path, monkeypatch, at):
+    """A concurrent build killed while writing ``links`` (an input of
+    edges) or the side table stops within a bounded time: no task
+    waits forever on a stage that will never be written.  Its re-run
+    equals a fresh build, side table included."""
+    import threading
+
+    from tests.conftest import kill_kg_at
+    from webstruct_spark.plans.pipeline import CONV_IDS, STAGES, build_kg
+
+    out = str(tmp_path / "killed")
+    errors = []
+
+    def killed_build():
+        try:
+            kill_kg_at(monkeypatch, lambda: build_kg(
+                spark, corpus_dir, out, stage_concurrency=4), at)
+        except BaseException as e:  # reported by the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=killed_build, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "the killed build did not end"
+    assert errors == []
+    build_kg(spark, corpus_dir, out, stage_concurrency=4)
+    fresh = str(tmp_path / "fresh")
+    build_kg(spark, corpus_dir, fresh)
+    for stage in STAGES + [CONV_IDS]:
+        got, want = (
+            sorted(map(repr, spark.read.parquet(
+                os.path.join(d, stage)).collect()))
+            for d in (out, fresh)
+        )
+        assert got == want, stage
+
+
+def test_read_files_starts_no_job(spark, corpus_dir, tmp_path):
+    """Every table of a built store reads with the schema from its
+    first file's footer: no Spark job starts, and the schema is the one
+    Spark infers.  A file without Spark's footer key (rewritten by
+    pyarrow) still reads the same rows."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import current_snapshot
+    from webstruct_spark.plans.pipeline import (
+        CONV_IDS, STAGES, _files, _read_files, build_kg,
+    )
+
+    out = str(tmp_path / "kg")
+    build_kg(spark, corpus_dir, out)
+    snap = current_snapshot(out)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def paths(stage):
+        return [os.path.join(out, f["path"]) for f in _files(snap, stage)]
+
+    for stage in STAGES + [CONV_IDS]:
+        job = int(dag.nextJobId())
+        df = _read_files(spark, out, _files(snap, stage))
+        assert int(dag.nextJobId()) == job, stage
+        assert df.schema == spark.read.parquet(*paths(stage)).schema, stage
+
+    first = paths("triples")[0]
+    want = sorted(map(repr, spark.read.parquet(*paths("triples")).collect()))
+    table = pq.read_table(first)
+    pq.write_table(table.replace_schema_metadata(None), first)
+    head, name = os.path.split(first)
+    os.remove(os.path.join(head, "." + name + ".crc"))  # now stale
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in (
+        pq.read_metadata(first).metadata or {}
+    )
+    got = _read_files(spark, out, _files(snap, "triples"))
+    assert sorted(map(repr, got.collect())) == want
+
+
 @pytest.mark.parametrize("op", ["build", "append"])
 def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path, op):
     """stage_concurrency > 1 runs independent DAG stages as concurrent
@@ -213,8 +291,10 @@ def test_concurrent_stages_equal_sequential(spark, corpus_dir, tmp_path, op):
         assert _rows(a, a.columns) == _rows(b, b.columns), stage
     for d in (seq_dir, con_dir):
         snap = current_snapshot(d)
-        # build: 7 tasks (links+nodes commit together) + the publish
-        assert snap["id"] == (8 if op == "build" else 9)
+        # build: 8 tasks (links+nodes commit together; the _conv_ids
+        # side table is its own task) + the publish; append: that
+        # build's 9 + its one commit
+        assert snap["id"] == (9 if op == "build" else 10)
         assert set(snap["stages"]) == set(STAGES)
         assert snap["building"] == {}
 

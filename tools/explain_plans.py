@@ -83,8 +83,11 @@ def main() -> None:
     add(
         "group_entities (single shuffle)",
         group_entities(extract_rows(turns)),
-        "Expect: exactly one Exchange (hashpartitioning on _bucket) "
-        "feeding FlatMapGroupsInPandas — token arrays never shuffle.",
+        "Expect: one Exchange of its own (hashpartitioning on "
+        "conv_id, one partition per core) feeding a Sort and one "
+        "MapInArrow, no FlatMapGroupsInPandas — token arrays never "
+        "shuffle (a RoundRobin Exchange below the extract MapInArrow "
+        "is extract_rows' scan widening).",
     )
     add(
         "triples (windows over group entities)",

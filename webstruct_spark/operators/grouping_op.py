@@ -1,31 +1,37 @@
 # -*- coding: utf-8 -*-
 """Distributed entity grouping (record assembly).
 
-Implements the reference grouping algorithm
-(/root/reference/webstruct/grouping.py:46-137) per conversation with
+Implements the reference webstruct grouping algorithm
+(``webstruct/grouping.py:46-137``) per conversation with
 ONE shuffle, and that shuffle carries only flat entity rows + per-turn
 token counts — never token arrays:
 
 1. narrow stage (extract.py) emits per-entity rows with turn-local
    token spans and each turn's clean-token count (entity-less turns
    contribute a single ``mention_idx = -1`` marker row);
-2. ``groupBy(conv_id).applyInPandas`` reconstructs global token
-   positions with the closed form ``pos = 2*g + 3*k`` (g = clean
-   tokens before, k = rank among token-bearing turns — a turn that
-   produced no tokens does not bump the element counter, matching the
-   reference's element-change rule), then runs the pinned
-   threshold-argmax kernel.
+2. the rows are hash-partitioned by conv_id into one partition per
+   core and sorted by conv_id within each partition;
+3. one streamed ``mapInArrow`` pass per partition hands the vectorized
+   grouper conversation-complete slices of many conversations at a
+   time.  The grouper reconstructs global token positions with the
+   closed form ``pos = 2*g + 3*k`` (g = clean tokens before, k = rank
+   among token-bearing turns — a turn that produced no tokens does not
+   bump the element counter, matching the reference's element-change
+   rule), then runs the pinned threshold-argmax kernel.
 
-Skew note: a mega-conversation is one group task; its cost is
-O(#entities x #thresholds) worst case — numpy/python work on
+Skew note: a mega-conversation stays whole in one partition; its cost
+is O(#entities x #thresholds) worst case — numpy work on
 already-decoded entities; the heavy token processing stayed in the
-narrow stage.  AQE coalesces the many small conversation partitions.
+narrow stage.  The mapper holds at most one Arrow batch plus the one
+conversation still open at its end, so a long conversation costs
+memory proportional to itself, not to its partition.
 """
 from __future__ import annotations
 
-from typing import Iterable, Optional, Set
+from typing import Iterable, Iterator, List, Optional, Set
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..kernel.grouping import best_clustering_entities, token_position
@@ -39,11 +45,13 @@ GROUP_ENTITIES_SCHEMA = (
 # the UDF emits no group_id: the "%s:g%04d" id string is built
 # JVM-side afterwards (F.format_string, exact printf semantics) —
 # one codegen'd expression instead of millions of Python formats
-_GROUP_UDF_SCHEMA = (
-    "conv_id string, group_idx int, entity_idx int, "
-    "text string, entity_type string, turn_idx int, threshold int, "
-    "score int, n_entities int"
-)
+_GROUP_UDF_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("group_idx", pa.int32()),
+    ("entity_idx", pa.int32()), ("text", pa.string()),
+    ("entity_type", pa.string()), ("turn_idx", pa.int32()),
+    ("threshold", pa.int32()), ("score", pa.int32()),
+    ("n_entities", pa.int32()),
+])
 
 # re-exported from the pyspark-free kernel (the one definition —
 # see kernel/grouping.py) for the existing DataFrame-side importers
@@ -240,10 +248,50 @@ def _make_bucket_grouper(dont_penalize: Optional[Set[str]]):
     return group_bucket
 
 
+def _make_partition_grouper(dont_penalize: Optional[Set[str]]):
+    """``mapInArrow`` body over one partition sorted by conv_id: feeds
+    the vectorized grouper conversation-complete slices.  The trailing
+    conversation of each Arrow batch may continue in the next batch, so
+    it is held back until a later conversation starts or the partition
+    ends; its batches are kept in a list and concatenated once."""
+    import pyarrow.compute as pc
+
+    group = _make_bucket_grouper(dont_penalize)
+
+    def grouped(batches: List[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = pa.Table.from_batches(batches, schema=batches[0].schema)
+        if rows.num_rows == 0:
+            return
+        out = group(rows.to_pandas())
+        if len(out):
+            yield from pa.Table.from_pandas(
+                out, schema=_GROUP_UDF_SCHEMA, preserve_index=False
+            ).to_batches()
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held: List[pa.RecordBatch] = []  # the open conversation's rows
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            conv = batch.column("conv_id")
+            last = conv[-1].as_py()
+            if held and held[-1].column("conv_id")[-1].as_py() == last:
+                held.append(batch)  # one conversation fills the batch
+                continue
+            # nulls sort first, so a null tail is the whole batch
+            # (index -1): everything before the tail is complete
+            cut = max(0, pc.index(conv, last).as_py())
+            yield from grouped(held + [batch.slice(0, cut)])
+            held = [batch.slice(cut)]
+        if held:
+            yield from grouped(held)
+
+    return run
+
+
 def group_entities(
     extraction_rows: DataFrame,
     dont_penalize: Optional[Iterable[str]] = DEFAULT_DONT_PENALIZE,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Per-conversation grouping.
 
@@ -252,31 +300,26 @@ def group_entities(
     Output: one row per (group, member entity) —
     ``GROUP_ENTITIES_SCHEMA``.
 
-    Conversations are hashed into ``n_buckets`` salt buckets and each
-    bucket is ONE ``applyInPandas`` call that iterates its
-    conversations with a C-speed pandas groupby — per-group Arrow/
-    pandas setup cost is paid per bucket, not per conversation (20k
-    conversations = 20k tiny DataFrames was the scaling bottleneck).
-    Bucketing also evens out mega-conversation skew across tasks.
-
-    ``n_buckets`` sizing is a balls-in-bins tradeoff: buckets land on
-    shuffle partitions by hash, so with P partitions the slowest task
-    carries ~(B/P + sqrt(2·(B/P)·ln P)) buckets — B=256 on P=32 gives
-    ~1.9x expected max skew, B=4096 ~1.2x.  Keep B >> P; per-bucket
-    Arrow/pandas overhead is ~0.1 ms, so thousands of buckets are
-    effectively free at any realistic scale.
+    The rows are hash-partitioned by conv_id into
+    ``defaultParallelism`` partitions (one task per core, the target
+    :func:`..operators.spread.widen_scan` uses; AQE does not coalesce
+    an explicit partition count) and sorted by conv_id within each.
+    One streamed ``mapInArrow`` pass per partition then groups many
+    conversations per Python call, so the Arrow/Python crossing is paid
+    per batch, not per conversation.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    slim = extraction_rows.select(
+    n_parts = extraction_rows.sparkSession.sparkContext.defaultParallelism
+    grouped = extraction_rows.select(
         "conv_id", "turn_idx", "mention_idx", "text", "entity_type",
         "tok_start", "tok_end", "n_tokens",
-    ).withColumn(
-        "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
-    grouped = slim.groupBy("_bucket").applyInPandas(
-        _make_bucket_grouper(set(dont_penalize or ())),
-        _GROUP_UDF_SCHEMA,
+    ).repartition(n_parts, "conv_id").sortWithinPartitions(
+        "conv_id"
+    ).mapInArrow(
+        _make_partition_grouper(set(dont_penalize or ())),
+        from_arrow_schema(_GROUP_UDF_SCHEMA),
     )
     return grouped.select(
         "conv_id",

@@ -308,13 +308,17 @@ class _JavaInputFile(io.RawIOBase):
         super().close()
 
 
-def parquet_num_rows(spark, path: str) -> int:
-    """Row count of ONE parquet file from its footer (no data scan on
-    either route)."""
+def parquet_metadata(spark, path: str) -> pq.FileMetaData:
+    """The footer of ONE parquet file (no data scan on either route)."""
     if not is_uri(path):
-        return pq.read_metadata(path).num_rows
+        return pq.read_metadata(path)
     f = _JavaInputFile(spark, path)
     try:
-        return pq.read_metadata(f).num_rows
+        return pq.read_metadata(f)
     finally:
         f.close()
+
+
+def parquet_num_rows(spark, path: str) -> int:
+    """Row count of ONE parquet file from its footer."""
+    return parquet_metadata(spark, path).num_rows

@@ -14,6 +14,12 @@ recomputes upstream work):
   triples     window ops over group_entities
   links,nodes broadcast gazetteer join + connected components
   edges       triples joined to links
+  _conv_ids   distinct conv_ids of extracted (the side table; no
+              stage reads it, so it runs off the critical path)
+
+Each stage is readable as soon as its files are written: a task waits
+on its input stages, not on the tasks that write them (``edges`` reads
+``links`` without waiting for ``nodes``).
 
 One runner (:func:`_run_graph`) executes the graph for ``build_kg``,
 ``append_kg_frames`` and ``refresh_gazetteer``.  They differ only in
@@ -41,8 +47,8 @@ visible only through one create-if-absent record,
 * ``stages`` — per stage its identity (``source_fp``), ``inputs``
   (``<operation>:<input>``), ``wall_sec``, ``layout`` and
   row/file/byte totals;
-* ``building`` — the same per-stage entries for the stages a build has
-  staged but not yet published;
+* ``building`` — the same per-stage entries for the stages (and the
+  side table) a build has staged but not yet published;
 * the store's stamps: ``stream_id``/``stream_batch_id`` of the last
   streamed micro-batch and ``delta_fp``/``delta_batch_id``/
   ``delta_stream_id`` of the last applied delta.
@@ -59,12 +65,15 @@ holds exactly the stage's live files.
 """
 from __future__ import annotations
 
+import json
 import threading
 import time
+from concurrent.futures import FIRST_COMPLETED, Future, wait
 from typing import Callable, Dict, List, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..concurrency import run_concurrent_jobs
 from ..operators.canon import canonicalize
@@ -81,6 +90,13 @@ LAYOUT_VERSION = "4-snapshots"
 
 # what the graph starts from: two tables and the grouping params
 SOURCES = ("transcripts", "params", "gazetteer")
+
+# side table of every ingested conv_id (tiny: one row per
+# conversation), written from extracted — lets the append-path
+# disjointness guards run O(delta) instead of re-scanning the full
+# extracted table per append.  Not a stage: it has no ``stages``
+# entry, and is published exactly when extracted is.
+CONV_IDS = "_conv_ids"
 
 # the stage graph in topological order: per task, the stages it
 # writes, what it reads (upstream stages or sources), and its output
@@ -101,12 +117,14 @@ _GRAPH = [
      lambda t: canonicalize(t["mentions"], t["gazetteer"], checkpoint=True)),
     (("edges",), ("triples", "links"),
      lambda t: [materialize_edges(t["triples"], t["links"])]),
+    ((CONV_IDS,), ("extracted",),
+     lambda t: [t["extracted"].select("conv_id").distinct()]),
 ]
 
-STAGES = [s for outs, _ins, _f in _GRAPH for s in outs]
-STAGE_INPUTS = {s: list(ins) for outs, ins, _f in _GRAPH for s in outs}
-# the task that writes each stage, by the name of its first stage
+# the task that writes each table, by the name of its first table
 _PRODUCER = {s: outs[0] for outs, _ins, _f in _GRAPH for s in outs}
+STAGES = [s for s in _PRODUCER if s != CONV_IDS]
+STAGE_INPUTS = {s: list(ins) for outs, ins, _f in _GRAPH for s in outs}
 
 
 def _sources_of(stage: str) -> set:
@@ -121,14 +139,8 @@ def _sources_of(stage: str) -> set:
 # and rebuilds just the canonicalization family — re-linking against
 # a refreshed gazetteer must not re-extract 100 TB of history
 STAGE_IDENTITY_KEYS = {
-    s: tuple(k for k in SOURCES if k in _sources_of(s)) for s in STAGES
+    s: tuple(k for k in SOURCES if k in _sources_of(s)) for s in _PRODUCER
 }
-
-# side table of every ingested conv_id (tiny: one row per
-# conversation), written beside extracted — lets the append-path
-# disjointness guards run O(delta) instead of re-scanning the full
-# extracted table per append
-CONV_IDS = "_conv_ids"
 
 # the stages recomputed globally (over kept and new files, replacing
 # their old files) by every append and refresh
@@ -165,8 +177,24 @@ def _files(snap: dict, stage: str) -> List[dict]:
     ]
 
 
+# where Spark's parquet writer stores the table schema in each footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _read_files(spark, out_dir: str, files: List[dict]) -> DataFrame:
-    return spark.read.parquet(*(fsio.join(out_dir, f["path"]) for f in files))
+    """The rows of ``files``, read with the schema Spark stored in the
+    first file's footer, so the read starts no schema-inference job; a
+    file without that key (written by another parquet writer) is read
+    with an inferred schema."""
+    paths = [fsio.join(out_dir, f["path"]) for f in files]
+    reader = spark.read
+    if paths:
+        meta = fsio.parquet_metadata(spark, paths[0]).metadata or {}
+        if _SPARK_SCHEMA_KEY in meta:
+            reader = reader.schema(
+                StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            )
+    return reader.parquet(*paths)
 
 
 def _write(spark, out_dir: str, stage: str, df: DataFrame) -> List[dict]:
@@ -278,30 +306,40 @@ def _run_graph(
     reuse: Optional[Callable] = None, on_written: Optional[Callable] = None,
 ):
     """Run the stage graph over ``sources`` (frames, and the grouping
-    params, by :data:`SOURCES` name).  Returns ``({stage: files},
-    {stage: wall})`` for the stages of every task that ran, the
-    ``_conv_ids`` side table riding with ``extracted``.
+    params, by :data:`SOURCES` name).  Returns ``({table: files},
+    {table: wall})`` for the tables (stages and ``_conv_ids``) of every
+    task that ran.
 
     ``sources["transcripts"]`` is the delta; None (no new conversation)
     makes every per-conversation task a no-op.  A per-conversation task
     reads only this run's files of its upstream stages.  A global task
     also reads the files ``base`` (a snapshot, or None) publishes for
     them; a stage of ``base`` ends with those kept files plus this
-    run's.  ``reuse(stages)`` returns files of a task's stages this run
+    run's.  ``reuse(tables)`` returns files of a task's tables this run
     need not write, or None; ``on_written(written, wall)`` runs after
     each task's writes.  Independent tasks run as up to ``workers``
     concurrent Spark jobs (:func:`..concurrency.run_concurrent_jobs`;
-    tasks are submitted in topological order)."""
+    tasks are submitted in topological order).
+
+    A task reads an input stage as soon as its files are written, not
+    when the task writing it ends.  Its wait also ends when that task
+    fails, or is cancelled or aborted before it ran: the wait then
+    raises that task's error, so no task blocks forever on a stage that
+    will never be written."""
     kept = {} if base is None else {
-        s: _files(base, s) for s in STAGES + [CONV_IDS]
-        if s not in GLOBAL_STAGES
+        s: _files(base, s) for s in _PRODUCER if s not in GLOBAL_STAGES
     }
     futs: Dict[str, object] = {}
+    ready: Dict[str, Future] = {s: Future() for s in _PRODUCER}
     walls: Dict[str, float] = {}
 
     def files(stage: str, with_kept: bool) -> List[dict]:
-        f = futs[_PRODUCER[stage]]
-        new = (f if isinstance(f, dict) else f.result()).get(stage, [])
+        task = futs[_PRODUCER[stage]]
+        if isinstance(task, Future):  # a concurrent run
+            wait([ready[stage], task], return_when=FIRST_COMPLETED)
+            if not ready[stage].done():
+                task.result()  # raises why the stage was never written
+        new = ready[stage].result()
         return kept.get(stage, []) + new if with_kept else new
 
     def task(outs, ins, compute):
@@ -309,9 +347,12 @@ def _run_graph(
 
         def run() -> Dict[str, List[dict]]:
             if not is_global and sources["transcripts"] is None:
-                return {}
-            done = reuse(outs) if reuse else None
+                done = {}
+            else:
+                done = reuse(outs) if reuse else None
             if done is not None:
+                for s in outs:
+                    ready[s].set_result(done.get(s, []))
                 return done
             t0 = time.time()
             frames = compute({
@@ -319,16 +360,10 @@ def _run_graph(
                 else _read_files(spark, out_dir, files(i, is_global))
                 for i in ins
             })
-            written = {
-                s: _write(spark, out_dir, s, df)
-                for s, df in zip(outs, frames)
-            }
-            if "extracted" in written:
-                written[CONV_IDS] = _write(
-                    spark, out_dir, CONV_IDS,
-                    _read_files(spark, out_dir, written["extracted"])
-                    .select("conv_id").distinct(),
-                )
+            written = {}
+            for s, df in zip(outs, frames):
+                written[s] = _write(spark, out_dir, s, df)
+                ready[s].set_result(written[s])
             wall = time.time() - t0
             walls.update((s, wall) for s in written)
             if on_written is not None:
@@ -528,31 +563,33 @@ def build_kg(
     staged = set()  # stages whose `building` entry this run publishes
 
     def reuse(outs) -> Optional[Dict[str, List[dict]]]:
-        """Files of a task's stages (with the side table, for
-        extracted) this run need not write: for every stage, the
-        published or staged version whose identity matches."""
+        """Files of a task's tables this run need not write: for every
+        table, the published or staged version whose identity matches.
+        The side table is published with extracted, so extracted's
+        published entry speaks for it; a build stages it with its own
+        entry, since a kill can fall between the two tasks' commits."""
         if not resume or snap is None:
             return None
         found, from_building = {}, set()
         for stage in outs:
             ident = _stage_identity(stage, source_fp)
-            if not _committed(snap["stages"].get(stage), ident):
+            published = snap["stages"].get(
+                "extracted" if stage == CONV_IDS else stage)
+            if not _committed(published, ident):
                 if not _committed(snap["building"].get(stage), ident):
                     return None
                 from_building.add(stage)
-            for s in (stage, CONV_IDS) if stage == "extracted" else (stage,):
-                found[s] = [
-                    f for f in snap["files"] if f["stage"] == s
-                    and bool(f.get("building")) == (stage in from_building)
-                ]
+            found[stage] = [
+                f for f in snap["files"] if f["stage"] == stage
+                and bool(f.get("building")) == (stage in from_building)
+            ]
         with lock:
             staged.update(from_building)
         return found
 
     def stage_commit(written: Dict[str, List[dict]], wall: float) -> None:
-        """Commit freshly written stages (with the side table, for
-        extracted) into ``building``; their earlier staged files leave
-        the record."""
+        """Commit freshly written tables into ``building``; their
+        earlier staged files leave the record."""
         new = [dict(f, building=True) for fs in written.values() for f in fs]
         with lock:
             p = latest[0]
@@ -562,12 +599,11 @@ def build_kg(
             ] + new
             building = dict(p["building"] if p else {})
             for stage in written:
-                if stage != CONV_IDS:
-                    building[stage] = _entry(
-                        stage, new, _stage_identity(stage, source_fp),
-                        "build", wall,
-                    )
-                    staged.add(stage)
+                building[stage] = _entry(
+                    stage, new, _stage_identity(stage, source_fp),
+                    "build", wall,
+                )
+                staged.add(stage)
             latest[0] = _commit(
                 spark, out_dir, p, files, p["stages"] if p else {},
                 _stamps(p) if p else {}, building,
@@ -583,12 +619,10 @@ def build_kg(
 
     p = latest[0]
     if p is not None and (staged or p["building"]):
-        # publish: the staged stages (with the side table, for
-        # extracted) replace their published files; staged entries
-        # this run did not use are dropped.  A build is not a streamed
-        # or appended delta: no stamps.
-        owned = staged | ({CONV_IDS} if "extracted" in staged else set())
-        _publish(spark, out_dir, p, {s: new[s] for s in owned}, "build",
+        # publish: the staged tables replace their published files;
+        # staged entries this run did not use are dropped.  A build is
+        # not a streamed or appended delta: no stamps.
+        _publish(spark, out_dir, p, {s: new[s] for s in staged}, "build",
                  {s: p["building"][s]["wall_sec"] for s in staged},
                  fp=source_fp, stamps={})
     return {s: fsio.join(out_dir, s) for s in STAGES}
