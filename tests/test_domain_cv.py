@@ -138,24 +138,20 @@ def test_duplicate_conv_domain_rows_are_idempotent(spark):
 
 
 def test_prepared_shard_mismatch_rejected(spark):
-    """prepare_fit_rows(n_parts=A) handed to the trainer with
-    n_parts=B must raise — shard layout comes from the prepared RDD,
-    so a silent mismatch would break the twin contract."""
+    """prepare_fit_rows(n_parts=A) handed to the fit with n_parts=B
+    must raise — shard layout comes from the prepared RDD, so a
+    silent mismatch would break the twin contract."""
     import pytest
 
     from webstruct_spark.operators.trained import (
+        fit_prepared,
         prepare_fit_rows,
-        train_crf_distributed,
     )
 
     turns = spark.read.parquet(os.path.join(CORPUS, "transcripts.parquet"))
     prepared = prepare_fit_rows(turns, n_parts=4)
     with pytest.raises(ValueError, match="shards"):
-        train_crf_distributed(None, n_parts=8, prepared=prepared)
-    with pytest.raises(ValueError, match="turns= or prepared="):
-        train_crf_distributed(None, n_parts=4)
-    with pytest.raises(ValueError, match="prepared_keep"):
-        train_crf_distributed(turns, prepared_keep=lambda t: True)
+        fit_prepared(prepared, n_parts=8)
 
 
 def test_conflicting_domain_rows_deterministic_min(spark):
@@ -209,26 +205,19 @@ def test_prepared_placement_invariant(spark):
     import pytest
 
     from webstruct_spark.operators.trained import (
+        fit_prepared,
         prepare_fit_rows,
-        train_crf_distributed,
     )
 
     turns = spark.read.parquet(os.path.join(CORPUS, "transcripts.parquet"))
     prepared = prepare_fit_rows(turns, n_parts=4)
-    want = train_crf_distributed(
-        None, n_parts=4, prepared=prepared
-    ).export()
+    want = fit_prepared(prepared, n_parts=4).export()
     shuffled = prepare_fit_rows(turns, n_parts=4).repartition(4)
-    got = train_crf_distributed(
-        None, n_parts=4, prepared=shuffled
-    ).export()
+    got = fit_prepared(shuffled, n_parts=4).export()
     assert got == want
     # shard-count mismatch still rejected (wrong crc32 modulus)
     with pytest.raises(ValueError, match="n_parts"):
-        train_crf_distributed(
-            None, n_parts=8,
-            prepared=prepare_fit_rows(turns, n_parts=4),
-        )
+        fit_prepared(prepare_fit_rows(turns, n_parts=4), n_parts=8)
 
 
 def test_prepared_modulus_survives_repartition(spark):
@@ -239,14 +228,14 @@ def test_prepared_modulus_survives_repartition(spark):
     import pytest
 
     from webstruct_spark.operators.trained import (
+        fit_prepared,
         prepare_fit_rows,
-        train_crf_distributed,
     )
 
     turns = spark.read.parquet(os.path.join(CORPUS, "transcripts.parquet"))
     spoofed = prepare_fit_rows(turns, n_parts=4).repartition(8)
     with pytest.raises(ValueError, match=r"built with 4 shards but n_parts=8"):
-        train_crf_distributed(None, n_parts=8, prepared=spoofed)
+        fit_prepared(spoofed, n_parts=8)
 
 
 def test_fold_concurrency_identical(spark):

@@ -429,13 +429,16 @@ def test_packed_code_capacity_guard():
 
 
 def test_prepared_rows_byte_identical(spark):
-    """prepare_fit_rows + prepared= (the k-fold reuse path: featurize
-    once, filter per cut executor-side) must be byte-identical to the
-    turns= path — same shards, same full-triple sort, same features —
-    for both a full fit and a tag-filtered cut, pruned and unpruned."""
+    """prepare_fit_rows + fit_prepared (the k-fold reuse path:
+    featurize once, cut per fold executor-side) must be byte-identical
+    to train_crf_distributed on the turns — same shards, same
+    full-triple sort, same features — for both a full fit and a
+    held-out cut, pruned and unpruned."""
     from pyspark import StorageLevel
 
     from webstruct_spark.operators.trained import (
+        fit_prepared,
+        min_df_whitelists,
         prepare_fit_rows,
         train_crf_distributed,
     )
@@ -449,27 +452,51 @@ def test_prepared_rows_byte_identical(spark):
         tagged, n_parts=4, tag_col="tag"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # full fit (no filter), default pruning
-        m_pre = train_crf_distributed(
-            None, n_parts=4, rounds=2, prepared=prepared
+        # full fit (no cut), default pruning
+        m_pre = fit_prepared(
+            prepared, n_parts=4, rounds=2,
+            whitelist=min_df_whitelists(prepared, 2)[None],
         )
         m_df = train_crf_distributed(turns, n_parts=4, rounds=2)
         assert m_pre.export() == m_df.export()
-        # tag-filtered cut == explicit subset DataFrame, unpruned
+        # held-out cut == explicit subset DataFrame, unpruned
         sub = tagged.where(F.col("tag") != 0)
-        m_cut = train_crf_distributed(
-            None, n_parts=4, rounds=1, min_feat_df=None,
-            prepared=prepared, prepared_keep=lambda t: t != 0,
-        )
+        m_cut = fit_prepared(prepared, n_parts=4, rounds=1, held_out=0)
         m_sub = train_crf_distributed(
             sub, n_parts=4, rounds=1, min_feat_df=None
         )
         assert m_cut.export() == m_sub.export()
         assert m_cut.export() != m_pre.export()
+        # held-out cut == explicit subset DataFrame, pruned: the cut's
+        # whitelist is total df minus the held-out rows' df
+        m_cut_pruned = fit_prepared(
+            prepared, n_parts=4, rounds=1, held_out=0,
+            whitelist=min_df_whitelists(prepared, 2, [0])[0],
+        )
+        m_sub_pruned = train_crf_distributed(sub, n_parts=4, rounds=1)
+        assert m_cut_pruned.export() == m_sub_pruned.export()
+        assert m_cut_pruned.export() != m_cut.export()
     finally:
         prepared.unpersist()
-    with pytest.raises(ValueError, match="sample"):
-        train_crf_distributed(None, sample=10, prepared=prepared)
+
+
+def test_empty_corpus_rejected(spark):
+    """A fit that sees no training rows raises instead of returning
+    the untrained initial model: an empty turns frame, and a held-out
+    tag that removes every prepared row."""
+    from webstruct_spark.operators.trained import (
+        fit_prepared,
+        prepare_fit_rows,
+        train_crf_distributed,
+    )
+
+    empty = spark.read.parquet(CORPUS).limit(0)
+    with pytest.raises(ValueError, match="no training data"):
+        train_crf_distributed(empty, n_parts=4, rounds=1)
+    # tag_col=None stores tag 0 on every row
+    prepared = prepare_fit_rows(spark.read.parquet(CORPUS), n_parts=4)
+    with pytest.raises(ValueError, match="no training data"):
+        fit_prepared(prepared, n_parts=4, rounds=1, held_out=0)
 
 
 def test_fit_compact_bit_identical():

@@ -78,7 +78,10 @@ def main() -> None:
         mentions(turns),
         "Expect: Scan parquet with ReadSchema limited to "
         "conv_id/turn_idx/text (column pruning through mapInArrow), "
-        "one MapInArrow node, a Filter, NO Exchange.",
+        "one MapInArrow node, a Filter, and one Exchange: "
+        "extract_rows' scan widening, a RoundRobinPartitioning below "
+        "the MapInArrow (the one-file corpus scans narrower than the "
+        "cores; a scan already that wide gets no Exchange).",
     )
     add(
         "group_entities (single shuffle)",

@@ -15,14 +15,21 @@ Composition (every ingredient is an already-gated operator):
   construction GROUPED: every conversation of one domain lands in the
   same fold, which is exactly GroupKFold's contract (no RNG, no
   driver-side shuffling);
-* per fold: ``train_crf_distributed`` on the other k-1 folds (iterated
-  parameter mixing, min-df-pruned), distributed inference on the
-  held-out fold, segment P/R/F1 vs the injected gold mentions
-  (``set_prf``'s exact integer-scaled ratios).
+* the distributed trainer's prepare → whitelist → fit contract
+  (:mod:`webstruct_spark.operators.trained`): the corpus is prepared
+  ONCE with the fold carried per row (``prepare_fit_rows``), ONE
+  ``min_df_whitelists`` pass yields every fold's min-df whitelist,
+  and each fold is ``fit_prepared(..., held_out=fold)`` (iterated
+  parameter mixing on the other k-1 folds) — byte-identical to
+  ``train_crf_distributed`` on the fold's training turns;
+* per fold: distributed inference on the held-out fold, segment
+  P/R/F1 vs the injected gold mentions (``set_prf``'s exact
+  integer-scaled ratios).
 
 Scale shape: the folds DataFrame is a tiny (conv_id, domain, fold)
-table — every train/test cut is a broadcast semi-join against it; the
-k trainings dominate and each is the one-shuffle IPM fit.
+table — every test cut is a broadcast semi-join against it and every
+training cut an executor-side tag filter; the k fits' mixing rounds
+dominate.
 
 ``domain_group_kfold_local`` is the single-node twin the gold builder
 and the pytest gate both run — it must stay in lockstep with
@@ -114,7 +121,8 @@ def domain_group_kfold_eval(
     jobs.
 
     Memory trade: each in-flight fold persists its own compact
-    (k-1)/k training cut on top of the shared prepared RDD, so
+    (k-1)/k training cut (one cache per fold fit) on top of the
+    shared prepared RDD, so
     steady-state cache is ~1 + concurrency*(k-1)/k compact-featurized
     copies (all MEMORY_AND_DISK — spills, never OOMs; the compact
     int-array form is ~20x smaller than the round-4 feature-string
@@ -196,87 +204,44 @@ def _kfold_run(
     n_parts, rounds, min_feat_df, fold_concurrency=1,
 ) -> None:
     """Fold loop of :func:`domain_group_kfold_eval` (split out so the
-    prepared-RDD unpersist wraps it in one finally).  Folds share only
-    read-only state (the persisted prepared RDD, the checkpointed
-    folds table), so they are safe to run as concurrent Spark jobs via
+    prepared-RDD unpersist wraps it in one finally): ONE
+    ``min_df_whitelists(prepared, min_feat_df, fold_ids)`` pass gives
+    every fold's whitelist (a fold's cut excludes exactly the rows
+    tagged with it, so its df is total minus the fold's own count),
+    then each fold fits ``fit_prepared(prepared, ...,
+    whitelist=wl[fold], held_out=fold)`` and scores the held-out
+    turns.  Folds share only read-only state (the persisted prepared
+    RDD, the whitelists, the checkpointed folds table), so they are
+    safe to run as concurrent Spark jobs via
     :func:`webstruct_spark.concurrency.run_concurrent_jobs` — the
     first fold failure cancels every still-QUEUED fold AND interrupts
     the in-flight folds' Spark jobs (shared job group,
     ``interruptOnCancel``), then re-raises.  Output rows are ascending
     by fold either way."""
     import functools
-    from operator import add as _add
 
     from webstruct_spark.concurrency import run_concurrent_jobs
     from webstruct_spark.operators.extract import mentions
     from webstruct_spark.operators.metrics import set_prf
     from webstruct_spark.operators.trained import (
         crf_tagged_mentions,
-        train_crf_distributed,
+        fit_prepared,
+        min_df_whitelists,
     )
 
     fold_ids = sorted(fold_sizes)
     wl_by_fold: Dict[int, frozenset] = {}
     if min_feat_df is not None and min_feat_df > 1:
-        # ONE (feature -> per-fold sequence count) pass over the
-        # shared prepared RDD replaces each fold fit's own df job:
-        # a fold's training cut excludes exactly the rows tagged with
-        # it, so df_fold(f) = total(f) - count_in_fold(f) — the same
-        # integers the trainer's internal count produces on the cut
-        # (identical unique-features-per-sequence arithmetic; the
-        # fold-level equality is pytest-gated vs the single-node twin).
-        fold_pos = {f: i for i, f in enumerate(fold_ids)}
-        k_live = len(fold_ids)
-
-        def _df_fold_pairs(rec, _pos=fold_pos, _k=k_live):
-            import numpy as np
-
-            (_pid, _n, row_tags, _tv, rtc, _gid, tfc, fid, vocab) = rec
-            counts = np.zeros((len(vocab), _k + 1), dtype=np.int64)
-            feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
-            np.cumsum(tfc, out=feat_off[1:])
-            row_tok_off = np.zeros(len(rtc) + 1, dtype=np.int64)
-            np.cumsum(rtc, out=row_tok_off[1:])
-            row_feat_off = feat_off[row_tok_off]
-            for r in range(len(rtc)):
-                seg = fid[row_feat_off[r] : row_feat_off[r + 1]]
-                if len(seg):
-                    col = _pos[row_tags[r]]
-                    u = np.unique(seg)
-                    counts[u, col] += 1
-                    counts[u, _k] += 1
-            for j in np.nonzero(counts[:, _k])[0]:
-                yield vocab[j], counts[j].copy()
-
-        # pre-collect threshold filter (mirrors the trainer's own df
-        # path): total df < min_feat_df implies every per-fold df is
-        # below it too, so the hapax majority never reaches the driver
-        pairs = (
-            prepared.flatMap(_df_fold_pairs)
-            .reduceByKey(_add)
-            .filter(lambda kv, _k=k_live, _m=min_feat_df: kv[1][_k] >= _m)
-            .collect()
-        )
-        for f in fold_ids:
-            col = fold_pos[f]
-            wl_by_fold[f] = frozenset(
-                feat
-                for feat, cnt in pairs
-                if cnt[k_live] - cnt[col] >= min_feat_df
-            )
-        del pairs
+        wl_by_fold = min_df_whitelists(prepared, min_feat_df, fold_ids)
 
     def run_fold(fold):
         test_ids = F.broadcast(
             folds.where(F.col("fold") == fold).select("conv_id")
         )
         test_turns = turns.join(test_ids, "conv_id", "left_semi")
-        model = train_crf_distributed(
-            None, n_parts=n_parts, rounds=rounds,
-            min_feat_df=min_feat_df,
-            prepared=prepared,
-            prepared_keep=lambda t, _f=fold: t != _f,
-            prune_whitelist=wl_by_fold.get(fold),
+        model = fit_prepared(
+            prepared, n_parts=n_parts, rounds=rounds,
+            whitelist=wl_by_fold.get(fold), held_out=fold,
         )
         # set_prf is a SINGLE full-outer-join job now, so the fold's
         # inference and gold extraction each execute exactly once —

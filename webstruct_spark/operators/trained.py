@@ -1,19 +1,39 @@
 # -*- coding: utf-8 -*-
-"""Trained-model tagging path (closes SURVEY M1): distributed label
-extraction → deterministic driver-side fit on a bounded sample →
-broadcast weights → distributed batched-Viterbi inference.
+"""Trained-model tagging path (closes SURVEY M1): fit the averaged-
+perceptron CRF of :mod:`webstruct_spark.kernel.crf` on labeled turns,
+broadcast its weights, tag by distributed batched-Viterbi inference.
 
 Mirrors the reference train→predict workflow
 (/root/reference/webstruct/crfsuite.py:49-97,
-/root/reference/webstruct/wapiti.py:178-246): the labeled sample is
-what the reference would load from annotated trees; the fit is the
-averaged-perceptron CRF in :mod:`webstruct_spark.kernel.crf`; the
-predict is the same flat-row mapInArrow pass as the rule tagger.
+/root/reference/webstruct/wapiti.py:178-246): the labeled turns are
+what the reference would load from annotated trees; the predict
+(:func:`crf_tagged_mentions`) is the same flat-row mapInArrow pass as
+the rule tagger, fully distributed and narrow.
 
-Scale notes: the TRAINING sample is bounded (``sample`` turns,
-order-deterministic) — exactly the reference's posture (its CI trains
-on a handful of pages).  INFERENCE is fully distributed and narrow.
-The labeled-sample collect is the only driver materialization.
+Two fits:
+
+* :func:`train_crf` — driver-side, on a bounded order-deterministic
+  head (``sample`` turns), the reference CI's posture (it trains on a
+  handful of pages).  That collect is its only driver materialization.
+* :func:`train_crf_distributed` — the FULL corpus by iterated
+  parameter mixing, stated as three steps whose only contract is the
+  compact per-shard record of :func:`_compact_shard`:
+
+  1. :func:`prepare_fit_rows` — turns → one compact record per shard
+     (sorted, tokenized, gold-encoded, featurized, int-interned); the
+     only way rows enter a fit;
+  2. :func:`min_df_whitelists` — the one document-frequency counter:
+     per held-out tag, the features that reach ``min_df`` sequences
+     among the other rows (``None`` holds nothing out);
+  3. :func:`fit_prepared` — one executor pass cuts the held-out rows,
+     applies the whitelist and the hash remap, is persisted once, and
+     the mixing rounds run over it.
+
+  :func:`train_crf_distributed` runs the three on one corpus;
+  :mod:`webstruct_spark.operators.domain_cv` prepares once and runs
+  whitelist → fit per fold.  Each has a single-node twin
+  (:func:`train_crf_local`, :func:`train_crf_mixed_local`) with
+  byte-identical weights.
 """
 from __future__ import annotations
 
@@ -134,10 +154,10 @@ def _compact_shard(pid, n_parts, rows):
     string lists (first-occurrence interning).  ``n_parts`` is the
     shard modulus of ``pid = crc32(conv_id) % n_parts``; it rides in
     the record so the trainer can check it after any RDD
-    transformation.  This is the ONE compaction both the ``turns=``
-    and ``prepared=`` paths cache, so their fit inputs are
-    byte-identical BY CONSTRUCTION (and pytest-pinned vs the
-    single-node twin).  Why compact: the cached
+    transformation.  This is the ONE compaction every distributed
+    fit caches (and the driver-side compact fit reuses), so a full fit
+    and a CV fold's cut see byte-identical inputs BY CONSTRUCTION
+    (pytest-pinned vs the single-node twin).  Why compact: the cached
     RDD is re-deserialized by EVERY mixing round and every CV fold —
     as per-token feature-string lists that unpickle cost ~1 s/round at
     sf0.1 (it was the dominant trainer cost, >4x the actual perceptron
@@ -237,26 +257,24 @@ def prepare_fit_rows(
     text_col: str = "text",
     tag_col: str | None = None,
 ):
-    """Fit inputs for :func:`train_crf_distributed`: an RDD with ONE
-    compact record per shard (see :func:`_compact_shard`), identity-
-    partitioned by ``pid = crc32(conv_id) % n_parts`` — the same shard
-    assignment the trainer uses — with the per-shard full-triple sort,
+    """Fit inputs for :func:`min_df_whitelists` and
+    :func:`fit_prepared`: an RDD with ONE compact record per shard
+    (see :func:`_compact_shard`), identity-partitioned by ``pid =
+    crc32(conv_id) % n_parts``, with the per-shard full-triple sort,
     tokenization, gold BILOU encoding, and token-feature extraction
     already done.
 
-    Purpose: cross-validation reuse.  Tokenize/featurize are the
-    expensive, ROW-LOCAL, split-invariant part of every fit; a k-fold
-    caller (:func:`webstruct_spark.operators.domain_cv.
-    domain_group_kfold_eval`) prepares the corpus ONCE, persists the
-    result, and hands each fold's training cut to the trainer via
-    ``prepared=`` + ``prepared_keep=`` — k-1 redundant featurization
-    passes collapse into one, and the fold filter runs executor-side
-    on the per-row ``tag`` (no driver-held id sets).  Filtering rows
+    Tokenize/featurize are the expensive, ROW-LOCAL, split-invariant
+    part of every fit, so a k-fold caller (:func:`webstruct_spark.
+    operators.domain_cv.domain_group_kfold_eval`) prepares the corpus
+    ONCE and fits each fold's training cut from it with
+    ``fit_prepared(..., held_out=fold)`` — the cut runs executor-side
+    on the per-row tag (no driver-held id sets).  Filtering rows
     AFTER the sort preserves order, so a fold's cut is byte-identical
     to sorting the cut itself (pytest-gated in test_trained_crf).
 
     ``tag_col`` names an int/str column carried per row (e.g. the CV
-    fold) for ``prepared_keep`` to filter on; None stores 0.
+    fold) for ``held_out`` to match; None stores 0.
 
     The caller owns persistence: ``rdd.persist(...)`` before the
     first fit, ``unpersist()`` after the last.
@@ -349,395 +367,351 @@ def _check_rounds(rounds: int) -> None:
         )
 
 
-def train_crf_distributed(
-    turns: DataFrame | None,
-    entity_types=DEFAULT_TYPES,
-    n_parts: int = 8,
-    rounds: int = 4,
-    sample: int | None = None,
-    text_col: str = "text",
-    min_feat_df: int | None = 2,
-    feat_hash_dim: int | None = None,
-    prepared=None,
-    prepared_keep=None,
-    prune_whitelist=None,
-) -> CRFTagger:
-    """Distributed CRF training over the FULL labeled corpus (or an
-    optional bounded head) via iterated parameter mixing (McDonald,
-    Hall & Mann, NAACL 2010): each mixing round broadcasts the current
-    weights, every partition runs one deterministic averaged-perceptron
-    epoch from them over its own shard (sorted (conv_id, turn_idx,
-    text) triples), and the per-feature parameter average is computed
-    EXECUTOR-SIDE in ascending pid order.
+def min_df_whitelists(prepared, min_df: int, held_out=(None,)):
+    """``{h: frozenset}``: for each held-out tag ``h``, the feature
+    names whose document frequency (number of training sequences
+    containing them) over the rows NOT tagged ``h`` is at least
+    ``min_df`` — ``None`` holds nothing out, so its whitelist is
+    ``total >= min_df``; a tag ``f`` gives ``total - count_in_f >=
+    min_df``.  The ONE document-frequency counter of the package:
+    the single-corpus fit asks for ``[None]``, k-fold CV for every
+    fold at once, so k df jobs collapse into one pass over the
+    prepared records.
 
-    This closes the reference workflow gap left by :func:`train_crf`
-    (which, like the reference CI — /root/reference/webstruct/
-    tests/test_crfsuite.py:31-60 — trains on a small sorted head): the
-    reference's ``WapitiCRF.fit`` (/root/reference/webstruct/
-    wapiti.py:178-246) trains on the whole annotated corpus, and so
-    does this, without ever collecting the corpus to the driver.
-
-    Determinism (load-bearing for the driver hash oracle vs the
-    single-node twin :func:`train_crf_mixed_local`): the shard
-    assignment is ``crc32(conv_id) % n_parts`` (bit-identical JVM-side
-    and in :mod:`zlib`), every shard fit is input-order deterministic
-    with no RNG, and every per-feature average sums its shard vectors
-    in ascending pid order from a zero accumulator — the float-op
-    sequence of :meth:`CRFTagger.average_exports` exactly, so the
-    mixed weights are byte-identical to the twin's.
-
-    Model-size bound: ``min_feat_df`` prunes every feature whose
-    document frequency (number of training sequences containing it)
-    is below the threshold BEFORE any fitting — the reference's own
-    min_df posture (/root/reference/webstruct/
-    feature_extraction.py:147-163 prunes rare features the same way)
-    applied to the perceptron feature space.  On natural-language
-    corpora the ``w=``/``p=``/``n=`` lexical features are Zipf-
-    distributed, so df>=2 alone removes the hapax-legomena majority of
-    the vocabulary; the per-round weight blobs, the per-round shuffle,
-    and the final broadcast model all scale with the SHARED vocabulary
-    instead of the raw token vocabulary.  ``min_feat_df=None`` (or 1)
-    disables pruning.  ``feat_hash_dim`` additionally hashes every
-    feature into a FIXED number of buckets (the hashing trick,
-    Weinberger et al. 2009) — a hard corpus-INDEPENDENT bound on
-    model size for corpora whose shared vocabulary is itself huge;
-    the model owns the map, so broadcast inference applies it
-    transparently.  Both knobs compose (prune on raw names, then
-    hash) and both stay byte-identical to the twin.
-
-    100 TB shape: the corpus moves through ONE Arrow groupBy(pid)
-    shuffle into :func:`_compact_shard` (sorted, tokenized, gold-
-    encoded, feature-extracted, int-interned), then one tiny hop of
-    n_parts compact blobs pins exactly one shard per partition
-    (MEMORY_AND_DISK — spills, never OOMs; the compact form is ~20x
-    smaller than feature strings, so the per-round cache reload is
-    near-free).  Each mixing round is a shuffle-free ``mapPartitions``
-    epoch (native C inner loop, kernel/_crf_native.c, bit-identical to
-    the Python oracle) followed by a small feature-BLOCK ``groupByKey``
-    (deterministic crc32 blocks; within a block every feature still
-    averages zero-accumulator + ascending-pid + /P) whose averaged
-    output — exactly ONE model — is what the driver collects and
-    broadcasts; the driver never holds n_parts simultaneous weight
-    blobs (the round-3 scale caveat).
-
-    ``prepared``/``prepared_keep``: reuse path for k-fold callers.
-    ``prepared`` is a :func:`prepare_fit_rows` RDD (compact per-shard
-    records, identity-partitioned with the same crc32 shards; the
-    n_parts each record carries must equal ``n_parts``, else the
-    first mixing round raises);
-    ``prepared_keep`` is an executor-side predicate over each row's
-    tag (e.g. ``lambda fold: fold != held_out``).  The trainer then
-    skips the corpus shuffle AND the featurization — only the compact
-    fold cut and the fit rounds run — and stays byte-identical to the
-    ``turns=`` path (rows were sorted before compaction; filtering
-    preserves order — pytest test_prepared_rows_byte_identical).
-    ``turns`` may be None in this mode; ``sample=`` is rejected.
-
-    ``prune_whitelist``: optionally supplies the min-df surviving
-    feature set (an iterable of feature names) instead of having this
-    call count document frequencies itself — for k-fold callers that
-    can derive EVERY fold's whitelist from one shared (feature, fold)
-    count pass over the prepared corpus (k df jobs collapse into one).
-    The caller owns equality with what the internal count would have
-    produced (domain_cv derives it from the same per-sequence unique-
-    feature counts; pytest-gated).  Only meaningful with
-    ``min_feat_df``; ignored when pruning is off.
-    """
-    _check_rounds(rounds)
+    This is the reference's min_df posture (/root/reference/
+    webstruct/feature_extraction.py:147-163 prunes rare features the
+    same way) applied to the perceptron feature space: the ``w=``/
+    ``p=``/``n=`` lexical features are Zipf-distributed, so df>=2
+    alone removes the hapax majority, and the per-round weight blobs,
+    the mix shuffle and the broadcast model then scale with the
+    SHARED vocabulary.  Counts are per-sequence unique features — the
+    integers :func:`train_crf_mixed_local` counts in Python.  The
+    collect is filtered on ``total >= min_df`` first: a feature below
+    it is below it in every cut too, so the hapax majority never
+    reaches the driver."""
     from operator import add as _add
 
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
+    held = list(held_out)
+    tags = dict.fromkeys(h for h in held if h is not None)
+    pos = {h: i for i, h in enumerate(tags)}
+    k = len(pos)
 
+    def _df_pairs(rec, _pos=pos, _k=k):
+        import numpy as np
+
+        (_pid, _n, row_tags, _tv, rtc, _gid, tfc, fid, vocab) = rec
+        # column _k counts every sequence; column i only those tagged
+        # with the i-th held-out value
+        counts = np.zeros((len(vocab), _k + 1), dtype=np.int64)
+        feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
+        np.cumsum(tfc, out=feat_off[1:])
+        row_tok_off = np.zeros(len(rtc) + 1, dtype=np.int64)
+        np.cumsum(rtc, out=row_tok_off[1:])
+        row_feat_off = feat_off[row_tok_off]
+        for r in range(len(rtc)):
+            seg = fid[row_feat_off[r] : row_feat_off[r + 1]]
+            if len(seg):
+                u = np.unique(seg)
+                col = _pos.get(row_tags[r])
+                if col is not None:
+                    counts[u, col] += 1
+                counts[u, _k] += 1
+        nz = np.nonzero(counts[:, _k])[0]
+        for j, c in zip(nz.tolist(), counts[nz].tolist()):
+            yield vocab[j], tuple(c)
+
+    pairs = (
+        prepared.flatMap(_df_pairs)
+        .reduceByKey(lambda a, b: tuple(map(_add, a, b)))
+        .filter(lambda kv, _k=k, _m=min_df: kv[1][_k] >= _m)
+        .collect()
+    )
+    return {
+        h: frozenset(
+            f
+            for f, c in pairs
+            if c[k] - (0 if h is None else c[pos[h]]) >= min_df
+        )
+        for h in held
+    }
+
+
+def _fit_rows(it, held_out, bc_wl, fx):
+    """The one executor pass of :func:`fit_prepared` over compact
+    records: drop the rows tagged ``held_out``, keep only whitelisted
+    features (on raw names), then remap them to hash buckets — each
+    step optional.  Rows were sorted BEFORE compaction and filtering
+    preserves order, so a cut equals compacting the filtered rows
+    directly; a record left with no rows is dropped."""
     import numpy as np
 
-    if prepared is not None:
-        if sample is not None:
-            raise ValueError(
-                "train_crf_distributed: sample= is incompatible with "
-                "prepared= (the head cut happens before featurization)"
+    wl = bc_wl.value if bc_wl is not None else None
+    for rec in it:
+        (pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
+        if held_out is not None:
+            rmask = np.fromiter(
+                (t != held_out for t in row_tags),
+                dtype=bool, count=len(row_tags),
             )
-        # The shard modulus is checked against n_parts in the first
-        # mixing round, from the n_parts every compact record carries.
-        # NOTE: no partitioner/placement requirement — compact fit
-        # records are SELF-CONTAINED (each carries its pid and its
-        # full shard), the averaging sorts contributions by pid from
-        # a zero accumulator, and P counts records, so any placement
-        # of intact records (repartitioned, even reloaded) yields
-        # byte-identical weights; placement is purely a load-balance
-        # concern (pytest-gated in test_domain_cv).
-        rows_src = prepared
-        keep = prepared_keep
-    else:
-        if turns is None:
-            raise ValueError(
-                "train_crf_distributed: need turns= or prepared="
+            if not rmask.any():
+                continue
+            if not rmask.all():
+                tmask = np.repeat(rmask, rtc)
+                fmask = np.repeat(tmask, tfc)
+                row_tags = [t for t, k in zip(row_tags, rmask) if k]
+                rtc, gid, tfc = rtc[rmask], gid[tmask], tfc[tmask]
+                fid = fid[fmask]
+        if wl is not None:
+            vmask = np.fromiter(
+                (f in wl for f in vocab), dtype=bool, count=len(vocab)
             )
-        if prepared_keep is not None:
-            raise ValueError(
-                "train_crf_distributed: prepared_keep= requires "
-                "prepared= (it filters prepared rows, not turns)"
-            )
-        src = turns.select(
-            "conv_id", "turn_idx", F.col(text_col).alias("text")
-        )
-        if sample is not None:
-            # full-triple order: ties on (conv_id, turn_idx) would
-            # otherwise truncate nondeterministically, breaking the
-            # byte-identity contract with train_crf_mixed_local (which
-            # sorts whole (conv_id, turn_idx, text) triples)
-            src = src.orderBy("conv_id", "turn_idx", "text").limit(sample)
-        rows_src = prepare_fit_rows(src, n_parts=n_parts)
-        keep = None
+            fkeep = vmask[fid]
+            cum = np.zeros(len(fkeep) + 1, dtype=np.int64)
+            np.cumsum(fkeep, out=cum[1:])
+            feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
+            np.cumsum(tfc, out=feat_off[1:])
+            tfc = (cum[feat_off[1:]] - cum[feat_off[:-1]]).astype(np.int32)
+            fid = fid[fkeep]
+        if fx is not None:
+            fid, vocab = _hash_remap(vocab, fid, fx)
+        yield pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab
+
+
+def fit_prepared(
+    prepared,
+    n_parts: int = 8,
+    rounds: int = 4,
+    entity_types=DEFAULT_TYPES,
+    whitelist=None,
+    feat_hash_dim: int | None = None,
+    held_out=None,
+) -> CRFTagger:
+    """Iterated-parameter-mixing fit (McDonald, Hall & Mann, NAACL
+    2010) over a :func:`prepare_fit_rows` RDD: each mixing round
+    broadcasts the current weights, every shard runs one deterministic
+    averaged-perceptron epoch from them, and the per-feature parameter
+    average is computed EXECUTOR-SIDE in ascending pid order.
+
+    ``held_out`` drops the rows whose tag equals it (a CV fold's
+    training cut); ``whitelist`` keeps only those feature names (from
+    :func:`min_df_whitelists`, computed for the same ``held_out``);
+    ``feat_hash_dim`` hashes every feature into a FIXED number of
+    buckets (the hashing trick, Weinberger et al. 2009) — a corpus-
+    independent model bound; the model owns the map, so broadcast
+    inference applies it transparently.  One ``mapPartitions`` pass
+    (:func:`_fit_rows`) applies all three and is persisted once
+    (MEMORY_AND_DISK — spills, never OOMs); with none of them set the
+    rounds run on ``prepared`` as is, whose persistence the caller
+    owns.
+
+    Determinism (load-bearing for the driver hash oracle vs the
+    single-node twin :func:`train_crf_mixed_local`): shards are
+    ``crc32(conv_id) % n_parts``, every shard fit is input-order
+    deterministic with no RNG, and every per-feature average sums its
+    shard vectors in ascending pid order from a zero accumulator —
+    the float-op sequence of :meth:`CRFTagger.average_exports`, so the
+    weights are byte-identical to the twin's.  Records are self-
+    contained (each carries its pid, its shard modulus and its whole
+    shard), so any placement of intact records gives the same weights;
+    placement only affects balance.  The modulus every record carries
+    must equal ``n_parts``, else round 0 raises; a fit that sees no
+    record raises "no training data".
+
+    Each round is a shuffle-free ``mapPartitions`` epoch (native C
+    inner loop, kernel/_crf_native.c) followed by a small feature-
+    BLOCK ``groupByKey`` whose averaged output — exactly ONE model —
+    is what the driver collects and broadcasts; the driver never holds
+    n_parts weight blobs at once."""
+    _check_rounds(rounds)
+    import functools
+
+    from pyspark import StorageLevel
+
     # broadcasts must go through the context that owns the fit rows
     # (not a thread-local "active" session, which can differ in
     # multi-session drivers)
-    sc = rows_src.context
-
-    if keep is not None:
-        # executor-side fold cut over the compact records: rows were
-        # sorted BEFORE compaction, and filtering preserves order, so
-        # the cut equals compacting the filtered rows directly
-        def _cut(it, _keep=keep):
-            import numpy as np
-
-            for rec in it:
-                (pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
-                rmask = np.fromiter(
-                    (bool(_keep(t)) for t in row_tags),
-                    dtype=bool, count=len(row_tags),
-                )
-                if not rmask.any():
-                    continue
-                if rmask.all():
-                    yield rec
-                    continue
-                tmask = np.repeat(rmask, rtc)
-                fmask = np.repeat(tmask, tfc)
-                yield (
-                    pid,
-                    n,
-                    [t for t, k in zip(row_tags, rmask) if k],
-                    tv, rtc[rmask], gid[tmask], tfc[tmask],
-                    fid[fmask], vocab,
-                )
-
-        parted = rows_src.mapPartitions(_cut, preservesPartitioning=True)
-    else:
-        parted = rows_src
-    parted = parted.persist(StorageLevel.MEMORY_AND_DISK)
+    sc = prepared.context
+    model = CRFTagger(entity_types, feat_hash_dim=feat_hash_dim)
     bc_wl = None
-    parent = None
+    if whitelist is not None:
+        bc_wl = sc.broadcast(frozenset(whitelist))
+    if held_out is None and bc_wl is None and not feat_hash_dim:
+        rows = prepared
+    else:
+        # lazy persist: round 0 materializes the cache while it fits
+        rows = prepared.mapPartitions(
+            functools.partial(
+                _fit_rows, held_out=held_out, bc_wl=bc_wl,
+                fx=model._fx if feat_hash_dim else None,
+            ),
+            preservesPartitioning=True,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        prune = min_feat_df is not None and min_feat_df > 1
-        if prune and prune_whitelist is not None:
-            bc_wl = sc.broadcast(frozenset(prune_whitelist))
-        elif prune:
-            # global per-sequence document frequency over the cached
-            # fit inputs; the whitelist collect is bounded by the
-            # SHARED vocabulary (features appearing in >=2 sequences)
-            def _df_pairs(rec):
-                import numpy as np
-
-                (_pid, _n, _rt, _tv, rtc, _gid, tfc, fid, vocab) = rec
-                counts = np.zeros(len(vocab), dtype=np.int64)
-                feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
-                np.cumsum(tfc, out=feat_off[1:])
-                row_tok_off = np.zeros(len(rtc) + 1, dtype=np.int64)
-                np.cumsum(rtc, out=row_tok_off[1:])
-                row_feat_off = feat_off[row_tok_off]
-                for r in range(len(rtc)):
-                    seg = fid[row_feat_off[r] : row_feat_off[r + 1]]
-                    if len(seg):
-                        counts[np.unique(seg)] += 1
-                for j in np.nonzero(counts)[0]:
-                    yield vocab[j], int(counts[j])
-
-            wl_feats = (
-                parted.flatMap(_df_pairs)
-                .reduceByKey(_add)
-                .filter(lambda kv: kv[1] >= min_feat_df)
-                .keys()
-                .collect()
-            )
-            bc_wl = sc.broadcast(frozenset(wl_feats))
-        model = CRFTagger(entity_types, feat_hash_dim=feat_hash_dim)
-        if prune or feat_hash_dim:
-            # one transform pass bakes BOTH round-invariant feature
-            # maps into the cache: whitelist filter (on raw names)
-            # then hash buckets — fit rounds reuse them as-is
-            def _xform(it, _bc=bc_wl, _fx=model._fx, _h=feat_hash_dim):
-                import numpy as np
-
-                wl = _bc.value if _bc is not None else None
-                for rec in it:
-                    (pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab) = rec
-                    if wl is not None:
-                        vmask = np.fromiter(
-                            (f in wl for f in vocab),
-                            dtype=bool, count=len(vocab),
-                        )
-                        fkeep = vmask[fid]
-                        cum = np.zeros(len(fkeep) + 1, dtype=np.int64)
-                        np.cumsum(fkeep, out=cum[1:])
-                        feat_off = np.zeros(len(tfc) + 1, dtype=np.int64)
-                        np.cumsum(tfc, out=feat_off[1:])
-                        tfc = (
-                            cum[feat_off[1:]] - cum[feat_off[:-1]]
-                        ).astype(np.int32)
-                        fid = fid[fkeep]
-                    if _h:
-                        fid, vocab = _hash_remap(vocab, fid, _fx)
-                    yield pid, n, row_tags, tv, rtc, gid, tfc, fid, vocab
-
-            # lazy persist: round 0 materializes the transformed cache
-            # while it fits (the work happens either way; a separate
-            # count() job added one full extra pass over the cache).
-            # The PARENT cache must outlive round 0's lazy
-            # materialization, so it is released in the finally below,
-            # not here.  P (the mixing divisor) is likewise no longer
-            # pre-counted: every fit record contributes exactly one
-            # trans/init sentinel, so the round's collected sentinel
-            # contribution count IS the live record count.
-            parent = parted
-            parted = parted.mapPartitions(
-                _xform, preservesPartitioning=True
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            parent = None
-
-        tags = tuple(model.tags)
-        T = len(tags)
-        # weights travel in MATRIX form between driver and executors
-        # (to_blocks/from_blocks): one contiguous ndarray instead of a
-        # per-feature list dict — ~10x cheaper to (un)pickle at the
-        # unpruned vocabulary (the per-round driver rebuild + export +
-        # broadcast was ~0.5 s/round at sf0.1).  Values are
-        # bit-identical; only the transport changed.
         blocks = model.to_blocks()
         for _round in range(rounds):
-            bc = sc.broadcast(blocks)
-
-            def fit_part(it, _bc=bc):
-                for rec in it:
-                    m = CRFTagger.from_blocks(_bc.value)
-                    m.fit_compact(*rec[3:], epochs=1)
-                    yield rec[0], rec[1], m.w, m.trans, m.init
-
-            # The executor-side mix ships feature BLOCKS, not single
-            # features: per (shard, block) one (keys, stacked-matrix)
-            # record — crc32(f) % n_blocks is deterministic, so every
-            # shard blocks identically.  Per-feature records (vocab ×
-            # n_parts tiny pickled tuples; ~116k at sf0.1/32 shards)
-            # made the mix shuffle the dominant per-round cost; blocks
-            # cut the record count ~50x at identical math: inside a
-            # block each feature still averages as zero-accumulator +
-            # ascending-pid adds + /P — the float-op sequence of
-            # average_exports exactly (np.stack copies values
-            # bit-exactly).  Sentinel blocks can't collide with real
-            # ones: ints for features, strings for trans/init.
-            n_blocks = 4 * max(8, n_parts)
-
-            def expand(rec, _nb=n_blocks):
-                import zlib as _zlib
-
-                pid, n, w, trans, init = rec
-                # the trans sentinel is keyed by the record's shard
-                # modulus, so its collected keys are every n_parts the
-                # fit saw
-                yield "\x00trans", (pid, ([n], trans.reshape(1, -1)))
-                yield "\x00init", (pid, ([0], init.reshape(1, -1)))
-                blocks: dict = {}
-                for f, v in w.items():
-                    b = _zlib.crc32(f.encode("utf-8")) % _nb
-                    blk = blocks.get(b)
-                    if blk is None:
-                        blk = blocks[b] = ([], [])
-                    blk[0].append(f)
-                    blk[1].append(v)
-                for b, (keys, vs) in blocks.items():
-                    yield b, (pid, (keys, np.stack(vs)))
-
-            def avg(vals):
-                # zero accumulator + ascending-pid adds per key — the
-                # float-op sequence of average_exports; the /P divide
-                # happens ONCE on the driver (elementwise over the
-                # assembled matrix — the same per-element sum/P op in
-                # the same order, bit-equal).  n_contribs rides along:
-                # for the trans/init sentinel blocks it equals the
-                # live record count, which is exactly P.
-                vl = sorted(vals, key=lambda kv: kv[0])
-                accs: dict = {}
-                for _pid, (keys, mat) in vl:
-                    for k, row in zip(keys, mat):
-                        a = accs.get(k)
-                        if a is None:
-                            a = accs[k] = np.zeros_like(row)
-                        a += row
-                ks = list(accs.keys())
-                return len(vl), ks, np.stack([accs[k] for k in ks])
-
-            items = (
-                parted.mapPartitions(fit_part)
-                .flatMap(expand)
-                .groupByKey(numPartitions=max(8, n_parts))
-                .mapValues(avg)
-                .collect()
-            )
-            bc.destroy()
-            if parent is not None:
-                # round 0 materialized the transformed cache; the
-                # pre-transform cut cache is dead weight from here
-                # (matches the pre-lazy-persist steady-state footprint
-                # of one compact copy per in-flight fit)
-                parent.unpersist()
-                parent = None
-            if not items:
-                raise ValueError(
-                    "train_crf_distributed: no training data"
-                )
-            P = None
-            trans = init = None
-            keys_all: list = []
-            mats: list = []
-            for blk, (n_contribs, ks, mat) in items:
-                if blk == "\x00trans":
-                    if ks != [n_parts]:
-                        # a prepared RDD built with another shard
-                        # modulus would fit a different shard split
-                        # than the caller (and the twin) believe
-                        raise ValueError(
-                            "train_crf_distributed: prepared RDD was "
-                            "built with %s shards but n_parts=%d — "
-                            "prepare_fit_rows must be built with the "
-                            "same n_parts"
-                            % ("/".join(map(str, sorted(ks))), n_parts)
-                        )
-                    P = float(n_contribs)
-                    trans = mat[0].reshape(T, T)
-                elif blk == "\x00init":
-                    init = mat[0].reshape(T)
-                else:
-                    keys_all.extend(ks)
-                    mats.append(mat)
-            wmat = (
-                np.vstack(mats) / P
-                if mats
-                else np.zeros((0, T), dtype=np.float64)
-            )
-            blocks = (
-                tags, keys_all, wmat, trans / P, init / P, feat_hash_dim,
-            )
-        model = CRFTagger.from_blocks(blocks)
+            blocks = _mix_round(rows, blocks, n_parts)
+        return CRFTagger.from_blocks(blocks)
     finally:
-        parted.unpersist()
-        if parent is not None:
-            parent.unpersist()
+        if rows is not prepared:
+            rows.unpersist()
         if bc_wl is not None:
-            # safe only after the pruned RDD is unpersisted: nothing
+            # safe only after the filtered RDD is unpersisted: nothing
             # can recompute it once its whitelist broadcast is gone
             bc_wl.destroy()
-    return model
+
+
+def _mix_round(rows, blocks, n_parts: int) -> tuple:
+    """One mixing round of :func:`fit_prepared`: broadcast ``blocks``
+    (:meth:`CRFTagger.to_blocks` form), fit one epoch per shard,
+    average executor-side, and return the mixed model's blocks."""
+    import numpy as np
+
+    sc = rows.context
+    tags, feat_hash_dim = blocks[0], blocks[5]
+    T = len(tags)
+    # weights travel in MATRIX form between driver and executors
+    # (to_blocks/from_blocks): one contiguous ndarray instead of a
+    # per-feature list dict — ~10x cheaper to (un)pickle at the
+    # unpruned vocabulary (the per-round driver rebuild + export +
+    # broadcast was ~0.5 s/round at sf0.1).  Values are
+    # bit-identical; only the transport changed.
+    bc = sc.broadcast(blocks)
+
+    def fit_part(it, _bc=bc):
+        for rec in it:
+            m = CRFTagger.from_blocks(_bc.value)
+            m.fit_compact(*rec[3:], epochs=1)
+            yield rec[0], rec[1], m.w, m.trans, m.init
+
+    # The executor-side mix ships feature BLOCKS, not single
+    # features: per (shard, block) one (keys, stacked-matrix)
+    # record — crc32(f) % n_blocks is deterministic, so every
+    # shard blocks identically.  Per-feature records (vocab ×
+    # n_parts tiny pickled tuples; ~116k at sf0.1/32 shards)
+    # made the mix shuffle the dominant per-round cost; blocks
+    # cut the record count ~50x at identical math: inside a
+    # block each feature still averages as zero-accumulator +
+    # ascending-pid adds + /P — the float-op sequence of
+    # average_exports exactly (np.stack copies values
+    # bit-exactly).  Sentinel blocks can't collide with real
+    # ones: ints for features, strings for trans/init.
+    n_blocks = 4 * max(8, n_parts)
+
+    def expand(rec, _nb=n_blocks):
+        import zlib as _zlib
+
+        pid, n, w, trans, init = rec
+        # the trans sentinel is keyed by the record's shard
+        # modulus, so its collected keys are every n_parts the
+        # fit saw
+        yield "\x00trans", (pid, ([n], trans.reshape(1, -1)))
+        yield "\x00init", (pid, ([0], init.reshape(1, -1)))
+        blocks: dict = {}
+        for f, v in w.items():
+            b = _zlib.crc32(f.encode("utf-8")) % _nb
+            blk = blocks.get(b)
+            if blk is None:
+                blk = blocks[b] = ([], [])
+            blk[0].append(f)
+            blk[1].append(v)
+        for b, (keys, vs) in blocks.items():
+            yield b, (pid, (keys, np.stack(vs)))
+
+    def avg(vals):
+        # zero accumulator + ascending-pid adds per key — the
+        # float-op sequence of average_exports; the /P divide
+        # happens ONCE on the driver (elementwise over the
+        # assembled matrix — the same per-element sum/P op in
+        # the same order, bit-equal).  n_contribs rides along:
+        # for the trans/init sentinel blocks it equals the
+        # live record count, which is exactly P.
+        vl = sorted(vals, key=lambda kv: kv[0])
+        accs: dict = {}
+        for _pid, (keys, mat) in vl:
+            for k, row in zip(keys, mat):
+                a = accs.get(k)
+                if a is None:
+                    a = accs[k] = np.zeros_like(row)
+                a += row
+        ks = list(accs.keys())
+        return len(vl), ks, np.stack([accs[k] for k in ks])
+
+    items = (
+        rows.mapPartitions(fit_part)
+        .flatMap(expand)
+        .groupByKey(numPartitions=max(8, n_parts))
+        .mapValues(avg)
+        .collect()
+    )
+    bc.destroy()
+    if not items:
+        raise ValueError("fit_prepared: no training data")
+    P = None
+    trans = init = None
+    keys_all: list = []
+    mats: list = []
+    for blk, (n_contribs, ks, mat) in items:
+        if blk == "\x00trans":
+            if ks != [n_parts]:
+                # a prepared RDD built with another shard
+                # modulus would fit a different shard split
+                # than the caller (and the twin) believe
+                raise ValueError(
+                    "fit_prepared: prepared RDD was "
+                    "built with %s shards but n_parts=%d — "
+                    "prepare_fit_rows must be built with the "
+                    "same n_parts"
+                    % ("/".join(map(str, sorted(ks))), n_parts)
+                )
+            P = float(n_contribs)
+            trans = mat[0].reshape(T, T)
+        elif blk == "\x00init":
+            init = mat[0].reshape(T)
+        else:
+            keys_all.extend(ks)
+            mats.append(mat)
+    wmat = (
+        np.vstack(mats) / P
+        if mats
+        else np.zeros((0, T), dtype=np.float64)
+    )
+    return (tags, keys_all, wmat, trans / P, init / P, feat_hash_dim)
+
+
+def train_crf_distributed(
+    turns: DataFrame,
+    entity_types=DEFAULT_TYPES,
+    n_parts: int = 8,
+    rounds: int = 4,
+    text_col: str = "text",
+    min_feat_df: int | None = 2,
+    feat_hash_dim: int | None = None,
+) -> CRFTagger:
+    """Distributed CRF training over the FULL labeled corpus — the
+    reference's ``WapitiCRF.fit`` (/root/reference/webstruct/
+    wapiti.py:178-246) trains on the whole annotated corpus, and so
+    does this, without collecting it to the driver: prepare →
+    whitelist → fit (:func:`prepare_fit_rows`,
+    :func:`min_df_whitelists`, :func:`fit_prepared`).  ``min_feat_df``
+    prunes features seen in fewer sequences (None or 1 disables);
+    ``feat_hash_dim`` then hashes the survivors into fixed buckets.
+    Byte-identical to :func:`train_crf_mixed_local`."""
+    _check_rounds(rounds)
+    from pyspark import StorageLevel
+
+    prepared = prepare_fit_rows(
+        turns, n_parts=n_parts, text_col=text_col
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        whitelist = None
+        if min_feat_df is not None and min_feat_df > 1:
+            whitelist = min_df_whitelists(prepared, min_feat_df)[None]
+        return fit_prepared(
+            prepared, n_parts, rounds, entity_types,
+            whitelist=whitelist, feat_hash_dim=feat_hash_dim,
+        )
+    finally:
+        prepared.unpersist()
 
 
 def train_crf_mixed_local(
@@ -745,7 +719,6 @@ def train_crf_mixed_local(
     entity_types=DEFAULT_TYPES,
     n_parts: int = 8,
     rounds: int = 4,
-    sample: int | None = None,
     min_feat_df: int | None = 2,
     feat_hash_dim: int | None = None,
 ) -> CRFTagger:
@@ -761,8 +734,6 @@ def train_crf_mixed_local(
     from ..kernel.crf import token_features
 
     rows = sorted(rows)
-    if sample is not None:
-        rows = rows[:sample]
     shards: dict[int, list] = {}
     for cid, ti, tx in rows:
         pid = zlib.crc32(cid.encode("utf-8")) % n_parts
