@@ -75,7 +75,8 @@ def main() -> None:
                         "from its current snapshot record: per-stage "
                         "lineage + counters, stages a build has staged "
                         "but not published, the _conv_ids side table, "
-                        "stream stamps; mutates nothing")
+                        "the last streamed batch id (stream_batch_id); "
+                        "mutates nothing")
     p.add_argument("--check-links", action="store_true",
                    help="read-only DATA audit of the build at --out: "
                         "report every triple endpoint the edges "

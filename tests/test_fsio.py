@@ -191,10 +191,10 @@ def test_manifest_commit_and_read_via_file_uri(spark, tmp_path,
 
 
 def test_write_text_atomic_refuses_clobber_both_routes(spark, tmp_path):
-    """Both routes must refuse an existing target with IOError — the
-    stream-identity race recovery (kg_ingest._ensure_stream_id) reads
-    the winner's file when its own write loses, which only works if
-    the loser is TOLD it lost (os.replace would silently overwrite)."""
+    """Both routes must refuse an existing target with IOError — two
+    writers committing the same snapshot number (snapshots.commit) must
+    not both succeed, which only holds if the loser is TOLD it lost
+    (os.replace would silently overwrite the winner's record)."""
     import pytest
 
     p = str(tmp_path / "one.txt")

@@ -84,7 +84,7 @@ def _operation(spark, c, name):
         append_kg_frames(
             spark,
             spark.read.parquet(os.path.join(c["b"], "transcripts.parquet")),
-            df, fp, p, stage_concurrency=1, batch_id=0, stream_id="s1",
+            df, fp, p, stage_concurrency=1, batch_id=0,
         )
 
     return {
@@ -125,14 +125,13 @@ def _observe(spark, p):
     st = kg_status(spark, p)
     snap = current_snapshot(p)
     status = {
-        s: (i["committed"], i.get("rows_out"), i.get("stream_batch_id"),
-            i.get("stream_id"),
+        s: (i["committed"], i.get("rows_out"),
             snap["stages"][s]["source_fp"] if i["committed"] else None)
         for s, i in st["stages"].items()
     }
     links = check_kg_links(spark, p)
     return (
-        status, st["torn"], st["pending_intents"],
+        status, st["stream_batch_id"], st["torn"], st["pending_intents"],
         (links["audited"], links["uncovered"]),
         {s: _stage_hash(p, _listed(snap, s)) for s in STAGES},
     )

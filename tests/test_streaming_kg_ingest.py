@@ -34,8 +34,8 @@ def _assert_equal_stores(spark, out, twin):
         assert _none_safe_rows(got) == _none_safe_rows(want), stage
 
 
-@pytest.fixture()
-def thirds(spark, corpus_dir, tmp_path):
+@pytest.fixture(scope="module")
+def thirds(spark, corpus_dir, tmp_path_factory):
     """Corpus split by conv_id into three conversation-complete
     parts: A (base build corpus dir), B and C (delta DataFrames)."""
     t = spark.read.parquet(os.path.join(corpus_dir, "transcripts.parquet"))
@@ -43,7 +43,7 @@ def thirds(spark, corpus_dir, tmp_path):
     third = len(convs) // 3
     a, b = set(convs[:third]), set(convs[third : 2 * third])
 
-    corpus_a = str(tmp_path / "corpus_a")
+    corpus_a = str(tmp_path_factory.mktemp("thirds") / "corpus_a")
     os.makedirs(corpus_a)
     t.where(F.col("conv_id").isin(a)).write.parquet(
         os.path.join(corpus_a, "transcripts.parquet")
@@ -59,7 +59,27 @@ def thirds(spark, corpus_dir, tmp_path):
     return corpus_a, df_b, df_c, gaz_dst
 
 
-def test_stream_ingest_equals_fresh_union(spark, corpus_dir, tmp_path, thirds):
+@pytest.fixture(scope="module")
+def base_kg(spark, thirds):
+    """The store built from corpus A, once for the module.  No test
+    writes to it: each works on copies (:func:`_copy`)."""
+    from webstruct_spark.plans.pipeline import build_kg
+
+    out = os.path.join(os.path.dirname(thirds[0]), "base_kg")
+    build_kg(spark, thirds[0], out)
+    return out
+
+
+def _copy(base_kg, tmp_path, name="kg"):
+    """A copy of the base store at ``tmp_path/name``: snapshot records
+    list root-relative paths, so the copy is a store of its own."""
+    out = str(tmp_path / name)
+    shutil.copytree(base_kg, out)
+    return out
+
+
+def test_stream_ingest_equals_fresh_union(spark, corpus_dir, tmp_path, thirds,
+                                          base_kg):
     """Two conversation-complete file drops consumed as separate
     micro-batches (maxFilesPerTrigger=1) must leave every stage table
     row-identical to a fresh batch build over the full corpus, and a
@@ -69,10 +89,9 @@ def test_stream_ingest_equals_fresh_union(spark, corpus_dir, tmp_path, thirds):
     from webstruct_spark.plans.pipeline import STAGES, build_kg
     from webstruct_spark.streaming.kg_ingest import ingest_transcripts_stream
 
-    corpus_a, df_b, df_c, gaz_path = thirds
+    _corpus_a, df_b, df_c, gaz_path = thirds
 
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
 
     # two file drops, one part file each (conversation-complete)
     input_dir = str(tmp_path / "drops")
@@ -91,11 +110,10 @@ def test_stream_ingest_equals_fresh_union(spark, corpus_dir, tmp_path, thirds):
         want = spark.read.parquet(fresh[stage])
         assert _none_safe_rows(got) == _none_safe_rows(want), stage
 
-    # the ids of both micro-batches were stamped into the snapshot
+    # the id of the last micro-batch was stamped into the snapshot
     snap = current_snapshot(out)
     assert snap["stream_batch_id"] == 1
     last_fp = snap["stages"]["edges"]["source_fp"]
-    assert last_fp["stream_batch_id"] == 1
     assert last_fp["transcripts"]["bytes"] == -1  # not file-backed
     # each append added files beside the base's: the totals count them
     ex = snap["stages"]["extracted"]
@@ -114,16 +132,15 @@ def test_stream_ingest_equals_fresh_union(spark, corpus_dir, tmp_path, thirds):
     assert _manifest_state(out) == before
 
 
-def test_replayed_batch_is_noop(spark, tmp_path, thirds):
+def test_replayed_batch_is_noop(spark, tmp_path, thirds, base_kg):
     """foreachBatch is at-least-once: re-applying an already-committed
-    batch_id must not write anything (exactly-once via the snapshot's
-    stream_batch_id stamp)."""
+    batch must not write anything (exactly-once via the _conv_ids side
+    table: every conversation of the replay is already stored)."""
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
@@ -145,17 +162,17 @@ def test_replayed_batch_is_noop(spark, tmp_path, thirds):
     )
 
 
-def test_reset_checkpoint_with_new_files_raises(spark, tmp_path, thirds):
+def test_reset_checkpoint_with_new_files_raises(spark, tmp_path, thirds,
+                                                base_kg):
     """A lost checkpoint replays batch ids from 0 over the whole input
     dir; if new conversations landed meanwhile, the mixed batch must
     RAISE (skipping would drop the new data, appending would double
     the old)."""
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
@@ -170,19 +187,18 @@ def test_reset_checkpoint_with_new_files_raises(spark, tmp_path, thirds):
 
 
 def test_fresh_checkpoint_after_loss_recovers(spark, corpus_dir,
-                                              tmp_path, thirds):
+                                              tmp_path, thirds, base_kg):
     """Checkpoint loss is recoverable exactly as the guard's error
-    advises: a FRESH checkpoint dir (new stream identity, so its
-    batch 0 is not mistaken for a replay) pointed at an input dir
-    holding only the un-ingested drop appends normally — while a
-    fresh checkpoint over the ORIGINAL mixed input dir still fails
-    safe on the overlap guard instead of double-appending."""
+    advises: a FRESH checkpoint dir (its batch ids restart at 0, which
+    the store never compares) pointed at an input dir holding only the
+    un-ingested drop appends normally — while a fresh checkpoint over
+    the ORIGINAL mixed input dir still fails safe on the overlap guard
+    instead of double-appending."""
     from webstruct_spark.plans.pipeline import STAGES, build_kg
     from webstruct_spark.streaming.kg_ingest import ingest_transcripts_stream
 
-    corpus_a, df_b, df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
 
     drops1 = str(tmp_path / "drops1")
     df_b.repartition(1).write.mode("append").parquet(drops1)
@@ -226,15 +242,13 @@ def test_fresh_checkpoint_after_loss_recovers(spark, corpus_dir,
     assert _manifest_state(out) == state
 
 
-def test_ingest_before_first_drop_is_noop(spark, tmp_path, thirds):
+def test_ingest_before_first_drop_is_noop(spark, tmp_path, thirds, base_kg):
     """A scheduled ingest run that starts before any file landed must
     return without error."""
-    from webstruct_spark.plans.pipeline import build_kg
     from webstruct_spark.streaming.kg_ingest import ingest_transcripts_stream
 
-    corpus_a, _b, _c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, _b, _c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     q = ingest_transcripts_stream(
         spark, str(tmp_path / "no_drops_yet"), out, gaz_path,
         str(tmp_path / "ckpt"),
@@ -243,18 +257,16 @@ def test_ingest_before_first_drop_is_noop(spark, tmp_path, thirds):
 
 
 def test_ingest_input_dir_vanishing_mid_setup_is_noop(
-    spark, tmp_path, thirds, monkeypatch
+    spark, tmp_path, thirds, base_kg, monkeypatch
 ):
     """A retention job can remove input_dir AFTER the existence
     listing but BEFORE the static schema peek; the scheduled ingest
     must take the same documented no-op path as the dir never having
     existed, not crash on the race."""
-    from webstruct_spark.plans.pipeline import build_kg
     from webstruct_spark.streaming import kg_ingest as KI
 
-    corpus_a, df_b, _c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     input_dir = str(tmp_path / "drops")
     df_b.repartition(1).write.parquet(input_dir)
 
@@ -276,7 +288,7 @@ def test_ingest_input_dir_vanishing_mid_setup_is_noop(
     assert calls["n"] >= 2  # the no-op path re-checked, not guessed
 
 
-def test_crashed_append_commit_is_replay_safe(spark, tmp_path, thirds,
+def test_crashed_append_commit_is_replay_safe(spark, tmp_path, thirds, base_kg,
                                               monkeypatch):
     """The window where every stage's files have landed but the driver
     dies before the snapshot commit.  Nothing is visible: the base
@@ -284,19 +296,16 @@ def test_crashed_append_commit_is_replay_safe(spark, tmp_path, thirds,
     it fully, matching a never-crashed twin row-for-row."""
     from tests.conftest import current_snapshot, unreferenced_files
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     snap0 = current_snapshot(out)
 
     def batch():
-        append_kg_frames(
-            spark, df_b, gaz, gaz_fp, out, batch_id=0, stream_id="s1"
-        )
+        append_kg_frames(spark, df_b, gaz, gaz_fp, out, batch_id=0)
 
     kill_kg_at(monkeypatch, batch, "commit")
     assert current_snapshot(out) == snap0
@@ -304,11 +313,8 @@ def test_crashed_append_commit_is_replay_safe(spark, tmp_path, thirds,
 
     batch()  # the replay applies it
 
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, twin)
-    append_kg_frames(
-        spark, df_b, gaz, gaz_fp, twin, batch_id=0, stream_id="s1"
-    )
+    twin = _copy(base_kg, tmp_path, "twin")
+    append_kg_frames(spark, df_b, gaz, gaz_fp, twin, batch_id=0)
     _assert_equal_stores(spark, out, twin)
     assert unreferenced_files(out) == []
     assert current_snapshot(out)["stages"]["extracted"]["rows_out"] == (
@@ -317,7 +323,7 @@ def test_crashed_append_commit_is_replay_safe(spark, tmp_path, thirds,
 
 
 @pytest.mark.parametrize("die_at", ["mentions", "nodes", "edges"])
-def test_mid_dag_crash_resumes_on_replay(spark, tmp_path, thirds,
+def test_mid_dag_crash_resumes_on_replay(spark, tmp_path, thirds, base_kg,
                                          monkeypatch, die_at):
     """A run killed in the middle of its DAG, after some stages' files
     landed, leaves the base as it was; replaying the exact batch
@@ -325,30 +331,24 @@ def test_mid_dag_crash_resumes_on_replay(spark, tmp_path, thirds,
     further replay is a pure no-op."""
     from tests.conftest import current_snapshot
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     snap0 = current_snapshot(out)
 
     def batch():
-        append_kg_frames(
-            spark, df_b, gaz, gaz_fp, out, batch_id=0, stream_id="s1"
-        )
+        append_kg_frames(spark, df_b, gaz, gaz_fp, out, batch_id=0)
 
     kill_kg_at(monkeypatch, batch, die_at)
     assert current_snapshot(out) == snap0
 
     batch()
 
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, twin)
-    append_kg_frames(
-        spark, df_b, gaz, gaz_fp, twin, batch_id=0, stream_id="s1"
-    )
+    twin = _copy(base_kg, tmp_path, "twin")
+    append_kg_frames(spark, df_b, gaz, gaz_fp, twin, batch_id=0)
     _assert_equal_stores(spark, out, twin)
 
     # and the batch is now sealed: a further replay is a pure no-op
@@ -357,62 +357,55 @@ def test_mid_dag_crash_resumes_on_replay(spark, tmp_path, thirds,
     assert _manifest_state(out) == state
 
 
-def test_cross_stream_torn_resume(spark, tmp_path, thirds, monkeypatch):
-    """A base previously streamed by checkpoint s0 carries s0's stamps
-    (even the same batch NUMBER — ids restart per checkpoint).  A
-    crash of s1's batch 0 must still be recovered by replaying it."""
+def test_reused_batch_number_with_new_conversations_applies(
+        spark, tmp_path, thirds, base_kg, monkeypatch):
+    """Batch numbers say nothing about what the store holds: every new
+    checkpoint restarts them at 0.  After B was streamed as batch 0, a
+    batch 0 of another checkpoint carrying only new conversations (C)
+    is appended — and when it is killed mid-DAG, replaying it applies
+    it in full, equal to a never-crashed twin."""
+    from tests.conftest import current_snapshot
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
-    # stream s0 ingests B fully, then stream s1's batch 0 (C) crashes
-    # mid-DAG at groups
-    append_kg_frames(
-        spark, df_b, gaz, gaz_fp, out, batch_id=0, stream_id="s0"
-    )
+    append_kg_frames(spark, df_b, gaz, gaz_fp, out, batch_id=0)
 
     def batch():
-        append_kg_frames(
-            spark, df_c, gaz, gaz_fp, out, batch_id=0, stream_id="s1"
-        )
+        append_kg_frames(spark, df_c, gaz, gaz_fp, out, batch_id=0)
 
     kill_kg_at(monkeypatch, batch, "groups")
     batch()
 
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, twin)
-    append_kg_frames(
-        spark, df_b, gaz, gaz_fp, twin, batch_id=0, stream_id="s0"
-    )
-    append_kg_frames(
-        spark, df_c, gaz, gaz_fp, twin, batch_id=0, stream_id="s1"
-    )
+    twin = _copy(base_kg, tmp_path, "twin")
+    append_kg_frames(spark, df_b, gaz, gaz_fp, twin, batch_id=0)
+    append_kg_frames(spark, df_c, gaz, gaz_fp, twin, batch_id=0)
     _assert_equal_stores(spark, out, twin)
+    assert current_snapshot(out)["stream_batch_id"] == 0
 
 
 def test_torn_resume_rejects_already_ingested_convs(spark, tmp_path,
-                                                    thirds, monkeypatch):
+                                                    thirds, base_kg,
+                                                    monkeypatch):
     """A wrong "replay" of a crashed batch whose ROW COUNT matches but
     whose conversations are already-ingested base ones must not
     duplicate base rows: every conversation is already ingested, so
     the streamed batch is skipped without a write."""
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
     corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     rows = spark.read.parquet(os.path.join(out, "extracted")).count()
 
     kill_kg_at(monkeypatch, lambda: append_kg_frames(
-        spark, df_b, gaz, gaz_fp, out, batch_id=0, stream_id="s1"
+        spark, df_b, gaz, gaz_fp, out, batch_id=0
     ), "mentions")
 
     # same row count as the crashed batch, but base conversations
@@ -422,16 +415,14 @@ def test_torn_resume_rejects_already_ingested_convs(spark, tmp_path,
     ).orderBy("conv_id", "turn_idx").limit(n)
     assert base_rows.count() == n
     state = _manifest_state(out)
-    append_kg_frames(
-        spark, base_rows, gaz, gaz_fp, out, batch_id=0, stream_id="s1",
-    )
+    append_kg_frames(spark, base_rows, gaz, gaz_fp, out, batch_id=0)
     assert _manifest_state(out) == state
     assert spark.read.parquet(
         os.path.join(out, "extracted")
     ).count() == rows
 
 
-def test_kg_status_healthy_and_crashed(spark, tmp_path, thirds,
+def test_kg_status_healthy_and_crashed(spark, tmp_path, thirds, base_kg,
                                        monkeypatch):
     """kg_status reports a healthy build as committed/untorn, reports
     a crashed append's store exactly as before the append WITHOUT
@@ -440,12 +431,11 @@ def test_kg_status_healthy_and_crashed(spark, tmp_path, thirds,
     from tests.conftest import unreferenced_files
     from webstruct_spark.plans.manifest import table_fingerprint
     from webstruct_spark.plans.pipeline import (
-        STAGES, append_kg_frames, build_kg, kg_status,
+        STAGES, append_kg_frames, kg_status,
     )
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
 
     healthy = kg_status(spark, out)
     assert not healthy["torn"] and not healthy["pending_intents"]
@@ -457,9 +447,7 @@ def test_kg_status_healthy_and_crashed(spark, tmp_path, thirds,
     gaz_fp = table_fingerprint(gaz_path)
 
     def batch():
-        append_kg_frames(
-            spark, df_b, gaz, gaz_fp, out, batch_id=0, stream_id="s1"
-        )
+        append_kg_frames(spark, df_b, gaz, gaz_fp, out, batch_id=0)
 
     kill_kg_at(monkeypatch, batch, "mentions")
     left = unreferenced_files(out)
@@ -470,11 +458,8 @@ def test_kg_status_healthy_and_crashed(spark, tmp_path, thirds,
     batch()
     st = kg_status(spark, out)
     assert not st["torn"] and not st["pending_intents"]
-    assert st["stream_batch_id"] == 0 and st["stream_id"] == "s1"
-    assert all(
-        st["stages"][s]["committed"]
-        and st["stages"][s]["stream_batch_id"] == 0 for s in STAGES
-    )
+    assert st["stream_batch_id"] == 0
+    assert all(st["stages"][s]["committed"] for s in STAGES)
 
 
 def _file_backed(tmp_path, name, df, gaz_path):
@@ -489,29 +474,27 @@ def _file_backed(tmp_path, name, df, gaz_path):
     return d
 
 
-def test_plain_append_crash_resumes_on_rerun(spark, tmp_path, thirds,
+def test_plain_append_crash_resumes_on_rerun(spark, tmp_path, thirds, base_kg,
                                              monkeypatch):
-    """A crashed PLAIN append (append_kg / --append: no batch or
-    stream identity) is recovered by re-running the SAME call."""
-    from webstruct_spark.plans.pipeline import append_kg, build_kg
+    """A crashed PLAIN append (append_kg / --append: no batch id) is
+    recovered by re-running the SAME call."""
+    from webstruct_spark.plans.pipeline import append_kg
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
+    _corpus_a, df_b, _df_c, gaz_path = thirds
     corpus_b = _file_backed(tmp_path, "corpus_b", df_b, gaz_path)
 
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
     kill_kg_at(monkeypatch, lambda: append_kg(spark, corpus_b, out),
                  "group_entities")
     append_kg(spark, corpus_b, out)  # the documented recovery
 
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, twin)
+    twin = _copy(base_kg, tmp_path, "twin")
     append_kg(spark, corpus_b, twin)
     _assert_equal_stores(spark, out, twin)
 
 
 def test_plain_append_crash_after_final_commit_is_noop_retry(
-        spark, tmp_path, thirds, monkeypatch):
+        spark, tmp_path, thirds, base_kg, monkeypatch):
     """A plain --append that crashed AFTER its commit (in the GC that
     follows it) must be recoverable by the documented re-run: the
     snapshot's delta_fp proves the last applied delta was exactly this
@@ -520,13 +503,10 @@ def test_plain_append_crash_after_final_commit_is_noop_retry(
     retry with a DIFFERENT file-backed fp must still raise."""
     from tests.conftest import current_snapshot, unreferenced_files
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import (
-        STAGES, append_kg_frames, build_kg,
-    )
+    from webstruct_spark.plans.pipeline import STAGES, append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
@@ -542,8 +522,7 @@ def test_plain_append_crash_after_final_commit_is_noop_retry(
     )
     assert current_snapshot(out) == committed  # true no-op
     assert unreferenced_files(out) == []
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, twin)
+    twin = _copy(base_kg, tmp_path, "twin")
     append_kg_frames(
         spark, df_b, gaz, gaz_fp, twin, delta_transcripts_fp=delta_fp
     )
@@ -562,6 +541,7 @@ def test_plain_append_crash_after_final_commit_is_noop_retry(
 
 
 def test_kg_status_uses_guard_committed_predicate(spark, tmp_path, thirds,
+                                                  base_kg,
                                                   monkeypatch):
     """--status classifies stages with the SAME predicate the append
     guard uses: a stage entry of another layout is not committed, and
@@ -574,12 +554,11 @@ def test_kg_status_uses_guard_committed_predicate(spark, tmp_path, thirds,
     from webstruct_spark.plans import pipeline
     from webstruct_spark.plans.manifest import table_fingerprint
     from webstruct_spark.plans.pipeline import (
-        STAGES, append_kg_frames, build_kg, kg_status,
+        STAGES, append_kg_frames, kg_status,
     )
 
     corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
     snap = current_snapshot(out)
     snap["stages"]["nodes"]["layout"] = "~older-layout~"
     with open(os.path.join(out, "_snapshots",
@@ -601,18 +580,16 @@ def test_kg_status_uses_guard_committed_predicate(spark, tmp_path, thirds,
 
 
 def test_append_retry_after_mid_overwrite_crash(
-        spark, tmp_path, thirds, monkeypatch):
+        spark, tmp_path, thirds, base_kg, monkeypatch):
     """An append killed while links was being rewritten (a partial
     links write beside the published files) is recovered by the
     documented re-run."""
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, out)
-    build_kg(spark, corpus_a, twin)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
+    twin = _copy(base_kg, tmp_path, "twin")
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     delta_fp = {"rows": df_b.count(), "bytes": 555, "n_files": 1}
@@ -633,19 +610,19 @@ def test_append_retry_after_mid_overwrite_crash(
     _assert_equal_stores(spark, out, twin)
 
 
-def test_kg_status_legacy_fpless_record_not_torn(spark, tmp_path, thirds):
+def test_kg_status_legacy_fpless_record_not_torn(spark, tmp_path, thirds,
+                                                 base_kg):
     """A store written before the snapshot log (manifest.d records,
     stage dirs, no _snapshots) reads as never built — every stage
     uncommitted, nothing torn or pending — and the append refusal
     names build_kg, so the status tool and the guard agree."""
     from webstruct_spark.plans.manifest import table_fingerprint
     from webstruct_spark.plans.pipeline import (
-        STAGES, append_kg_frames, build_kg, kg_status,
+        STAGES, append_kg_frames, kg_status,
     )
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     shutil.rmtree(os.path.join(out, "_snapshots"))
     os.makedirs(os.path.join(out, "manifest.d"))
 
@@ -659,15 +636,15 @@ def test_kg_status_legacy_fpless_record_not_torn(spark, tmp_path, thirds):
                          out)
 
 
-def test_kg_status_reports_conv_ids_side_table(spark, tmp_path, thirds):
+def test_kg_status_reports_conv_ids_side_table(spark, tmp_path, thirds,
+                                               base_kg):
     """--status surfaces the _conv_ids side table: one row per
     ingested conversation after a build, nothing on a never-built
     dir."""
-    from webstruct_spark.plans.pipeline import build_kg, kg_status
+    from webstruct_spark.plans.pipeline import kg_status
 
     corpus_a, _df_b, _df_c, _gaz = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
 
     side = kg_status(spark, out)["conv_ids"]
     assert side["n_files"] > 0
@@ -680,6 +657,7 @@ def test_kg_status_reports_conv_ids_side_table(spark, tmp_path, thirds):
 
 
 def test_noop_retry_rebuilds_missing_global_stage(spark, tmp_path, thirds,
+                                                  base_kg,
                                                   monkeypatch):
     """A fully-applied retry that exits through a no-op fast path must
     still settle the store: after an append killed in the GC that
@@ -687,13 +665,11 @@ def test_noop_retry_rebuilds_missing_global_stage(spark, tmp_path, thirds,
     files; the retry's entry GC leaves exactly the listed ones."""
     from tests.conftest import unreferenced_files
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, out)
-    build_kg(spark, corpus_a, twin)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
+    twin = _copy(base_kg, tmp_path, "twin")
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     delta_fp = {"rows": df_b.count(), "bytes": 321, "n_files": 1}
@@ -713,25 +689,23 @@ def test_noop_retry_rebuilds_missing_global_stage(spark, tmp_path, thirds,
 
 
 def test_streamed_replay_skip_rebuilds_missing_global(spark, tmp_path,
-                                                      thirds, monkeypatch):
+                                                      thirds, base_kg,
+                                                      monkeypatch):
     """The streamed twin of the same window: a replayed
-    already-committed batch id is skipped as applied, and its entry GC
+    already-committed batch is skipped as applied, and its entry GC
     removes the files the killed GC left behind."""
     from tests.conftest import current_snapshot, unreferenced_files
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, out)
-    build_kg(spark, corpus_a, twin)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
+    twin = _copy(base_kg, tmp_path, "twin")
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
     def batch(d):
-        append_kg_frames(spark, df_b, gaz, gaz_fp, d,
-                         batch_id=0, stream_id="s1")
+        append_kg_frames(spark, df_b, gaz, gaz_fp, d, batch_id=0)
 
     kill_kg_at(monkeypatch, lambda: batch(out), "gc")
     assert any(p.startswith("links/") for p in unreferenced_files(out))
@@ -756,17 +730,17 @@ def test_kg_status_never_creates_dirs(spark, tmp_path):
 
 
 def test_overwrite_intent_pre_write_crash_keeps_stage(spark, tmp_path,
-                                                      thirds, monkeypatch):
+                                                      thirds, base_kg,
+                                                      monkeypatch):
     """A rebuild over a live store killed before its first stage write
     leaves every published stage as it was: kg_status, the stage
     files and the data are unchanged."""
     from tests.conftest import current_snapshot
     from webstruct_spark.plans import pipeline
-    from webstruct_spark.plans.pipeline import STAGES, build_kg, kg_status
+    from webstruct_spark.plans.pipeline import STAGES, kg_status
 
     corpus_a, _df_b, _df_c, _gaz = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    out = _copy(base_kg, tmp_path)
     st0 = kg_status(spark, out)
     snap0 = current_snapshot(out)
     rows0 = {
@@ -784,7 +758,7 @@ def test_overwrite_intent_pre_write_crash_keeps_stage(spark, tmp_path,
 
 
 def test_pre_write_overwrite_crash_does_not_destroy_base(
-        spark, tmp_path, thirds, monkeypatch):
+        spark, tmp_path, thirds, base_kg, monkeypatch):
     """A rebuild over a DIFFERENT corpus dies after staging its first
     stages.  The out_dir still serves the fully intact corpus-A build;
     abandoning the rebuild and appending to the corpus-A base works,
@@ -792,14 +766,12 @@ def test_pre_write_overwrite_crash_does_not_destroy_base(
     from tests.conftest import current_snapshot, unreferenced_files
     from webstruct_spark.plans import pipeline
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
 
-    corpus_a, df_b, df_c, gaz_path = thirds
+    _corpus_a, df_b, df_c, gaz_path = thirds
     corpus_c = _file_backed(tmp_path, "corpus_c", df_c, gaz_path)
-    out = str(tmp_path / "kg")
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, out)
-    build_kg(spark, corpus_a, twin)
+    out = _copy(base_kg, tmp_path)
+    twin = _copy(base_kg, tmp_path, "twin")
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
     delta_fp = {"rows": df_b.count(), "bytes": 777, "n_files": 1}
@@ -820,7 +792,7 @@ def test_pre_write_overwrite_crash_does_not_destroy_base(
 
 
 def test_append_refuses_drifted_gazetteer_when_all_globals_missing(
-        spark, tmp_path, thirds, monkeypatch):
+        spark, tmp_path, thirds, base_kg, monkeypatch):
     """After an append killed while it rewrote the global stages, the
     gazetteer-drift refusal still anchors on the base's committed
     identity — a retry with a drifted gazetteer is refused before
@@ -828,19 +800,17 @@ def test_append_refuses_drifted_gazetteer_when_all_globals_missing(
     append succeeds."""
     from tests.conftest import current_snapshot
     from webstruct_spark.plans.manifest import table_fingerprint
-    from webstruct_spark.plans.pipeline import append_kg_frames, build_kg
+    from webstruct_spark.plans.pipeline import append_kg_frames
     from webstruct_spark.sources.gazshrink import shrink_gazetteer
 
-    corpus_a, df_b, _df_c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    twin = str(tmp_path / "twin")
-    build_kg(spark, corpus_a, out)
-    build_kg(spark, corpus_a, twin)
+    _corpus_a, df_b, _df_c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
+    twin = _copy(base_kg, tmp_path, "twin")
     gaz = spark.read.parquet(gaz_path)
     gaz_fp = table_fingerprint(gaz_path)
 
     def append(d, g, fp):
-        append_kg_frames(spark, df_b, g, fp, d, batch_id=0, stream_id="s1")
+        append_kg_frames(spark, df_b, g, fp, d, batch_id=0)
 
     kill_kg_at(monkeypatch, lambda: append(out, gaz, gaz_fp), "edges")
     drifted = str(tmp_path / "gaz_drifted.parquet")
@@ -880,7 +850,7 @@ def test_refused_append_leaves_no_manifest_dir(spark, tmp_path, thirds):
 
 
 def test_ingest_input_dir_emptied_mid_setup_is_noop(
-    spark, tmp_path, thirds, monkeypatch
+    spark, tmp_path, thirds, base_kg, monkeypatch
 ):
     """The other retention shape: the job deletes the parquet FILES
     but leaves input_dir in place.  The schema peek then raises
@@ -888,12 +858,10 @@ def test_ingest_input_dir_emptied_mid_setup_is_noop(
     must mirror the ENTRY condition (dir absent OR no *.parquet), not
     just dir-gone — otherwise exactly the race the guard documents
     still crashes the scheduled ingest."""
-    from webstruct_spark.plans.pipeline import build_kg
     from webstruct_spark.streaming import kg_ingest as KI
 
-    corpus_a, df_b, _c, gaz_path = thirds
-    out = str(tmp_path / "kg")
-    build_kg(spark, corpus_a, out)
+    _corpus_a, df_b, _c, gaz_path = thirds
+    out = _copy(base_kg, tmp_path)
     input_dir = str(tmp_path / "drops")
     df_b.repartition(1).write.parquet(input_dir)
 

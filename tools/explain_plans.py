@@ -200,6 +200,14 @@ def main() -> None:
         "Generated by tools/explain_plans.py. The 'Expect' notes state\n"
         "the plan property each operator is designed around; regenerate\n"
         "after operator changes and re-check.\n"
+        "\n"
+        "The KG sections capture each operator over the corpus file.\n"
+        "Inside build_kg / append_kg_frames / refresh_gazetteer every\n"
+        "stage read names the files the store's current snapshot lists\n"
+        "(plans/pipeline.py), so there a Scan's Location is an\n"
+        "InMemoryFileIndex of those files, never a stage directory; past\n"
+        "32 files (spark.sql.sources.parallelPartitionDiscovery.threshold)\n"
+        "the read adds one listing job.\n"
     )
     for title, notes, plan in sections:
         out.append(f"\n## {title}\n\n{notes}\n\n```\n{plan}```\n")

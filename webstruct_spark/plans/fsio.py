@@ -207,13 +207,14 @@ def write_text_atomic(spark, path: str, text: str) -> None:
     ``path`` with ``IOError``.  (The local route publishes via
     ``os.link`` — atomic create-if-absent — rather than ``os.replace``,
     which silently overwrites and would let two racing writers each
-    believe they won; ``_ensure_stream_id``'s race recovery depends on
-    the loser getting the IOError.)"""
+    believe they won; :func:`.snapshots.commit` depends on the loser
+    getting the IOError: two writers committing the same snapshot
+    number must not both succeed.)"""
     data = text.encode("utf-8")
     # the tmp name must be unique PER WRITER: two racers sharing
     # ``path + ".tmp"`` could publish each other's content (A links
     # the tmp after B truncated and rewrote it) — the winner would
-    # then hold a different sid in memory than the file it published
+    # then hold a different record in memory than the file it published
     tmp = "%s.%d.%s.tmp" % (path, os.getpid(), uuid.uuid4().hex[:8])
     if not is_uri(path):
         with open(tmp, "wb") as f:

@@ -49,9 +49,9 @@ visible only through one create-if-absent record,
   row/file/byte totals;
 * ``building`` — the same per-stage entries for the stages (and the
   side table) a build has staged but not yet published;
-* the store's stamps: ``stream_id``/``stream_batch_id`` of the last
-  streamed micro-batch and ``delta_fp``/``delta_batch_id``/
-  ``delta_stream_id`` of the last applied delta.
+* the store's stamps: ``stream_batch_id`` of the last streamed
+  micro-batch (reported, never compared) and ``delta_fp`` of the last
+  applied delta.
 
 ``append_kg_frames``, ``refresh_gazetteer`` and ``compact_kg`` write
 everything first and then commit once, so a crash leaves the store
@@ -147,16 +147,11 @@ STAGE_IDENTITY_KEYS = {
 GLOBAL_STAGES = ("links", "nodes", "edges")
 
 # the store's stamps, carried from snapshot to snapshot
-_STAMPS = ("stream_id", "stream_batch_id",
-           "delta_fp", "delta_batch_id", "delta_stream_id")
+_STAMPS = ("stream_batch_id", "delta_fp")
 
 
 def _stage_identity(stage: str, full_fp: dict) -> dict:
-    out = {k: full_fp[k] for k in STAGE_IDENTITY_KEYS[stage]}
-    for k in ("stream_batch_id", "stream_id"):
-        if k in full_fp:
-            out[k] = full_fp[k]
-    return out
+    return {k: full_fp[k] for k in STAGE_IDENTITY_KEYS[stage]}
 
 
 def _committed(entry: Optional[dict], ident: Optional[dict] = None) -> bool:
@@ -388,9 +383,9 @@ def kg_status(spark: SparkSession, out_dir: str) -> dict:
     --status``) from its current snapshot: per stage whether it is
     committed at the current layout, its lineage and counters; the
     stages a build has staged but not published; the ``_conv_ids``
-    side table; the stream stamps.  Reads one JSON record and never
-    mutates anything, so inspecting a typo'd out_dir leaves no
-    directory behind.
+    side table; the ``stream_batch_id`` stamp.  Reads one JSON record
+    and never mutates anything, so inspecting a typo'd out_dir leaves
+    no directory behind.
 
     ``torn`` is always False and ``pending_intents`` always empty: a
     snapshot commit publishes a whole operation at once, so stages
@@ -405,15 +400,12 @@ def _status(out_dir: str, snap: Optional[dict]) -> dict:
         ent = snap["stages"].get(s)
         info: Dict[str, object] = {"committed": _committed(ent)}
         if ent:
-            fp = ent.get("source_fp") or {}
             info.update(
                 layout=ent.get("layout"),
                 rows_out=ent.get("rows_out"),
                 n_files=ent.get("n_files"),
                 bytes=ent.get("bytes"),
                 wall_sec=ent.get("wall_sec"),
-                stream_batch_id=fp.get("stream_batch_id"),
-                stream_id=fp.get("stream_id"),
                 committed_utc_ns=ent.get("committed_utc_ns"),
             )
         stages[s] = info
@@ -427,7 +419,6 @@ def _status(out_dir: str, snap: Optional[dict]) -> dict:
             "n_files": len(conv),
             "rows": sum(f["rows"] for f in conv),
         },
-        "stream_id": snap.get("stream_id"),
         "stream_batch_id": snap.get("stream_batch_id"),
         "pending_intents": [],
         "torn": False,
@@ -717,17 +708,16 @@ def append_kg_frames(
     stage_concurrency: int = 4,
     delta_transcripts_fp: Optional[dict] = None,
     batch_id: Optional[int] = None,
-    stream_id: Optional[str] = None,
 ) -> Dict[str, str]:
     """DataFrame-based core of :func:`append_kg` — also the
     foreachBatch body for streaming ingestion
     (:mod:`webstruct_spark.streaming.kg_ingest`).
 
     The delta is persisted for the duration of the call: the guards
-    (conv-id distinct, overlap checks) and the extract each take an
-    action over it, and without the cache every action re-reads the
-    delta's input files.  Every later stage reads the files its
-    upstream stage wrote.
+    (row count, conv-id overlap) and the extract each take an action
+    over it, and without the cache every action re-reads the delta's
+    input files.  Every later stage reads the files its upstream stage
+    wrote.
 
     ``delta_transcripts_fp``: footer fingerprint of the delta when it
     is file-backed; None means a frame-only delta (streaming batch) —
@@ -737,35 +727,29 @@ def append_kg_frames(
     it no longer corresponds to one).  A delta of 0 rows, either way,
     returns without writing anything.
 
-    ``batch_id``: monotone micro-batch id for EXACTLY-ONCE streaming
-    appends — the id is stamped into the snapshot, and a replayed
-    batch (foreachBatch is at-least-once after a failure) with id ≤
-    the last committed one is verified to be a TRUE replay (no
-    conversations outside the base) and then skipped.  A reset
-    checkpoint whose "replay" gained new files raises — silently
-    skipping would drop the new conversations, appending would double
-    the old ones.
+    Exactly-once rests on the one key the store owns: the ``_conv_ids``
+    side table, which holds exactly the committed conversations.  Under
+    the conversation-complete drop contract a delta with none of its
+    conversations stored is applied, and one with all of them stored
+    was applied before.  That is a no-op for a streamed micro-batch
+    (``batch_id`` set: foreachBatch is at-least-once, and a fresh
+    checkpoint re-draining an unchanged input dir replays too) and for
+    a file-backed delta whose fingerprint is the snapshot's
+    ``delta_fp`` (the retry of a run killed after its commit).  Any
+    other delta sharing conversations with the store raises: skipping
+    would drop its new ones, appending would double its stored ones.
+    ``batch_id`` is stamped into the snapshot as ``stream_batch_id``,
+    for reporting only.
 
-    ``stream_id``: identity of the CHECKPOINT the batch ids are
-    monotone within (kg_ingest persists one per checkpoint dir).
-    Spark's batch ids restart at 0 for every new checkpoint, so ids
-    from a DIFFERENT stream skip the replay branch entirely and rely
-    on the conv-id overlap guard (so a fresh checkpoint + an input dir
-    of only-new files appends normally, and one re-draining an
-    unchanged input dir is skipped).  None matches any stream.
-
-    A batch killed before its commit left nothing visible, so the
-    streaming retry of the same batch applies it in full.
+    A run killed before its commit left nothing visible, so re-running
+    the same call applies it in full.
     """
     transcripts_b = transcripts_b.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         snap = _base_snapshot(spark, out_dir, "append_kg")
         base = snap["stages"]
-        base_transcripts = base["extracted"]["source_fp"]["transcripts"]
         base_gazetteer = base["links"]["source_fp"]["gazetteer"]
         base_params = base["group_entities"]["source_fp"]["params"]
-        last_batch = snap.get("stream_batch_id")
-        last_stream = snap.get("stream_id")
         if base_gazetteer != gazetteer_fp:
             raise ValueError(
                 "append_kg: gazetteer differs from the base build's "
@@ -782,90 +766,32 @@ def append_kg_frames(
             )
         paths = {s: fsio.join(out_dir, s) for s in STAGES}
 
-        # the _conv_ids side table keeps these guards O(delta); it holds
-        # exactly the committed conversations
-        existing_convs = _read_files(spark, out_dir, _files(snap, CONV_IDS))
-        delta_convs = transcripts_b.select("conv_id").distinct()
-
-        # a replayed id only means "already applied" if it belongs to the
-        # SAME stream: every new checkpoint restarts Spark's batch ids at
-        # 0, so a fresh stream's ids say nothing about this out_dir.
-        # None on either side matches any stream — the overlap guard
-        # below stays the backstop.
-        same_stream = (last_stream is None or stream_id is None
-                       or stream_id == last_stream)
-        if (batch_id is not None and last_batch is not None
-                and same_stream and batch_id <= last_batch):
-            # an already-committed id is only skippable if it is a TRUE
-            # replay: a lost/reset streaming checkpoint restarts ids at 0
-            # over the whole input dir, and if NEW files landed meanwhile
-            # the replayed "batch 0" mixes consumed and unseen
-            # conversations — skipping it would silently drop the new
-            # ones, so that case raises instead
-            if delta_convs.join(
-                existing_convs, "conv_id", "left_anti"
-            ).limit(1).count():
-                raise ValueError(
-                    "append_kg: batch_id %d <= last committed %d (same "
-                    "stream) but the batch contains conversations not in "
-                    "the base — the streaming checkpoint was reset over "
-                    "an input dir that gained new files; restore the "
-                    "checkpoint, or start over with a FRESH checkpoint "
-                    "dir (new stream identity) pointed at an input dir "
-                    "holding only the un-ingested files"
-                    % (batch_id, last_batch)
-                )
-            return paths  # true replay — already applied
-
-        fp_is_file_backed = (
-            delta_transcripts_fp is not None
-            and delta_transcripts_fp.get("bytes", -1) >= 0
-            and delta_transcripts_fp.get("n_files", -1) >= 0
-        )
         if delta_transcripts_fp is None:
             delta_transcripts_fp = {
                 "rows": transcripts_b.count(), "bytes": -1, "n_files": -1
             }
         if delta_transcripts_fp["rows"] == 0:
             return paths  # an empty micro-batch or corpus dir
-        union_fp = {
-            "transcripts": _fp_add(base_transcripts, delta_transcripts_fp),
-            "gazetteer": base_gazetteer,
-            "params": params,
-        }
-        next_batch = batch_id if batch_id is not None else last_batch
-        if next_batch is not None:
-            union_fp["stream_batch_id"] = next_batch
-            # the ids' stream identity travels with them; a batch without
-            # its own keeps the base's (plain append_kg into a streamed
-            # build must not erase it)
-            next_stream = stream_id if stream_id is not None else last_stream
-            if next_stream is not None:
-                union_fp["stream_id"] = next_stream
 
-        if existing_convs.join(delta_convs, "conv_id").limit(1).count():
-            all_landed = not delta_convs.join(
-                existing_convs, "conv_id", "left_anti"
-            ).limit(1).count()
-            if all_landed and batch_id is not None:
-                # every conversation already ingested + an automated
-                # (streaming) caller: a fresh checkpoint re-draining a
-                # static input dir — exactly-once means skip
-                return paths
-            if (
-                all_landed and batch_id is None and fp_is_file_backed
-                and snap.get("delta_fp") == delta_transcripts_fp
-                and snap.get("delta_batch_id") is None
-            ):
-                # a plain --append re-run after a crash AFTER its commit:
-                # the snapshot says the LAST delta it applied was exactly
-                # this file-backed one, so the retry is a no-op
-                return paths
-            # mixed (skipping loses the unseen part, appending doubles the
-            # landed part) or an explicit append of ingested conversations
+        # the _conv_ids side table keeps this rule O(delta)
+        stored = _read_files(spark, out_dir, _files(snap, CONV_IDS))
+        delta_convs = transcripts_b.select("conv_id").distinct()
+        if stored.join(delta_convs, "conv_id").limit(1).count():
+            # the snapshot's last delta was this file-backed one: the
+            # retry of a run killed after its commit
+            retry = snap.get("delta_fp") == delta_transcripts_fp and min(
+                delta_transcripts_fp.get("bytes", -1),
+                delta_transcripts_fp.get("n_files", -1),
+            ) >= 0
+            if (batch_id is not None or retry) and not delta_convs.join(
+                stored, "conv_id", "left_anti"
+            ).limit(1).count():
+                return paths  # every conversation stored: already applied
             raise ValueError(
                 "append_kg: delta shares conv_ids with the base build — "
-                "appending would double their rows; de-duplicate first"
+                "appending would double their rows; de-duplicate first "
+                "(a streaming ingest recovers with a FRESH checkpoint dir "
+                "over an input dir holding only the un-ingested files)"
             )
 
         new, walls = _run_graph(spark, out_dir, {
@@ -873,15 +799,18 @@ def append_kg_frames(
             "gazetteer": gazetteer,
             "params": dont_penalize,
         }, snap, stage_concurrency)
-        stamps = {
-            k: union_fp[k] for k in ("stream_batch_id", "stream_id")
-            if k in union_fp
-        }
-        stamps.update(delta_fp=delta_transcripts_fp,
-                      delta_batch_id=batch_id, delta_stream_id=stream_id)
+        # a plain append into a streamed store keeps its batch stamp
+        stamps = dict(_stamps(snap), delta_fp=delta_transcripts_fp)
+        if batch_id is not None:
+            stamps["stream_batch_id"] = batch_id
         # one commit publishes the whole append
-        _publish(spark, out_dir, snap, new, "append", walls,
-                 fp=union_fp, stamps=stamps)
+        _publish(spark, out_dir, snap, new, "append", walls, fp={
+            "transcripts": _fp_add(
+                base["extracted"]["source_fp"]["transcripts"],
+                delta_transcripts_fp),
+            "gazetteer": base_gazetteer,
+            "params": params,
+        }, stamps=stamps)
         return paths
     finally:
         transcripts_b.unpersist()

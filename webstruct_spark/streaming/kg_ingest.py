@@ -8,32 +8,32 @@ modules: a corpus that arrives as periodic parquet drops (the 100 TB
 deployment's usual shape — an upstream job lands conversation-complete
 files) is folded into the KG incrementally, with Structured
 Streaming's checkpoint tracking WHICH files were consumed and the KG
-snapshot's ``stream_batch_id`` stamp making each micro-batch append
-EXACTLY-ONCE:
+store's ``_conv_ids`` side table making each micro-batch append
+EXACTLY-ONCE (append_kg_frames applies a batch none of whose
+conversations are stored and skips one all of whose conversations
+are):
 
 * foreachBatch is at-least-once after a failure — a replayed batch
-  re-invokes the handler with the SAME batch_id; append_kg_frames
-  verifies it is a TRUE replay (no conversations outside the base)
-  and returns without writing.  Batch ids are only comparable within
-  one checkpoint, so each checkpoint dir carries a persistent stream
-  identity (``_ws_stream_id``, created on first start) that is
-  stamped into the snapshot alongside the ids.
+  re-invokes the handler with the same data; every conversation in it
+  is already stored, so append_kg_frames returns without writing.
 * a batch killed before its snapshot commit left nothing visible, so
   the retry of the same batch applies it in full.
-* a LOST checkpoint is recoverable: a fresh checkpoint dir gets a new
-  stream identity, so its batch 0 is never mistaken for a replay of
-  the old id sequence.  Re-draining an input dir that did not gain
-  files is verified (every conversation already ingested) and
-  skipped; an input dir that DID gain files raises on the mixed
-  batch (skipping would drop the new conversations, appending would
-  double the old) — recover by pointing a fresh checkpoint at an
-  input dir holding only the un-ingested files.
+* a LOST checkpoint is recoverable: a fresh checkpoint dir restarts
+  the batch ids at 0, which the store never compares.  Re-draining an
+  input dir that did not gain files is skipped (every conversation
+  already stored); an input dir that DID gain files raises on the
+  mixed batch (skipping would drop the new conversations, appending
+  would double the old) — recover by pointing a fresh checkpoint at
+  an input dir holding only the un-ingested files.
 
 Contract: file drops must be CONVERSATION-COMPLETE — one conversation
 never spans two drops (with ``max_files_per_trigger`` set, never two
-files).  A split conversation would put the same conv_id in two
-micro-batches and the second one raises on the overlap guard — loud,
-not corrupting.  Bootstrap the base build with
+files).  A split conversation puts the same conv_id in two
+micro-batches, and the second one is not caught reliably: it raises
+"shares conv_ids" only when it also holds a new conversation; a batch
+holding nothing but the tail of a stored conversation has all its
+conversations stored, so it is skipped and those tail turns are lost.
+Bootstrap the base build with
 :func:`~webstruct_spark.plans.pipeline.build_kg` first; this job only
 appends.
 """
@@ -49,36 +49,6 @@ from ..operators.grouping_op import DEFAULT_DONT_PENALIZE
 from ..plans import fsio
 from ..plans.manifest import table_fingerprint
 from ..plans.pipeline import append_kg_frames
-
-STREAM_ID_FILE = "_ws_stream_id"
-
-
-def _ensure_stream_id(spark, checkpoint_dir: str) -> str:
-    """Read-or-create the checkpoint's stream identity file (goes
-    through fsio, so a cluster-FS checkpoint dir works).  Created
-    once per checkpoint; every micro-batch of that checkpoint carries
-    it, and a NEW checkpoint gets a new identity."""
-    import uuid
-
-    path = fsio.join(checkpoint_dir, STREAM_ID_FILE)
-    if fsio.exists(spark, path):
-        return fsio.read_text(spark, path).strip()
-    fsio.mkdirs(spark, checkpoint_dir)
-    sid = uuid.uuid4().hex
-    try:
-        fsio.write_text_atomic(spark, path, sid)
-    except IOError:
-        # two racing starts of the same checkpoint: whoever renamed
-        # first wins; re-read theirs.  ONLY a lost race leaves the
-        # file existing — any other write failure (quota,
-        # permissions, FS error) must surface as itself, not be
-        # swallowed and replaced by the recovery read's confusing
-        # missing-file error.
-        if fsio.exists(spark, path):
-            return fsio.read_text(spark, path).strip()
-        raise
-    return sid
-
 
 def _nothing_to_ingest(listing) -> bool:
     """True when the scheduled-before-first-drop no-op condition
@@ -128,14 +98,6 @@ def ingest_transcripts_stream(
     # the race
     if _nothing_to_ingest(fsio.listdir_if_exists(spark, input_dir)):
         return None
-    # a stable identity for THIS checkpoint's batch-id sequence, kept
-    # beside Spark's own checkpoint state (same lifetime: lose one,
-    # lose both).  Spark restarts batch ids at 0 for every new
-    # checkpoint, so append_kg_frames must know whether a replayed-
-    # looking id belongs to the id sequence it has already committed
-    # — without this, recovering with a fresh checkpoint dir was
-    # impossible (its batch 0 always looked like a corrupt replay).
-    stream_id = _ensure_stream_id(spark, str(checkpoint_dir))
     # file-source streams need an explicit schema; peek it statically.
     # The peek re-races the retention job the listing above dodged: if
     # the dir vanished between the two calls, take the same documented
@@ -175,7 +137,6 @@ def ingest_transcripts_stream(
             dont_penalize=dont_penalize,
             stage_concurrency=stage_concurrency,
             batch_id=int(batch_id),
-            stream_id=stream_id,
         )
 
     q = (
