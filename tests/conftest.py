@@ -131,15 +131,15 @@ def kill_kg_at(monkeypatch, call, at) -> None:
     starts writing the KG stage named ``at``, at its snapshot commit
     (``at="commit"``), or in the GC after a commit it made
     (``at="gc"``)."""
-    from webstruct_spark.plans import pipeline, snapshots
+    from webstruct_spark.plans import snapshots
 
-    write, commit, gc = pipeline._write, snapshots.commit, snapshots.gc
+    write, commit, gc = snapshots.write, snapshots.commit, snapshots.gc
     committed = []
 
-    def dying_write(spark, out_dir, stage, df):
-        if stage == at:
-            raise SimulatedKill("killed writing %s" % stage)
-        return write(spark, out_dir, stage, df)
+    def dying_write(spark, root, df, key, value=None, dirs=None):
+        if key == "stage" and value == at:
+            raise SimulatedKill("killed writing %s" % value)
+        return write(spark, root, df, key, value, dirs)
 
     def dying_commit(*a, **kw):
         if at == "commit":
@@ -154,7 +154,7 @@ def kill_kg_at(monkeypatch, call, at) -> None:
         gc(spark, root, snap)
 
     with monkeypatch.context() as m:
-        m.setattr(pipeline, "_write", dying_write)
+        m.setattr(snapshots, "write", dying_write)
         m.setattr(snapshots, "commit", dying_commit)
         m.setattr(snapshots, "gc", dying_gc)
         with pytest.raises(SimulatedKill):

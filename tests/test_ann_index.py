@@ -110,6 +110,21 @@ def test_probe_reads_only_probed_partitions(spark, tmp_path):
     assert len(read_buckets) < n_total_buckets
 
 
+def test_probe_starts_no_job(spark, tmp_path):
+    """Constructing a probe reads the index files with the schema from
+    a footer: no schema-inference Spark job starts.  (The probe reads
+    few files: past 32, spark.sql.sources.parallelPartitionDiscovery.
+    threshold, Spark lists them in a job of its own.)"""
+    emb = _embeddings(spark)
+    qs = _queries(emb, every=97)
+    path = str(tmp_path / "lsh_idx3")
+    write_ann_index(emb, path, kind="lsh", n_planes=6)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job = int(dag.nextJobId())
+    ann_index_topk(spark, path, qs, k=5, multiprobe=0)
+    assert int(dag.nextJobId()) == job
+
+
 def test_probe_of_empty_buckets_returns_no_rows(spark, tmp_path):
     """A probe whose buckets hold no file of the snapshot scans nothing
     and answers with no rows."""

@@ -336,6 +336,16 @@ def test_compact_preserves_delta_provenance(spark, kg_built, tmp_path):
     ).count() == n_before
 
 
+def test_compact_rejects_nonpositive_target_bytes(tmp_path):
+    """0 would divide by zero and a negative value would silently
+    coalesce every stage to one file; both are refused before the store
+    is touched (spark=None proves the ordering: any store access would
+    fail differently)."""
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="target_bytes"):
+            compact_kg(None, str(tmp_path / "kg"), target_bytes=bad)
+
+
 def test_refused_compact_leaves_no_manifest_dir(spark, tmp_path):
     """compact_kg against a typo'd / never-built out_dir must refuse
     WITHOUT creating anything there (same entry-point hygiene as

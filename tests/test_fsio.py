@@ -159,14 +159,7 @@ def test_manifest_commit_and_read_via_file_uri(spark, tmp_path,
     uri = "file:" + str(base / "kg")
     assert snapshots.current(spark, uri) is None
 
-    added = snapshots.added_files(
-        spark, uri, ["stage_x"],
-        lambda: snapshots.append_writer(spark.range(7)).parquet(
-            uri + "/stage_x"
-        ),
-    )
-    files = [{"path": p, "rows": fsio.parquet_num_rows(spark, uri + "/" + p)}
-             for p in added]
+    files = snapshots.write(spark, uri, spark.range(7), "stage", "stage_x")
     assert sum(f["rows"] for f in files) == 7
     snap = snapshots.commit(spark, uri, None, {"files": files})
     assert snapshots.current(spark, uri) == snap

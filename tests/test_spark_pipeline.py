@@ -226,8 +226,9 @@ def test_read_files_starts_no_job(spark, corpus_dir, tmp_path):
 
     from tests.conftest import current_snapshot
     from webstruct_spark.plans.pipeline import (
-        CONV_IDS, STAGES, _files, _read_files, build_kg,
+        CONV_IDS, STAGES, _files, build_kg,
     )
+    from webstruct_spark.plans.snapshots import read
 
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_dir, out)
@@ -239,7 +240,7 @@ def test_read_files_starts_no_job(spark, corpus_dir, tmp_path):
 
     for stage in STAGES + [CONV_IDS]:
         job = int(dag.nextJobId())
-        df = _read_files(spark, out, _files(snap, stage))
+        df = read(spark, out, _files(snap, stage))
         assert int(dag.nextJobId()) == job, stage
         assert df.schema == spark.read.parquet(*paths(stage)).schema, stage
 
@@ -252,7 +253,7 @@ def test_read_files_starts_no_job(spark, corpus_dir, tmp_path):
     assert b"org.apache.spark.sql.parquet.row.metadata" not in (
         pq.read_metadata(first).metadata or {}
     )
-    got = _read_files(spark, out, _files(snap, "triples"))
+    got = read(spark, out, _files(snap, "triples"))
     assert sorted(map(repr, got.collect())) == want
 
 

@@ -335,67 +335,17 @@ def ivf_topk(
 
 _CENTROIDS = "_ann_centroids.parquet"
 
-
-def _snapshot(spark: SparkSession, root: str) -> dict:
-    snap = snapshots.current(spark, root)
-    if snap is None:
-        raise ValueError(
-            "no ANN index snapshot at %r (nothing built there, or an "
-            "index written before the snapshot log) — build it with "
-            "write_ann_index" % root
-        )
-    return snap
-
-
-def _read_files(
-    spark: SparkSession, root: str, files: List[dict]
-) -> DataFrame:
-    """Exactly the listed snapshot files; ``basePath`` keeps the
-    ``bucket=N`` dirs as the ``bucket`` column."""
-    return spark.read.option("basePath", root).parquet(
-        *(fsio.join(root, f["path"]) for f in files)
-    )
-
-
-def _bucket_files(spark: SparkSession, root: str, added: dict) -> List[dict]:
-    """Snapshot entries for new part files: bucket from the dir name,
-    rows from the footer."""
-    return [
-        {
-            "path": p,
-            "bucket": int(p.split("/", 1)[0][len("bucket="):]),
-            "rows": fsio.parquet_num_rows(spark, fsio.join(root, p)),
-            "bytes": size,
-        }
-        for p, size in sorted(added.items())
-    ]
-
-
-def _commit(
-    spark: SparkSession, root: str, parent: dict | None,
-    meta: dict, sidecars: dict, files: List[dict],
-) -> None:
-    snap = snapshots.commit(spark, root, parent, {
-        "meta": meta, "sidecars": sidecars, "files": files,
-    })
-    snapshots.gc(spark, root, snap)
+_NO_INDEX = (
+    "no ANN index snapshot at %r (nothing built there, or an index "
+    "written before the snapshot log) — build it with write_ann_index"
+)
 
 
 def read_ann_meta(spark: SparkSession, path: str) -> dict:
     """The index meta (kind, n_planes or n_centroids, dim) from the
     current snapshot record."""
-    return _snapshot(spark, fsio.qualify(spark, path))["meta"]
-
-
-def _centroids_of(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
-    cent_rows = (
-        spark.read.parquet(fsio.join(root, snap["sidecars"]["centroids"]))
-        .orderBy("cell")
-        .collect()
-    )
-    return np.array(
-        [list(r["centroid"]) for r in cent_rows], dtype=np.float32
-    )
+    root = fsio.qualify(spark, path)
+    return snapshots.require(spark, root, _NO_INDEX % root)["meta"]
 
 
 def _index_state(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
@@ -404,12 +354,19 @@ def _index_state(spark: SparkSession, root: str, snap: dict) -> np.ndarray:
     meta = snap["meta"]
     if meta["kind"] == "lsh":
         return _planes(meta["n_planes"], meta["dim"])
-    return _centroids_of(spark, root, snap)
+    cent_rows = snapshots.read(
+        spark, root, [{"path": snap["sidecars"]["centroids"]}]
+    ).orderBy("cell").collect()
+    return np.array(
+        [list(r["centroid"]) for r in cent_rows], dtype=np.float32
+    )
 
 
 def _read_centroids(spark: SparkSession, path: str) -> np.ndarray:
     root = fsio.qualify(spark, path)
-    return _centroids_of(spark, root, _snapshot(spark, root))
+    return _index_state(
+        spark, root, snapshots.require(spark, root, _NO_INDEX % root)
+    )
 
 
 def _bucketized(
@@ -546,19 +503,14 @@ def write_ann_index(
         cent = spark.createDataFrame(
             sc.parallelize(cent_rows, 1), "cell int, centroid array<float>"
         )
-        (sidecars["centroids"],) = snapshots.added_files(
-            spark, root, [_CENTROIDS],
-            lambda: snapshots.append_writer(cent).parquet(
-                fsio.join(root, _CENTROIDS)
-            ),
+        (cent_file,) = snapshots.write(
+            spark, root, cent, "sidecar", _CENTROIDS
         )
-    files = _bucket_files(spark, root, snapshots.added_files(
-        spark, root, None,
-        lambda: snapshots.append_writer(rows).partitionBy(
-            "bucket"
-        ).parquet(root),
-    ))
-    _commit(spark, root, parent, meta, sidecars, files)
+        sidecars["centroids"] = cent_file["path"]
+    files = snapshots.write(spark, root, rows, "bucket")
+    snapshots.publish(spark, root, parent, {
+        "meta": meta, "sidecars": sidecars, "files": files,
+    })
     return meta
 
 
@@ -586,7 +538,7 @@ def rebuild_ann_index(
     quantizer through (else one is retrained on the current vectors —
     the drift policy's retrain step)."""
     root = fsio.qualify(spark, path)
-    snap = _snapshot(spark, root)
+    snap = snapshots.require(spark, root, _NO_INDEX % root)
     meta = snap["meta"]
     kind_src = (
         "explicit kind= argument" if kind else "stored meta"
@@ -632,7 +584,9 @@ def rebuild_ann_index(
             else meta.get("n_centroids", 16)
         )
         kw["centroids"] = centroids
-    stored = _read_files(spark, root, snap["files"]).select("vec_id", "vec")
+    stored = snapshots.read(spark, root, snap["files"]).select(
+        "vec_id", "vec"
+    )
     return write_ann_index(stored, path, **kw)
 
 
@@ -670,7 +624,7 @@ def append_to_ann_index(
     default at 100 TB."""
     spark = new_embeddings.sparkSession
     root = fsio.qualify(spark, path)
-    snap = _snapshot(spark, root)
+    snap = snapshots.require(spark, root, _NO_INDEX % root)
     snapshots.gc(spark, root, snap)
     meta = snap["meta"]
     # fail-fast dim check on the first non-null vector; ragged or
@@ -690,7 +644,7 @@ def append_to_ann_index(
             % (dim, meta["dim"], path)
         )
     if skip_existing_ids:
-        existing = _read_files(spark, root, snap["files"]).select(
+        existing = snapshots.read(spark, root, snap["files"]).select(
             F.col("vec_id").alias(id_col)
         )
         new_embeddings = new_embeddings.join(
@@ -710,16 +664,16 @@ def append_to_ann_index(
         )
         if not touched:
             return meta  # all rows filtered (skip_existing_ids)
-        added = snapshots.added_files(
-            spark, root, ["bucket=%d" % b for b in touched],
-            lambda: snapshots.append_writer(bucketized).partitionBy(
-                "bucket"
-            ).parquet(root),
+        added = snapshots.write(
+            spark, root, bucketized, "bucket",
+            dirs=["bucket=%d" % b for b in touched],
         )
     finally:
         bucketized.unpersist()
-    _commit(spark, root, snap, meta, snap["sidecars"],
-            snap["files"] + _bucket_files(spark, root, added))
+    snapshots.publish(spark, root, snap, {
+        "meta": meta, "sidecars": snap["sidecars"],
+        "files": snap["files"] + added,
+    })
     return meta
 
 
@@ -727,8 +681,9 @@ def ann_index_cell_skew(spark: SparkSession, path: str) -> float:
     """max/mean bucket size of a persistent index — the rebuild
     trigger of the append policy.  Computed from the row counts the
     current snapshot records per file, so it reads no data."""
+    root = fsio.qualify(spark, path)
     sizes: dict = {}
-    for f in _snapshot(spark, fsio.qualify(spark, path))["files"]:
+    for f in snapshots.require(spark, root, _NO_INDEX % root)["files"]:
         sizes[f["bucket"]] = sizes.get(f["bucket"], 0) + f["rows"]
     counts = [n for n in sizes.values() if n]
     return float(max(counts)) / (float(sum(counts)) / len(counts))
@@ -739,11 +694,13 @@ def ann_index_cell_skew(spark: SparkSession, path: str) -> float:
 # dirs, so a week of appended batches turns each hot bucket into
 # dozens of tiny files — per-file open/footer cost on every probe, the
 # same pathology plans/compaction.py fixes for the KG stages.
-# compact_ann_index rewrites each fragmented bucket (never the whole
-# index) shuffle-free into ceil(bytes/target) new files in the same
-# bucket dir, checks their footer rows against the snapshot's, and
-# commits one snapshot with those buckets' files replaced.  Until that
-# commit the rewrites are unreferenced files no reader opens.
+# compact_ann_index runs the snapshot log's one compaction pass
+# (plans/snapshots.py compact, shared with the KG store) with one group
+# per bucket: each fragmented bucket (never the whole index) is
+# rewritten shuffle-free into ceil(bytes/target) new files in the same
+# bucket dir, their footer rows are checked against the snapshot's, and
+# one snapshot commit replaces those buckets' files.  Until that commit
+# the rewrites are unreferenced files no reader opens.
 
 
 def compact_ann_index(
@@ -759,71 +716,49 @@ def compact_ann_index(
     decision per bucket comes from the snapshot's file sizes (file
     count vs ``ceil(bytes/target)``) with no listing or footer read.
     A rewritten bucket's new files must hold exactly the snapshot's
-    row count for it, else nothing is committed.  The centroid sidecar
-    is never touched.
+    row count for it, else nothing is committed.  A non-positive
+    ``target_bytes`` is refused before the index is touched.  The
+    centroid sidecar is never touched.
 
     Do not run concurrently with :func:`append_to_ann_index` over the
     same path (same maintenance-window contract as
     ``plans.compaction.compact_kg``).  Returns ``{buckets_total,
-    buckets_compacted, n_files_before, n_files_after, rows_verified,
-    repaired}``; ``repaired`` is always empty, since a snapshot-logged
-    index has no crash state to repair."""
-    # fail fast: 0 would divide by zero, a negative value would
-    # silently coalesce every bucket to one file (same guard
-    # jobs/kg_build.py applies in front of compact_kg — this API has
-    # no CLI, so it guards itself)
-    if target_bytes <= 0:
-        raise ValueError(
-            "compact_ann_index: target_bytes must be positive, got %r"
-            % (target_bytes,)
-        )
-    root = fsio.qualify(spark, path)
-    snap = _snapshot(spark, root)
-    snapshots.gc(spark, root, snap)
-    by_bucket: dict = {}
-    for f in snap["files"]:
-        by_bucket.setdefault(f["bucket"], []).append(f)
-    out = {
-        "buckets_total": len(by_bucket),
-        "buckets_compacted": 0,
+    buckets_compacted, n_files_before, n_files_after,
+    rows_verified}``."""
+    def load():
+        root = fsio.qualify(spark, path)
+        snap = snapshots.require(spark, root, _NO_INDEX % root)
+        snapshots.gc(spark, root, snap)
+        by_bucket: dict = {}
+        for f in snap["files"]:
+            by_bucket.setdefault(f["bucket"], []).append(f)
+        return root, snap, dict(sorted(by_bucket.items()))
+
+    # reading the listed files with the root as basePath yields
+    # (vec_id, vec, bucket), so the partitioned write lands the
+    # rewrite in the same bucket dir
+    root, snap, new = snapshots.compact(
+        spark, "compact_ann_index", target_bytes, force, load,
+        lambda root, b, df: snapshots.write(
+            spark, root, df, "bucket", dirs=["bucket=%d" % b]
+        ),
+        lambda b: "bucket %d at %r" % (b, path),
+    )
+    files = [
+        f for f in snap["files"] if f["bucket"] not in new
+    ] + [f for fs in new.values() for f in fs]
+    if new:
+        snapshots.publish(spark, root, snap, {
+            "meta": snap["meta"], "sidecars": snap["sidecars"],
+            "files": files,
+        })
+    return {
+        "buckets_total": len({f["bucket"] for f in snap["files"]}),
+        "buckets_compacted": len(new),
         "n_files_before": len(snap["files"]),
-        "n_files_after": 0,
-        "rows_verified": 0,
-        "repaired": [],
+        "n_files_after": len(files),
+        "rows_verified": sum(f["rows"] for fs in new.values() for f in fs),
     }
-    files: List[dict] = []
-    for b in sorted(by_bucket):
-        old = by_bucket[b]
-        n_target = max(
-            1, math.ceil(sum(f["bytes"] for f in old) / float(target_bytes))
-        )
-        if len(old) <= n_target and not force:
-            files += old
-            continue
-        # reading the listed files with the root as basePath yields
-        # (vec_id, vec, bucket), so partitionBy("bucket") lands the
-        # rewrite in the same bucket dir; coalesce is shuffle-free
-        new = _bucket_files(spark, root, snapshots.added_files(
-            spark, root, ["bucket=%d" % b],
-            lambda: snapshots.append_writer(
-                _read_files(spark, root, old).coalesce(n_target)
-            ).partitionBy("bucket").parquet(root),
-        ))
-        rows = sum(f["rows"] for f in new)
-        want = sum(f["rows"] for f in old)
-        if rows != want:
-            raise RuntimeError(
-                "compact_ann_index: rewrite of bucket %d at %r produced "
-                "%d rows, the snapshot lists %d — nothing committed"
-                % (b, path, rows, want)
-            )
-        files += new
-        out["buckets_compacted"] += 1
-        out["rows_verified"] += rows
-    out["n_files_after"] = len(files)
-    if out["buckets_compacted"]:
-        _commit(spark, root, snap, snap["meta"], snap["sidecars"], files)
-    return out
 
 
 def ann_index_topk(
@@ -844,7 +779,7 @@ def ann_index_topk(
     Spark, so the probe works against an index on any Hadoop-visible
     filesystem — no driver-local ``open()`` of ``path``."""
     root = fsio.qualify(spark, path)
-    snap = _snapshot(spark, root)
+    snap = snapshots.require(spark, root, _NO_INDEX % root)
     q_ids, q_mat = _query_matrix(queries)
     probe = _probe_sets(
         q_mat, snap["meta"]["kind"], _index_state(spark, root, snap),
@@ -853,7 +788,7 @@ def ann_index_topk(
     files = [f for f in snap["files"] if f["bucket"] in probe]
     if not files:
         return topk_merge(spark.createDataFrame([], TOPK_SCHEMA), k)
-    src = _read_files(spark, root, files).select(
+    src = snapshots.read(spark, root, files).select(
         F.col("vec_id").alias("neighbor_id"), "vec", "bucket"
     )
     return _rerank(src, q_ids, q_mat, probe, k, exclude_self)

@@ -17,12 +17,13 @@ whole on every append, so Spark already sizes them.)
 ``coalesce`` of exactly the files the current snapshot lists —
 compaction merges many small inputs, so reducing partitions is the
 only direction needed — checks the new files' footer rows against the
-snapshot's, and publishes all rewritten stages with one snapshot
-commit (:mod:`.snapshots`), keeping each stage's source identity: it
-is a physical rewrite.  Until that commit the new files are
-unreferenced and no reader opens them; a crash anywhere leaves the old
-files current, and the next writer's GC removes the rest.  Like every
-writer of the store, compaction must not run concurrently with a
+snapshot's (the pass is :func:`.snapshots.compact`, shared with the
+ANN index), and publishes all rewritten stages with one snapshot
+commit, keeping each stage's source identity: it is a physical
+rewrite.  Until that commit the new files are unreferenced and no
+reader opens them; a crash anywhere leaves the old files current, and
+the next writer's GC removes the rest.  Like every writer of the
+store, compaction must not run concurrently with a
 build/append/refresh on the same out_dir.
 
 Cost honesty: a compaction run rewrites the WHOLE stage —
@@ -35,11 +36,12 @@ cluster width.
 """
 from __future__ import annotations
 
-import math
 import time
 from typing import Dict, List, Optional
 
 from pyspark.sql import SparkSession
+
+from . import snapshots
 
 # stages that accumulate files on append — the global stages are
 # rewritten whole each append and never fragment
@@ -68,13 +70,12 @@ def compact_kg(
     by tests; also the escape hatch after changing ``target_bytes``).
 
     Returns ``{stage: {rows, n_files_before, n_files_after,
-    compacted}}``.  Raises if the base build is not fully committed,
-    or if a rewrite's footer row total disagrees with the snapshot's
+    compacted}}``.  Raises on a non-positive ``target_bytes`` before
+    touching the store, if the base build is not fully committed, or
+    if a rewrite's footer row total disagrees with the snapshot's
     (nothing is committed then).
     """
-    from .pipeline import (
-        CONV_IDS, _base_snapshot, _files, _publish, _read_files, _write,
-    )
+    from .pipeline import CONV_IDS, _base_snapshot, _files, _publish
 
     stages = list(APPEND_STAGES if stages is None else stages)
     unknown = [s for s in stages if s not in APPEND_STAGES]
@@ -83,38 +84,32 @@ def compact_kg(
             "compact_kg: %s are not append-mode stages (only %s "
             "fragment)" % (", ".join(unknown), ", ".join(APPEND_STAGES))
         )
-    snap = _base_snapshot(spark, out_dir, "compact_kg")
-    new: Dict[str, List[dict]] = {}
+    groups = stages + ([CONV_IDS] if include_conv_ids else [])
     walls: Dict[str, float] = {}
-    results: Dict[str, dict] = {}
-    for stage in stages + ([CONV_IDS] if include_conv_ids else []):
-        old = _files(snap, stage)
-        rows = sum(f["rows"] for f in old)
-        n_target = max(
-            1, math.ceil(sum(f["bytes"] for f in old) / float(target_bytes))
-        )
-        res = results[stage] = {
-            "rows": rows,
-            "n_files_before": len(old),
-            "n_files_after": len(old),
-            "compacted": False,
-        }
-        if len(old) <= n_target and not force:
-            continue
+
+    def load():
+        snap = _base_snapshot(spark, out_dir, "compact_kg")
+        return out_dir, snap, {s: _files(snap, s) for s in groups}
+
+    def rewrite(root: str, stage: str, df) -> List[dict]:
         t0 = time.time()
-        new[stage] = _write(
-            spark, out_dir, stage,
-            _read_files(spark, out_dir, old).coalesce(n_target),
-        )
-        if sum(f["rows"] for f in new[stage]) != rows:
-            raise RuntimeError(
-                "compact_kg: rewrite of %r at %r produced %d rows, the "
-                "snapshot lists %d — nothing committed"
-                % (stage, out_dir, sum(f["rows"] for f in new[stage]), rows)
-            )
+        files = snapshots.write(spark, root, df, "stage", stage)
         walls[stage] = time.time() - t0
-        res.update(n_files_after=len(new[stage]), compacted=True)
+        return files
+
+    _, snap, new = snapshots.compact(
+        spark, "compact_kg", target_bytes, force, load, rewrite,
+        lambda stage: "%r at %r" % (stage, out_dir),
+    )
     if new:
         # a physical rewrite: every stage keeps its identity and stamps
         _publish(spark, out_dir, snap, new, "compact", walls)
-    return results
+    return {
+        s: {
+            "rows": sum(f["rows"] for f in old),
+            "n_files_before": len(old),
+            "n_files_after": len(new.get(s, old)),
+            "compacted": s in new,
+        }
+        for s, old in ((s, _files(snap, s)) for s in groups)
+    }

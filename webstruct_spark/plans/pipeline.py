@@ -65,7 +65,6 @@ holds exactly the stage's live files.
 """
 from __future__ import annotations
 
-import json
 import threading
 import time
 from concurrent.futures import FIRST_COMPLETED, Future, wait
@@ -73,7 +72,6 @@ from typing import Callable, Dict, List, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from ..concurrency import run_concurrent_jobs
 from ..operators.canon import canonicalize
@@ -172,46 +170,6 @@ def _files(snap: dict, stage: str) -> List[dict]:
     ]
 
 
-# where Spark's parquet writer stores the table schema in each footer
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _read_files(spark, out_dir: str, files: List[dict]) -> DataFrame:
-    """The rows of ``files``, read with the schema Spark stored in the
-    first file's footer, so the read starts no schema-inference job; a
-    file without that key (written by another parquet writer) is read
-    with an inferred schema."""
-    paths = [fsio.join(out_dir, f["path"]) for f in files]
-    reader = spark.read
-    if paths:
-        meta = fsio.parquet_metadata(spark, paths[0]).metadata or {}
-        if _SPARK_SCHEMA_KEY in meta:
-            reader = reader.schema(
-                StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-            )
-    return reader.parquet(*paths)
-
-
-def _write(spark, out_dir: str, stage: str, df: DataFrame) -> List[dict]:
-    """Write ``df`` as new part files of ``stage``; returns their
-    snapshot entries (rows from the footers)."""
-    added = snapshots.added_files(
-        spark, out_dir, [stage],
-        lambda: snapshots.append_writer(df).parquet(
-            fsio.join(out_dir, stage)
-        ),
-    )
-    return [
-        {
-            "path": p,
-            "stage": stage,
-            "rows": fsio.parquet_num_rows(spark, fsio.join(out_dir, p)),
-            "bytes": size,
-        }
-        for p, size in sorted(added.items())
-    ]
-
-
 def _entry(stage: str, files: List[dict], ident: dict, op: str,
            wall_sec: float) -> dict:
     """A ``stages``/``building`` entry: identity, lineage (the stage's
@@ -230,14 +188,6 @@ def _entry(stage: str, files: List[dict], ident: dict, op: str,
     }
 
 
-def _commit(spark, out_dir: str, parent: Optional[dict], files: List[dict],
-            stages: Dict[str, dict], stamps: dict,
-            building: Optional[Dict[str, dict]] = None) -> dict:
-    return snapshots.commit(spark, out_dir, parent, dict(
-        stamps, files=files, stages=stages, building=building or {},
-    ))
-
-
 def _stamps(snap: dict) -> dict:
     return {k: snap[k] for k in _STAMPS if k in snap}
 
@@ -248,13 +198,12 @@ def _base_snapshot(spark, out_dir: str, who: str) -> dict:
     reference, which settles an earlier run killed before or inside its
     commit.  Refuses a root without a snapshot and a store with a stage
     not committed, before anything is written."""
-    snap = snapshots.current(spark, out_dir)
-    if snap is None:
-        raise ValueError(
-            "%s: no KG snapshot at %r (nothing built there, or a store "
-            "written before the snapshot log) — build it with build_kg"
-            % (who, out_dir)
-        )
+    snap = snapshots.require(
+        spark, out_dir,
+        "%s: no KG snapshot at %r (nothing built there, or a store "
+        "written before the snapshot log) — build it with build_kg"
+        % (who, out_dir),
+    )
     missing = [s for s in STAGES if not _committed(snap["stages"].get(s))]
     if missing:
         raise ValueError(
@@ -290,9 +239,9 @@ def _publish(spark, out_dir: str, snap: dict, new: Dict[str, List[dict]],
                 else _stage_identity(s, fp),
                 op, walls[s],
             )
-    snapshots.gc(spark, out_dir, _commit(
-        spark, out_dir, snap, files, stages,
+    snapshots.publish(spark, out_dir, snap, dict(
         _stamps(snap) if stamps is None else stamps,
+        files=files, stages=stages, building={},
     ))
 
 
@@ -352,12 +301,12 @@ def _run_graph(
             t0 = time.time()
             frames = compute({
                 i: sources[i] if i in SOURCES
-                else _read_files(spark, out_dir, files(i, is_global))
+                else snapshots.read(spark, out_dir, files(i, is_global))
                 for i in ins
             })
             written = {}
             for s, df in zip(outs, frames):
-                written[s] = _write(spark, out_dir, s, df)
+                written[s] = snapshots.write(spark, out_dir, df, "stage", s)
                 ready[s].set_result(written[s])
             wall = time.time() - t0
             walls.update((s, wall) for s in written)
@@ -475,8 +424,8 @@ def check_kg_links(
     # persist across the two passes (count, then sample): without it
     # the sample pass would re-run both anti-joins
     missing = unmatched_triple_endpoints(
-        _read_files(spark, out_dir, _files(snap, "triples")),
-        _read_files(spark, out_dir, _files(snap, "links")),
+        snapshots.read(spark, out_dir, _files(snap, "triples")),
+        snapshots.read(spark, out_dir, _files(snap, "links")),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         by_ep = {
@@ -595,10 +544,10 @@ def build_kg(
                     "build", wall,
                 )
                 staged.add(stage)
-            latest[0] = _commit(
-                spark, out_dir, p, files, p["stages"] if p else {},
-                _stamps(p) if p else {}, building,
-            )
+            latest[0] = snapshots.commit(spark, out_dir, p, dict(
+                _stamps(p) if p else {}, files=files,
+                stages=p["stages"] if p else {}, building=building,
+            ))
 
     new, _walls = _run_graph(spark, out_dir, {
         "transcripts": spark.read.parquet(
@@ -774,7 +723,7 @@ def append_kg_frames(
             return paths  # an empty micro-batch or corpus dir
 
         # the _conv_ids side table keeps this rule O(delta)
-        stored = _read_files(spark, out_dir, _files(snap, CONV_IDS))
+        stored = snapshots.read(spark, out_dir, _files(snap, CONV_IDS))
         delta_convs = transcripts_b.select("conv_id").distinct()
         if stored.join(delta_convs, "conv_id").limit(1).count():
             # the snapshot's last delta was this file-backed one: the

@@ -1,5 +1,6 @@
 # -*- coding: utf-8 -*-
-"""Snapshot log: one commit protocol for a table root.
+"""Snapshot log: one commit protocol, and one file layer, for a table
+root.
 
 The live file set of a root is whatever its newest snapshot record
 lists.  Snapshot N is one JSON record, ``<root>/_snapshots/snap-<N>.json``,
@@ -19,25 +20,37 @@ snapshot's GC, and then re-reads the current one.  Two tables live on
 the log: the ANN index (:mod:`webstruct_spark.operators.similarity`)
 and the KG store (:mod:`.pipeline`).
 
-Writers add files with :func:`append_writer` (append mode, no
-``_SUCCESS`` marker) and find the names they added with
-:func:`added_files`.
+Beside the log itself (:func:`current`, :func:`require`,
+:func:`commit`, :func:`publish`, :func:`gc`) this module owns the
+table-level file operations both tables share: :func:`read` opens
+exactly the listed files, :func:`write` adds files and returns their
+entries, and :func:`compact` rewrites fragmented groups of files.
 
-Record shape: ``{"id": N, "files": [{"path": ..., ...}, ...],
-"sidecars": {role: path}, ...}``.  Paths are relative to the root, so
-a root can be copied or moved whole.  Every other key, and every other
-field of a ``files`` entry, belongs to the table that owns the root.
+Record shape: ``{"id": N, "files": [{"path": ..., "rows": ...,
+"bytes": ..., <key>: ...}, ...], "sidecars": {role: path}, ...}``.
+Paths are relative to the root, so a root can be copied or moved
+whole.  ``<key>`` is the table's grouping of its files (``stage`` for
+the KG store, ``bucket`` for the ANN index).  Every other key, and
+every other field of a ``files`` entry, belongs to the table that owns
+the root.
 """
 from __future__ import annotations
 
 import json
+import math
 import re
-from typing import Callable, Dict, List, Optional, Set
+from typing import Callable, Dict, Hashable, List, Optional, Set, Tuple
+
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from . import fsio
 
 SNAP_DIR = "_snapshots"
 _SNAP_RE = re.compile(r"snap-(\d+)\.json")
+
+# where Spark's parquet writer stores the table schema in each footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _record(n: int) -> str:
@@ -75,23 +88,65 @@ def commit(spark, root: str, parent: Optional[dict], record: dict) -> dict:
     return rec
 
 
-def append_writer(df):
-    """``df.write`` in append mode and without a ``_SUCCESS`` marker:
-    the snapshot commit is what publishes the files."""
-    return df.write.mode("append").option(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
-    )
+def require(spark, root: str, missing: str) -> dict:
+    """The newest snapshot record under ``root``; raises
+    ``ValueError(missing)`` when the root has none."""
+    snap = current(spark, root)
+    if snap is None:
+        raise ValueError(missing)
+    return snap
 
 
-def added_files(
-    spark, root: str, dirs: Optional[List[str]], write: Callable[[], None]
-) -> Dict[str, int]:
-    """Run ``write`` and return ``{path relative to root: bytes}`` of
-    the parquet files it added under ``dirs`` — every directory of the
-    root when None.  Found by listing
-    before and after: Spark names part files after the write job's
-    UUID, so they never collide with files already there."""
-    def listing() -> dict:
+def publish(spark, root: str, parent: Optional[dict], record: dict) -> dict:
+    """:func:`commit` ``record`` after ``parent``, then :func:`gc` what
+    the new snapshot does not reference.  Returns the published
+    record."""
+    snap = commit(spark, root, parent, record)
+    gc(spark, root, snap)
+    return snap
+
+
+def read(spark, root: str, files: List[dict]) -> DataFrame:
+    """The rows of exactly ``files`` (snapshot entries of ``root``),
+    read with the schema Spark stored in the first file's footer, so
+    the read starts no schema-inference job; a file without that key
+    (written by another parquet writer) is read with an inferred
+    schema.  ``basePath`` is the root: a file under a partition dir
+    (``bucket=N/``) gets that partition column, one under a plain dir
+    (``<stage>/``) gets none."""
+    paths = [fsio.join(root, f["path"]) for f in files]
+    reader = spark.read.option("basePath", root)
+    if paths:
+        meta = fsio.parquet_metadata(spark, paths[0]).metadata or {}
+        if _SPARK_SCHEMA_KEY in meta:
+            reader = reader.schema(
+                StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            )
+    return reader.parquet(*paths)
+
+
+def write(
+    spark, root: str, df: DataFrame, key: str, value=None,
+    dirs: Optional[List[str]] = None,
+) -> List[dict]:
+    """Add ``df``'s rows to ``root`` as new parquet files and return
+    their entries ``{path, rows, bytes, <key>}``, sorted by path, with
+    rows from the footers.
+
+    With ``value`` the files land in ``<root>/<value>/`` and each entry
+    gets ``key: value``.  Without, ``df`` is partitioned by its integer
+    column ``key`` into ``<root>/<key>=N/`` dirs and each entry gets
+    ``key: N``; ``dirs`` names the partition dirs the write can touch
+    (all of them when None), and only those are listed.
+
+    The write is in append mode with no ``_SUCCESS`` marker: the
+    snapshot commit is what publishes the files.  The new ones are
+    found by listing before and after: Spark names part files after the
+    write job's UUID, so they never collide with files already there."""
+    if value is not None:
+        dirs = [value]
+
+    def listing() -> Dict[str, int]:
         ds = dirs
         if ds is None:
             ds = [
@@ -99,7 +154,7 @@ def added_files(
                     fsio.entries(spark, root)
                     if fsio.exists(spark, root) else []
                 )
-                if is_dir
+                if is_dir and n.startswith(key + "=")
             ]
         return {
             d + "/" + n: size
@@ -111,8 +166,64 @@ def added_files(
         }
 
     before = listing()
-    write()
-    return {p: size for p, size in listing().items() if p not in before}
+    writer = df.write.mode("append").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    )
+    if value is None:
+        writer.partitionBy(key).parquet(root)
+    else:
+        writer.parquet(fsio.join(root, value))
+    return [
+        {
+            "path": p,
+            key: value if value is not None
+            else int(p.split("/", 1)[0][len(key) + 1:]),
+            "rows": fsio.parquet_num_rows(spark, fsio.join(root, p)),
+            "bytes": size,
+        }
+        for p, size in sorted(listing().items())
+        if p not in before
+    ]
+
+
+def compact(
+    spark, who: str, target_bytes: int, force: bool,
+    load: Callable[[], Tuple[str, dict, Dict[Hashable, List[dict]]]],
+    rewrite: Callable[[str, Hashable, DataFrame], List[dict]],
+    name: Callable[[Hashable], str],
+) -> Tuple[str, dict, Dict[Hashable, List[dict]]]:
+    """One small-file compaction pass over a table's groups of files.
+
+    Refuses a non-positive ``target_bytes`` first, then calls
+    ``load()`` — the pass's first access to the store — for ``(root,
+    snapshot, {group: files})``.  A group of F files and B bytes is
+    left alone when F <= ceil(B / target_bytes), decided from the
+    snapshot's sizes alone, with no listing or footer read, unless
+    ``force``.  Otherwise ``rewrite(root, group, df)`` writes its rows,
+    coalesced (no shuffle) to that many partitions, and returns the new
+    entries, whose footer rows must equal the snapshot's, else the pass
+    raises naming ``name(group)`` and nothing is committed.
+
+    Returns ``(root, snapshot, {group: new files})`` for the rewritten
+    groups; the table commits them."""
+    if target_bytes <= 0:
+        raise ValueError(
+            "%s: target_bytes must be positive, got %r" % (who, target_bytes)
+        )
+    root, snap, groups = load()
+    new: Dict[Hashable, List[dict]] = {}
+    for group, old in groups.items():
+        n = max(1, math.ceil(sum(f["bytes"] for f in old) / target_bytes))
+        if len(old) <= n and not force:
+            continue
+        new[group] = rewrite(root, group, read(spark, root, old).coalesce(n))
+        got, want = (sum(f["rows"] for f in fs) for fs in (new[group], old))
+        if got != want:
+            raise RuntimeError(
+                "%s: rewrite of %s produced %d rows, the snapshot lists "
+                "%d — nothing committed" % (who, name(group), got, want)
+            )
+    return root, snap, new
 
 
 def _paths(rec: dict) -> Set[str]:
