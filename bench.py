@@ -73,7 +73,7 @@ def main() -> None:
 
     timed("q2_triples", q2)
 
-    # q3: linking + connected-components canonicalization
+    # q3: linking + per-surface canonicalization
     def q3() -> int:
         _links, nodes = canonicalize(mentions(transcripts), gazetteer)
         return nodes.count()

@@ -1,145 +1,124 @@
 # -*- coding: utf-8 -*-
-"""Connected components: large-star/small-star correctness vs a
-single-node union-find, plus the O(log n)-round guarantee on a path
-graph (the case where plain label propagation needs O(n) rounds)."""
+"""canonicalize's per-surface node rule against the single-node
+union-find reference (kernel.canon, what the gold builder runs), and
+the append invariant: adding surfaces never relabels a stored one."""
 import random
+from collections import defaultdict
 
-from pyspark.sql import functions as F
+from webstruct_spark.kernel.canon import (
+    connected_components,
+    link_edges,
+    norm_text,
+    surface_key,
+)
+from webstruct_spark.operators.canon import canonicalize
 
-from webstruct_spark.operators.canon import connected_components_df
-
-
-def _union_find(nodes, edges):
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comps = {}
-    for n in nodes:
-        comps.setdefault(find(n), []).append(n)
-    return {n: min(members) for members in comps.values() for n in members}
+TYPES = ["ORG", "PER", "CITY"]
+M_SCHEMA = "conv_id string, turn_idx int, text string, entity_type string"
+G_SCHEMA = "alias string, entity_type string, canonical_id string"
 
 
-def _run(spark, nodes, edges, **kw):
-    v = spark.createDataFrame([(n,) for n in nodes], "node string")
-    e = spark.createDataFrame(edges, "src string, dst string")
-    return connected_components_df(v, e, **kw)
-
-
-def test_path_graph_log_rounds(spark):
-    """64-node path: label propagation would need ~63 rounds; the
-    star algorithm must converge in O(log n) (loose bound: 12)."""
-    nodes = ["n%02d" % i for i in range(64)]
-    edges = [("n%02d" % i, "n%02d" % (i + 1)) for i in range(63)]
-    labels, rounds = _run(spark, nodes, edges, return_rounds=True)
-    got = {r["node"]: r["label"] for r in labels.collect()}
-    assert got == {n: "n00" for n in nodes}
-    assert rounds <= 12, rounds
-
-
-def test_random_graphs_vs_union_find(spark):
-    rng = random.Random(42)
-    for trial in range(4):
-        n = rng.randint(2, 60)
-        nodes = ["v%03d" % i for i in range(n)]
-        edges = [
-            (rng.choice(nodes), rng.choice(nodes))
-            for _ in range(rng.randint(0, n * 2))
-        ]
-        want = _union_find(nodes, edges)
-        labels = _run(spark, nodes, edges)
-        got = {r["node"]: r["label"] for r in labels.collect()}
-        assert got == want, (trial, n)
-
-
-def test_isolated_and_empty(spark):
-    labels = _run(spark, ["a", "b"], [])
-    got = {r["node"]: r["label"] for r in labels.collect()}
-    assert got == {"a": "a", "b": "b"}
-
-
-def test_two_components_with_hub(spark):
-    """A star hub plus a separate pair (skewed-degree shape)."""
-    nodes = ["hub"] + ["s%02d" % i for i in range(20)] + ["x", "y"]
-    edges = [("hub", "s%02d" % i) for i in range(20)] + [("x", "y")]
-    labels, rounds = _run(spark, nodes, edges, return_rounds=True)
-    got = {r["node"]: r["label"] for r in labels.collect()}
-    assert got["hub"] == "hub"
-    assert all(got["s%02d" % i] == "hub" for i in range(20))
-    assert got["x"] == got["y"] == "x"
-    assert rounds <= 4
-
-
-def test_star_labels_match_cc_loop(spark):
-    """The canonicalize(fuzzy=False) closed-form star labels must equal
-    the general large-star/small-star loop run over the same linked
-    table's edge list (the optimization contract: the non-fuzzy edge
-    set is bipartite by construction, so components are stars)."""
-    from webstruct_spark.operators.canon import canonicalize, surface_key_col
-    from webstruct_spark.operators.linking import link_surfaces, mention_surfaces
-
-    rng = random.Random(7)
-    types = ["ORG", "PER", "CITY"]
-    # mentions with surface collisions across types, case/space noise,
-    # and repeats (n_mentions > 1); some aliases shared by several
-    # canonical ids (normalized_gazetteer collapses those via min),
-    # one cid spanning two entity types (its component spans types)
-    gaz_rows = []
+def _gaz_rows():
+    # some aliases shared by several canonical ids (normalized_gazetteer
+    # collapses those via min), one cid spanning two entity types (its
+    # component spans types)
+    rows = []
     for i in range(40):
-        t = types[i % 3]
-        gaz_rows.append(("alias %d" % (i % 25), t, "C%03d" % (i % 12)))
-    gaz_rows.append(("shared alias", "ORG", "C900"))
-    gaz_rows.append(("shared alias b", "PER", "C900"))
-    gaz = spark.createDataFrame(
-        gaz_rows, "alias string, entity_type string, canonical_id string"
-    )
-    m_rows = []
-    for i in range(300):
-        t = types[i % 3]
+        rows.append(("alias %d" % (i % 25), TYPES[i % 3], "C%03d" % (i % 12)))
+    rows.append(("shared alias", "ORG", "C900"))
+    rows.append(("shared alias b", "PER", "C900"))
+    return rows
+
+
+def _mention_rows(seed, n):
+    # surface collisions across types, case/space noise, and repeats
+    # (n_mentions > 1)
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        t = TYPES[i % 3]
         if rng.random() < 0.6:
             txt = "Alias %d" % rng.randrange(30)  # some link, some don't
         elif rng.random() < 0.5:
             txt = "shared   alias" if t == "ORG" else "Shared Alias B"
         else:
             txt = "unlinked surface %d" % rng.randrange(50)
-        m_rows.append(("conv%d" % (i % 7), i % 11, txt, t))
-    mentions = spark.createDataFrame(
-        m_rows, "conv_id string, turn_idx int, text string, entity_type string"
-    )
+        rows.append(("conv%d" % (i % 7), i % 11, txt, t))
+    return rows
 
-    links_fast, nodes_fast = canonicalize(mentions, gaz)
 
-    # the general loop over the identical linked table (the pre-
-    # optimization path, inlined)
-    linked = link_surfaces(mention_surfaces(mentions), gaz).withColumn(
-        "skey", surface_key_col(F.col("entity_type"), F.col("norm_text"))
-    ).localCheckpoint(eager=True)
-    edges = linked.where(F.col("canonical_id").isNotNull()).select(
-        F.col("skey").alias("src"),
-        F.concat(F.lit("g:"), "canonical_id").alias("dst"),
+def _reference(m_rows, gaz_rows):
+    """links/nodes rows as sources/goldbuild.py:_link_canon_rows
+    builds them: link_edges + union-find min-member labels."""
+    counts = defaultdict(int)
+    for _c, _t, text, etype in m_rows:
+        counts[(etype, norm_text(text))] += 1
+    surfaces = sorted(counts)
+    edges = link_edges(surfaces, [(a, cid, t) for a, t, cid in gaz_rows])
+    comp = connected_components([surface_key(t, x) for t, x in surfaces], edges)
+    links = sorted((t, x, comp[surface_key(t, x)]) for t, x in surfaces)
+    members = defaultdict(list)
+    for t, x, node in links:
+        members[node].append((t, x))
+    nodes = sorted(
+        (
+            node,
+            min(ms)[0],
+            min(x for _t, x in ms),
+            len(ms),
+            sum(counts[s] for s in ms),
+        )
+        for node, ms in members.items()
     )
-    vertices = linked.select(F.col("skey").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    ).distinct()
-    labels = connected_components_df(vertices, edges)
-    links_loop = linked.join(labels, linked["skey"] == labels["node"]).select(
-        "entity_type", "norm_text", F.col("label").alias("node_id")
-    )
+    return links, nodes
 
-    assert sorted(map(tuple, links_fast.collect())) == sorted(
-        map(tuple, links_loop.collect())
+
+def test_labels_match_union_find(spark):
+    """canonicalize's links and nodes equal the union-find reference
+    over the same surfaces and gazetteer, row for row."""
+    gaz_rows = _gaz_rows()
+    m_rows = _mention_rows(7, 300)
+    links, nodes = canonicalize(
+        spark.createDataFrame(m_rows, M_SCHEMA),
+        spark.createDataFrame(gaz_rows, G_SCHEMA),
     )
-    # nodes roll up from links identically; spot-check the aggregation
-    got = {
-        r["node_id"]: (r["n_surfaces"], r["n_mentions"])
-        for r in nodes_fast.collect()
-    }
-    assert sum(n for n, _m in got.values()) == links_loop.count()
+    want_links, want_nodes = _reference(m_rows, gaz_rows)
+    assert sorted(map(tuple, links.collect())) == want_links
+    assert sorted(map(tuple, nodes.collect())) == want_nodes
+    # the sample exercises both kinds of node and a multi-surface star
+    assert any(n.startswith("g:") for n, *_r in want_nodes)
+    assert any(n.startswith("t:") for n, *_r in want_nodes)
+    assert any(r[3] > 1 for r in want_nodes)
+
+
+def test_stored_labels_survive_new_surfaces(spark):
+    """canonicalize(m1 ∪ m2) gives every surface of m1 the node_id that
+    canonicalize(m1) gave it, when m2 adds surfaces that link to cids
+    already in m1 and surfaces that link to nothing."""
+    gaz = spark.createDataFrame(_gaz_rows(), G_SCHEMA)
+    # m2 holds the aliases 13-24 (their cids are also reached by the
+    # aliases 0-11 in m1) and the unlinked surfaces numbered 25 and up
+    rows = _mention_rows(11, 400)
+
+    def in_m2(text):
+        words = norm_text(text).split(" ")
+        return (words[0] == "alias" and int(words[1]) >= 13) or (
+            words[0] == "unlinked" and int(words[2]) >= 25
+        )
+
+    m1 = spark.createDataFrame([r for r in rows if not in_m2(r[2])], M_SCHEMA)
+    m2 = spark.createDataFrame([r for r in rows if in_m2(r[2])], M_SCHEMA)
+
+    def labels(df):
+        links, _nodes = canonicalize(df, gaz)
+        return {(r[0], r[1]): r[2] for r in links.collect()}
+
+    before = labels(m1)
+    after = labels(m1.unionByName(m2))
+    assert {s: after[s] for s in before} == before
+    new = set(after) - set(before)
+    # m2 really adds both kinds: new surfaces joining a cid m1 already
+    # holds, and new unlinked ones
+    old_g = {n for n in before.values() if n.startswith("g:")}
+    assert any(after[s] in old_g for s in new)
+    assert any(after[s].startswith("t:") for s in new)

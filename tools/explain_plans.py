@@ -102,8 +102,10 @@ def main() -> None:
         "linking+nodes (broadcast gazetteer join)",
         canonicalize(mentions(turns), gaz)[1],
         "Expect: BroadcastHashJoin with BroadcastExchange on the "
-        "normalized-gazetteer side; HashAggregate partial/final pairs "
-        "for the surface counts.",
+        "normalized-gazetteer side; a HashAggregate partial/final pair "
+        "for the surface counts and a SortAggregate pair (string "
+        "mins) for the per-node rollup; no Window (a surface's "
+        "node_id is a per-row expression).",
     )
     from webstruct_spark.operators.graph import materialize_edges
     from webstruct_spark.operators.triples_op import triples as triples_fn

@@ -16,9 +16,10 @@ Model
   (deterministic, order-free).
 
 The distributed version (webstruct_spark/operators/canon.py) computes
-the same components with iterative small-star/large-star DataFrame
-joins; :func:`connected_components` here is a plain union-find used
-for gold tables and fixed-point tests.
+the same labels per surface: each surface links to at most one
+canonical id, so every component is a star around its ``g:`` node,
+whose key is the min member.  :func:`connected_components` here is a
+plain union-find used for gold tables and tests.
 
 Gazetteer-as-broadcast-join per the reference's longest-match lexicon
 feature (/root/reference/webstruct/features/global_features.py:7-39),

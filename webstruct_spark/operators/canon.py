@@ -1,14 +1,20 @@
 # -*- coding: utf-8 -*-
-"""Canonicalization: connected components over the surface↔canonical
-edge list via alternating large-star/small-star DataFrame rounds,
-with per-round localCheckpoint to cut lineage.
+"""Canonicalization: every mention surface gets one node id by a
+per-surface rule.
 
-Component id = lexicographic min member key, identical to the
-single-node union-find in ``webstruct_spark.kernel.canon`` (gold
-builder + fixed-point tests).  On the alias graph components are
-stars (diameter ≤ 2, 1-2 rounds), but the operator is general and
-O(log n)-round on arbitrary graphs: near-duplicate or blocking-key
-edges from the dedup operators plug into the same loop.
+    node_id = "g:" + canonical_id   if the surface links to the gazetteer
+            = its own surface key   otherwise ("t:<TYPE>:<norm_text>")
+
+This equals the gold builder's label (``kernel.canon.link_edges`` +
+``connected_components``: the lexicographic MIN member key of each
+component of the surface↔canonical graph).  :func:`link_surfaces`
+emits at most one ``canonical_id`` per surface, so every edge is
+``t:… → g:<cid>`` and every component is a star around one ``g:`` node
+(or an unlinked surface alone).  Every surface key starts with ``"t:"``
+and ``"g:" < "t:"``, so a star's min member is its ``g:`` centre.
+
+A surface's node depends on that surface alone: adding surfaces never
+changes the node of a stored one (tests/test_connected_components.py).
 """
 from __future__ import annotations
 
@@ -22,189 +28,16 @@ def surface_key_col(entity_type, norm_text):
     return F.concat(F.lit("t:"), entity_type, F.lit(":"), norm_text)
 
 
-def _edge_signature(e: DataFrame):
-    """One-row fingerprint of a (checkpointed) canonical edge set:
-    (count, sum of xxhash64(u, v)).  Computed as a single tiny
-    aggregation job — this IS the convergence check; there is no
-    old-vs-new join and no lineage re-execution.
-
-    Collision bound: declaring convergence early would need two
-    CONSECUTIVE, DIFFERENT edge sets to agree on both the exact count
-    and the 64-bit hash sum — probability ~2^-64 per round under the
-    xxhash64 uniformity assumption (and a miss only yields one extra
-    round, since the star operations are monotone)."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
-def connected_components_df(
-    vertices: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 50,
-    return_rounds: bool = False,
-):
-    """vertices: (node); edges: (src, dst).  Returns (node, label) with
-    label = min member key of the node's component (ties in the
-    single-node union-find gold builder resolve the same way).
-
-    Alternating **large-star / small-star** (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14):
-    converges in O(log n) rounds on ANY graph — including long
-    near-duplicate chains from :func:`fuzzy_edges` — where plain
-    min-label propagation needs O(diameter) rounds.  Each round is two
-    aggregate+join stages over the canonical ``u < v`` edge list; no
-    ``collect_set`` adjacency (hub nodes of a 10^12-turn graph never
-    materialize a neighbor list in one task).
-
-    * large-star: every node connects its *larger* neighbors to the
-      minimum of its closed neighborhood — long chains halve.
-    * small-star: every node connects its *smaller-or-equal* neighbors
-      (and itself) to that minimum — stars flatten onto the root.
-
-    Convergence = the edge-set fingerprint (count + hash sum, one-row
-    aggregate on the round's checkpointed output) repeating.  The
-    checkpoint bounds lineage; the fingerprint job reads cached blocks.
-    """
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig = _edge_signature(e)
-    rounds = 0
-    for _i in range(max_iter):
-        # ---- large-star: center c, neighbors n (both directions) ----
-        adj = e.select(F.col("u").alias("c"), F.col("v").alias("n")).union(
-            e.select(F.col("v").alias("c"), F.col("u").alias("n"))
-        )
-        cmin = adj.groupBy("c").agg(
-            F.least(F.min("n"), F.first("c")).alias("m")
-        )
-        e = (
-            adj.where(F.col("n") > F.col("c"))
-            .join(cmin, "c")
-            .select(F.col("m").alias("u"), F.col("n").alias("v"))
-            .distinct()
-        )
-        # ---- small-star: center = larger endpoint v ----
-        vmin = e.groupBy("v").agg(F.min("u").alias("m"))
-        leaf_edges = (
-            e.join(vmin, "v")
-            .where(F.col("u") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("u").alias("v"))
-        )
-        root_edges = vmin.select(F.col("m").alias("u"), F.col("v"))
-        e = (
-            leaf_edges.union(root_edges)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-        new_sig = _edge_signature(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            "connected_components_df did not converge within %d rounds"
-            % max_iter
-        )
-    # fixed point: every edge is (component_root, member)
-    star = e.groupBy("v").agg(F.min("u").alias("label"))
-    labels = vertices.join(
-        star, vertices["node"] == star["v"], "left"
-    ).select("node", F.coalesce("label", "node").alias("label"))
-    if return_rounds:
-        return labels, rounds
-    return labels
-
-
-def fuzzy_edges(
-    surfaces: DataFrame, threshold: float = 0.5, max_block: int = 1000
-) -> DataFrame:
-    """Near-duplicate surface edges via blocking-key self-join:
-    candidates share (entity_type, first token) — the blocking key —
-    and are verified by word-shingle Jaccard >= threshold (JVM-side).
-
-    This is the salted/blocked canonicalization join of SURVEY §2.8:
-    the self-join only materializes within blocks, hot blocks are
-    bounded by ``max_block`` — an explicit cap, not a silent skew
-    stall; AQE skew-join splits the rest.
-
-    Input: (entity_type, norm_text) distinct surfaces.
-    Output: (src, dst) surface-key edges.
-
-    Output contract: surfaces in a block LARGER than ``max_block``
-    produce NO edges (their fuzzy merges are skipped, the gazetteer
-    edges still link them) — the skipped blocks are OBSERVABLE as
-    ``result._dropped_blocks``, a (block, bn) DataFrame, so a corpus
-    where a stop-word first token explodes a block (e.g. 10^6 "the …"
-    surfaces) fails loudly in monitoring instead of silently losing
-    merges (same pattern as ``ngram_jaccard_pairs._dropped_shingles``).
-    The hook is a plain Python attribute and exists ONLY on the
-    DataFrame object this function returns — any downstream
-    transformation (select/filter/repartition) yields a NEW DataFrame
-    without it, so grab ``_dropped_blocks`` off the direct return
-    value before transforming (same contract as
-    ``minhash_lsh_pairs._sketch_handle`` in dedup.py).
-    """
-    words = F.split(F.col("norm_text"), " ")
-    blocked = surfaces.select(
-        "entity_type",
-        "norm_text",
-        F.concat(F.col("entity_type"), F.lit("|"), words[0]).alias("block"),
-        F.array_distinct(words).alias("w"),
-    )
-    sizes = blocked.groupBy("block").agg(F.count(F.lit(1)).alias("bn"))
-    dropped = sizes.where(F.col("bn") > max_block)
-    blocked = blocked.join(
-        F.broadcast(sizes.where(F.col("bn") <= max_block)), "block", "inner"
-    )
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.w"), F.col("b.w")))
-    union = (
-        F.size(F.col("a.w")) + F.size(F.col("b.w")) - inter
-    )
-    jac = inter / union
-    pairs = (
-        a.join(b, F.col("a.block") == F.col("b.block"))
-        .where(F.col("a.norm_text") < F.col("b.norm_text"))
-        .where(jac >= threshold)
-    )
-    out = pairs.select(
-        surface_key_col(F.col("a.entity_type"), F.col("a.norm_text")).alias("src"),
-        surface_key_col(F.col("b.entity_type"), F.col("b.norm_text")).alias("dst"),
-    )
-    out._dropped_blocks = dropped  # observability hook (see docstring)
-    return out
-
-
 def canonicalize(
     mentions: DataFrame,
     gazetteer: DataFrame,
-    fuzzy: bool = False,
-    fuzzy_threshold: float = 0.5,
     checkpoint: bool = False,
 ):
     """Full linking + canonicalization.
 
-    ``fuzzy=True`` additionally merges near-duplicate surfaces
-    (blocking-key self-join + Jaccard, :func:`fuzzy_edges`) into the
-    same components as the gazetteer-linked edges.
-
-    ``checkpoint=True`` localCheckpoints the shared per-surface table
-    before links/nodes fork from it — for callers that MATERIALIZE
-    BOTH outputs (the staged build writes two tables) the upstream
+    ``checkpoint=True`` localCheckpoints the per-surface table before
+    links/nodes fork from it — for callers that MATERIALIZE BOTH
+    outputs (the staged build writes two tables) the upstream
     extract+aggregate+join chain then runs once instead of twice.
     Single-output callers keep the default: the checkpoint would only
     add a materialization.  Value-transparent either way.
@@ -214,85 +47,18 @@ def canonicalize(
       nodes: (node_id, entity_type, canonical_text, n_surfaces,
               n_mentions)
     """
-    surfaces = mention_surfaces(mentions)
-    linked = link_surfaces(surfaces, gazetteer)
-    linked = linked.withColumn(
-        "skey", surface_key_col(F.col("entity_type"), F.col("norm_text"))
-    )
-    if checkpoint and not fuzzy:
-        # the fuzzy path below checkpoints unconditionally (three
-        # consumers); the star-label path has two only when both
-        # outputs are written
-        linked = linked.localCheckpoint(eager=True)
-    if not fuzzy:
-        # Closed-form labels: without fuzzy edges the graph is
-        # BIPARTITE BY CONSTRUCTION — every edge is (surface skey →
-        # "g:"+canonical_id) and link_surfaces emits at most ONE
-        # canonical_id per surface (normalized_gazetteer aggregates to
-        # one row per (entity_type, alias)), so every component is a
-        # star around one g: node: {g:cid} ∪ {skeys linked to cid}.
-        # Its min-member label is least(g:cid, min skey) — ONE window
-        # pass instead of the O(log n) large-star/small-star loop (per
-        # round: 4 exchanges, 2 localCheckpoints, 2 driver collects;
-        # ~2 s at sf0.1 and a driver-barrier sequence at any scale).
-        # The window partitions by coalesce(canonical_id, skey), so an
-        # unlinked surface is its own partition (no all-NULLs-in-one-
-        # task skew; a cid partition is bounded by its distinct
-        # surface count).  Equality with connected_components_df on
-        # this edge shape is pytest-gated (tests/
-        # test_connected_components.py::test_star_labels_match_cc_loop).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.coalesce("canonical_id", "skey"))
-        label = F.when(
-            F.col("canonical_id").isNotNull(),
-            # F.least skips no NULLs here: both sides are non-null
-            F.least(
-                F.concat(F.lit("g:"), "canonical_id"),
-                F.min("skey").over(w),
-            ),
-        ).otherwise(F.col("skey"))
-        links = linked.select(
-            "entity_type",
-            "norm_text",
-            label.alias("node_id"),
-            "n_mentions",
-        )
-        nodes = links.groupBy("node_id").agg(
-            F.min(F.struct("entity_type", "norm_text"))["entity_type"].alias(
-                "entity_type"
-            ),
-            F.min("norm_text").alias("canonical_text"),
-            F.count(F.lit(1)).cast("int").alias("n_surfaces"),
-            F.sum("n_mentions").alias("n_mentions"),
-        )
-        return links.select("entity_type", "norm_text", "node_id"), nodes
-    # linked feeds THREE consumers (edge list, vertex list, the final
-    # label join) — checkpoint the small per-surface table once so
-    # the upstream extract+aggregate+gazetteer-join chain doesn't run
-    # three times; blocks free with the RDD, no unpersist bookkeeping
-    linked = linked.localCheckpoint(eager=True)
-    edges = linked.where(F.col("canonical_id").isNotNull()).select(
-        F.col("skey").alias("src"),
-        F.concat(F.lit("g:"), "canonical_id").alias("dst"),
-    )
-    edges = edges.union(
-        fuzzy_edges(
-            linked.select("entity_type", "norm_text"),
-            threshold=fuzzy_threshold,
-        )
-    )
-    vertices = linked.select(F.col("skey").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    ).distinct()
-    labels = connected_components_df(vertices, edges)
-
-    links = linked.join(labels, linked["skey"] == labels["node"]).select(
+    linked = link_surfaces(mention_surfaces(mentions), gazetteer)
+    links = linked.select(
         "entity_type",
         "norm_text",
-        F.col("label").alias("node_id"),
+        F.coalesce(
+            F.concat(F.lit("g:"), "canonical_id"),
+            surface_key_col(F.col("entity_type"), F.col("norm_text")),
+        ).alias("node_id"),
         "n_mentions",
     )
+    if checkpoint:
+        links = links.localCheckpoint(eager=True)
     nodes = links.groupBy("node_id").agg(
         F.min(F.struct("entity_type", "norm_text"))["entity_type"].alias(
             "entity_type"

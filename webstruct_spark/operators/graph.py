@@ -85,10 +85,9 @@ def unmatched_triple_endpoints(
     ``(conv_id, group_id, triple_idx, endpoint, entity_type, text)``
     with one row per uncovered endpoint (``endpoint`` ∈ subj/obj).
     Empty on every in-pipeline path; non-empty means the links table
-    is from a different corpus state than the triples.  This is the
-    monitoring-companion convention of ``fuzzy_edges``'
-    ``_dropped_blocks`` — an explicit check a scheduled job can
-    alert on, not a hot-path assert the 100 TB run pays for."""
+    is from a different corpus state than the triples.  An explicit
+    check a scheduled job can alert on, not a hot-path assert the
+    100 TB run pays for."""
     t, l_subj, l_obj, subj_cond, obj_cond = _endpoint_join_parts(
         triples, links
     )

@@ -12,7 +12,7 @@ recomputes upstream work):
   group_entities  ONE shuffle by conv_id (entities + token counts only)
   groups      hash aggregate over group_entities
   triples     window ops over group_entities
-  links,nodes broadcast gazetteer join + connected components
+  links,nodes broadcast gazetteer join + per-surface node id
   edges       triples joined to links
   _conv_ids   distinct conv_ids of extracted (the side table; no
               stage reads it, so it runs off the critical path)
@@ -479,10 +479,9 @@ def build_kg(
     groups ∥ triples ∥ canonicalize — safe because every task reads
     only its upstream stages' written files, writes its own
     directories, and the ``building`` commits are serialized by a
-    driver lock.  canonicalize is an iterative driver-barrier loop whose
-    executor gaps the groups/triples scans fill.  On the first task
-    failure :func:`..concurrency.run_concurrent_jobs` cancels queued
-    tasks and interrupts in-flight sibling Spark jobs.  GC runs only at
+    driver lock.  On the first task failure
+    :func:`..concurrency.run_concurrent_jobs` cancels queued tasks and
+    interrupts in-flight sibling Spark jobs.  GC runs only at
     entry and after the last commit, never between stage commits, while
     sibling tasks' files are still in flight."""
     snap = snapshots.current(spark, out_dir)
@@ -588,14 +587,14 @@ def append_kg(
       rows are exactly the union's new rows — new part files beside
       the old ones; the 100 TB history is never re-extracted or
       re-shuffled.
-    * links/nodes/edges are GLOBAL (a new surface can merge two old
-      components, relabeling node_ids to a new min member key), so
-      they are recomputed over the kept and new files of their inputs
-      and replace the old files.  That recompute scans only the slim
-      union mentions/triples tables — orders of magnitude smaller than
-      the corpus — and the CC runs on the distinct-surface star graph
-      (1-2 rounds), so the expensive corpus-scale work stays
-      append-only.
+    * links/nodes/edges are GLOBAL: a stored surface's link never
+      changes (its node_id is its gazetteer id or its own key), but a
+      node's counters (n_surfaces, n_mentions, canonical_text) grow
+      with the new surfaces and mentions.  So they are recomputed over
+      the kept and new files of their inputs and replace the old
+      files.  That recompute scans only the slim union
+      mentions/triples tables — orders of magnitude smaller than the
+      corpus — so the expensive corpus-scale work stays append-only.
 
     Guards: the base build must be fully committed; the gazetteer and
     the grouping params must match the base build's (gazetteer by

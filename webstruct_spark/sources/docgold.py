@@ -57,7 +57,7 @@ class UnverifiedGoldDir(str):
     after the corpus at the same path is regenerated and readable
     again (the fingerprint mismatch that forces a rebuild would
     never be rechecked).  Same attribute-on-return-value convention
-    as ``fuzzy_edges._dropped_blocks``."""
+    as ``ngram_jaccard_pairs._dropped_shingles`` in operators/dedup.py."""
 
     fingerprint_verified = False
 
